@@ -14,9 +14,18 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   */
 object GraftSession {
 
+  /** Spark settings that route the `file` scheme through [[LocalFs]] for
+    * both Hadoop APIs: FileSystem (Parquet commits, `.tbi` writes) and
+    * FileContext (streaming checkpoints). Every other scheme keeps its
+    * own implementation. */
+  val localFsConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[LocalFs.Checksummed].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.Context].getName)
+
   /** Build a local session with the settings every entry point shares. */
   def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
     val spark = SparkSession.builder()
+      .config(localFsConf)
       .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores)

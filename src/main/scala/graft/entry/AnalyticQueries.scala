@@ -45,6 +45,20 @@ object AnalyticQueries {
     }
   }
 
+  /** Run `body` with `settings` in the session conf, then leave each key
+    * as it was: set to its old value, or unset if it was not set. */
+  private def withConf[A](s: SparkSession, settings: (String, String)*)(
+      body: => A): A = {
+    val set = s.conf.getAll // explicitly set keys only, no defaults
+    val prev = settings.map { case (k, _) => k -> set.get(k) }
+    settings.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
+
   /** Shared harness for the streaming oracle rows (q118/q119/q121):
     * replay the event log through `op`'s micro-batch pipeline in three
     * TIME-ORDERED batches (sorted on the operators' own exact-micros
@@ -117,7 +131,6 @@ object AnalyticQueries {
     // plans are untouched.
     val parts = sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTS")
       .map(_.trim.toInt).getOrElse(stateParts)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     // No-data micro-batches exist so watermark-driven work (Append
     // emissions, event-time timers, eviction) can run without new
     // input. Every UPDATE-mode replay row here is a plain streaming
@@ -138,17 +151,12 @@ object AnalyticQueries {
     val ndbKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val ndb = noDataBatches.getOrElse(
       mode != org.apache.spark.sql.streaming.OutputMode.Update())
-    val prevNdb = s.conf.get(ndbKey)
-    s.conf.set(ndbKey, ndb.toString)
-    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    val q =
-      try op(mem.toDS()).writeStream
+    val q = withConf(s, ndbKey -> ndb.toString,
+        "spark.sql.shuffle.partitions" -> parts.toString) {
+      op(mem.toDS()).writeStream
         .outputMode(mode)
         .format("memory").queryName(sink).start()
-      finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set(ndbKey, prevNdb)
-      }
+    }
     try {
       val it = sorted.rdd
         .mapPartitionsWithIndex((i, rows) => rows.map(e => (i, e)))
@@ -192,7 +200,7 @@ object AnalyticQueries {
     * `ordCols`-ordered batches and return the raw sink rows. Same
     * scale posture: Spark range-partitions and sorts, the driver
     * streams one partition at a time. */
-  private def replayTypedThirds[T](s: SparkSession, rows: Dataset[T],
+  private[graft] def replayTypedThirds[T](s: SparkSession, rows: Dataset[T],
       ordCols: Seq[String], op: Dataset[T] => DataFrame,
       mode: org.apache.spark.sql.streaming.OutputMode,
       stateParts: Int = 4,
@@ -206,24 +214,18 @@ object AnalyticQueries {
       .replace("-", "")
     val parts = sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTS")
       .map(_.trim.toInt).getOrElse(stateParts)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     // Update-mode rows skip no-data micro-batches — same reasoning
     // and measurement as [[replayThirds]]; `noDataBatches` is the
     // same explicit per-operator override.
     val ndbKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val ndb = noDataBatches.getOrElse(
       mode != org.apache.spark.sql.streaming.OutputMode.Update())
-    val prevNdb = s.conf.get(ndbKey)
-    s.conf.set(ndbKey, ndb.toString)
-    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    val q =
-      try op(mem.toDS()).writeStream
+    val q = withConf(s, ndbKey -> ndb.toString,
+        "spark.sql.shuffle.partitions" -> parts.toString) {
+      op(mem.toDS()).writeStream
         .outputMode(mode)
         .format("memory").queryName(sink).start()
-      finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set(ndbKey, prevNdb)
-      }
+    }
     try {
       val sorted = rows
         .repartitionByRange(3, ordCols.map(col): _*)

@@ -1,6 +1,7 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.TableCatalog
 
@@ -107,11 +108,12 @@ object Normalize {
 
     // impacts are a per-VARIANT property: keep one representative sample's
     // impact rows per variant (the reference's first-file-introduces-the-
-    // variant behavior, order-independent here via min(samplename))
-    val withId = surrogateId(staged, key, "variant_id")
-    val rep = withId.groupBy("variant_id")
-      .agg(min(col("samplename")).as("__rep"))
-    val impacts = withId.join(rep, Seq("variant_id"))
+    // variant behavior, order-independent here via min(samplename)). A
+    // window min, not an aggregate joined back: one scan of the staged
+    // VCFs and one shuffle.
+    val impacts = surrogateId(staged, key, "variant_id")
+      .withColumn("__rep", min(col("samplename"))
+        .over(Window.partitionBy("variant_id")))
       .filter(col("samplename") === col("__rep"))
       .select(("variant_id" +: impactCols).map(col): _*)
     if (!catalog.exists(viTable))

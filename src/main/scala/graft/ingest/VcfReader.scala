@@ -1,5 +1,7 @@
 package graft.ingest
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.SchemaBuilder
@@ -26,8 +28,19 @@ object VcfReader {
   /** Driver-side header introspection (`snp_functions.py:26-31`). */
   final case class VcfHeader(csqFields: Seq[String], formatKeys: Seq[String])
 
-  def readHeader(path: String): VcfHeader = {
-    val src = scala.io.Source.fromFile(path)
+  /** Header of a plain-text, gzip or BGZF VCF on any Hadoop filesystem.
+    * Gzip is sniffed from the magic bytes; `GZIPInputStream` reads BGZF's
+    * concatenated members. Reading stops at the first record line. */
+  def readHeader(path: String, conf: Configuration): VcfHeader = {
+    val hp = new Path(path)
+    val raw = new java.io.BufferedInputStream(hp.getFileSystem(conf).open(hp))
+    val in = try {
+      raw.mark(2)
+      val gzip = raw.read() == 0x1f && raw.read() == 0x8b
+      raw.reset()
+      if (gzip) new java.util.zip.GZIPInputStream(raw) else raw
+    } catch { case e: Throwable => raw.close(); throw e }
+    val src = scala.io.Source.fromInputStream(in, "UTF-8")
     try {
       val header = src.getLines().takeWhile(_.startsWith("#")).toList
       val csq = header
@@ -55,8 +68,13 @@ object VcfReader {
       case "int"            => nn.cast("long")
       case "float"          => nn.cast("double")
       case "bool" =>
-        when(lower(nn).isin("yes", "true", "1"), true)
-          .when(lower(nn).isin("no", "false", "0"), false)
+        // ASCII case fold: no non-ASCII character lower-cases to a letter
+        // of these words, so this accepts exactly what lower() accepts,
+        // without the first-use cost of Spark's Unicode case mapping
+        val folded = translate(nn, "ABCDEFGHIJKLMNOPQRSTUVWXYZ",
+          "abcdefghijklmnopqrstuvwxyz")
+        when(folded.isin("yes", "true", "1"), true)
+          .when(folded.isin("no", "false", "0"), false)
           .otherwise(lit(null).cast("boolean"))
       case _                => nn
     }
@@ -73,7 +91,8 @@ object VcfReader {
   def read(spark: SparkSession, path: String, sample: String,
       impactFields: Seq[(String, String)],
       formatKeys: Seq[String]): DataFrame =
-    read(spark, path, sample, impactFields, formatKeys, readHeader(path))
+    read(spark, path, sample, impactFields, formatKeys,
+      readHeader(path, spark.sessionState.newHadoopConf()))
 
   /** Variant taking a pre-parsed header (readAll already holds them —
     * avoids scanning every file's header twice on the driver). */
@@ -131,7 +150,8 @@ object VcfReader {
       vcfFieldTypes: Map[String, String], policy: String,
       formatKeys: Seq[String]): DataFrame = {
     require(manifest.nonEmpty, "readAll: empty VCF manifest")
-    val headers = manifest.map { case (_, p) => readHeader(p) }
+    val conf = spark.sessionState.newHadoopConf()
+    val headers = manifest.map { case (_, p) => readHeader(p, conf) }
     val fields = reconcileCsq(headers, policy)
       .filter(f => vcfFieldTypes.contains(f)) // ignore-undeclared policy
       .map(f => f -> vcfFieldTypes(f))

@@ -124,16 +124,15 @@ final class Genome(catalog: TableCatalog, fastaPath: Option[String] = None) {
       strandCol: String = "strand", out: String = "seq"): DataFrame = {
     val path = fastaPath.getOrElse(
       throw new IllegalStateException("Genome built without a FASTA path"))
-    val conf = new graft.core.SerializableHadoopConf(
-      catalog.spark.sessionState.newHadoopConf())
+    val conf = graft.core.SerializableHadoopConf.broadcast(catalog.spark)
     val idx = catalog.spark.sparkContext
-      .broadcast(FastaIndex.forFasta(conf.value, path))
+      .broadcast(FastaIndex.forFasta(conf.value.value, path))
     val extract = udf { (chrom: String, s: Long, e: Long, strand: String) =>
       idx.value.get(chrom)
         .filter(en => s >= 1 && e <= en.length && s <= e)
         .map { en =>
           val sub = FastaIndex.readRange(
-            FastaIndex.stream(conf.value, path), en, s, e)
+            FastaIndex.stream(conf.value.value, path), en, s, e)
           if (strand == "-") Genome.reverseComplement(sub) else sub
         }.orNull
     }

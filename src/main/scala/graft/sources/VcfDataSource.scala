@@ -99,6 +99,7 @@ object VcfDataSource {
 }
 
 import graft.core.SerializableHadoopConf
+import org.apache.spark.broadcast.Broadcast
 
 private class VcfTable(paths: Seq[String]) extends Table with SupportsRead {
   override def name(): String = s"vcf(${paths.mkString(",")})"
@@ -145,7 +146,11 @@ private class VcfScan(paths: Seq[String], required: StructType,
     pushed: Array[Filter]) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] = {
+  // Spark asks a scan for its partitions more than once (each copy of the
+  // physical scan node plans its own); planning lists the files and reads
+  // every pushed-region `.tbi`, so it runs once per scan.
+  override def planInputPartitions(): Array[InputPartition] = partitions
+  private lazy val partitions: Array[InputPartition] = {
     val spark = org.apache.spark.sql.SparkSession.active
     val hconf = spark.sessionState.newHadoopConf()
     val splitBytes = spark.conf
@@ -231,10 +236,10 @@ private class VcfScan(paths: Seq[String], required: StructType,
     if (lo > maxCoord) None else Some((chroms, lo - 1, math.min(hi, maxCoord)))
   }
 
+  // one broadcast Hadoop conf per scan, as Spark's own file scans do
   override def createReaderFactory(): PartitionReaderFactory =
     new VcfReaderFactory(required.fieldNames, pushed,
-      new SerializableHadoopConf(org.apache.spark.sql.SparkSession.active
-        .sessionState.newHadoopConf()))
+      SerializableHadoopConf.broadcast(org.apache.spark.sql.SparkSession.active))
   override def description(): String =
     s"VcfScan PushedFilters: [${pushed.mkString(", ")}], " +
       s"ReadSchema: ${required.simpleString}"
@@ -253,28 +258,28 @@ private object VcfInputPartition {
 }
 
 private class VcfReaderFactory(fields: Array[String], pushed: Array[Filter],
-    conf: SerializableHadoopConf) extends PartitionReaderFactory {
+    conf: Broadcast[SerializableHadoopConf]) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new VcfPartitionReader(p.asInstanceOf[VcfInputPartition], fields,
-      pushed, conf)
+      pushed, conf.value.value)
 }
 
 private class VcfPartitionReader(part: VcfInputPartition,
     fields: Array[String], pushed: Array[Filter],
-    conf: SerializableHadoopConf) extends PartitionReader[InternalRow] {
+    conf: org.apache.hadoop.conf.Configuration) extends PartitionReader[InternalRow] {
 
   // Hadoop-FS open so file:/, hdfs:/, s3a:/ URIs all work — consistent
   // with TableCatalog's Hadoop-FS-everywhere design
   private val hadoopPath = new org.apache.hadoop.fs.Path(part.path)
   private val gz = !part.bgzf && VcfInputPartition.gzipped(part.path)
-  private val stream = hadoopPath.getFileSystem(conf.value).open(hadoopPath)
+  private val stream = hadoopPath.getFileSystem(conf).open(hadoopPath)
   // BGZF splits decompress block-at-a-time via positioned reads; the
   // seek-based LineReader below is never constructed for them
   private val bgzfLines: BgzfLines =
     if (part.bgzf) {
       val len =
         if (part.fileLen >= 0) part.fileLen
-        else hadoopPath.getFileSystem(conf.value)
+        else hadoopPath.getFileSystem(conf)
           .getFileStatus(hadoopPath).getLen
       new BgzfLines(stream, len, part.start,
         if (part.end == Long.MaxValue) len else part.end)

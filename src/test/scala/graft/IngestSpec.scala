@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.TableCatalog
 import graft.ingest.{Normalize, Readers}
@@ -77,5 +78,29 @@ class IngestSpec extends SparkSpecBase {
     val dirs = new java.io.File(cat.path("all_junctions")).listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
     assert(dirs == Set("chrom=chr1", "chrom=chr2"))
+  }
+
+  test("variant_impacts: representative-sample rows, unchanged by re-ingest") {
+    val cat = new TableCatalog(spark, tmpDir("impacts"))
+    val types = Map("consequence" -> "str", "impact" -> "str",
+      "gene" -> "str", "af" -> "float", "canonical" -> "bool")
+    val impactCols = types.keys.toSeq.sorted
+    def staged(names: String*) = graft.ingest.VcfReader.readAll(spark,
+      names.map(n => n -> fixture(s"$n.vcf")), types, "union", Seq("GT", "DP"))
+    def rows(df: DataFrame) =
+      df.select(("variant_id" +: impactCols).map(col): _*)
+        .collect().map(_.toString).sorted.toSeq
+    // the per-variant min(samplename) rule as an aggregate joined back
+    val all = Normalize.surrogateId(staged("s1", "s2"),
+      Seq("chrom", "pos", "ref", "alt"), "variant_id")
+    val want = rows(all.join(all.groupBy("variant_id")
+        .agg(min("samplename").as("__rep")), "variant_id")
+      .filter(col("samplename") === col("__rep")))
+    def ingest(names: String*) = Normalize.normalizeVariants(cat,
+      staged(names: _*), impactCols, Seq("gt", "gt_raw", "dp"),
+      rna = false, filtered = false)._3
+    assert(rows(ingest("s2", "s1")) == want && want.nonEmpty)
+    assert(rows(ingest("s1")) == want)
+    assert(rows(ingest("s2", "s1")) == want)
   }
 }

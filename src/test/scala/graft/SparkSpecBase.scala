@@ -6,7 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared session for the whole forked test JVM. */
 object TestSpark {
   lazy val spark: SparkSession = {
+    // the same `file:` filesystem as GraftSession.local
     val s = SparkSession.builder()
+      .config(graft.core.GraftSession.localFsConf)
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")

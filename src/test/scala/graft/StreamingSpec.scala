@@ -1913,4 +1913,26 @@ class StreamingSpec extends SparkSpecBase {
       assert(online == batch, s"online $online vs batch $batch")
     } finally q.stop()
   }
+
+  test("replay harness leaves the session conf as it found it, also on failure") {
+    val ndb = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val before = spark.conf.getAll
+    assert(!before.contains(ndb))
+    graft.SparkEntry.queries("q132_streaming_attribution")(spark, sf).collect()
+    assert(spark.conf.getAll == before)
+    // a failing op, with shuffle.partitions unset as well
+    val parts = "spark.sql.shuffle.partitions"
+    spark.conf.unset(parts)
+    try {
+      val unset = spark.conf.getAll
+      val err = intercept[IllegalStateException](
+        graft.entry.AnalyticQueries.replayTypedThirds[(Long, String)](spark,
+          Seq((1L, "a")).toDS(), Seq("_1"),
+          _ => throw new IllegalStateException("op failed"),
+          org.apache.spark.sql.streaming.OutputMode.Update()))
+      assert(err.getMessage == "op failed")
+      assert(spark.conf.getAll == unset)
+    } finally spark.conf.set(parts, before(parts))
+    assert(spark.conf.getAll == before)
+  }
 }

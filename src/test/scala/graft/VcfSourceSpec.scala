@@ -304,6 +304,30 @@ class VcfSourceSpec extends SparkSpecBase {
     } finally spark.conf.unset("spark.graft.vcf.splitbytes")
   }
 
+  test("cold region query over N indexed files parses each .tbi exactly once") {
+    import graft.sources.Tabix
+    // more files than the driver's 256-entry index cache holds, so a
+    // second planning pass over the same scan would have to parse again
+    val n = 260
+    val dir = tmpDir("graft-tabix-cohort")
+    val conf = spark.sessionState.newHadoopConf()
+    val body = (1 to 20).map(i => s"chr1\t${i * 10}\t.\tA\tC\t50\tPASS\t.\tGT\t0/1\n")
+      .mkString("##fileformat=VCFv4.2\n" +
+        "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS\n", "", "")
+      .getBytes("UTF-8")
+    (1 to n).foreach { i =>
+      val f = f"$dir/S$i%04d.vcf.bgz"
+      val out = new java.io.FileOutputStream(f)
+      try graft.sources.Bgzf.write(out, body, 4096) finally out.close()
+      Tabix.buildForVcf(new org.apache.hadoop.fs.Path(f), conf)
+    }
+    val before = Tabix.indexLoads
+    val hits = spark.read.format("vcf").load(dir)
+      .filter(col("chrom") === "chr1" && col("pos") <= 50L).count()
+    assert(hits == 5L * n)
+    assert(Tabix.indexLoads - before == n)
+  }
+
   test("filters and projection compose on the source") {
     val df = spark.read.format("vcf")
       .load(fixture("s1.vcf"), fixture("s2.vcf"))

@@ -9,17 +9,19 @@ class VcfSpec extends SparkSpecBase {
     "consequence" -> "str", "impact" -> "str", "gene" -> "str",
     "af" -> "float", "canonical" -> "bool")
 
+  private def hconf = spark.sessionState.newHadoopConf()
+
   test("header introspection: CSQ field order and FORMAT keys") {
-    val h = VcfReader.readHeader(fixture("s1.vcf"))
+    val h = VcfReader.readHeader(fixture("s1.vcf"), hconf)
     assert(h.csqFields == Seq("consequence", "impact", "gene", "af", "canonical"))
     assert(h.formatKeys == Seq("GT", "DP"))
-    val h2 = VcfReader.readHeader(fixture("s2.vcf"))
+    val h2 = VcfReader.readHeader(fixture("s2.vcf"), hconf)
     assert(h2.csqFields == Seq("consequence", "impact", "gene", "af"))
   }
 
   test("reconciliation across differing headers") {
-    val hs = Seq(VcfReader.readHeader(fixture("s1.vcf")),
-      VcfReader.readHeader(fixture("s2.vcf")))
+    val hs = Seq(VcfReader.readHeader(fixture("s1.vcf"), hconf),
+      VcfReader.readHeader(fixture("s2.vcf"), hconf))
     assert(VcfReader.reconcileCsq(hs, "union") ==
       Seq("consequence", "impact", "gene", "af", "canonical"))
     assert(VcfReader.reconcileCsq(hs, "intersection") ==
@@ -75,5 +77,49 @@ class VcfSpec extends SparkSpecBase {
       col("consequence") === "missense_variant")
       .select("chrom", "ref", "alt").distinct()
     assert(shared.count() == 1)
+  }
+
+  test("readAll over BGZF copies == readAll over the plain-text files") {
+    val dir = tmpDir("vcf-bgz")
+    val manifest = Seq("s1", "s2").map { n =>
+      val bgz = s"$dir/$n.vcf.bgz"
+      val out = new java.io.FileOutputStream(bgz)
+      try graft.sources.Bgzf.write(out, java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(fixture(s"$n.vcf"))), 256)
+      finally out.close()
+      (n, fixture(s"$n.vcf"), bgz)
+    }
+    manifest.foreach { case (_, plain, bgz) =>
+      assert(VcfReader.readHeader(bgz, hconf) == VcfReader.readHeader(plain, hconf))
+    }
+    def rows(paths: Seq[(String, String)]) = VcfReader.readAll(spark, paths,
+      fieldTypes, policy = "union", formatKeys = Seq("GT", "DP"))
+      .collect().map(_.toString).sorted.toSeq
+    val plain = rows(manifest.map(m => m._1 -> m._2))
+    assert(plain.size == 5)
+    assert(rows(manifest.map(m => m._1 -> m._3)) == plain)
+  }
+
+  test("bool coercion: ASCII case fold accepts exactly what lower() did") {
+    import spark.implicits._
+    val table = Seq[(String, Option[Boolean])](
+      "TRUE" -> Some(true), "Yes" -> Some(true), "1" -> Some(true),
+      "no" -> Some(false), "False" -> Some(false), "0" -> Some(false),
+      "" -> None, "maybe" -> None, (null, None), "yes\n" -> None,
+      "\uff34\uff32\uff35\uff25" -> None, // full-width TRUE
+      "\u0130" -> None) // dotted capital I
+    val in = table.map(_._1).toDF("v")
+    val nn = nullif(col("v"), lit(""))
+    val viaLower = when(lower(nn).isin("yes", "true", "1"), true)
+      .when(lower(nn).isin("no", "false", "0"), false)
+      .otherwise(lit(null).cast("boolean"))
+    val got = in.select(col("v"), VcfReader.coerce(col("v"), "bool").as("b"),
+        viaLower.as("l"))
+      .collect().map(r => (Option(r.getString(0)),
+        (Option(r.get(1)).map(_.asInstanceOf[Boolean]),
+          Option(r.get(2)).map(_.asInstanceOf[Boolean])))).toMap
+    table.foreach { case (v, want) =>
+      assert(got(Option(v)) == (want, want), s"input ${Option(v)}")
+    }
   }
 }
