@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.GraftSession
+import graft.ext.NgramLm
 
 /** Round-2 analytic operator coverage: multi-dimensional aggregation
   * (CUBE), the full window-rank family, decorrelated scalar subqueries,
@@ -266,6 +267,58 @@ object AnalyticQueries {
         .as[(Long, String)],
       Seq("doc_id"),
       ds => op(ds.toDF("doc_id", "text")), mode)
+  }
+
+  /** Streaming LM serve rows: the model trains once in batch on the en
+    * slice (checkpointed — static sides re-evaluate per micro-batch),
+    * the corpus replays through [[NgramLm.facts]] (n-gram explode,
+    * stream-static model joins, ONE Update-mode per-doc aggregation;
+    * each doc's state is write-once), and the sink rows MAX-fold per
+    * doc and finish through [[NgramLm.finish]]'s zero-row spine. Each
+    * row faces its batch twin's own oracle SQL. */
+  private def lmServe(s: SparkSession, dir: String, order: Int,
+      smoother: NgramLm.Smoother, vocabK: Option[Int]): DataFrame = {
+    import s.implicits._
+    val d = t(s, dir, "documents")
+    val en = d.where(col("lang") === "en").select("doc_id", "text")
+    val model = NgramLm.train(en, "text", order, smoother)
+    val vocab = vocabK.map(k =>
+      NgramLm.vocabTopK(en, "text", k).localCheckpoint(true))
+    val raw = replayDocsThirds(s, d.select("doc_id", "text"),
+      df => NgramLm.facts(df, "doc_id", "text", model, order, smoother,
+        vocab))
+    val folded = raw
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .groupBy(_._1).view
+      .mapValues(vs => vs.maxBy(v => (v._2, v._3))).toSeq
+      .map(_._2)
+    NgramLm.finish(d.select("doc_id").distinct(),
+        folded.toDF("doc_id", NgramLm.countCol(order), "sum_p_e9"),
+        "doc_id", order)
+      .orderBy("doc_id")
+  }
+
+  /** Streaming LM training rows: `docs` replays through the
+    * order-`order` [[NgramLm.ngrams]] count aggregation (stateless
+    * explode, ONE Update-mode aggregation; state ∝ distinct n-grams,
+    * never the corpus), the monotone counts MAX-fold per n-gram, and
+    * `derive` builds the row from the folded (w1..wn, n) table through
+    * the batch row's own derivation. */
+  private def lmTrain(s: SparkSession, docs: DataFrame, order: Int)(
+      derive: DataFrame => DataFrame): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val raw = replayDocsThirds(s, docs,
+      df => NgramLm.ngrams(df, "text", order, None))
+    val folded = raw
+      .map(r => (0 until order).map(r.getString) -> r.getLong(order))
+      .groupBy(_._1).view.mapValues(_.map(_._2).max)
+      .toSeq.map { case (ws, n) => Row.fromSeq(ws :+ n) }
+    val schema = StructType(
+      NgramLm.words(order).map(StructField(_, StringType)) :+
+        StructField("n", LongType, nullable = false))
+    derive(s.createDataFrame(folded.asJava, schema))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1451,7 +1504,7 @@ object AnalyticQueries {
         .as[(Long, Array[Float])]
       val raw = replayTypedThirds[(Long, Array[Float])](s, feed,
         Seq("_1"),
-        ds => graft.streaming.EventStreams.streamingStandardize(
+        ds => graft.ext.Similarity.standardizeApply(
             ds.toDF("vec_id", "embedding"), "embedding", stats)
           .select(col("vec_id"), col("zvec")),
         mode = org.apache.spark.sql.streaming.OutputMode.Append())
@@ -1476,7 +1529,7 @@ object AnalyticQueries {
         .as[(Long, String, String)]
       val raw = replayTypedThirds[(Long, String, String)](s, feed,
         Seq("_1"),
-        ds => graft.streaming.EventStreams.streamingDiversityCounts(
+        ds => graft.ext.TextAnalysis.groupedBigramCounts(
           ds.toDF("doc_id", "lang", "text"), "lang", "text"),
         mode = org.apache.spark.sql.streaming.OutputMode.Update())
       val folded = raw
@@ -1491,67 +1544,15 @@ object AnalyticQueries {
         .orderBy("lang")
     }),
 
-    // The FORTY-FIRST streaming twin: online trained-LM document
-    // scoring — the SERVING half of the KN family (train online:
-    // q247/q257; serve online: this): the en-slice model trains once
-    // in batch (materialized — static sides re-evaluate per batch),
-    // arriving docs explode + stream-static-join the model tables +
-    // aggregate per doc in ONE Update-mode agg (knScoreFacts, the
-    // SHARED derivation); the fold adds the zero-row spine through
-    // the SHARED knScoreFinish. Faces q250's own oracle SQL
-    // row-for-row.
-    "q260_streaming_kn_score" -> ((s, dir) => {
-      import s.implicits._
-      val d = t(s, dir, "documents")
-      val model = graft.ext.TextAnalysis.knBigramCounts(
-          d.where(col("lang") === "en").select("doc_id", "text"),
-          "text")
-        .localCheckpoint(true) // the trained artifact, built once
-      val raw = replayDocsThirds(s, d.select("doc_id", "text"),
-        df => graft.streaming.EventStreams.streamingKnScore(
-          df, "doc_id", "text", model),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .groupBy(_._1).view
-        .mapValues(vs => vs.maxBy(v => (v._2, v._3))).toSeq
-        .map(_._2)
-      graft.ext.TextAnalysis.knScoreFinish(
-          d.select("doc_id").distinct(),
-          folded.toDF("doc_id", "n_bigrams", "sum_p_e9"), "doc_id")
-        .orderBy("doc_id")
-    }),
+    // Online trained-LM document scoring (lmServe): the en-slice KN
+    // bigram model at D = 3/4. Faces q250's own oracle SQL row-for-row.
+    "q260_streaming_kn_score" -> ((s, dir) =>
+      lmServe(s, dir, 2, NgramLm.Fixed, None)),
 
-    // The FORTY-FOURTH streaming twin: online trained-LM scoring at
-    // n=3 — q260's serving shape one order up: the en-slice TRIGRAM
-    // model trains once in batch (materialized), arriving docs
-    // explode + stream-static-join the model and its four marginal
-    // tables + aggregate per doc in ONE Update-mode agg
-    // (knTrigramScoreFacts, the SHARED derivation); the fold adds
-    // the zero-row spine through the SHARED knScoreFinish. Faces
+    // q260 one order up: the en-slice KN trigram model at D = 3/4. Faces
     // q267's own oracle SQL row-for-row.
-    "q268_streaming_kn_trigram_score" -> ((s, dir) => {
-      import s.implicits._
-      val d = t(s, dir, "documents")
-      val model = graft.ext.TextAnalysis.knTrigramCounts(
-          d.where(col("lang") === "en").select("doc_id", "text"),
-          "text")
-        .localCheckpoint(true) // the trained artifact, built once
-      val raw = replayDocsThirds(s, d.select("doc_id", "text"),
-        df => graft.streaming.EventStreams.streamingKnTrigramScore(
-          df, "doc_id", "text", model),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .groupBy(_._1).view
-        .mapValues(vs => vs.maxBy(v => (v._2, v._3))).toSeq
-        .map(_._2)
-      graft.ext.TextAnalysis.knScoreFinish(
-          d.select("doc_id").distinct(),
-          folded.toDF("doc_id", "n_trigrams", "sum_p_e9"), "doc_id",
-          nCol = "n_trigrams")
-        .orderBy("doc_id")
-    }),
+    "q268_streaming_kn_trigram_score" -> ((s, dir) =>
+      lmServe(s, dir, 3, NgramLm.Fixed, None)),
 
     // The FORTY-THIRD streaming twin — STREAM×STREAM near-dup in the
     // LEAN two-phase shape (verdict r16 items #6/#7): both sides of
@@ -1607,8 +1608,7 @@ object AnalyticQueries {
           concat(col("text"), lit(" cafe\u0301\u0007  end")))
           .otherwise(col("text")))
       val raw = replayDocsThirds(s, planted.select("doc_id", "text"),
-        df => graft.streaming.EventStreams
-          .streamingUnicodeClean(df, "text")
+        df => graft.ext.TextAnalysis.unicodeClean(df, "text")
           .select(col("doc_id"), length(col("text")).as("n_before"),
             length(col("clean_text")).as("n_after"), col("clean_text")),
         mode = org.apache.spark.sql.streaming.OutputMode.Append())
@@ -1667,332 +1667,90 @@ object AnalyticQueries {
         .orderBy("q_id", "rank")
     }),
 
-    // The THIRTY-FIFTH streaming twin: online Kneser-Ney count
-    // maintenance — LM TRAINING kept fresh at ingest (the q200 shape
-    // for n-gram LMs): knBigramCounts verbatim as the ONE Update-mode
-    // aggregation, MAX fold, continuation statistics through the
-    // SHARED knTable expressions, the same top-200 cut. Faces q246's
-    // own oracle SQL row-for-row.
-    "q247_streaming_kn_counts" -> ((s, dir) => {
-      import s.implicits._
-      val raw = replayDocsThirds(s,
-        t(s, dir, "documents").select("doc_id", "text"),
-        df => graft.streaming.EventStreams.streamingKnCounts(
-          df, "text"),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-        .groupBy(_._1).view.mapValues(_.map(_._2).max)
-        .toSeq.map { case ((w1, w2), n) => (w1, w2, n) }
-      graft.ext.TextAnalysis.knTable(folded.toDF("w1", "w2", "n"))
-        .orderBy(col("n").desc, col("w1"), col("w2"))
-        .limit(200)
-    }),
-
-    // The FORTIETH streaming twin: online SMOOTHED-LM maintenance —
-    // q247's folded count state derived through the SHARED
-    // knProbabilities closed form (D = 3/4, DECIMAL(38,0) integer
-    // arithmetic), so the online probability table cannot drift from
-    // the batch trainer's. Faces q249's own oracle SQL row-for-row.
-    "q257_streaming_kn_probabilities" -> ((s, dir) => {
-      import s.implicits._
-      val raw = replayDocsThirds(s,
-        t(s, dir, "documents").select("doc_id", "text"),
-        df => graft.streaming.EventStreams.streamingKnCounts(
-          df, "text"),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-        .groupBy(_._1).view.mapValues(_.map(_._2).max)
-        .toSeq.map { case ((w1, w2), n) => (w1, w2, n) }
-      graft.ext.TextAnalysis.knProbabilities(
-          folded.toDF("w1", "w2", "n"))
-        .orderBy(col("n").desc, col("w1"), col("w2"))
-        .limit(200)
-    }),
-
-    // The FORTY-FIFTH streaming twin: online TRIGRAM smoothed-table
-    // maintenance — q257 one order up (train online at n=3; serve
-    // online: q268): the trigram explode is stateless, the counts
-    // MONOTONE (ONE Update-mode agg, MAX fold), and the interpolated
-    // model derives from the folded table through the SHARED
-    // knTrigramProbabilities. Faces q266's own oracle SQL
-    // row-for-row.
-    "q272_streaming_kn_trigram_probabilities" -> ((s, dir) => {
-      import s.implicits._
-      val raw = replayDocsThirds(s,
-        t(s, dir, "documents").select("doc_id", "text"),
-        df => graft.streaming.EventStreams.streamingKnTrigramCounts(
-          df, "text"),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => (r.getString(0), r.getString(1), r.getString(2))
-          -> r.getLong(3))
-        .groupBy(_._1).view.mapValues(_.map(_._2).max)
-        .toSeq.map { case ((w1, w2, w3), n) => (w1, w2, w3, n) }
-      graft.ext.TextAnalysis.knTrigramProbabilities(
-          folded.toDF("w1", "w2", "w3", "n"))
-        .orderBy(col("n").desc, col("w1"), col("w2"), col("w3"))
-        .limit(200)
-    }),
-
-    // The FORTY-SIXTH streaming twin: online trigram maintenance at
-    // the PRODUCTION discount (verdict r17 item #5) — q272's folded
-    // count state derived through the SHARED
-    // knTrigramProbabilitiesEstimatedD closed form (per-level
-    // count-of-counts D, three-stage floor), closing the online
-    // family at the production smoother. Faces q274's own oracle SQL
-    // row-for-row.
-    "q280_streaming_kn_trigram_estd" -> ((s, dir) => {
-      import s.implicits._
-      val raw = replayDocsThirds(s,
-        t(s, dir, "documents").select("doc_id", "text"),
-        df => graft.streaming.EventStreams.streamingKnTrigramCounts(
-          df, "text"),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => (r.getString(0), r.getString(1), r.getString(2))
-          -> r.getLong(3))
-        .groupBy(_._1).view.mapValues(_.map(_._2).max)
-        .toSeq.map { case ((w1, w2, w3), n) => (w1, w2, w3, n) }
-      graft.ext.TextAnalysis.knTrigramProbabilitiesEstimatedD(
-          folded.toDF("w1", "w2", "w3", "n"))
-        .orderBy(col("n").desc, col("w1"), col("w2"), col("w3"))
-        .limit(200)
-    }),
-
-    // The FORTY-SEVENTH streaming twin: online trained-LM serving at
-    // the PRODUCTION discount (verdict r17 item #1's serve twin) —
-    // q260's shape with the estimated-D facts (knScoreFactsEstimatedD,
-    // the SHARED derivation; the estimated D rides the 1-row
-    // count-of-counts broadcast); the fold adds the zero-row spine
-    // through the SHARED knScoreFinish. Faces q275's own oracle SQL
-    // row-for-row.
-    "q281_streaming_kn_estd_score" -> ((s, dir) => {
-      import s.implicits._
-      val d = t(s, dir, "documents")
-      val model = graft.ext.TextAnalysis.knBigramCounts(
-          d.where(col("lang") === "en").select("doc_id", "text"),
-          "text")
-        .localCheckpoint(true)
-      val raw = replayDocsThirds(s, d.select("doc_id", "text"),
-        df => graft.streaming.EventStreams.streamingKnScoreEstimatedD(
-          df, "doc_id", "text", model),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .groupBy(_._1).view
-        .mapValues(vs => vs.maxBy(v => (v._2, v._3))).toSeq
-        .map(_._2)
-      graft.ext.TextAnalysis.knScoreFinish(
-          d.select("doc_id").distinct(),
-          folded.toDF("doc_id", "n_bigrams", "sum_p_e9"), "doc_id")
-        .orderBy("doc_id")
-    }),
-
-    // The FORTY-NINTH streaming twin: online serving under MODIFIED
-    // KN — q260's shape with the three-discount facts
-    // (knScoreFactsModified, the SHARED derivation). Faces q283's own
+    // Online Kneser-Ney count maintenance (lmTrain) — LM TRAINING kept
+    // fresh at ingest, the continuation statistics derived from the
+    // folded bigram counts, the same top-200 cut. Faces q246's own
     // oracle SQL row-for-row.
-    "q285_streaming_kn_mkn_score" -> ((s, dir) => {
-      import s.implicits._
-      val d = t(s, dir, "documents")
-      val model = graft.ext.TextAnalysis.knBigramCounts(
-          d.where(col("lang") === "en").select("doc_id", "text"),
-          "text")
-        .localCheckpoint(true)
-      val raw = replayDocsThirds(s, d.select("doc_id", "text"),
-        df => graft.streaming.EventStreams.streamingKnScoreModified(
-          df, "doc_id", "text", model),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .groupBy(_._1).view
-        .mapValues(vs => vs.maxBy(v => (v._2, v._3))).toSeq
-        .map(_._2)
-      graft.ext.TextAnalysis.knScoreFinish(
-          d.select("doc_id").distinct(),
-          folded.toDF("doc_id", "n_bigrams", "sum_p_e9"), "doc_id")
-        .orderBy("doc_id")
-    }),
+    "q247_streaming_kn_counts" -> ((s, dir) =>
+      lmTrain(s, t(s, dir, "documents").select("doc_id", "text"), 2)(NgramLm.continuationTable(_)
+        .orderBy(col("n").desc, col("w1"), col("w2"))
+        .limit(200))),
 
-    // The FIFTIETH streaming twin: online TRIGRAM serving under
-    // MODIFIED KN — q268's shape with the per-level three-discount
-    // facts (knTrigramScoreFactsModified, the SHARED derivation).
-    // Faces q284's own oracle SQL row-for-row.
-    "q286_streaming_kn_trigram_mkn_score" -> ((s, dir) => {
-      import s.implicits._
-      val d = t(s, dir, "documents")
-      val model = graft.ext.TextAnalysis.knTrigramCounts(
-          d.where(col("lang") === "en").select("doc_id", "text"),
-          "text")
-        .localCheckpoint(true)
-      val raw = replayDocsThirds(s, d.select("doc_id", "text"),
-        df => graft.streaming.EventStreams
-          .streamingKnTrigramScoreModified(
-            df, "doc_id", "text", model),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .groupBy(_._1).view
-        .mapValues(vs => vs.maxBy(v => (v._2, v._3))).toSeq
-        .map(_._2)
-      graft.ext.TextAnalysis.knScoreFinish(
-          d.select("doc_id").distinct(),
-          folded.toDF("doc_id", "n_trigrams", "sum_p_e9"), "doc_id",
-          nCol = "n_trigrams")
-        .orderBy("doc_id")
-    }),
+    // Online smoothed-LM maintenance: q247's folded counts through the
+    // batch KN bigram probabilities (D = 3/4). Faces q249's own oracle
+    // SQL row-for-row.
+    "q257_streaming_kn_probabilities" -> ((s, dir) =>
+      lmTrain(s, t(s, dir, "documents").select("doc_id", "text"), 2)(counts =>
+        NgramLm.probabilities(Map(2 -> counts), 2, NgramLm.Fixed)
+          .orderBy(col("n").desc, col("w1"), col("w2"))
+          .limit(200))),
 
-    // The FIFTY-FOURTH streaming twin: online WITTEN-BELL serving —
-    // q260's shape with the WB facts (wittenBellScoreFacts, the
-    // SHARED derivation; the unigram table replaces the continuation
-    // marginal). Faces q295's own oracle SQL row-for-row.
-    "q300_streaming_witten_bell_score" -> ((s, dir) => {
-      import s.implicits._
-      val d = t(s, dir, "documents")
-      val en = d.where(col("lang") === "en")
-        .select("doc_id", "text")
-      val uni = graft.ext.TextAnalysis.unigramTable(en, "text")
-        .localCheckpoint(true)
-      val counts = graft.ext.TextAnalysis.knBigramCounts(en, "text")
-        .localCheckpoint(true)
-      val raw = replayDocsThirds(s, d.select("doc_id", "text"),
-        df => graft.streaming.EventStreams.streamingWittenBellScore(
-          df, "doc_id", "text", counts, uni),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .groupBy(_._1).view
-        .mapValues(vs => vs.maxBy(v => (v._2, v._3))).toSeq
-        .map(_._2)
-      graft.ext.TextAnalysis.knScoreFinish(
-          d.select("doc_id").distinct(),
-          folded.toDF("doc_id", "n_bigrams", "sum_p_e9"), "doc_id")
-        .orderBy("doc_id")
-    }),
+    // q257 one order up (train online at n=3; serve online: q268). Faces
+    // q266's own oracle SQL row-for-row.
+    "q272_streaming_kn_trigram_probabilities" -> ((s, dir) =>
+      lmTrain(s, t(s, dir, "documents").select("doc_id", "text"), 3)(counts =>
+        NgramLm.probabilities(Map(3 -> counts), 3, NgramLm.Fixed)
+          .orderBy(col("n").desc, col("w1"), col("w2"), col("w3"))
+          .limit(200))),
 
-    // The FIFTY-THIRD streaming twin: online STUPID BACKOFF serving
-    // — q268's shape with the Brants facts (stupidBackoffScoreFacts,
-    // the SHARED derivation: five stream-static count joins, no
-    // continuation marginals). Faces q293's own oracle SQL
+    // q272 at the PRODUCTION discount (per-level count-of-counts D,
+    // three-stage floor). Faces q274's own oracle SQL row-for-row.
+    "q280_streaming_kn_trigram_estd" -> ((s, dir) =>
+      lmTrain(s, t(s, dir, "documents").select("doc_id", "text"), 3)(counts =>
+        NgramLm.probabilities(Map(3 -> counts), 3, NgramLm.Estimated)
+          .orderBy(col("n").desc, col("w1"), col("w2"), col("w3"))
+          .limit(200))),
+
+    // q260 at the PRODUCTION (estimated) discount. Faces q275's own
+    // oracle SQL row-for-row.
+    "q281_streaming_kn_estd_score" -> ((s, dir) =>
+      lmServe(s, dir, 2, NgramLm.Estimated, None)),
+
+    // q260 under MODIFIED KN (three count-indexed discounts). Faces
+    // q283's own oracle SQL row-for-row.
+    "q285_streaming_kn_mkn_score" -> ((s, dir) =>
+      lmServe(s, dir, 2, NgramLm.Modified, None)),
+
+    // q268 under MODIFIED KN at both levels. Faces q284's own oracle SQL
     // row-for-row.
-    "q296_streaming_stupid_backoff_score" -> ((s, dir) => {
-      import s.implicits._
-      val d = t(s, dir, "documents")
-      val en = d.where(col("lang") === "en")
-        .select("doc_id", "text")
-      val uni = graft.ext.TextAnalysis.unigramTable(en, "text")
-        .localCheckpoint(true)
-      val bi = graft.ext.TextAnalysis.knBigramCounts(en, "text")
-        .localCheckpoint(true)
-      val tri = graft.ext.TextAnalysis.knTrigramCounts(en, "text")
-        .localCheckpoint(true)
-      val raw = replayDocsThirds(s, d.select("doc_id", "text"),
-        df => graft.streaming.EventStreams
-          .streamingStupidBackoffScore(
-            df, "doc_id", "text", uni, bi, tri),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .groupBy(_._1).view
-        .mapValues(vs => vs.maxBy(v => (v._2, v._3))).toSeq
-        .map(_._2)
-      graft.ext.TextAnalysis.knScoreFinish(
-          d.select("doc_id").distinct(),
-          folded.toDF("doc_id", "n_trigrams", "sum_p_e9"), "doc_id",
-          nCol = "n_trigrams")
-        .orderBy("doc_id")
-    }),
+    "q286_streaming_kn_trigram_mkn_score" -> ((s, dir) =>
+      lmServe(s, dir, 3, NgramLm.Modified, None)),
 
-    // The FIFTY-SECOND streaming twin: OPEN-VOCABULARY online serving
-    // — q260's shape with the <unk>-mapped facts (knScoreFactsUnk,
-    // the SHARED derivation: broadcast vocab dim joins in front of
-    // the cascade). Faces q290's own oracle SQL row-for-row.
-    "q291_streaming_kn_unk_score" -> ((s, dir) => {
-      import s.implicits._
-      val d = t(s, dir, "documents")
-      val en = d.where(col("lang") === "en")
-      val counts = graft.ext.TextAnalysis.knBigramCounts(
-          en.select("doc_id", "text"), "text")
-        .localCheckpoint(true)
-      val vocab = graft.ext.TextAnalysis.knVocabTopK(
-          en.select("doc_id", "text"), "text", 24)
-        .localCheckpoint(true)
-      val raw = replayDocsThirds(s, d.select("doc_id", "text"),
-        df => graft.streaming.EventStreams.streamingKnScoreUnk(
-          df, "doc_id", "text", counts, vocab),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .groupBy(_._1).view
-        .mapValues(vs => vs.maxBy(v => (v._2, v._3))).toSeq
-        .map(_._2)
-      graft.ext.TextAnalysis.knScoreFinish(
-          d.select("doc_id").distinct(),
-          folded.toDF("doc_id", "n_bigrams", "sum_p_e9"), "doc_id")
-        .orderBy("doc_id")
-    }),
+    // q260 under WITTEN-BELL (the unigram table replaces the
+    // continuation marginal). Faces q295's own oracle SQL row-for-row.
+    "q300_streaming_witten_bell_score" -> ((s, dir) =>
+      lmServe(s, dir, 2, NgramLm.WittenBell, None)),
 
-    // The FIFTY-FIRST streaming twin: online trigram maintenance
-    // under MODIFIED KN — q272's folded count state (here on the 'en'
-    // slice, q278's training set) derived through the SHARED
-    // knTrigramProbabilitiesModified closed form (three count-indexed
-    // discounts per level from the folded counts' own count-of-counts)
-    // and q278's per-bucket rank-67 finish. Closes the online model
-    // family at the smoother production toolkits ship. Faces q278's
-    // own oracle SQL row-for-row.
-    "q287_streaming_kn_trigram_mkn" -> ((s, dir) => {
-      import s.implicits._
-      val raw = replayDocsThirds(s,
-        t(s, dir, "documents").where(col("lang") === "en")
-          .select("doc_id", "text"),
-        df => graft.streaming.EventStreams.streamingKnTrigramCounts(
-          df, "text"),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => (r.getString(0), r.getString(1), r.getString(2))
-          -> r.getLong(3))
-        .groupBy(_._1).view.mapValues(_.map(_._2).max)
-        .toSeq.map { case ((w1, w2, w3), n) => (w1, w2, w3, n) }
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(least(col("n"), lit(3L)))
-        .orderBy(col("n").desc, col("w1"), col("w2"), col("w3"))
-      graft.ext.TextAnalysis.knTrigramProbabilitiesModified(
-          folded.toDF("w1", "w2", "w3", "n"))
-        .withColumn("__rk", row_number().over(w))
-        .where(col("__rk") <= 67).drop("__rk")
-        .orderBy(col("n").desc, col("w1"), col("w2"), col("w3"))
-    }),
+    // q268's shape under STUPID BACKOFF (five stream-static count joins,
+    // no continuation marginals). Faces q293's own oracle SQL row-for-
+    // row.
+    "q296_streaming_stupid_backoff_score" -> ((s, dir) =>
+      lmServe(s, dir, 3, NgramLm.StupidBackoff, None)),
 
-    // The FORTY-EIGHTH streaming twin: online TRIGRAM serving at the
-    // PRODUCTION discounts — q268's shape with the estimated-D facts
-    // (knTrigramScoreFactsEstimatedD, the SHARED derivation; both
-    // per-level discounts ride the two 1-row count-of-counts
-    // broadcasts). Faces q276's own oracle SQL row-for-row.
-    "q282_streaming_kn_trigram_estd_score" -> ((s, dir) => {
-      import s.implicits._
-      val d = t(s, dir, "documents")
-      val model = graft.ext.TextAnalysis.knTrigramCounts(
-          d.where(col("lang") === "en").select("doc_id", "text"),
-          "text")
-        .localCheckpoint(true)
-      val raw = replayDocsThirds(s, d.select("doc_id", "text"),
-        df => graft.streaming.EventStreams
-          .streamingKnTrigramScoreEstimatedD(
-            df, "doc_id", "text", model),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .groupBy(_._1).view
-        .mapValues(vs => vs.maxBy(v => (v._2, v._3))).toSeq
-        .map(_._2)
-      graft.ext.TextAnalysis.knScoreFinish(
-          d.select("doc_id").distinct(),
-          folded.toDF("doc_id", "n_trigrams", "sum_p_e9"), "doc_id",
-          nCol = "n_trigrams")
-        .orderBy("doc_id")
-    }),
+    // OPEN-VOCABULARY q260 (top-24 vocab; broadcast vocab dim joins in
+    // front of the cascade). Faces q290's own oracle SQL row-for-row.
+    "q291_streaming_kn_unk_score" -> ((s, dir) =>
+      lmServe(s, dir, 2, NgramLm.Fixed, Some(24))),
+
+    // q272 under MODIFIED KN on the 'en' slice (q278's training set),
+    // with q278's per-bucket rank-67 finish. Faces q278's own oracle SQL
+    // row-for-row.
+    "q287_streaming_kn_trigram_mkn" -> ((s, dir) =>
+      lmTrain(s, t(s, dir, "documents").where(col("lang") === "en")
+          .select("doc_id", "text"), 3) { counts =>
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(least(col("n"), lit(3L)))
+          .orderBy(col("n").desc, col("w1"), col("w2"), col("w3"))
+        NgramLm.probabilities(Map(3 -> counts), 3, NgramLm.Modified)
+          .withColumn("__rk", row_number().over(w))
+          .where(col("__rk") <= 67).drop("__rk")
+          .orderBy(col("n").desc, col("w1"), col("w2"), col("w3"))
+      }),
+
+    // q268 at the PRODUCTION discounts (per-level estimated D). Faces
+    // q276's own oracle SQL row-for-row.
+    "q282_streaming_kn_trigram_estd_score" -> ((s, dir) =>
+      lmServe(s, dir, 3, NgramLm.Estimated, None)),
 
     // The THIRTY-THIRD streaming twin: line-quality filtering at
     // ingest — the batch HOF projection verbatim (stateless,
@@ -2002,7 +1760,7 @@ object AnalyticQueries {
       import s.implicits._
       val raw = replayDocsThirds(s,
         TextQueries.rebuiltLines(s, dir, 4),
-        df => graft.streaming.EventStreams.streamingLineQualityFilter(
+        df => graft.ext.Curation.lineQualityFilter(
           df, "doc_id", "text", minAlphaE9 = 860000000L),
         mode = org.apache.spark.sql.streaming.OutputMode.Append())
       raw.map(r => (r.getLong(0), r.getString(1)))
@@ -2069,7 +1827,7 @@ object AnalyticQueries {
         .as[(Long, String, String)]
       val raw = replayTypedThirds[(Long, String, String)](s, feed,
         Seq("_1"),
-        ds => graft.streaming.EventStreams.streamingPiiCounts(
+        ds => graft.ext.TextAnalysis.piiCounts(
           ds.toDF("doc_id", "source", "text"), "source", "text"),
         mode = org.apache.spark.sql.streaming.OutputMode.Update())
       val folded = raw
@@ -2181,7 +1939,7 @@ object AnalyticQueries {
       import s.implicits._
       val raw = replayDocsThirds(s,
         t(s, dir, "documents").select("doc_id", "text"),
-        df => graft.streaming.EventStreams.streamingFim(
+        df => graft.ext.Curation.fimTransform(
           df, "doc_id", "text", seed = "fim1", rate = 0.75),
         mode = org.apache.spark.sql.streaming.OutputMode.Append())
       raw.map(r => (r.getLong(0), r.getString(1), r.getString(2),
@@ -2200,7 +1958,7 @@ object AnalyticQueries {
       import s.implicits._
       val raw = replayDocsThirds(s,
         t(s, dir, "documents").select("doc_id", "text"),
-        df => graft.streaming.EventStreams.streamingSpanCorrupt(
+        df => graft.ext.Curation.spanCorrupt(
           df, "doc_id", "text", seed = "sc1", startDenom = 8,
           spanLen = 2),
         mode = org.apache.spark.sql.streaming.OutputMode.Append())

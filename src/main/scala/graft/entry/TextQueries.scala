@@ -3,7 +3,7 @@ package graft.entry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.GraftSession
-import graft.ext.{Dedup, TextAnalysis}
+import graft.ext.{Dedup, NgramLm, TextAnalysis}
 
 /** Training-data text-pipeline operators (BASELINE.json north star) over
   * the `documents` table: exact/canonical dedup, MinHash+LSH, n-gram
@@ -303,8 +303,8 @@ object TextQueries {
     // everything the smoother needs except the final division — as
     // exact BIGINTs; top-200 by the total (n desc, w1, w2) order.
     "q246_kn_counts" -> ((s, dir) => {
-      TextAnalysis.knTable(
-          TextAnalysis.knBigramCounts(docs(s, dir), "text"))
+      NgramLm.continuationTable(
+          NgramLm.ngrams(docs(s, dir), "text", 2, None))
         .orderBy(col("n").desc, col("w1"), col("w2"))
         .limit(200)
     }),
@@ -333,7 +333,7 @@ object TextQueries {
     // (lift desc, w1, w2).
     "q259_collocations" -> ((s, dir) => {
       TextAnalysis.collocationLift(
-          TextAnalysis.knBigramCounts(docs(s, dir), "text"),
+          NgramLm.ngrams(docs(s, dir), "text", 2, None),
           minCount = 2)
         .orderBy(col("lift_e9").desc, col("w1"), col("w2"))
         .limit(200)
@@ -345,8 +345,9 @@ object TextQueries {
     // arithmetic, so the trained LM table hash-replays. Same top-200
     // cut as q246.
     "q249_kn_probabilities" -> ((s, dir) => {
-      TextAnalysis.knProbabilities(
-          TextAnalysis.knBigramCounts(docs(s, dir), "text"))
+      NgramLm.probabilities(
+          Map(2 -> NgramLm.ngrams(docs(s, dir), "text", 2, None)), 2,
+          NgramLm.Fixed)
         .orderBy(col("n").desc, col("w1"), col("w2"))
         .limit(200)
     }),
@@ -358,9 +359,9 @@ object TextQueries {
     // floor-e9 (the trigram device) keeps every intermediate inside
     // DECIMAL(38,0) at 100 TB counts. Same top-200 cut as q249.
     "q273_kn_estimated_discount" -> ((s, dir) => {
-      TextAnalysis.knProbabilitiesEstimatedD(
-          TextAnalysis.knBigramCounts(docs(s, dir), "text")
-            .localCheckpoint(true))
+      NgramLm.probabilities(
+          NgramLm.train(docs(s, dir), "text", 2, NgramLm.Estimated), 2,
+          NgramLm.Estimated)
         .orderBy(col("n").desc, col("w1"), col("w2"))
         .limit(200)
     }),
@@ -373,14 +374,14 @@ object TextQueries {
     // inside DECIMAL(38,0) at 100 TB counts. Top-200 by (n desc,
     // w1, w2, w3).
     "q266_kn_trigram_probabilities" -> ((s, dir) => {
-      // the count table materializes once: knTrigramProbabilities
+      // the count table materializes once: the trigram model
       // references it six ways (base + ctx + cont->mid/pre/B) and
       // left lazy the corpus trigram agg re-derives per reference
       // (6 Generate nodes in the first Explain — the q250 lesson at
       // n=3)
-      TextAnalysis.knTrigramProbabilities(
-          TextAnalysis.knTrigramCounts(docs(s, dir), "text")
-            .localCheckpoint(true))
+      NgramLm.probabilities(
+          NgramLm.train(docs(s, dir), "text", 3, NgramLm.Fixed), 3,
+          NgramLm.Fixed)
         .orderBy(col("n").desc, col("w1"), col("w2"), col("w3"))
         .limit(200)
     }),
@@ -391,9 +392,9 @@ object TextQueries {
     // three-stage floor-e9 so the wider estimated-D fractions stay
     // inside DECIMAL(38,0). Same top-200 cut as q266.
     "q274_kn_trigram_estimated_discount" -> ((s, dir) => {
-      TextAnalysis.knTrigramProbabilitiesEstimatedD(
-          TextAnalysis.knTrigramCounts(docs(s, dir), "text")
-            .localCheckpoint(true))
+      NgramLm.probabilities(
+          NgramLm.train(docs(s, dir), "text", 3, NgramLm.Estimated), 3,
+          NgramLm.Estimated)
         .orderBy(col("n").desc, col("w1"), col("w2"), col("w3"))
         .limit(200)
     }),
@@ -406,10 +407,10 @@ object TextQueries {
     // (n1·post·pc)/(c1·M) through the model's own floored pc.
     "q275_kn_estd_doc_score" -> ((s, dir) => {
       val d = docs(s, dir)
-      val model = TextAnalysis.knBigramCounts(
-          d.where(col("lang") === "en"), "text")
-        .localCheckpoint(true)
-      TextAnalysis.knScoreDocsEstimatedD(d, "doc_id", "text", model)
+      val model = NgramLm.train(d.where(col("lang") === "en"), "text",
+        2, NgramLm.Estimated)
+      NgramLm.scoreDocs(d, "doc_id", "text", model, 2, NgramLm.Estimated,
+          None)
         .orderBy("doc_id")
     }),
 
@@ -421,11 +422,10 @@ object TextQueries {
     // all six branches live on non-en docs.
     "q276_kn_trigram_estd_doc_score" -> ((s, dir) => {
       val d = docs(s, dir)
-      val model = TextAnalysis.knTrigramCounts(
-          d.where(col("lang") === "en"), "text")
-        .localCheckpoint(true)
-      TextAnalysis.knScoreDocsTrigramEstimatedD(
-          d, "doc_id", "text", model)
+      val model = NgramLm.train(d.where(col("lang") === "en"), "text",
+        3, NgramLm.Estimated)
+      NgramLm.scoreDocs(d, "doc_id", "text", model, 3, NgramLm.Estimated,
+          None)
         .orderBy("doc_id")
     }),
 
@@ -436,10 +436,10 @@ object TextQueries {
     // through the model's own floored three-discount γ.
     "q283_kn_mkn_doc_score" -> ((s, dir) => {
       val d = docs(s, dir)
-      val model = TextAnalysis.knBigramCounts(
-          d.where(col("lang") === "en"), "text")
-        .localCheckpoint(true)
-      TextAnalysis.knScoreDocsModified(d, "doc_id", "text", model)
+      val model = NgramLm.train(d.where(col("lang") === "en"), "text",
+        2, NgramLm.Modified)
+      NgramLm.scoreDocs(d, "doc_id", "text", model, 2, NgramLm.Modified,
+          None)
         .orderBy("doc_id")
     }),
 
@@ -450,11 +450,10 @@ object TextQueries {
     // floors.
     "q284_kn_trigram_mkn_doc_score" -> ((s, dir) => {
       val d = docs(s, dir)
-      val model = TextAnalysis.knTrigramCounts(
-          d.where(col("lang") === "en"), "text")
-        .localCheckpoint(true)
-      TextAnalysis.knScoreDocsTrigramModified(
-          d, "doc_id", "text", model)
+      val model = NgramLm.train(d.where(col("lang") === "en"), "text",
+        3, NgramLm.Modified)
+      NgramLm.scoreDocs(d, "doc_id", "text", model, 3, NgramLm.Modified,
+          None)
         .orderBy("doc_id")
     }),
 
@@ -467,13 +466,12 @@ object TextQueries {
     // at every SF, so 7 fold at every SF — the truncation is live.
     "q289_kn_unk_model" -> ((s, dir) => {
       val en = docs(s, dir).where(col("lang") === "en")
-      val counts = TextAnalysis.knBigramCounts(en, "text")
+      val counts = NgramLm.train(en, "text", 2, NgramLm.Fixed)(2)
+      val vocab = NgramLm.vocabTopK(en, "text", 24)
         .localCheckpoint(true)
-      val vocab = TextAnalysis.knVocabTopK(en, "text", 24)
-        .localCheckpoint(true)
-      TextAnalysis.knProbabilities(
-          TextAnalysis.knCountsWithUnk(counts, vocab)
-            .localCheckpoint(true))
+      NgramLm.probabilities(
+          Map(2 -> NgramLm.withUnk(counts, 2, vocab).localCheckpoint(true)),
+          2, NgramLm.Fixed)
         .orderBy(col("n").desc, col("w1"), col("w2"))
     }),
 
@@ -486,30 +484,29 @@ object TextQueries {
     "q290_kn_unk_doc_score" -> ((s, dir) => {
       val d = docs(s, dir)
       val en = d.where(col("lang") === "en")
-      val counts = TextAnalysis.knBigramCounts(en, "text")
+      val model = NgramLm.train(en, "text", 2, NgramLm.Fixed)
+      val vocab = NgramLm.vocabTopK(en, "text", 24)
         .localCheckpoint(true)
-      val vocab = TextAnalysis.knVocabTopK(en, "text", 24)
-        .localCheckpoint(true)
-      TextAnalysis.knScoreDocsUnk(d, "doc_id", "text", counts, vocab)
+      NgramLm.scoreDocs(d, "doc_id", "text", model, 2, NgramLm.Fixed,
+          Some(vocab))
         .orderBy("doc_id")
     }),
 
     // The smoother families COMPOSE: modified Kneser-Ney trained on
     // the <unk>-folded vocabulary — q277's three-discount estimator
     // over q289's truncated count table, a pure composition of
-    // knProbabilitiesModified with knCountsWithUnk (zero new operator
+    // Modified probabilities with the <unk> fold (zero new operator
     // code; the fold changes the count-of-counts, so all three
     // discounts shift with it — that coupling is exactly what the
     // hash gate certifies end-to-end).
     "q298_kn_unk_mkn_model" -> ((s, dir) => {
       val en = docs(s, dir).where(col("lang") === "en")
-      val counts = TextAnalysis.knBigramCounts(en, "text")
+      val counts = NgramLm.train(en, "text", 2, NgramLm.Modified)(2)
+      val vocab = NgramLm.vocabTopK(en, "text", 24)
         .localCheckpoint(true)
-      val vocab = TextAnalysis.knVocabTopK(en, "text", 24)
-        .localCheckpoint(true)
-      TextAnalysis.knProbabilitiesModified(
-          TextAnalysis.knCountsWithUnk(counts, vocab)
-            .localCheckpoint(true))
+      NgramLm.probabilities(
+          Map(2 -> NgramLm.withUnk(counts, 2, vocab).localCheckpoint(true)),
+          2, NgramLm.Modified)
         .orderBy(col("n").desc, col("w1"), col("w2"))
     }),
 
@@ -521,12 +518,11 @@ object TextQueries {
     "q299_kn_unk_mkn_doc_score" -> ((s, dir) => {
       val d = docs(s, dir)
       val en = d.where(col("lang") === "en")
-      val counts = TextAnalysis.knBigramCounts(en, "text")
+      val model = NgramLm.train(en, "text", 2, NgramLm.Modified)
+      val vocab = NgramLm.vocabTopK(en, "text", 24)
         .localCheckpoint(true)
-      val vocab = TextAnalysis.knVocabTopK(en, "text", 24)
-        .localCheckpoint(true)
-      TextAnalysis.knScoreDocsUnkModified(d, "doc_id", "text",
-          counts, vocab)
+      NgramLm.scoreDocs(d, "doc_id", "text", model, 2, NgramLm.Modified,
+          Some(vocab))
         .orderBy("doc_id")
     }),
 
@@ -537,9 +533,8 @@ object TextQueries {
     // language-keyed window after the linear scorer — no global sort.
     "q297_ccnet_buckets" -> ((s, dir) => {
       val d = docs(s, dir)
-      val model = TextAnalysis.knBigramCounts(
-          d.where(col("lang") === "en"), "text")
-        .localCheckpoint(true)
+      val model = NgramLm.train(d.where(col("lang") === "en"), "text",
+        2, NgramLm.Fixed)
       graft.ext.Curation.ccnetBuckets(d, "doc_id", "lang", "text",
           model)
         .orderBy("doc_id")
@@ -555,9 +550,8 @@ object TextQueries {
     // internal LM gate's.
     "q301_ccnet_selected_pipeline" -> ((s, dir) => {
       val d = docs(s, dir)
-      val model = TextAnalysis.knBigramCounts(
-          d.where(col("lang") === "en"), "text")
-        .localCheckpoint(true)
+      val model = NgramLm.train(d.where(col("lang") === "en"), "text",
+        2, NgramLm.Fixed)
       // materialized keep set: the pipeline plans against a leaf
       // instead of re-carrying the scorer + ntile window tree
       // (corpus-bounded, so checkpoint only — no broadcast hint)
@@ -579,14 +573,9 @@ object TextQueries {
     "q293_stupid_backoff_doc_score" -> ((s, dir) => {
       val d = docs(s, dir)
       val en = d.where(col("lang") === "en")
-      val uni = TextAnalysis.unigramTable(en, "text")
-        .localCheckpoint(true)
-      val bi = TextAnalysis.knBigramCounts(en, "text")
-        .localCheckpoint(true)
-      val tri = TextAnalysis.knTrigramCounts(en, "text")
-        .localCheckpoint(true)
-      TextAnalysis.stupidBackoffScoreDocs(d, "doc_id", "text",
-          uni, bi, tri)
+      val model = NgramLm.train(en, "text", 3, NgramLm.StupidBackoff)
+      NgramLm.scoreDocs(d, "doc_id", "text", model, 3,
+          NgramLm.StupidBackoff, None)
         .orderBy("doc_id")
     }),
 
@@ -597,11 +586,9 @@ object TextQueries {
     // integers so a single floor loses < 1 ulp.
     "q294_witten_bell_model" -> ((s, dir) => {
       val en = docs(s, dir).where(col("lang") === "en")
-      val uni = TextAnalysis.unigramTable(en, "text")
-        .localCheckpoint(true)
-      val counts = TextAnalysis.knBigramCounts(en, "text")
-        .localCheckpoint(true)
-      TextAnalysis.wittenBellProbabilities(counts, uni)
+      NgramLm.probabilities(
+          NgramLm.train(en, "text", 2, NgramLm.WittenBell), 2,
+          NgramLm.WittenBell)
         .orderBy(col("n").desc, col("w1"), col("w2"))
     }),
 
@@ -610,12 +597,9 @@ object TextQueries {
     "q295_witten_bell_doc_score" -> ((s, dir) => {
       val d = docs(s, dir)
       val en = d.where(col("lang") === "en")
-      val uni = TextAnalysis.unigramTable(en, "text")
-        .localCheckpoint(true)
-      val counts = TextAnalysis.knBigramCounts(en, "text")
-        .localCheckpoint(true)
-      TextAnalysis.wittenBellScoreDocs(d, "doc_id", "text",
-          counts, uni)
+      val model = NgramLm.train(en, "text", 2, NgramLm.WittenBell)
+      NgramLm.scoreDocs(d, "doc_id", "text", model, 2,
+          NgramLm.WittenBell, None)
         .orderBy("doc_id")
     }),
 
@@ -633,10 +617,9 @@ object TextQueries {
     // in the emitted window, so all three discount PICKS are visible
     // in the oracle-checked table at every SF.
     "q277_kn_modified" -> ((s, dir) => {
-      TextAnalysis.knProbabilitiesModified(
-          TextAnalysis.knBigramCounts(
-              docs(s, dir).where(col("lang") === "en"), "text")
-            .localCheckpoint(true))
+      NgramLm.probabilities(
+          NgramLm.train(docs(s, dir).where(col("lang") === "en"), "text",
+            2, NgramLm.Modified), 2, NgramLm.Modified)
         .orderBy(col("n"), col("w1"), col("w2"))
         .limit(200)
     }),
@@ -657,10 +640,9 @@ object TextQueries {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(least(col("n"), lit(3L)))
         .orderBy(col("n").desc, col("w1"), col("w2"), col("w3"))
-      TextAnalysis.knTrigramProbabilitiesModified(
-          TextAnalysis.knTrigramCounts(
-              docs(s, dir).where(col("lang") === "en"), "text")
-            .localCheckpoint(true))
+      NgramLm.probabilities(
+          NgramLm.train(docs(s, dir).where(col("lang") === "en"), "text",
+            3, NgramLm.Modified), 3, NgramLm.Modified)
         .withColumn("__rk", row_number().over(w))
         .where(col("__rk") <= 67).drop("__rk")
         .orderBy(col("n").desc, col("w1"), col("w2"), col("w3"))
@@ -678,10 +660,10 @@ object TextQueries {
     // no common-subplan dedup.
     "q267_kn_trigram_doc_score" -> ((s, dir) => {
       val d = docs(s, dir)
-      val model = TextAnalysis.knTrigramCounts(
-          d.where(col("lang") === "en"), "text")
-        .localCheckpoint(true)
-      TextAnalysis.knScoreDocsTrigram(d, "doc_id", "text", model)
+      val model = NgramLm.train(d.where(col("lang") === "en"), "text",
+        3, NgramLm.Fixed)
+      NgramLm.scoreDocs(d, "doc_id", "text", model, 3, NgramLm.Fixed,
+          None)
         .orderBy("doc_id")
     }),
 
@@ -694,14 +676,14 @@ object TextQueries {
     // needs).
     "q250_kn_doc_score" -> ((s, dir) => {
       val d = docs(s, dir)
-      // the trained model materializes ONCE: knScoreDocs references
+      // the trained model materializes ONCE: the scorer references
       // the count table four times (probs, both marginals, B) and
       // Spark has no common-subplan dedup — left lazy, the en-slice
       // bigram agg would re-run per reference (4 corpus scans)
-      val model = TextAnalysis.knBigramCounts(
-          d.where(col("lang") === "en"), "text")
-        .localCheckpoint(true)
-      TextAnalysis.knScoreDocs(d, "doc_id", "text", model)
+      val model = NgramLm.train(d.where(col("lang") === "en"), "text",
+        2, NgramLm.Fixed)
+      NgramLm.scoreDocs(d, "doc_id", "text", model, 2, NgramLm.Fixed,
+          None)
         .orderBy("doc_id")
     }),
 
@@ -890,9 +872,8 @@ object TextQueries {
     // (sum >= n·tau — no division).
     "q269_lm_gated_pipeline" -> ((s, dir) => {
       val d = docs(s, dir)
-      val model = TextAnalysis.knBigramCounts(
-          d.where(col("lang") === "en"), "text")
-        .localCheckpoint(true)
+      val model = NgramLm.train(d.where(col("lang") === "en"), "text",
+        2, NgramLm.Fixed)
       graft.ext.Curation.curationPipeline(d,
           graft.ext.Curation.CurationConfig(lmMinMeanPE9 = 34000000L),
           Some(model))
@@ -900,22 +881,20 @@ object TextQueries {
     }),
 
     // q269 with the TRIGRAM scorer plugged into the gate (verdict r17
-    // item #3 — the gate was hard-wired to the bigram knScoreFacts):
-    // curationPipeline's lmScorer knob takes q267's
-    // knTrigramScoreFacts, so only docs with floor-e9 mean TRIGRAM
+    // item #3 — the gate was hard-wired to the bigram scorer):
+    // curationPipeline's lmScorer knob takes q267's trigram
+    // scorer, so only docs with floor-e9 mean TRIGRAM
     // probability >= 40e6 enter the pipeline (232/500, 251/500,
     // 1601/5000 pass at the three SFs — non-vacuous both ways).
     // Sub-3-token docs have no facts row and are cut by the active
     // gate, same convention as the bigram gate at n=2.
     "q279_lm_gated_pipeline_trigram" -> ((s, dir) => {
       val d = docs(s, dir)
-      val model = TextAnalysis.knTrigramCounts(
-          d.where(col("lang") === "en"), "text")
-        .localCheckpoint(true)
+      val model = NgramLm.train(d.where(col("lang") === "en"), "text",
+        3, NgramLm.Fixed)
       graft.ext.Curation.curationPipeline(d,
           graft.ext.Curation.CurationConfig(lmMinMeanPE9 = 40000000L),
-          Some(model),
-          lmScorer = TextAnalysis.knTrigramScoreFacts(_, _, _, _))
+          Some(model), lmScorer = (3, NgramLm.Fixed))
         .orderBy("doc_id")
     }),
 
@@ -929,13 +908,11 @@ object TextQueries {
     // drop in unchanged.
     "q288_lm_gated_pipeline_mkn" -> ((s, dir) => {
       val d = docs(s, dir)
-      val model = TextAnalysis.knBigramCounts(
-          d.where(col("lang") === "en"), "text")
-        .localCheckpoint(true)
+      val model = NgramLm.train(d.where(col("lang") === "en"), "text",
+        2, NgramLm.Modified)
       graft.ext.Curation.curationPipeline(d,
           graft.ext.Curation.CurationConfig(lmMinMeanPE9 = 33500000L),
-          Some(model),
-          lmScorer = TextAnalysis.knScoreFactsModified(_, _, _, _))
+          Some(model), lmScorer = (2, NgramLm.Modified))
         .orderBy("doc_id")
     }),
 
@@ -947,13 +924,11 @@ object TextQueries {
     // visible through the gate, not just the model table.
     "q292_lm_gated_pipeline_estd" -> ((s, dir) => {
       val d = docs(s, dir)
-      val model = TextAnalysis.knBigramCounts(
-          d.where(col("lang") === "en"), "text")
-        .localCheckpoint(true)
+      val model = NgramLm.train(d.where(col("lang") === "en"), "text",
+        2, NgramLm.Estimated)
       graft.ext.Curation.curationPipeline(d,
           graft.ext.Curation.CurationConfig(lmMinMeanPE9 = 33500000L),
-          Some(model),
-          lmScorer = TextAnalysis.knScoreFactsEstimatedD(_, _, _, _))
+          Some(model), lmScorer = (2, NgramLm.Estimated))
         .orderBy("doc_id")
     }),
 

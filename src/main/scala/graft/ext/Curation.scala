@@ -233,12 +233,12 @@ object Curation {
     * stage planned 36 parquet scans; this shape plans 4 (+1 in the
     * boilerplate pass-1 collect job).
     *
-    * `lmModel`: an optional TRAINED Kneser–Ney bigram count table
-    * ([[TextAnalysis.knBigramCounts]] output, MATERIALIZED — it is
-    * referenced four times by the scorer). When provided, a
-    * CCNet-style LM-scored quality gate runs FIRST: every document
-    * scores through [[TextAnalysis.knScoreFacts]] (the q250
-    * derivation verbatim) and only docs with floor-e9 mean bigram
+    * `lmModel`: an optional TRAINED n-gram model
+    * ([[NgramLm.train]] output, MATERIALIZED — the scorer references
+    * it several times) of the (order, smoother) `lmScorer` names.
+    * When provided, a CCNet-style LM-scored quality gate runs FIRST:
+    * every document scores through [[NgramLm.facts]] (the q250
+    * derivation verbatim) and only docs with floor-e9 mean n-gram
     * probability >= `cfg.lmMinMeanPE9` enter the pipeline. The
     * compare is exact-integer (`sum_p_e9 >= n_bigrams·τ` ⇔
     * `mean_p_e9 >= τ` for integer τ — no division); sub-2-token docs
@@ -250,23 +250,21 @@ object Curation {
     * corpus (the composition order the CCNet recipe uses). */
   def curationPipeline(d: DataFrame,
       cfg: CurationConfig = CurationConfig(),
-      lmModel: Option[DataFrame] = None,
-      lmScorer: (DataFrame, String, String, DataFrame) => DataFrame =
-        TextAnalysis.knScoreFacts(_, _, _, _)): DataFrame = {
+      lmModel: Option[Map[Int, DataFrame]] = None,
+      lmScorer: (Int, NgramLm.Smoother) = (2, NgramLm.Fixed)): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(cfg.quotaK >= 1, "quotaK must be >= 1")
     require(cfg.lineWidth >= 1, "lineWidth must be >= 1")
     val gated = lmModel match {
       case Some(m) =>
-        // the scorer is pluggable (bigram/trigram × pinned/estimated
-        // discount — any of the knScoreFacts family): a facts frame is
-        // (doc_id, <instance count>, sum_p_e9), so the gate reads the
-        // count column by elimination. The compare is exact-integer
-        // (sum ≥ n·τ ⇔ mean ≥ τ — no division), widened to
-        // DECIMAL(38,0) so it cannot wrap at 100 TB instance counts.
-        val facts = lmScorer(d, "doc_id", "text", m)
-        val nCol = facts.columns
-          .filterNot(Set("doc_id", "sum_p_e9")).head
+        // the scorer is pluggable (any order × smoother). The compare
+        // is exact-integer (sum ≥ n·τ ⇔ mean ≥ τ — no division),
+        // widened to DECIMAL(38,0) so it cannot wrap at 100 TB
+        // instance counts.
+        val (order, smoother) = lmScorer
+        val facts = NgramLm.facts(d, "doc_id", "text", m, order, smoother,
+          None)
+        val nCol = NgramLm.countCol(order)
         val dec38 = (c: Column) => c.cast("decimal(38,0)")
         // the keep set is materialized so the pipeline below plans
         // against a leaf instead of re-carrying the whole scorer tree
@@ -675,21 +673,17 @@ object Curation {
     * so the rank is (mean_p_e9 DESC, id) — fully deterministic, and
     * `ntile(3)` is engine-portable (same fencepost rule in Spark and
     * DuckDB, pinned by q55's quartiles). The scorer is pluggable
-    * like the LM gate's ([[TextAnalysis.knScoreFacts]] family —
-    * pinned/estimated/modified discounts all satisfy the facts
-    * contract). Scale: the scorer's instance joins (linear), then
+    * like the LM gate's ([[NgramLm.scoreDocs]] at any order and
+    * smoother). Scale: the scorer's instance joins (linear), then
     * ONE window keyed by language — the corpus shuffles once on the
     * language key; no global sort. */
   def ccnetBuckets(docs: DataFrame, idCol: String, langCol: String,
-      textCol: String, lmModel: DataFrame,
-      lmScorer: (DataFrame, String, String, DataFrame) => DataFrame =
-        TextAnalysis.knScoreFacts(_, _, _, _)): DataFrame = {
+      textCol: String, lmModel: Map[Int, DataFrame],
+      lmScorer: (Int, NgramLm.Smoother) = (2, NgramLm.Fixed)): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val facts = lmScorer(docs, idCol, textCol, lmModel)
-    val nCol = facts.columns
-      .filterNot(Set(idCol, "sum_p_e9")).head
-    val scored = TextAnalysis.knScoreFinish(
-      docs.select(col(idCol)).distinct(), facts, idCol, nCol = nCol)
+    val (order, smoother) = lmScorer
+    val scored = NgramLm.scoreDocs(docs, idCol, textCol, lmModel, order,
+      smoother, None)
     val w = Window.partitionBy(col(langCol))
       .orderBy(col("mean_p_e9").desc, col(idCol))
     docs.select(col(idCol), col(langCol))
@@ -928,7 +922,8 @@ object Curation {
     *
     * ENTIRELY map-only — split, filter, rejoin happen inside one scan
     * projection; at 100 TB this is storage-bandwidth work with zero
-    * shuffle (same class as [[fimTransform]]). */
+    * shuffle (same class as [[fimTransform]]). On a streaming frame it
+    * is stateless and Append-legal. */
   def lineQualityFilter(df: DataFrame, idCol: String, textCol: String,
       minAlphaE9: Long): DataFrame = {
     require(minAlphaE9 >= 0 && minAlphaE9 <= 1000000000L,
@@ -1004,7 +999,8 @@ object Curation {
     * astral fixtures), so multi-byte text splits identically
     * everywhere. Docs with NULL text or < 2 code points stay `plain`.
     * Map-only: one projection pass, no shuffle, no state — FIM at
-    * 100 TB is scan-bandwidth work.
+    * 100 TB is scan-bandwidth work. On a streaming frame it is
+    * Append-legal with no watermark, exactly-once per doc.
     *
     * Output: idCol, fim_mode ('psm' | 'spm' | 'plain'), prefix,
     * middle, suffix — with `prefix || middle || suffix == text` always
@@ -1062,7 +1058,8 @@ object Curation {
     *
     * Output: idCol, `input_text`, `target_text`, `n_spans` (tokens
     * space-rejoined — the token-level contract; docs with no tokens
-    * keep an empty row). */
+    * keep an empty row). On a streaming frame it is stateless and
+    * Append-legal with no watermark. */
   def spanCorrupt(df: DataFrame, idCol: String, textCol: String,
       seed: String, startDenom: Int = 8, spanLen: Int = 2): DataFrame = {
     require(startDenom >= 1, s"startDenom must be >= 1 (got $startDenom)")

@@ -219,7 +219,7 @@ object Similarity {
   /** The APPLY half of [[standardize]]: map-only transform against
     * the collected artifact as two plan-literal arrays — works
     * identically on a batch frame or a micro-batch stream (no join,
-    * no shuffle, no state). */
+    * no shuffle, no state; exactly-once per row). */
   def standardizeApply(df: DataFrame, vecCol: String,
       statsDf: DataFrame, out: String = "zvec",
       maxDims: Int = 4096): DataFrame = {

@@ -854,234 +854,6 @@ object TextAnalysis {
       out: String = "text_redacted"): DataFrame =
     df.withColumn(out, redact(col(textCol)))
 
-  /** Adjacent-bigram counts over the corpus — the exact-integer CORE
-    * of a Kneser–Ney n-gram LM (the q196 NB-trainer device applied to
-    * LM training: everything the smoother needs EXCEPT the final
-    * division/log lives in exact BIGINTs, so training is
-    * oracle-checkable). One in-scan bigram explode + ONE (w1, w2)
-    * aggregation whose map-side partials collapse repeats — the
-    * shuffle carries collapsed bigram tuples, never the corpus. */
-  def knBigramCounts(df: DataFrame, textCol: String): DataFrame =
-    // adjacent pairs as a zip of offset slices — slice(_, 1, 0) is []
-    // so sub-2-token docs emit nothing (sequence(1, 0) would generate
-    // a DESCENDING range and fabricate a bogus pair — the trap this
-    // spelling avoids)
-    df.select(filter(tokens(col(textCol)), t => length(t) > 0)
-        .as("__t"))
-      .select(explode(arrays_zip(
-        slice(col("__t"), lit(1),
-          greatest(size(col("__t")) - 1, lit(0))).as("w1"),
-        slice(col("__t"), lit(2),
-          greatest(size(col("__t")) - 1, lit(0))).as("w2")))
-        .as("__b"))
-      .select(col("__b").getField("w1").as("w1"),
-        col("__b").getField("w2").as("w2"))
-      .groupBy("w1", "w2")
-      .agg(count(lit(1)).as("n"))
-
-  /** The Kneser–Ney continuation statistics over a (w1, w2, n) bigram
-    * table — `n1plus_pre` = |{w : c(w, w2) > 0}| (how many distinct
-    * LEFT contexts w2 follows — the KN unigram numerator) and
-    * `n1plus_post` = |{w : c(w1, w) > 0}| (distinct continuations of
-    * w1 — the normalizer). Shared by the batch row and the streaming
-    * twin's folded counts, so the derivations cannot drift. All
-    * exact BIGINTs. */
-  def knTable(counts: DataFrame): DataFrame = {
-    val pre = counts.groupBy(col("w2"))
-      .agg(count(lit(1)).as("n1plus_pre"))
-    val post = counts.groupBy(col("w1"))
-      .agg(count(lit(1)).as("n1plus_post"))
-    counts.join(pre, Seq("w2")).join(post, Seq("w1"))
-      .select("w1", "w2", "n", "n1plus_pre", "n1plus_post")
-  }
-
-  /** Interpolated Kneser–Ney bigram probabilities over a (w1, w2, n)
-    * count table — the SMOOTHED model the [[knTable]] statistics
-    * exist for (Kneser/Ney 1995; Chen/Goodman 1999's interpolated
-    * form), with the discount FIXED at D = 3/4 so every probability
-    * is an exact rational:
-    *
-    *   P(w2|w1) = (n − D)/c1 + (D·post(w1)/c1) · (pre(w2)/B)
-    *            = ((4n − 3)·B + 3·post·pre) / (4·c1·B)
-    *
-    * where c1 = Σ_w n(w1, w), post/pre are [[knTable]]'s continuation
-    * counts, and B = |distinct bigrams| (the continuation-unigram
-    * normalizer). Emitted as floor-e9 (`p_e9`) through DECIMAL(38,0)
-    * integer arithmetic — numerator ≤ 4·10⁹·n·B stays inside 38
-    * digits at 100 TB (n ~ 10¹², B ~ 10¹⁰ → ~4·10³¹), and floor `div`
-    * agrees with any engine's `//` on non-negatives, so the trained
-    * table hash-replays. n ≥ 1 in a count table, so the max(n − D, 0)
-    * clip is never active on seen bigrams.
-    *
-    * Scale shape: two aggregations over the COLLAPSED bigram table
-    * (per-w1 totals+fanout, per-w2 fanout) joined back on their keys;
-    * the 1-row B total broadcasts. The corpus itself was collapsed by
-    * [[knBigramCounts]] — nothing here touches it again. */
-  def knProbabilities(counts: DataFrame): DataFrame = {
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    val ctx = counts.groupBy(col("w1"))
-      .agg(sum(col("n")).as("c1"), count(lit(1)).as("post"))
-    val cont = counts.groupBy(col("w2"))
-      .agg(count(lit(1)).as("pre"))
-    counts
-      .join(ctx, Seq("w1")).join(cont, Seq("w2"))
-      .crossJoin(broadcast(counts.agg(count(lit(1)).as("b"))))
-      .withColumn("__num",
-        dec(lit(1000000000L)) *
-          ((dec(lit(4L)) * dec(col("n")) - dec(lit(3L))) * dec(col("b"))
-            + dec(lit(3L)) * dec(col("post")) * dec(col("pre"))))
-      .withColumn("__den", dec(lit(4L)) * dec(col("c1")) * dec(col("b")))
-      .withColumn("p_e9", expr("__num div __den"))
-      .select("w1", "w2", "n", "p_e9")
-  }
-
-  /** Interpolated Kneser–Ney bigram probabilities with NEY'S ESTIMATED
-    * discount — the production form of [[knProbabilities]]: instead of
-    * pinning D = 3/4, estimate it from the count-of-counts
-    * (Ney/Essen/Kneser 1994; Chen/Goodman 1999's recommendation)
-    *
-    *   D = n₁ / (n₁ + 2·n₂)
-    *
-    * where n₁/n₂ = the number of bigram types occurring exactly
-    * once/twice. D stays a RATIONAL of corpus integers, so the whole
-    * model remains exactly replayable. With M = n₁ + 2·n₂:
-    *
-    *   P(w2|w1) = (n − D)/c1 + (D·post/c1)·(pre/B)
-    *            = ((n·M − n₁)·B + n₁·post·pre) / (c1·M·B)
-    *
-    * emitted floor-e9 in TWO documented stages (the trigram device —
-    * the single-fraction numerator n·M·B·10⁹ ~ 10⁴¹ overflows
-    * DECIMAL(38,0) at 100 TB counts):
-    *
-    *   pc_e9 = pre·10⁹ div B                      (continuation prob)
-    *   p_e9  = ((n·M − n₁)·10⁹ + n₁·post·pc_e9) div (c1·M)
-    *
-    * Headroom: n·M·10⁹ ~ 10¹²·10¹⁰·10⁹ = 10³¹ and n₁·post·pc_e9 ≤
-    * 10¹⁰·10⁶·10⁹ = 10²⁵ — inside 38 digits with room. Composition
-    * through the floored pc_e9 differs from the true rational by
-    * < D·post/c1·10⁻⁹ ≤ 1 ulp. n·M − n₁ ≥ M − n₁ = 2n₂ ≥ 0, so the
-    * top term is non-negative for every seen bigram WITHOUT a clip
-    * (D ≤ 1 by construction). Degenerate corpus with no singletons
-    * and no doubletons (M = 0): D is 0/0 — the convention here is
-    * D = 0, i.e. the unsmoothed ML estimate n·10⁹ div c1.
-    *
-    * Output: w1, w2, n, d_e9 (the global discount, for the training
-    * report), p_e9. Same collapsed-table scale shape as
-    * [[knProbabilities]] — the count-of-counts ride the SAME 1-row
-    * broadcast as B. */
-  def knProbabilitiesEstimatedD(counts: DataFrame): DataFrame = {
-    val ctx = counts.groupBy(col("w1"))
-      .agg(sum(col("n")).as("c1"), count(lit(1)).as("post"))
-    val cont = counts.groupBy(col("w2"))
-      .agg(count(lit(1)).as("pre"))
-    val tot = counts.agg(count(lit(1)).as("b"),
-      sum(when(col("n") === 1, 1L).otherwise(0L)).as("n1"),
-      sum(when(col("n") === 2, 1L).otherwise(0L)).as("n2"))
-    counts
-      .join(ctx, Seq("w1")).join(cont, Seq("w2"))
-      .crossJoin(broadcast(tot))
-      .withColumn("__m", col("n1") + lit(2L) * col("n2"))
-      .withColumn("d_e9",
-        when(col("__m") > 0,
-          expr("(CAST(n1 AS DECIMAL(38,0)) * 1000000000) div " +
-            "CAST(__m AS DECIMAL(38,0))")).otherwise(lit(0L)))
-      .withColumn("__pc",
-        expr("(CAST(pre AS DECIMAL(38,0)) * 1000000000) div " +
-          "CAST(b AS DECIMAL(38,0))"))
-      .withColumn("p_e9",
-        when(col("__m") > 0, expr(
-          "((CAST(n AS DECIMAL(38,0)) * __m - n1) * 1000000000" +
-            " + CAST(n1 AS DECIMAL(38,0)) * post * __pc)" +
-            " div (CAST(c1 AS DECIMAL(38,0)) * __m)"))
-          .otherwise(expr(
-            "(CAST(n AS DECIMAL(38,0)) * 1000000000)" +
-              " div CAST(c1 AS DECIMAL(38,0))")))
-      .select("w1", "w2", "n", "d_e9", "p_e9")
-  }
-
-  /** MODIFIED Kneser–Ney bigram probabilities — Chen/Goodman 1999's
-    * three-discount estimator, the smoother production toolkits
-    * (SRILM, KenLM) actually ship: instead of one discount for every
-    * count, three discounts indexed by the count itself, each
-    * estimated from the count-of-counts n₁..n₄ (types seen exactly
-    * 1..4 times). With Y = n₁/(n₁+2n₂) = n₁/M:
-    *
-    *   D₁ = 1 − 2Y·n₂/n₁ = n₁/M          (algebraically = Y)
-    *   D₂ = 2 − 3Y·n₃/n₂ = (2n₂M − 3n₁n₃)/(n₂M)
-    *   D₃₊ = 3 − 4Y·n₄/n₃ = (3n₃M − 4n₁n₄)/(n₃M)
-    *
-    *   P(w2|w1) = (n − D(n))/c1 + γ(w1)/c1 · pre(w2)/B
-    *   γ(w1) = D₁·K₁(w1) + D₂·K₂(w1) + D₃₊·K₃₊(w1)
-    *
-    * where D(n) picks by CASE on the count (n=1 → D₁, n=2 → D₂,
-    * else D₃₊), Kₖ(w1) = |{w2 : c(w1,w2) = k}| (K₃₊ for ≥ 3) are the
-    * per-context type counts, and pre/B the usual continuation
-    * unigram. Each discount is pre-floored to e9 (d₁/d₂/d₃ _e9) and
-    * the probability composes through those floored discounts in ONE
-    * stage:
-    *
-    *   p_e9 = ((n·10⁹ − dsel_e9)·B + γ_e9·pre) div (c1·B)
-    *
-    * Headroom: n·10⁹·B ~ 10¹²·10⁹·10¹⁰ = 10³¹ and γ_e9·pre ≤
-    * 3·10⁹·post·pre ~ 10²⁵ — inside DECIMAL(38,0). Non-negativity:
-    * D₁ ≤ 1 ≤ n on its rows; D₂ ≤ 2, D₃₊ ≤ 3 structurally (the
-    * subtracted terms are ≥ 0) and each is clipped at 0 BEFORE the
-    * division (GREATEST on the numerator — keeps floor = truncate on
-    * both engines), so n·10⁹ − dsel_e9 ≥ 0 always. Conventions,
-    * deterministic for the oracle: M = 0 → all discounts 0 (the
-    * unsmoothed ML model, γ = 0 — [[knProbabilitiesEstimatedD]]'s
-    * convention); an EMPTY count-of-counts bucket (n₂ = 0 for D₂,
-    * n₃ = 0 for D₃₊ — the formula's denominator) falls back to D₁
-    * (≤ 1, so non-negativity is preserved on every row it can
-    * select). Output: w1, w2, n, d1_e9, d2_e9, d3_e9, p_e9.
-    *
-    * Scale shape identical to [[knProbabilities]]: two aggregations
-    * over the COLLAPSED bigram table (the per-w1 agg carries three
-    * extra conditional counts), count-of-counts ride the 1-row B
-    * broadcast. */
-  def knProbabilitiesModified(counts: DataFrame): DataFrame = {
-    val ctx = counts.groupBy(col("w1"))
-      .agg(sum(col("n")).as("c1"),
-        sum(when(col("n") === 1, 1L).otherwise(0L)).as("k1"),
-        sum(when(col("n") === 2, 1L).otherwise(0L)).as("k2"),
-        sum(when(col("n") >= 3, 1L).otherwise(0L)).as("k3p"))
-    val cont = counts.groupBy(col("w2"))
-      .agg(count(lit(1)).as("pre"))
-    val tot = counts.agg(count(lit(1)).as("b"),
-      sum(when(col("n") === 1, 1L).otherwise(0L)).as("n1"),
-      sum(when(col("n") === 2, 1L).otherwise(0L)).as("n2"),
-      sum(when(col("n") === 3, 1L).otherwise(0L)).as("n3"),
-      sum(when(col("n") === 4, 1L).otherwise(0L)).as("n4"))
-    counts.join(ctx, Seq("w1")).join(cont, Seq("w2"))
-      .crossJoin(broadcast(tot))
-      .withColumn("__m", col("n1") + lit(2L) * col("n2"))
-      .withColumn("d1_e9", when(col("__m") > 0,
-        expr("(CAST(n1 AS DECIMAL(38,0)) * 1000000000)" +
-          " div CAST(__m AS DECIMAL(38,0))")).otherwise(lit(0L)))
-      .withColumn("d2_e9", when(col("__m") > 0 && col("n2") > 0,
-        expr("(GREATEST(CAST(0 AS DECIMAL(38,0))," +
-          " 2*CAST(n2 AS DECIMAL(38,0))*__m" +
-          " - 3*CAST(n1 AS DECIMAL(38,0))*n3) * 1000000000)" +
-          " div (CAST(n2 AS DECIMAL(38,0)) * __m)"))
-        .otherwise(col("d1_e9")))
-      .withColumn("d3_e9", when(col("__m") > 0 && col("n3") > 0,
-        expr("(GREATEST(CAST(0 AS DECIMAL(38,0))," +
-          " 3*CAST(n3 AS DECIMAL(38,0))*__m" +
-          " - 4*CAST(n1 AS DECIMAL(38,0))*n4) * 1000000000)" +
-          " div (CAST(n3 AS DECIMAL(38,0)) * __m)"))
-        .otherwise(col("d1_e9")))
-      .withColumn("__dsel", when(col("n") === 1, col("d1_e9"))
-        .when(col("n") === 2, col("d2_e9")).otherwise(col("d3_e9")))
-      .withColumn("__gam", expr(
-        "CAST(d1_e9 AS DECIMAL(38,0))*k1" +
-          " + CAST(d2_e9 AS DECIMAL(38,0))*k2" +
-          " + CAST(d3_e9 AS DECIMAL(38,0))*k3p"))
-      .withColumn("p_e9", expr(
-        "((CAST(n AS DECIMAL(38,0)) * 1000000000 - __dsel) * b" +
-          " + __gam * pre) div (CAST(c1 AS DECIMAL(38,0)) * b)"))
-      .select("w1", "w2", "n", "d1_e9", "d2_e9", "d3_e9", "p_e9")
-  }
-
   /** Unicode cleanup for corpus text — the normalization pass every
     * web-scraped corpus gets before hashing/dedup/tokenization (the
     * C4/Gopher convention): (1) NFC canonical composition (decomposed
@@ -1092,7 +864,8 @@ object TextAnalysis {
     * ZERO shuffle — one fused projection in the scan. Engine parity:
     * NFC is a pure function of the code-point sequence (JVM
     * Normalizer == DuckDB nfc_normalize by spec), and the regex
-    * steps are plain character classes. */
+    * steps are plain character classes. On a streaming frame it is
+    * stateless and Append-legal with no watermark. */
   def unicodeClean(df: DataFrame, textCol: String,
       out: String = "clean_text"): DataFrame = {
     val nfc = graft.functions.expressions.TextExpressions
@@ -1122,7 +895,7 @@ object TextAnalysis {
     *
     * Scale shape: two aggregations over the COLLAPSED bigram table
     * joined back on their keys; the 1-row B broadcasts — the corpus
-    * was collapsed once by [[knBigramCounts]], which also makes this
+    * was collapsed once by [[NgramLm.ngrams]], which also makes this
     * derivable from the streaming count state (the q247 fold). */
   def collocationLift(counts: DataFrame, minCount: Long = 2): DataFrame = {
     require(minCount >= 1, s"minCount must be >= 1 (got $minCount)")
@@ -1137,1210 +910,6 @@ object TextAnalysis {
       .withColumn("__den", dec(col("__lt")) * dec(col("__rt")))
       .withColumn("lift_e9", expr("__num div __den"))
       .select("w1", "w2", "n", "lift_e9")
-  }
-
-  /** Score documents against a TRAINED Kneser–Ney bigram table — the
-    * "perplexity filter with a real LM" (the trained upgrade of the
-    * corpus-conditional bigram familiarity): per document, the mean
-    * interpolated-KN probability of its adjacent bigrams under the
-    * `counts` model, as exact floor-e9 integers. No logarithm ON
-    * PURPOSE — log is libm-dependent and would break hash replay; the
-    * mean probability ranks fluent-vs-scrambled text the same
-    * direction, which is all a curation gate needs.
-    *
-    * Back-off for bigrams the model never saw, all from the same
-    * closed form ([[knProbabilities]]'s terms with the seen numerator
-    * dropped):
-    *   - context w1 known, w2 has continuation mass:
-    *     λ(w1)·Pcont(w2) = 3·post(w1)·pre(w2) / (4·c1(w1)·B)
-    *   - context w1 unknown, w2 known: Pcont(w2) = pre(w2)/B
-    *     (the standard unigram fallback)
-    *   - w2 unknown: 0 (zero continuation mass — the score, not the
-    *     smoother, absorbs it; a true OOV model would interpolate a
-    *     character LM, out of scope here)
-    *
-    * Output per doc: `n_bigrams`, `sum_p_e9`, `mean_p_e9` (floor).
-    * Docs with < 2 tokens keep a zero row (the spine is `docs`).
-    *
-    * Scale shape: doc bigram INSTANCES equi-join the model on
-    * (w1, w2) and its two marginals on w1 / w2 — hash joins keyed by
-    * the model tables (broadcast when the trained model is small);
-    * one per-doc aggregation collapses the instances. `counts` is
-    * referenced FOUR times (probs, both marginals, B) and Spark has
-    * no common-subplan dedup — pass a MATERIALIZED table (the saved
-    * artifact, or `.localCheckpoint(true)` an in-session one) or the
-    * training aggregation re-runs per reference. */
-  def knScoreDocs(docs: DataFrame, idCol: String, textCol: String,
-      counts: DataFrame): DataFrame =
-    knScoreFinish(docs.select(col(idCol)).distinct(),
-      knScoreFacts(docs, idCol, textCol, counts), idCol)
-
-  /** Per-doc adjacent-bigram INSTANCES — [[knBigramCounts]]'s explode
-    * with the doc id kept (the scoring side of the LM family: every
-    * scorer joins these against a trained model). Shared by the
-    * pinned-D and estimated-D scorers so the instance derivation
-    * cannot drift. */
-  private def bigramInstances(docs: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    docs
-      .select(col(idCol),
-        filter(tokens(col(textCol)), t => length(t) > 0).as("__t"))
-      .select(col(idCol), explode(arrays_zip(
-        slice(col("__t"), lit(1),
-          greatest(size(col("__t")) - 1, lit(0))).as("w1"),
-        slice(col("__t"), lit(2),
-          greatest(size(col("__t")) - 1, lit(0))).as("w2")))
-        .as("__bg"))
-      .select(col(idCol), col("__bg.w1").as("w1"),
-        col("__bg.w2").as("w2"))
-
-  /** Per-doc adjacent-trigram INSTANCES — [[knTrigramCounts]]'s
-    * explode with the doc id kept. Shared by the pinned-D and
-    * estimated-D trigram scorers. */
-  private def trigramInstances(docs: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    docs
-      .select(col(idCol),
-        filter(tokens(col(textCol)), t => length(t) > 0).as("__t"))
-      .select(col(idCol), explode(arrays_zip(
-        slice(col("__t"), lit(1),
-          greatest(size(col("__t")) - 2, lit(0))).as("w1"),
-        slice(col("__t"), lit(2),
-          greatest(size(col("__t")) - 2, lit(0))).as("w2"),
-        slice(col("__t"), lit(3),
-          greatest(size(col("__t")) - 2, lit(0))).as("w3")))
-        .as("__g"))
-      .select(col(idCol), col("__g.w1").as("w1"),
-        col("__g.w2").as("w2"), col("__g.w3").as("w3"))
-
-  /** Model-side materialization hook for the score-facts family.
-    *
-    * Every `*ScoreFacts*` derives its model tables (probabilities +
-    * marginals + the 1-row totals) from the count table INSIDE the
-    * join tree. In batch that is right: Catalyst sees one tree,
-    * evaluates each derivation once. As the STATIC side of a
-    * stream-static join the same sub-plans re-optimize and re-execute
-    * on EVERY micro-batch (and AQE is off in streaming, so they run
-    * at the stream's state-partition count) — measured as the
-    * dominant cost of the streaming serve twins. The streaming
-    * wrappers pass an eager `localCheckpoint`, so training runs once
-    * before the stream starts and each micro-batch joins against the
-    * cached model — the production n-gram serving posture (train
-    * once, ship the model). Value-neutral by construction:
-    * `localCheckpoint` only cuts lineage, it cannot change a row. */
-  val MatIdentity: DataFrame => DataFrame = df => df
-
-  /** Eager model-side `mat`: localCheckpoint each derived model
-    * table plus a broadcast hint (model tables are
-    * vocabulary-bounded; a corpus-bounded frame must NOT use this).
-    *
-    * Scope after the r18/r19 optimization-round A/Bs: used by the
-    * open-vocabulary streaming serve, whose static side re-derives a
-    * DEEP tree (vocab fold + `<unk>` re-aggregation) per micro-batch
-    * (q291 4.22 → 2.84–3.18 s), and since r19 by the TRIGRAM estd/mkn
-    * streaming serves (six derived model tables per micro-batch;
-    * at-or-better in two interleaved min5 rounds — see
-    * EventStreams.serveMat). Everywhere else — every batch gate
-    * pipeline and the shallow bigram serve twins — the N upfront
-    * driver-sequential checkpoint jobs cost MORE than the in-tree
-    * derivation they replace (q269 1.66 → 1.42, q288 2.10 → 1.85,
-    * q292 1.95 → 1.60, q301 2.51 → 2.14, and even the trigram gate
-    * q279 2.98 → 2.37 once the keep-set checkpoint — the change that
-    * actually cut its planning cost — is in place), so those paths
-    * take the [[MatIdentity]] default. */
-  val modelMat: DataFrame => DataFrame =
-    df => broadcast(df.localCheckpoint(true))
-
-  /** The per-doc aggregated half of [[knScoreDocs]] — (idCol,
-    * n_bigrams, sum_p_e9) WITHOUT the zero-row spine: exactly the
-    * shape that streams (explode + stream-static model joins + ONE
-    * Update-mode per-doc agg; the spine is the fold's decision
-    * downstream, [[knScoreFinish]]). Shared by the batch operator and
-    * the streaming twin so the derivations cannot drift; the twin
-    * materializes the model sub-plans via `mat` ([[MatIdentity]]). */
-  def knScoreFacts(docs: DataFrame, idCol: String, textCol: String,
-      counts: DataFrame,
-      mat: DataFrame => DataFrame = MatIdentity): DataFrame =
-    knScoreFactsFromPairs(bigramInstances(docs, idCol, textCol),
-      idCol, counts, mat)
-
-  /** [[knScoreFacts]]'s join-and-cascade body over an explicit
-    * per-doc (id, w1, w2) instance frame — shared with the
-    * open-vocabulary serve, whose instances are vocabulary-mapped
-    * before they reach the cascade. */
-  private def knScoreFactsFromPairs(pairs: DataFrame, idCol: String,
-      counts: DataFrame,
-      mat: DataFrame => DataFrame = MatIdentity): DataFrame = {
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    val probs = mat(knProbabilities(counts)
-      .select(col("w1"), col("w2"), col("p_e9")))
-    val ctx = mat(counts.groupBy(col("w1"))
-      .agg(sum(col("n")).as("__c1"), count(lit(1)).as("__post")))
-    val cont = mat(counts.groupBy(col("w2"))
-      .agg(count(lit(1)).as("__pre")))
-    val b = mat(counts.agg(count(lit(1)).as("__b")))
-    val scored = pairs
-      .join(probs, Seq("w1", "w2"), "left")
-      .join(ctx, Seq("w1"), "left")
-      .join(cont, Seq("w2"), "left")
-      .crossJoin(broadcast(b))
-      .withColumn("__bn",
-        dec(lit(1000000000L)) * dec(lit(3L)) * dec(col("__post"))
-          * dec(col("__pre")))
-      .withColumn("__bd",
-        dec(lit(4L)) * dec(col("__c1")) * dec(col("__b")))
-      .withColumn("__cn", dec(lit(1000000000L)) * dec(col("__pre")))
-      .withColumn("__p", coalesce(col("p_e9"),
-        when(col("__c1").isNotNull && col("__pre").isNotNull,
-          expr("__bn div __bd")),
-        when(col("__c1").isNull && col("__pre").isNotNull,
-          expr("__cn div CAST(__b AS DECIMAL(38,0))")),
-        lit(0L)))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("__p")).as("sum_p_e9"))
-    scored
-  }
-
-  /** The spine-and-ratio half of [[knScoreDocs]]: left-join the facts
-    * onto the full id spine (sub-2-token docs keep a zero row) and
-    * derive the floor mean. The streaming twin's folded facts derive
-    * through this SAME method. */
-  def knScoreFinish(spine: DataFrame, facts: DataFrame,
-      idCol: String, nCol: String = "n_bigrams"): DataFrame =
-    spine
-      .join(facts, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col(nCol), lit(0L)).as(nCol),
-        coalesce(col("sum_p_e9"), lit(0L)).as("sum_p_e9"))
-      .withColumn("mean_p_e9",
-        when(col(nCol) > 0,
-          expr(s"sum_p_e9 div `$nCol`")).otherwise(lit(0L)))
-
-  /** The reserved out-of-vocabulary token of the open-vocabulary LM
-    * family (the SRILM/KenLM `<unk>` convention). Whitespace
-    * tokenization cannot emit it from clean text; corpora that could
-    * contain the literal should [[unicodeClean]]/escape first — the
-    * standard caveat, documented rather than hidden. */
-  val UnkToken = "<unk>"
-
-  /** Top-K training vocabulary by (unigram count desc, word asc) —
-    * the vocabulary-truncation step every production n-gram LM
-    * applies before training (SRILM's sorted-vocab cutoff): the K
-    * most frequent words stay, everything else maps to [[UnkToken]].
-    * Rank-based (not absolute-count) so the SAME K is meaningful at
-    * every corpus scale. One in-scan token explode + one word agg +
-    * a global top-K (TakeOrderedAndProject — no full sort
-    * materializes). Deterministic: ties break on the word itself. */
-  def knVocabTopK(train: DataFrame, textCol: String,
-      k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1 (got $k)")
-    train
-      .select(explode(filter(tokens(col(textCol)),
-        t => length(t) > 0)).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("word")).limit(k)
-      .select("word")
-  }
-
-  /** Fold a collapsed (w1, w2, n) bigram count table into a
-    * vocabulary: out-of-vocab words on either side become
-    * [[UnkToken]] and the collapsed rows RE-aggregate. The corpus is
-    * never re-read — vocabulary truncation is a pure function of the
-    * word, so it distributes over the count table (model-sized work,
-    * two broadcast dim joins + one model-sized re-agg, regardless of
-    * corpus scale). */
-  def knCountsWithUnk(counts: DataFrame,
-      vocab: DataFrame): DataFrame = {
-    val v1 = vocab.select(col("word").as("w1"), lit(1).as("__v1"))
-    val v2 = vocab.select(col("word").as("w2"), lit(1).as("__v2"))
-    counts
-      .join(broadcast(v1), Seq("w1"), "left")
-      .join(broadcast(v2), Seq("w2"), "left")
-      .select(
-        when(col("__v1").isNotNull, col("w1"))
-          .otherwise(lit(UnkToken)).as("w1"),
-        when(col("__v2").isNotNull, col("w2"))
-          .otherwise(lit(UnkToken)).as("w2"),
-        col("n"))
-      .groupBy("w1", "w2").agg(sum(col("n")).as("n"))
-  }
-
-  /** OPEN-VOCABULARY doc scoring — [[knScoreDocs]] with the
-    * [[UnkToken]] convention closing the q250 zero-continuation
-    * caveat: serve-time tokens outside the training vocabulary map
-    * to `<unk>` BEFORE the cascade, so an unseen word scores the
-    * model's real p(`<unk>`|ctx) mass instead of 0 (as long as the
-    * training corpus had at least one out-of-vocab word, `<unk>` is
-    * a regular model word with continuation mass — the zero branch
-    * never fires). `counts` is the RAW [[knBigramCounts]] table;
-    * the vocabulary fold happens here via [[knCountsWithUnk]]
-    * (model-sized), and instance mapping is two broadcast dim joins
-    * on the exploded pairs. Same cascade, same floors, same scale
-    * shape as the closed-vocab serve. */
-  def knScoreDocsUnk(docs: DataFrame, idCol: String, textCol: String,
-      counts: DataFrame, vocab: DataFrame): DataFrame =
-    knScoreFinish(docs.select(col(idCol)).distinct(),
-      knScoreFactsUnk(docs, idCol, textCol, counts, vocab), idCol)
-
-  /** The per-doc aggregated half of [[knScoreDocsUnk]] — the shape
-    * that streams; shared with the streaming serve twin. */
-  def knScoreFactsUnk(docs: DataFrame, idCol: String,
-      textCol: String, counts: DataFrame, vocab: DataFrame,
-      mat: DataFrame => DataFrame = MatIdentity): DataFrame =
-    knScoreFactsFromPairs(
-      mapPairsVocab(bigramInstances(docs, idCol, textCol), idCol,
-        vocab),
-      idCol, mat(knCountsWithUnk(counts, vocab)), mat)
-
-  /** Map an (id, w1, w2) instance frame into a vocabulary — OOV
-    * words on either side become [[UnkToken]]; two broadcast dim
-    * joins, map-side. Shared by the open-vocab serves. */
-  private def mapPairsVocab(pairs: DataFrame, idCol: String,
-      vocab: DataFrame): DataFrame = {
-    val v1 = vocab.select(col("word").as("w1"), lit(1).as("__v1"))
-    val v2 = vocab.select(col("word").as("w2"), lit(1).as("__v2"))
-    pairs
-      .join(broadcast(v1), Seq("w1"), "left")
-      .join(broadcast(v2), Seq("w2"), "left")
-      .select(col(idCol),
-        when(col("__v1").isNotNull, col("w1"))
-          .otherwise(lit(UnkToken)).as("w1"),
-        when(col("__v2").isNotNull, col("w2"))
-          .otherwise(lit(UnkToken)).as("w2"))
-  }
-
-  /** OPEN-VOCABULARY doc scoring under MODIFIED Kneser–Ney — the
-    * serve for the [[knProbabilitiesModified]]∘[[knCountsWithUnk]]
-    * composition (q298's model): instances map through the broadcast
-    * vocabulary, then the three-count-indexed-discount cascade runs
-    * against the FOLDED count table — its discounts derive from the
-    * folded table's own count-of-counts, so the vocabulary choice
-    * moves the smoother and the serve replays it exactly. */
-  def knScoreDocsUnkModified(docs: DataFrame, idCol: String,
-      textCol: String, counts: DataFrame,
-      vocab: DataFrame): DataFrame =
-    knScoreFinish(docs.select(col(idCol)).distinct(),
-      knScoreFactsUnkModified(docs, idCol, textCol, counts, vocab),
-      idCol)
-
-  /** The per-doc aggregated half of [[knScoreDocsUnkModified]] — the
-    * shape that streams. */
-  def knScoreFactsUnkModified(docs: DataFrame, idCol: String,
-      textCol: String, counts: DataFrame, vocab: DataFrame,
-      mat: DataFrame => DataFrame = MatIdentity): DataFrame =
-    knScoreFactsModifiedFromPairs(
-      mapPairsVocab(bigramInstances(docs, idCol, textCol), idCol,
-        vocab),
-      idCol, mat(knCountsWithUnk(counts, vocab)), mat)
-
-  /** Corpus unigram counts — the per-order count table the
-    * non-continuation smoothers ([[stupidBackoffScoreFacts]],
-    * [[wittenBellProbabilities]]) take alongside the bigram/trigram
-    * tables (each order counted from the corpus directly, the
-    * Brants et al. 2007 convention — NOT derived from a higher
-    * order, which would drop each document's tail tokens). One
-    * in-scan explode + ONE word agg with map-side partials. */
-  def unigramTable(train: DataFrame, textCol: String): DataFrame =
-    train
-      .select(explode(filter(tokens(col(textCol)),
-        t => length(t) > 0)).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("n"))
-
-  /** STUPID BACKOFF doc scoring (Brants/Popat/Xu/Och/Dean 2007 —
-    * "Large Language Models in Machine Translation", §4): the
-    * smoother Google built FOR corpus scale, chosen here for exactly
-    * the reason the paper gives — no continuation statistics, no
-    * normalization pass, each order trains in one counting pass, so
-    * the 100 TB training cost is three independent count-collapse
-    * aggregations. The score cascade (α = 0.4 = 2/5, an exact
-    * rational, so every branch floors exactly):
-    *   - seen trigram:        c₁₂₃·10⁹ div c₁₂
-    *   - else seen (w2,w3):   2·c₂₃·10⁹ div (5·c₂)
-    *   - else seen w3:        4·c₃·10⁹ div (25·N)
-    *   - w3 unknown:          0  (compose with [[knVocabTopK]] /
-    *                          [[knCountsWithUnk]]-style mapping for
-    *                          an open-vocab variant)
-    * S is a SCORE, not a probability (it does not sum to 1 — the
-    * paper's deliberate trade); the output keeps the facts-frame
-    * column contract (`sum_p_e9`) so it plugs into the gate and
-    * [[knScoreFinish]] unchanged. Seen-trigram implies c₁₂ ≥ c₁₂₃ > 0
-    * and seen-(w2,w3) implies c₂ ≥ c₂₃ > 0 (each order counted from
-    * the SAME corpus), so no branch divides by zero. Pass
-    * MATERIALIZED count tables. */
-  def stupidBackoffScoreDocs(docs: DataFrame, idCol: String,
-      textCol: String, uni: DataFrame, bi: DataFrame,
-      tri: DataFrame): DataFrame =
-    knScoreFinish(docs.select(col(idCol)).distinct(),
-      stupidBackoffScoreFacts(docs, idCol, textCol, uni, bi, tri),
-      idCol, nCol = "n_trigrams")
-
-  /** The per-doc aggregated half of [[stupidBackoffScoreDocs]] — the
-    * shape that streams; shared with the streaming serve twin. */
-  def stupidBackoffScoreFacts(docs: DataFrame, idCol: String,
-      textCol: String, uni: DataFrame, bi: DataFrame,
-      tri: DataFrame,
-      mat: DataFrame => DataFrame = MatIdentity): DataFrame = {
-    val t3 = tri.select(col("w1"), col("w2"), col("w3"),
-      col("n").as("__c123"))
-    val ctx = bi.select(col("w1"), col("w2"), col("n").as("__c12"))
-    val b23 = bi.select(col("w1").as("w2"), col("w2").as("w3"),
-      col("n").as("__c23"))
-    val u2 = uni.select(col("word").as("w2"), col("n").as("__c2"))
-    val u3 = uni.select(col("word").as("w3"), col("n").as("__c3"))
-    val tot = mat(uni.agg(sum(col("n")).as("__nn")))
-    trigramInstances(docs, idCol, textCol)
-      .join(t3, Seq("w1", "w2", "w3"), "left")
-      .join(ctx, Seq("w1", "w2"), "left")
-      .join(b23, Seq("w2", "w3"), "left")
-      .join(u2, Seq("w2"), "left")
-      .join(u3, Seq("w3"), "left")
-      .crossJoin(broadcast(tot))
-      .withColumn("__s", coalesce(
-        when(col("__c123").isNotNull, expr(
-          "(CAST(__c123 AS DECIMAL(38,0)) * 1000000000)" +
-            " div CAST(__c12 AS DECIMAL(38,0))")),
-        when(col("__c23").isNotNull, expr(
-          "(2 * CAST(__c23 AS DECIMAL(38,0)) * 1000000000)" +
-            " div (5 * CAST(__c2 AS DECIMAL(38,0)))")),
-        when(col("__c3").isNotNull, expr(
-          "(4 * CAST(__c3 AS DECIMAL(38,0)) * 1000000000)" +
-            " div (25 * CAST(__nn AS DECIMAL(38,0)))")),
-        lit(0L)))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_trigrams"),
-        sum(col("__s")).as("sum_p_e9"))
-  }
-
-  /** WITTEN–BELL interpolated bigram probabilities (Witten/Bell 1991
-    * method C, the PPM escape — Chen/Goodman's baseline smoother):
-    * λ(w1) = c₁/(c₁+T₁) with T₁ = |distinct continuations of w1|,
-    * interpolating the ML bigram with the UNIGRAM MLE (not the KN
-    * continuation distribution — the defining difference from
-    * [[knProbabilities]]). The whole estimate is ONE fraction of
-    * corpus integers,
-    *   p_e9 = (c₁₂·N + T₁·c₂)·10⁹ div ((c₁+T₁)·N),
-    * so a single floor loses < 1 ulp (no staged composition error).
-    * Headroom: c₁₂·N·10⁹ < 10³⁸ holds through ~10¹⁴ corpus tokens —
-    * the 100 TB envelope, documented not assumed. Takes the bigram
-    * count table plus [[unigramTable]] (true per-order counts). */
-  def wittenBellProbabilities(counts: DataFrame,
-      uni: DataFrame): DataFrame = {
-    val ctx = counts.groupBy(col("w1"))
-      .agg(sum(col("n")).as("c1"), count(lit(1)).as("t1"))
-    val u2 = uni.select(col("word").as("w2"), col("n").as("c2"))
-    val tot = uni.agg(sum(col("n")).as("nn"))
-    counts.join(ctx, Seq("w1")).join(u2, Seq("w2"))
-      .crossJoin(broadcast(tot))
-      .withColumn("p_e9", expr(
-        "((CAST(n AS DECIMAL(38,0)) * nn + CAST(t1 AS DECIMAL(38,0))" +
-          " * c2) * 1000000000)" +
-          " div ((CAST(c1 AS DECIMAL(38,0)) + t1) * nn)"))
-      .select("w1", "w2", "n", "p_e9")
-  }
-
-  /** Doc scoring against the [[wittenBellProbabilities]] model — the
-    * same instance-join serve shape as [[knScoreDocs]] with the WB
-    * cascade:
-    *   - seen bigram: the model's p_e9 (exact replay, joined)
-    *   - ctx known, w2 known: the model formula at c₁₂ = 0 —
-    *     T₁·c₂·10⁹ div ((c₁+T₁)·N)  (the escape mass times the
-    *     unigram MLE, one floor)
-    *   - ctx unknown, w2 known: c₂·10⁹ div N  (unigram fallback)
-    *   - w2 unknown: 0
-    * Pass MATERIALIZED `counts` and `uni`. */
-  def wittenBellScoreDocs(docs: DataFrame, idCol: String,
-      textCol: String, counts: DataFrame,
-      uni: DataFrame): DataFrame =
-    knScoreFinish(docs.select(col(idCol)).distinct(),
-      wittenBellScoreFacts(docs, idCol, textCol, counts, uni), idCol)
-
-  /** The per-doc aggregated half of [[wittenBellScoreDocs]] — the
-    * shape that streams; shared with the streaming serve twin. */
-  def wittenBellScoreFacts(docs: DataFrame, idCol: String,
-      textCol: String, counts: DataFrame, uni: DataFrame,
-      mat: DataFrame => DataFrame = MatIdentity): DataFrame = {
-    val probs = mat(wittenBellProbabilities(counts, uni)
-      .select(col("w1"), col("w2"), col("p_e9")))
-    val ctx = mat(counts.groupBy(col("w1"))
-      .agg(sum(col("n")).as("__c1"), count(lit(1)).as("__t1")))
-    val u2 = uni.select(col("word").as("w2"), col("n").as("__c2"))
-    val tot = mat(uni.agg(sum(col("n")).as("__nn")))
-    bigramInstances(docs, idCol, textCol)
-      .join(probs, Seq("w1", "w2"), "left")
-      .join(ctx, Seq("w1"), "left")
-      .join(u2, Seq("w2"), "left")
-      .crossJoin(broadcast(tot))
-      .withColumn("__p", coalesce(col("p_e9"),
-        when(col("__c1").isNotNull && col("__c2").isNotNull, expr(
-          "(CAST(__t1 AS DECIMAL(38,0)) * __c2 * 1000000000)" +
-            " div ((CAST(__c1 AS DECIMAL(38,0)) + __t1) * __nn)")),
-        when(col("__c2").isNotNull, expr(
-          "(CAST(__c2 AS DECIMAL(38,0)) * 1000000000)" +
-            " div CAST(__nn AS DECIMAL(38,0))")),
-        lit(0L)))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(col("__p")).as("sum_p_e9"))
-  }
-
-  /** [[knScoreDocs]] under NEY'S ESTIMATED discount — the scoring
-    * half the q273 trainer was missing: documents score against the
-    * [[knProbabilitiesEstimatedD]] model (D = n₁/(n₁+2n₂) instead of
-    * the pinned 3/4), with the SAME back-off cascade re-derived at
-    * the estimated discount. With M = n₁+2n₂ and pc_e9 = pre·10⁹
-    * div B (the model's own floored continuation prob — seen and
-    * unseen branches compose through the SAME intermediate):
-    *   - seen bigram: the model's p_e9 (exact replay, joined)
-    *   - ctx w1 known, w2 has continuation mass:
-    *     λ(w1)·Pcont(w2) = (n₁·post·pc_e9) div (c1·M) — the model
-    *     formula with the seen numerator (n·M − n₁) dropped
-    *   - ctx unknown, w2 known: pc_e9 (the unigram fallback —
-    *     model-independent, same as the pinned cascade)
-    *   - w2 unknown: 0 (the q250 zero-continuation convention)
-    * Degenerate M = 0 (no singletons or doubletons): D = 0, so the
-    * interpolation mass λ is zero and the ctx-known branch scores 0
-    * (strict ML — matching [[knProbabilitiesEstimatedD]]'s
-    * convention). Same instance-join scale shape as [[knScoreFacts]];
-    * `counts` is referenced four times — pass a MATERIALIZED table. */
-  def knScoreDocsEstimatedD(docs: DataFrame, idCol: String,
-      textCol: String, counts: DataFrame): DataFrame =
-    knScoreFinish(docs.select(col(idCol)).distinct(),
-      knScoreFactsEstimatedD(docs, idCol, textCol, counts), idCol)
-
-  /** The per-doc aggregated half of [[knScoreDocsEstimatedD]] —
-    * (idCol, n_bigrams, sum_p_e9) without the zero-row spine, the
-    * shape that streams (the [[knScoreFacts]] convention). Shared by
-    * the batch operator and the streaming serve twin. */
-  def knScoreFactsEstimatedD(docs: DataFrame, idCol: String,
-      textCol: String, counts: DataFrame,
-      mat: DataFrame => DataFrame = MatIdentity): DataFrame = {
-    val probs = mat(knProbabilitiesEstimatedD(counts)
-      .select(col("w1"), col("w2"), col("p_e9")))
-    val ctx = mat(counts.groupBy(col("w1"))
-      .agg(sum(col("n")).as("__c1"), count(lit(1)).as("__post")))
-    val cont = mat(counts.groupBy(col("w2"))
-      .agg(count(lit(1)).as("__pre")))
-    val tot = mat(counts.agg(count(lit(1)).as("__b"),
-      sum(when(col("n") === 1, 1L).otherwise(0L)).as("__n1"),
-      sum(when(col("n") === 2, 1L).otherwise(0L)).as("__n2")))
-    bigramInstances(docs, idCol, textCol)
-      .join(probs, Seq("w1", "w2"), "left")
-      .join(ctx, Seq("w1"), "left")
-      .join(cont, Seq("w2"), "left")
-      .crossJoin(broadcast(tot))
-      .withColumn("__m", col("__n1") + lit(2L) * col("__n2"))
-      .withColumn("__pc",
-        expr("(CAST(__pre AS DECIMAL(38,0)) * 1000000000)" +
-          " div CAST(__b AS DECIMAL(38,0))"))
-      .withColumn("__p", coalesce(col("p_e9"),
-        when(col("__c1").isNotNull && col("__pre").isNotNull,
-          when(col("__m") > 0, expr(
-            "(CAST(__n1 AS DECIMAL(38,0)) * __post * __pc)" +
-              " div (CAST(__c1 AS DECIMAL(38,0)) * __m)"))
-            .otherwise(lit(0L))),
-        when(col("__pre").isNotNull, col("__pc")),
-        lit(0L)))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(col("__p")).as("sum_p_e9"))
-  }
-
-  /** [[knScoreDocsTrigram]] under NEY'S ESTIMATED discounts — the
-    * scoring half of the q274 trainer: documents score against the
-    * [[knTrigramProbabilitiesEstimatedD]] model (per-level D₃ =
-    * t₁/(t₁+2t₂), D₂ = c₁/(c₁+2c₂)), the full two-level cascade
-    * re-derived at the estimated discounts through the SAME floored
-    * intermediates (pc_e9 → p2 → p3). Branches:
-    *   continuation level (M₂ = cc₁+2cc₂):
-    *     - (w2,w3) seen: the model's p2 form (exact replay)
-    *     - w2 seen only: λ₂·pc = (cc₁·post2·pc_e9) div (nmid2·M₂)
-    *     - w2 unseen, w3 known: pc_e9 (unigram fallback)
-    *     - w3 unknown: 0
-    *   top level (M₃ = t₁+2t₂):
-    *     - seen trigram: the model's p3_e9 (joined)
-    *     - ctx12 seen: λ₃·p2 = (t₁·t12·p2) div (c12·M₃)
-    *     - ctx12 unseen: p2
-    * Degenerate levels (M = 0) score 0 interpolation mass at that
-    * level — strict ML, the trainer's convention. `tri` is referenced
-    * six times — pass a MATERIALIZED table. */
-  def knScoreDocsTrigramEstimatedD(docs: DataFrame, idCol: String,
-      textCol: String, tri: DataFrame): DataFrame =
-    knScoreFinish(docs.select(col(idCol)).distinct(),
-      knTrigramScoreFactsEstimatedD(docs, idCol, textCol, tri), idCol,
-      nCol = "n_trigrams")
-
-  /** The per-doc aggregated half of [[knScoreDocsTrigramEstimatedD]]
-    * — the shape that streams; shared with the streaming serve twin
-    * so the derivations cannot drift. */
-  def knTrigramScoreFactsEstimatedD(docs: DataFrame, idCol: String,
-      textCol: String, tri: DataFrame,
-      mat: DataFrame => DataFrame = MatIdentity): DataFrame = {
-    val probs = mat(knTrigramProbabilitiesEstimatedD(tri)
-      .select(col("w1"), col("w2"), col("w3"), col("p3_e9")))
-    val ctx = mat(tri.groupBy(col("w1"), col("w2"))
-      .agg(sum(col("n")).as("__c12"), count(lit(1)).as("__t12")))
-    // cont is materialized FIRST so mid/pre/contCc derive from the
-    // cached table, not three more re-derivations of it
-    val cont = mat(tri.groupBy(col("w2"), col("w3"))
-      .agg(count(lit(1)).as("__pre23")))
-    val mid = mat(cont.groupBy(col("w2"))
-      .agg(sum(col("__pre23")).as("__nmid2"),
-        count(lit(1)).as("__post2")))
-    val pre = mat(cont.groupBy(col("w3"))
-      .agg(count(lit(1)).as("__pre3")))
-    val topCc = mat(tri.agg(
-      sum(when(col("n") === 1, 1L).otherwise(0L)).as("__t1"),
-      sum(when(col("n") === 2, 1L).otherwise(0L)).as("__t2")))
-    val contCc = mat(cont.agg(count(lit(1)).as("__b"),
-      sum(when(col("__pre23") === 1, 1L).otherwise(0L)).as("__cc1"),
-      sum(when(col("__pre23") === 2, 1L).otherwise(0L)).as("__cc2")))
-    trigramInstances(docs, idCol, textCol)
-      .join(probs, Seq("w1", "w2", "w3"), "left")
-      .join(ctx, Seq("w1", "w2"), "left")
-      .join(cont, Seq("w2", "w3"), "left")
-      .join(mid, Seq("w2"), "left")
-      .join(pre, Seq("w3"), "left")
-      .crossJoin(broadcast(topCc)).crossJoin(broadcast(contCc))
-      .withColumn("__m3", col("__t1") + lit(2L) * col("__t2"))
-      .withColumn("__m2", col("__cc1") + lit(2L) * col("__cc2"))
-      .withColumn("__pc",
-        expr("(CAST(__pre3 AS DECIMAL(38,0)) * 1000000000)" +
-          " div CAST(__b AS DECIMAL(38,0))"))
-      // continuation level: seen / middle-backoff / unigram fallback
-      // / unknown w3 — the seen branch IS the model's p2 expression,
-      // so both levels compose through the same floored intermediate
-      .withColumn("__p2", coalesce(
-        when(col("__pre23").isNotNull,
-          when(col("__m2") > 0, expr(
-            "((CAST(__pre23 AS DECIMAL(38,0)) * __m2 - __cc1)" +
-              " * 1000000000" +
-              " + CAST(__cc1 AS DECIMAL(38,0)) * __post2 * __pc)" +
-              " div (CAST(__nmid2 AS DECIMAL(38,0)) * __m2)"))
-            .otherwise(expr(
-              "(CAST(__pre23 AS DECIMAL(38,0)) * 1000000000)" +
-                " div CAST(__nmid2 AS DECIMAL(38,0))"))),
-        when(col("__nmid2").isNotNull && col("__pre3").isNotNull,
-          when(col("__m2") > 0, expr(
-            "(CAST(__cc1 AS DECIMAL(38,0)) * __post2 * __pc)" +
-              " div (CAST(__nmid2 AS DECIMAL(38,0)) * __m2)"))
-            .otherwise(lit(0L))),
-        when(col("__pre3").isNotNull, col("__pc")),
-        lit(0L)))
-      // top level: seen trigram / seen context / context-unseen
-      .withColumn("__p", coalesce(col("p3_e9"),
-        when(col("__c12").isNotNull,
-          when(col("__m3") > 0, expr(
-            "(CAST(__t1 AS DECIMAL(38,0)) * __t12 * __p2)" +
-              " div (CAST(__c12 AS DECIMAL(38,0)) * __m3)"))
-            .otherwise(lit(0L))),
-        col("__p2")))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_trigrams"),
-        sum(col("__p")).as("sum_p_e9"))
-  }
-
-  /** Adjacent-trigram counts over the corpus — the n=3 order of
-    * [[knBigramCounts]] (same zip-of-offset-slices device, three
-    * slices; sub-3-token docs emit nothing). One in-scan explode +
-    * ONE (w1, w2, w3) aggregation with map-side partials — the
-    * shuffle carries collapsed trigram tuples, never the corpus. */
-  def knTrigramCounts(df: DataFrame, textCol: String): DataFrame =
-    df.select(filter(tokens(col(textCol)), t => length(t) > 0)
-        .as("__t"))
-      .select(explode(arrays_zip(
-        slice(col("__t"), lit(1),
-          greatest(size(col("__t")) - 2, lit(0))).as("w1"),
-        slice(col("__t"), lit(2),
-          greatest(size(col("__t")) - 2, lit(0))).as("w2"),
-        slice(col("__t"), lit(3),
-          greatest(size(col("__t")) - 2, lit(0))).as("w3")))
-        .as("__g"))
-      .select(col("__g").getField("w1").as("w1"),
-        col("__g").getField("w2").as("w2"),
-        col("__g").getField("w3").as("w3"))
-      .groupBy("w1", "w2", "w3")
-      .agg(count(lit(1)).as("n"))
-
-  /** Interpolated Kneser–Ney TRIGRAM probabilities over a
-    * (w1, w2, w3, n) count table — the n=3 recursion of
-    * [[knProbabilities]] (Chen/Goodman 1999), with EVERY lower-order
-    * statistic derived from the trigram table itself via continuation
-    * counts (the canonical estimator — the bigram level of a KN
-    * trigram model is NOT the raw bigram LM):
-    *
-    *   P(w3|w1w2) = (n − D)/c12 + (D·t12/c12) · P(w3|w2)
-    *   P(w3|w2)   = (pre23 − D)/nmid2 + (D·post2/nmid2) · pre3/B
-    *
-    * where c12 = Σ_w n(w1,w2,w) and t12 = |{w : n(w1,w2,w) > 0}| are
-    * the context totals, pre23 = N1+(·w2w3) (distinct w1 before the
-    * bigram — the continuation count), nmid2 = N1+(·w2·) = Σ_w3
-    * pre23, post2 = |{w3 : pre23 > 0}|, pre3 = |{w2 : pre23 > 0}|,
-    * and B = |distinct (w2,w3) continuation types|. D fixed at 3/4 as
-    * in the bigram model.
-    *
-    * Emitted floor-e9 in TWO documented stages so every intermediate
-    * stays inside DECIMAL(38,0) (the single-fraction numerator
-    * n·nmid2·B overflows 38 digits at 100 TB counts):
-    *
-    *   p2_e9 = ((4·pre23 − 3)·B + 3·post2·pre3)·10⁹ div (4·nmid2·B)
-    *   p3_e9 = ((4·n − 3)·10⁹ + 3·t12·p2_e9) div (4·c12)
-    *
-    * The composition through the FLOORED p2_e9 differs from the true
-    * rational by < 3·t12/(4·c12)·10⁻⁹ ≤ 0.75 ulp — deterministic on
-    * any engine with integer floor division, which is what the oracle
-    * needs; the model it encodes is the same LM to 1e-9. Headroom:
-    * the p2 numerator ≤ 4·pre23·B·10⁹ ~ 4·10³¹ at pre23 ~ 10¹²,
-    * B ~ 10¹⁰; the p3 numerator ≤ 4·n·10⁹ + 3·t12·10⁹ ~ 10²² — both
-    * inside 38 digits with room.
-    *
-    * Scale shape: three aggregations over the COLLAPSED trigram table
-    * (per-(w1,w2) totals+fanout; per-(w2,w3) continuation counts;
-    * the (w2,w3) table re-aggregated per-w2 and per-w3) joined back
-    * on their keys; the 1-row B total broadcasts. The corpus itself
-    * was collapsed once by [[knTrigramCounts]]. */
-  def knTrigramProbabilities(tri: DataFrame): DataFrame = {
-    val ctx = tri.groupBy(col("w1"), col("w2"))
-      .agg(sum(col("n")).as("c12"), count(lit(1)).as("t12"))
-    val cont = tri.groupBy(col("w2"), col("w3"))
-      .agg(count(lit(1)).as("pre23"))
-    val mid = cont.groupBy(col("w2"))
-      .agg(sum(col("pre23")).as("nmid2"), count(lit(1)).as("post2"))
-    val pre = cont.groupBy(col("w3"))
-      .agg(count(lit(1)).as("pre3"))
-    tri
-      .join(ctx, Seq("w1", "w2")).join(cont, Seq("w2", "w3"))
-      .join(mid, Seq("w2")).join(pre, Seq("w3"))
-      .crossJoin(broadcast(cont.agg(count(lit(1)).as("b"))))
-      .withColumn("p2_e9", expr(
-        "(CAST(1000000000 AS DECIMAL(38,0)) * ((4*CAST(pre23 AS DECIMAL(38,0)) - 3) * b" +
-          " + 3 * CAST(post2 AS DECIMAL(38,0)) * pre3))" +
-          " div (4 * CAST(nmid2 AS DECIMAL(38,0)) * b)"))
-      .withColumn("p3_e9", expr(
-        "((4*CAST(n AS DECIMAL(38,0)) - 3) * 1000000000" +
-          " + 3 * CAST(t12 AS DECIMAL(38,0)) * p2_e9)" +
-          " div (4 * CAST(c12 AS DECIMAL(38,0)))"))
-      .select("w1", "w2", "w3", "n", "p2_e9", "p3_e9")
-  }
-
-  /** Interpolated KN TRIGRAM probabilities with NEY'S ESTIMATED
-    * discounts — [[knTrigramProbabilities]] with the production
-    * smoother at BOTH levels ([[knProbabilitiesEstimatedD]]'s
-    * estimator, applied per level as Chen/Goodman prescribe): the top
-    * level estimates D₃ = t₁/(t₁+2t₂) from the trigram
-    * count-of-counts, the continuation level D₂ = c₁/(c₁+2c₂) from
-    * the CONTINUATION table's count-of-counts (the pre23 values ARE
-    * that level's counts). With M₃ = t₁+2t₂ and M₂ = c₁+2c₂, the
-    * THREE-stage floor-e9 composition (one more stage than the
-    * pinned-D trigram — the estimated-D fractions are a factor M
-    * wider):
-    *
-    *   pc_e9 = pre3·10⁹ div B
-    *   p2_e9 = ((pre23·M₂ − c₁)·10⁹ + c₁·post2·pc_e9)
-    *             div (nmid2·M₂)
-    *   p3_e9 = ((n·M₃ − t₁)·10⁹ + t₁·t12·p2_e9) div (c12·M₃)
-    *
-    * Headroom: pre23·M₂·10⁹ ~ 10¹⁰·10¹⁰·10⁹ = 10²⁹ and n·M₃·10⁹ ~
-    * 10¹²·10¹⁰·10⁹ = 10³¹ — inside DECIMAL(38,0). Non-negativity is
-    * structural at both levels (n·M − n₁ ≥ 2n₂ ≥ 0). Degenerate
-    * levels (M = 0: no singletons or doubletons at that level) fall
-    * back to that level's unsmoothed ML estimate, matching
-    * [[knProbabilitiesEstimatedD]]'s convention. Output adds the two
-    * global discounts (d3_e9, d2_e9) for the training report. */
-  def knTrigramProbabilitiesEstimatedD(tri: DataFrame): DataFrame = {
-    val ctx = tri.groupBy(col("w1"), col("w2"))
-      .agg(sum(col("n")).as("c12"), count(lit(1)).as("t12"))
-    val cont = tri.groupBy(col("w2"), col("w3"))
-      .agg(count(lit(1)).as("pre23"))
-    val mid = cont.groupBy(col("w2"))
-      .agg(sum(col("pre23")).as("nmid2"), count(lit(1)).as("post2"))
-    val pre = cont.groupBy(col("w3"))
-      .agg(count(lit(1)).as("pre3"))
-    val topCc = tri.agg(
-      sum(when(col("n") === 1, 1L).otherwise(0L)).as("t1"),
-      sum(when(col("n") === 2, 1L).otherwise(0L)).as("t2"))
-    val contCc = cont.agg(count(lit(1)).as("b"),
-      sum(when(col("pre23") === 1, 1L).otherwise(0L)).as("cc1"),
-      sum(when(col("pre23") === 2, 1L).otherwise(0L)).as("cc2"))
-    tri
-      .join(ctx, Seq("w1", "w2")).join(cont, Seq("w2", "w3"))
-      .join(mid, Seq("w2")).join(pre, Seq("w3"))
-      .crossJoin(broadcast(topCc)).crossJoin(broadcast(contCc))
-      .withColumn("__m3", col("t1") + lit(2L) * col("t2"))
-      .withColumn("__m2", col("cc1") + lit(2L) * col("cc2"))
-      .withColumn("d3_e9",
-        when(col("__m3") > 0,
-          expr("(CAST(t1 AS DECIMAL(38,0)) * 1000000000) div " +
-            "CAST(__m3 AS DECIMAL(38,0))")).otherwise(lit(0L)))
-      .withColumn("d2_e9",
-        when(col("__m2") > 0,
-          expr("(CAST(cc1 AS DECIMAL(38,0)) * 1000000000) div " +
-            "CAST(__m2 AS DECIMAL(38,0))")).otherwise(lit(0L)))
-      .withColumn("__pc",
-        expr("(CAST(pre3 AS DECIMAL(38,0)) * 1000000000) div " +
-          "CAST(b AS DECIMAL(38,0))"))
-      .withColumn("p2_e9",
-        when(col("__m2") > 0, expr(
-          "((CAST(pre23 AS DECIMAL(38,0)) * __m2 - cc1) * 1000000000" +
-            " + CAST(cc1 AS DECIMAL(38,0)) * post2 * __pc)" +
-            " div (CAST(nmid2 AS DECIMAL(38,0)) * __m2)"))
-          .otherwise(expr(
-            "(CAST(pre23 AS DECIMAL(38,0)) * 1000000000)" +
-              " div CAST(nmid2 AS DECIMAL(38,0))")))
-      .withColumn("p3_e9",
-        when(col("__m3") > 0, expr(
-          "((CAST(n AS DECIMAL(38,0)) * __m3 - t1) * 1000000000" +
-            " + CAST(t1 AS DECIMAL(38,0)) * t12 * p2_e9)" +
-            " div (CAST(c12 AS DECIMAL(38,0)) * __m3)"))
-          .otherwise(expr(
-            "(CAST(n AS DECIMAL(38,0)) * 1000000000)" +
-              " div CAST(c12 AS DECIMAL(38,0))")))
-      .select("w1", "w2", "w3", "n", "d3_e9", "d2_e9", "p2_e9",
-        "p3_e9")
-  }
-
-  /** MODIFIED Kneser–Ney TRIGRAM probabilities —
-    * [[knProbabilitiesModified]]'s three-discount estimator applied
-    * at BOTH levels of the trigram recursion (Chen/Goodman 1999's
-    * full prescription, the SRILM/KenLM production smoother): the top
-    * level estimates D₁/D₂/D₃₊ from the trigram count-of-counts
-    * t₁..t₄; the continuation level from the continuation table's own
-    * count-of-counts cc₁..cc₄ (the pre23 values ARE that level's
-    * counts — the discounts there are indexed by pre23). Per level,
-    * the discount backing-off mass is
-    *
-    *   γ(ctx) = D₁·K₁(ctx) + D₂·K₂(ctx) + D₃₊·K₃₊(ctx)
-    *
-    * with Kₖ the per-context type counts at that level (per (w1,w2)
-    * over n at the top; per w2 over pre23 at the continuation level).
-    * Discounts pre-floored to e9, then the two-stage composition
-    * through the floored intermediates:
-    *
-    *   p2_e9 = ((pre23·10⁹ − d2sel_e9)·B + γ₂_e9·pre3)
-    *             div (nmid2·B)
-    *   p3_e9 = ((n·10⁹ − d3sel_e9)·10⁹ + γ₃_e9·p2_e9)
-    *             div (c12·10⁹)
-    *
-    * Headroom: pre23·10⁹·B ~ 10²⁹; n·10¹⁸ ~ 10³⁰; γ₃_e9·p2_e9 ≤
-    * 3·10⁹·t12·10⁹ ~ 10²⁵ — inside DECIMAL(38,0). Non-negativity and
-    * the degenerate conventions (M = 0 → all-zero discounts = ML;
-    * empty count-of-counts bucket → fall back to that level's D₁)
-    * are [[knProbabilitiesModified]]'s, applied per level. Output:
-    * the six discounts (d31/d32/d33 top, d21/d22/d23 continuation)
-    * plus p2_e9, p3_e9 — the count-indexed pick is visible in the
-    * emitted table.
-    *
-    * Scale shape identical to [[knTrigramProbabilities]]: three
-    * aggregations over the COLLAPSED trigram table, count-of-counts
-    * on the 1-row broadcasts. */
-  def knTrigramProbabilitiesModified(tri: DataFrame): DataFrame = {
-    val ctx = tri.groupBy(col("w1"), col("w2"))
-      .agg(sum(col("n")).as("c12"),
-        sum(when(col("n") === 1, 1L).otherwise(0L)).as("k1"),
-        sum(when(col("n") === 2, 1L).otherwise(0L)).as("k2"),
-        sum(when(col("n") >= 3, 1L).otherwise(0L)).as("k3p"))
-    val cont = tri.groupBy(col("w2"), col("w3"))
-      .agg(count(lit(1)).as("pre23"))
-    val mid = cont.groupBy(col("w2"))
-      .agg(sum(col("pre23")).as("nmid2"),
-        sum(when(col("pre23") === 1, 1L).otherwise(0L)).as("l1"),
-        sum(when(col("pre23") === 2, 1L).otherwise(0L)).as("l2"),
-        sum(when(col("pre23") >= 3, 1L).otherwise(0L)).as("l3p"))
-    val pre = cont.groupBy(col("w3"))
-      .agg(count(lit(1)).as("pre3"))
-    val topCc = tri.agg(
-      sum(when(col("n") === 1, 1L).otherwise(0L)).as("t1"),
-      sum(when(col("n") === 2, 1L).otherwise(0L)).as("t2"),
-      sum(when(col("n") === 3, 1L).otherwise(0L)).as("t3"),
-      sum(when(col("n") === 4, 1L).otherwise(0L)).as("t4"))
-    val contCc = cont.agg(count(lit(1)).as("b"),
-      sum(when(col("pre23") === 1, 1L).otherwise(0L)).as("cc1"),
-      sum(when(col("pre23") === 2, 1L).otherwise(0L)).as("cc2"),
-      sum(when(col("pre23") === 3, 1L).otherwise(0L)).as("cc3"),
-      sum(when(col("pre23") === 4, 1L).otherwise(0L)).as("cc4"))
-    tri
-      .join(ctx, Seq("w1", "w2")).join(cont, Seq("w2", "w3"))
-      .join(mid, Seq("w2")).join(pre, Seq("w3"))
-      .crossJoin(broadcast(topCc)).crossJoin(broadcast(contCc))
-      .withColumn("__m3", col("t1") + lit(2L) * col("t2"))
-      .withColumn("__m2", col("cc1") + lit(2L) * col("cc2"))
-      .withColumn("d31_e9", when(col("__m3") > 0,
-        expr("(CAST(t1 AS DECIMAL(38,0)) * 1000000000)" +
-          " div CAST(__m3 AS DECIMAL(38,0))")).otherwise(lit(0L)))
-      .withColumn("d32_e9", when(col("__m3") > 0 && col("t2") > 0,
-        expr("(GREATEST(CAST(0 AS DECIMAL(38,0))," +
-          " 2*CAST(t2 AS DECIMAL(38,0))*__m3" +
-          " - 3*CAST(t1 AS DECIMAL(38,0))*t3) * 1000000000)" +
-          " div (CAST(t2 AS DECIMAL(38,0)) * __m3)"))
-        .otherwise(col("d31_e9")))
-      .withColumn("d33_e9", when(col("__m3") > 0 && col("t3") > 0,
-        expr("(GREATEST(CAST(0 AS DECIMAL(38,0))," +
-          " 3*CAST(t3 AS DECIMAL(38,0))*__m3" +
-          " - 4*CAST(t1 AS DECIMAL(38,0))*t4) * 1000000000)" +
-          " div (CAST(t3 AS DECIMAL(38,0)) * __m3)"))
-        .otherwise(col("d31_e9")))
-      .withColumn("d21_e9", when(col("__m2") > 0,
-        expr("(CAST(cc1 AS DECIMAL(38,0)) * 1000000000)" +
-          " div CAST(__m2 AS DECIMAL(38,0))")).otherwise(lit(0L)))
-      .withColumn("d22_e9", when(col("__m2") > 0 && col("cc2") > 0,
-        expr("(GREATEST(CAST(0 AS DECIMAL(38,0))," +
-          " 2*CAST(cc2 AS DECIMAL(38,0))*__m2" +
-          " - 3*CAST(cc1 AS DECIMAL(38,0))*cc3) * 1000000000)" +
-          " div (CAST(cc2 AS DECIMAL(38,0)) * __m2)"))
-        .otherwise(col("d21_e9")))
-      .withColumn("d23_e9", when(col("__m2") > 0 && col("cc3") > 0,
-        expr("(GREATEST(CAST(0 AS DECIMAL(38,0))," +
-          " 3*CAST(cc3 AS DECIMAL(38,0))*__m2" +
-          " - 4*CAST(cc1 AS DECIMAL(38,0))*cc4) * 1000000000)" +
-          " div (CAST(cc3 AS DECIMAL(38,0)) * __m2)"))
-        .otherwise(col("d21_e9")))
-      .withColumn("__d2sel", when(col("pre23") === 1, col("d21_e9"))
-        .when(col("pre23") === 2, col("d22_e9"))
-        .otherwise(col("d23_e9")))
-      .withColumn("__d3sel", when(col("n") === 1, col("d31_e9"))
-        .when(col("n") === 2, col("d32_e9")).otherwise(col("d33_e9")))
-      .withColumn("__gam2", expr(
-        "CAST(d21_e9 AS DECIMAL(38,0))*l1" +
-          " + CAST(d22_e9 AS DECIMAL(38,0))*l2" +
-          " + CAST(d23_e9 AS DECIMAL(38,0))*l3p"))
-      .withColumn("__gam3", expr(
-        "CAST(d31_e9 AS DECIMAL(38,0))*k1" +
-          " + CAST(d32_e9 AS DECIMAL(38,0))*k2" +
-          " + CAST(d33_e9 AS DECIMAL(38,0))*k3p"))
-      .withColumn("p2_e9", expr(
-        "((CAST(pre23 AS DECIMAL(38,0)) * 1000000000 - __d2sel) * b" +
-          " + __gam2 * pre3)" +
-          " div (CAST(nmid2 AS DECIMAL(38,0)) * b)"))
-      .withColumn("p3_e9", expr(
-        "((CAST(n AS DECIMAL(38,0)) * 1000000000 - __d3sel)" +
-          " * 1000000000 + __gam3 * p2_e9)" +
-          " div (CAST(c12 AS DECIMAL(38,0)) * 1000000000)"))
-      .select("w1", "w2", "w3", "n", "d31_e9", "d32_e9", "d33_e9",
-        "d21_e9", "d22_e9", "d23_e9", "p2_e9", "p3_e9")
-  }
-
-  /** Score documents against a TRAINED KN trigram table — the n=3
-    * upgrade of [[knScoreDocs]]: per document, the mean interpolated
-    * trigram probability of its adjacent trigrams, exact floor-e9
-    * through the same two-stage composition as
-    * [[knTrigramProbabilities]]. Back-off, all branches from the same
-    * closed forms (the standard KN cascade — when a level's context
-    * is unseen, its interpolation weight is undefined and the score
-    * IS the lower level):
-    *
-    *   top level (w1,w2) context:
-    *     - trigram seen:   ((4n−3)·10⁹ + 3·t12·p2) div (4·c12)
-    *     - ctx12 seen only: (3·t12·p2) div (4·c12)   (λ·P(w3|w2))
-    *     - ctx12 unseen:   p2
-    *   continuation level (w2 middle context):
-    *     - (w2,w3) seen:   ((4·pre23−3)·B + 3·post2·pre3)·10⁹
-    *                         div (4·nmid2·B)
-    *     - w2 seen only:   (3·post2·pre3·10⁹) div (4·nmid2·B)
-    *     - w2 unseen, w3 known: pre3·10⁹ div B  (unigram fallback)
-    *     - w3 unknown:     0 (zero continuation mass — the q250
-    *                       convention; a true OOV model would
-    *                       interpolate a character LM)
-    *
-    * Output per doc: `n_trigrams`, `sum_p_e9`, `mean_p_e9` (floor).
-    * Docs with < 3 tokens keep a zero row (the spine is `docs`).
-    *
-    * Scale shape: doc trigram INSTANCES equi-join the model and its
-    * four marginal tables on their keys — hash joins keyed by the
-    * model (broadcast when the trained model is small); one per-doc
-    * aggregation collapses the instances. `tri` is referenced SIX
-    * times and Spark has no common-subplan dedup across differently-
-    * keyed aggregations — pass a MATERIALIZED table (the saved
-    * artifact, or `.localCheckpoint(true)`) or the training
-    * aggregation re-runs per reference. */
-  def knScoreDocsTrigram(docs: DataFrame, idCol: String,
-      textCol: String, tri: DataFrame): DataFrame =
-    knScoreFinish(docs.select(col(idCol)).distinct(),
-      knTrigramScoreFacts(docs, idCol, textCol, tri), idCol,
-      nCol = "n_trigrams")
-
-  /** The per-doc aggregated half of [[knScoreDocsTrigram]] — (idCol,
-    * n_trigrams, sum_p_e9) WITHOUT the zero-row spine: the shape that
-    * streams (explode + stream-static model joins + ONE Update-mode
-    * per-doc agg). Shared by the batch operator and the streaming
-    * twin so the derivations cannot drift. */
-  def knTrigramScoreFacts(docs: DataFrame, idCol: String,
-      textCol: String, tri: DataFrame,
-      mat: DataFrame => DataFrame = MatIdentity): DataFrame = {
-    val probs = mat(knTrigramProbabilities(tri)
-      .select(col("w1"), col("w2"), col("w3"), col("p3_e9")))
-    val ctx = mat(tri.groupBy(col("w1"), col("w2"))
-      .agg(sum(col("n")).as("__c12"), count(lit(1)).as("__t12")))
-    // cont is materialized FIRST so mid/pre/b derive from the cached
-    // table, not three more re-derivations of it
-    val cont = mat(tri.groupBy(col("w2"), col("w3"))
-      .agg(count(lit(1)).as("__pre23")))
-    val mid = mat(cont.groupBy(col("w2"))
-      .agg(sum(col("__pre23")).as("__nmid2"),
-        count(lit(1)).as("__post2")))
-    val pre = mat(cont.groupBy(col("w3"))
-      .agg(count(lit(1)).as("__pre3")))
-    val b = mat(cont.agg(count(lit(1)).as("__b")))
-    val inst = trigramInstances(docs, idCol, textCol)
-    inst
-      .join(probs, Seq("w1", "w2", "w3"), "left")
-      .join(ctx, Seq("w1", "w2"), "left")
-      .join(cont, Seq("w2", "w3"), "left")
-      .join(mid, Seq("w2"), "left")
-      .join(pre, Seq("w3"), "left")
-      .crossJoin(broadcast(b))
-      // continuation level: the four-branch cascade (seen / middle-
-      // backoff / unigram fallback / unknown w3)
-      .withColumn("__p2", coalesce(
-        when(col("__pre23").isNotNull, expr(
-          "(CAST(1000000000 AS DECIMAL(38,0)) * ((4*CAST(__pre23 AS DECIMAL(38,0)) - 3) * __b" +
-            " + 3 * CAST(__post2 AS DECIMAL(38,0)) * __pre3))" +
-            " div (4 * CAST(__nmid2 AS DECIMAL(38,0)) * __b)")),
-        when(col("__nmid2").isNotNull && col("__pre3").isNotNull, expr(
-          "(CAST(1000000000 AS DECIMAL(38,0)) * 3 * CAST(__post2 AS DECIMAL(38,0)) * __pre3)" +
-            " div (4 * CAST(__nmid2 AS DECIMAL(38,0)) * __b)")),
-        when(col("__pre3").isNotNull, expr(
-          "(CAST(1000000000 AS DECIMAL(38,0)) * __pre3)" +
-            " div CAST(__b AS DECIMAL(38,0))")),
-        lit(0L)))
-      // top level: seen trigram / seen context / context-unseen
-      .withColumn("__p", coalesce(col("p3_e9"),
-        when(col("__c12").isNotNull, expr(
-          "(3 * CAST(__t12 AS DECIMAL(38,0)) * __p2)" +
-            " div (4 * CAST(__c12 AS DECIMAL(38,0)))")),
-        col("__p2")))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_trigrams"),
-        sum(col("__p")).as("sum_p_e9"))
-  }
-
-  /** [[knScoreDocs]] under MODIFIED Kneser–Ney — documents score
-    * against the [[knProbabilitiesModified]] model (Chen/Goodman's
-    * three count-indexed discounts), with the back-off cascade at the
-    * model's own discount mass:
-    *   - seen bigram: the model's p_e9 (exact replay, joined)
-    *   - ctx w1 known, w2 has continuation mass:
-    *     γ(w1)/c1 · Pcont(w2) = (γ_e9·pre) div (c1·B) — the model
-    *     formula with the seen numerator dropped; γ_e9 =
-    *     d₁·K₁ + d₂·K₂ + d₃₊·K₃₊ over the context's type counts
-    *   - ctx unknown, w2 known: pre·10⁹ div B (unigram fallback)
-    *   - w2 unknown: 0
-    * Degenerate M = 0: all discounts are 0, so γ = 0 and the
-    * ctx-known branch scores 0 (strict ML — the trainer's
-    * convention, no special case needed). Same instance-join scale
-    * shape as [[knScoreFacts]]; pass a MATERIALIZED `counts`. */
-  def knScoreDocsModified(docs: DataFrame, idCol: String,
-      textCol: String, counts: DataFrame): DataFrame =
-    knScoreFinish(docs.select(col(idCol)).distinct(),
-      knScoreFactsModified(docs, idCol, textCol, counts), idCol)
-
-  /** The per-doc aggregated half of [[knScoreDocsModified]] — the
-    * shape that streams; shared with the streaming serve twin.
-    *
-    * Plan note: the three discounts are a pure function of the 1-row
-    * count-of-counts, so they are computed ON that 1-row aggregate
-    * (once, before broadcast), and the per-context γ on the
-    * MODEL-sized ctx table — the instance rows (the corpus-scale
-    * axis) carry only the branch pick and its single division, the
-    * same per-row cost as the pinned-D [[knScoreFacts]]. */
-  def knScoreFactsModified(docs: DataFrame, idCol: String,
-      textCol: String, counts: DataFrame,
-      mat: DataFrame => DataFrame = MatIdentity): DataFrame =
-    knScoreFactsModifiedFromPairs(
-      bigramInstances(docs, idCol, textCol), idCol, counts, mat)
-
-  /** [[knScoreFactsModified]]'s join-and-cascade body over an
-    * explicit (id, w1, w2) instance frame — shared with the
-    * open-vocabulary mKN serve, whose instances are
-    * vocabulary-mapped before the cascade. */
-  private def knScoreFactsModifiedFromPairs(pairs: DataFrame,
-      idCol: String, counts: DataFrame,
-      mat: DataFrame => DataFrame = MatIdentity): DataFrame = {
-    val probs = mat(knProbabilitiesModified(counts)
-      .select(col("w1"), col("w2"), col("p_e9")))
-    val totD = mat(counts.agg(count(lit(1)).as("__b"),
-        sum(when(col("n") === 1, 1L).otherwise(0L)).as("__n1"),
-        sum(when(col("n") === 2, 1L).otherwise(0L)).as("__n2"),
-        sum(when(col("n") === 3, 1L).otherwise(0L)).as("__n3"),
-        sum(when(col("n") === 4, 1L).otherwise(0L)).as("__n4"))
-      .withColumn("__m", col("__n1") + lit(2L) * col("__n2"))
-      .withColumn("__d1", when(col("__m") > 0,
-        expr("(CAST(__n1 AS DECIMAL(38,0)) * 1000000000)" +
-          " div CAST(__m AS DECIMAL(38,0))")).otherwise(lit(0L)))
-      .withColumn("__d2", when(col("__m") > 0 && col("__n2") > 0,
-        expr("(GREATEST(CAST(0 AS DECIMAL(38,0))," +
-          " 2*CAST(__n2 AS DECIMAL(38,0))*__m" +
-          " - 3*CAST(__n1 AS DECIMAL(38,0))*__n3) * 1000000000)" +
-          " div (CAST(__n2 AS DECIMAL(38,0)) * __m)"))
-        .otherwise(col("__d1")))
-      .withColumn("__d3", when(col("__m") > 0 && col("__n3") > 0,
-        expr("(GREATEST(CAST(0 AS DECIMAL(38,0))," +
-          " 3*CAST(__n3 AS DECIMAL(38,0))*__m" +
-          " - 4*CAST(__n1 AS DECIMAL(38,0))*__n4) * 1000000000)" +
-          " div (CAST(__n3 AS DECIMAL(38,0)) * __m)"))
-        .otherwise(col("__d1")))
-      .select("__b", "__d1", "__d2", "__d3"))
-    val ctxG = mat(counts.groupBy(col("w1"))
-      .agg(sum(col("n")).as("__c1"),
-        sum(when(col("n") === 1, 1L).otherwise(0L)).as("__k1"),
-        sum(when(col("n") === 2, 1L).otherwise(0L)).as("__k2"),
-        sum(when(col("n") >= 3, 1L).otherwise(0L)).as("__k3p"))
-      .crossJoin(broadcast(totD.select("__d1", "__d2", "__d3")))
-      .withColumn("__gam", expr(
-        "CAST(__d1 AS DECIMAL(38,0))*__k1" +
-          " + CAST(__d2 AS DECIMAL(38,0))*__k2" +
-          " + CAST(__d3 AS DECIMAL(38,0))*__k3p"))
-      .select("w1", "__c1", "__gam"))
-    val cont = mat(counts.groupBy(col("w2"))
-      .agg(count(lit(1)).as("__pre")))
-    pairs
-      .join(probs, Seq("w1", "w2"), "left")
-      .join(ctxG, Seq("w1"), "left")
-      .join(cont, Seq("w2"), "left")
-      .crossJoin(broadcast(totD.select("__b")))
-      .withColumn("__p", coalesce(col("p_e9"),
-        when(col("__c1").isNotNull && col("__pre").isNotNull, expr(
-          "(__gam * __pre)" +
-            " div (CAST(__c1 AS DECIMAL(38,0)) * __b)")),
-        when(col("__pre").isNotNull, expr(
-          "(CAST(__pre AS DECIMAL(38,0)) * 1000000000)" +
-            " div CAST(__b AS DECIMAL(38,0))")),
-        lit(0L)))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(col("__p")).as("sum_p_e9"))
-  }
-
-  /** [[knScoreDocsTrigram]] under MODIFIED Kneser–Ney — the n=3
-    * serve for [[knTrigramProbabilitiesModified]]: both levels of the
-    * cascade interpolate with that level's three-discount γ mass
-    * (top over the context's type counts K, continuation over the
-    * middle context's L counts indexed by pre23), composing through
-    * the model's own single-stage floors. Branch structure is
-    * [[knTrigramScoreFacts]]'s (seen / backoff / fallback / zero at
-    * each level) with λ·lower replaced by γ/total·lower. Degenerate
-    * M = 0 levels contribute zero γ naturally. Pass a MATERIALIZED
-    * `tri`. */
-  def knScoreDocsTrigramModified(docs: DataFrame, idCol: String,
-      textCol: String, tri: DataFrame): DataFrame =
-    knScoreFinish(docs.select(col(idCol)).distinct(),
-      knTrigramScoreFactsModified(docs, idCol, textCol, tri), idCol,
-      nCol = "n_trigrams")
-
-  /** The per-doc aggregated half of [[knScoreDocsTrigramModified]] —
-    * the shape that streams; shared with the streaming serve twin.
-    *
-    * Plan note (same as [[knScoreFactsModified]]): both levels'
-    * discounts are computed ONCE on their 1-row count-of-counts
-    * aggregates, the per-context γ₃ on the MODEL-sized ctx table and
-    * the per-middle γ₂ on the mid table — instance rows carry only
-    * the branch CASEs and their single divisions, the per-row cost of
-    * the pinned-D [[knTrigramScoreFacts]]. */
-  def knTrigramScoreFactsModified(docs: DataFrame, idCol: String,
-      textCol: String, tri: DataFrame,
-      mat: DataFrame => DataFrame = MatIdentity): DataFrame = {
-    val probs = mat(knTrigramProbabilitiesModified(tri)
-      .select(col("w1"), col("w2"), col("w3"), col("p3_e9")))
-    // cont is materialized FIRST so contD/midG/pre derive from the
-    // cached table, not three more re-derivations of it
-    val cont = mat(tri.groupBy(col("w2"), col("w3"))
-      .agg(count(lit(1)).as("__pre23")))
-    val topD = mat(tri.agg(
-        sum(when(col("n") === 1, 1L).otherwise(0L)).as("__t1"),
-        sum(when(col("n") === 2, 1L).otherwise(0L)).as("__t2"),
-        sum(when(col("n") === 3, 1L).otherwise(0L)).as("__t3"),
-        sum(when(col("n") === 4, 1L).otherwise(0L)).as("__t4"))
-      .withColumn("__m3", col("__t1") + lit(2L) * col("__t2"))
-      .withColumn("__d31", when(col("__m3") > 0,
-        expr("(CAST(__t1 AS DECIMAL(38,0)) * 1000000000)" +
-          " div CAST(__m3 AS DECIMAL(38,0))")).otherwise(lit(0L)))
-      .withColumn("__d32", when(col("__m3") > 0 && col("__t2") > 0,
-        expr("(GREATEST(CAST(0 AS DECIMAL(38,0))," +
-          " 2*CAST(__t2 AS DECIMAL(38,0))*__m3" +
-          " - 3*CAST(__t1 AS DECIMAL(38,0))*__t3) * 1000000000)" +
-          " div (CAST(__t2 AS DECIMAL(38,0)) * __m3)"))
-        .otherwise(col("__d31")))
-      .withColumn("__d33", when(col("__m3") > 0 && col("__t3") > 0,
-        expr("(GREATEST(CAST(0 AS DECIMAL(38,0))," +
-          " 3*CAST(__t3 AS DECIMAL(38,0))*__m3" +
-          " - 4*CAST(__t1 AS DECIMAL(38,0))*__t4) * 1000000000)" +
-          " div (CAST(__t3 AS DECIMAL(38,0)) * __m3)"))
-        .otherwise(col("__d31")))
-      .select("__d31", "__d32", "__d33"))
-    val contD = mat(cont.agg(count(lit(1)).as("__b"),
-        sum(when(col("__pre23") === 1, 1L).otherwise(0L)).as("__cc1"),
-        sum(when(col("__pre23") === 2, 1L).otherwise(0L)).as("__cc2"),
-        sum(when(col("__pre23") === 3, 1L).otherwise(0L)).as("__cc3"),
-        sum(when(col("__pre23") === 4, 1L).otherwise(0L)).as("__cc4"))
-      .withColumn("__m2", col("__cc1") + lit(2L) * col("__cc2"))
-      .withColumn("__d21", when(col("__m2") > 0,
-        expr("(CAST(__cc1 AS DECIMAL(38,0)) * 1000000000)" +
-          " div CAST(__m2 AS DECIMAL(38,0))")).otherwise(lit(0L)))
-      .withColumn("__d22", when(col("__m2") > 0 && col("__cc2") > 0,
-        expr("(GREATEST(CAST(0 AS DECIMAL(38,0))," +
-          " 2*CAST(__cc2 AS DECIMAL(38,0))*__m2" +
-          " - 3*CAST(__cc1 AS DECIMAL(38,0))*__cc3) * 1000000000)" +
-          " div (CAST(__cc2 AS DECIMAL(38,0)) * __m2)"))
-        .otherwise(col("__d21")))
-      .withColumn("__d23", when(col("__m2") > 0 && col("__cc3") > 0,
-        expr("(GREATEST(CAST(0 AS DECIMAL(38,0))," +
-          " 3*CAST(__cc3 AS DECIMAL(38,0))*__m2" +
-          " - 4*CAST(__cc1 AS DECIMAL(38,0))*__cc4) * 1000000000)" +
-          " div (CAST(__cc3 AS DECIMAL(38,0)) * __m2)"))
-        .otherwise(col("__d21")))
-      .select("__b", "__d21", "__d22", "__d23"))
-    val ctxG = mat(tri.groupBy(col("w1"), col("w2"))
-      .agg(sum(col("n")).as("__c12"),
-        sum(when(col("n") === 1, 1L).otherwise(0L)).as("__kk1"),
-        sum(when(col("n") === 2, 1L).otherwise(0L)).as("__kk2"),
-        sum(when(col("n") >= 3, 1L).otherwise(0L)).as("__kk3p"))
-      .crossJoin(broadcast(topD))
-      .withColumn("__g3", expr(
-        "CAST(__d31 AS DECIMAL(38,0))*__kk1" +
-          " + CAST(__d32 AS DECIMAL(38,0))*__kk2" +
-          " + CAST(__d33 AS DECIMAL(38,0))*__kk3p"))
-      .select("w1", "w2", "__c12", "__g3"))
-    val midG = mat(cont.groupBy(col("w2"))
-      .agg(sum(col("__pre23")).as("__nmid2"),
-        sum(when(col("__pre23") === 1, 1L).otherwise(0L)).as("__l1"),
-        sum(when(col("__pre23") === 2, 1L).otherwise(0L)).as("__l2"),
-        sum(when(col("__pre23") >= 3, 1L).otherwise(0L)).as("__l3p"))
-      .crossJoin(broadcast(contD.select("__d21", "__d22", "__d23")))
-      .withColumn("__g2", expr(
-        "CAST(__d21 AS DECIMAL(38,0))*__l1" +
-          " + CAST(__d22 AS DECIMAL(38,0))*__l2" +
-          " + CAST(__d23 AS DECIMAL(38,0))*__l3p"))
-      .select("w2", "__nmid2", "__g2"))
-    val pre = mat(cont.groupBy(col("w3"))
-      .agg(count(lit(1)).as("__pre3")))
-    trigramInstances(docs, idCol, textCol)
-      .join(probs, Seq("w1", "w2", "w3"), "left")
-      .join(ctxG, Seq("w1", "w2"), "left")
-      .join(cont, Seq("w2", "w3"), "left")
-      .join(midG, Seq("w2"), "left")
-      .join(pre, Seq("w3"), "left")
-      .crossJoin(broadcast(contD))
-      .withColumn("__d2sel", when(col("__pre23") === 1, col("__d21"))
-        .when(col("__pre23") === 2, col("__d22"))
-        .otherwise(col("__d23")))
-      .withColumn("__p2", coalesce(
-        when(col("__pre23").isNotNull, expr(
-          "((CAST(__pre23 AS DECIMAL(38,0)) * 1000000000 - __d2sel)" +
-            " * __b + __g2 * __pre3)" +
-            " div (CAST(__nmid2 AS DECIMAL(38,0)) * __b)")),
-        when(col("__nmid2").isNotNull && col("__pre3").isNotNull,
-          expr("(__g2 * __pre3)" +
-            " div (CAST(__nmid2 AS DECIMAL(38,0)) * __b)")),
-        when(col("__pre3").isNotNull, expr(
-          "(CAST(__pre3 AS DECIMAL(38,0)) * 1000000000)" +
-            " div CAST(__b AS DECIMAL(38,0))")),
-        lit(0L)))
-      .withColumn("__p", coalesce(col("p3_e9"),
-        when(col("__c12").isNotNull, expr(
-          "(__g3 * __p2)" +
-            " div (CAST(__c12 AS DECIMAL(38,0)) * 1000000000)")),
-        col("__p2")))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_trigrams"),
-        sum(col("__p")).as("sum_p_e9"))
   }
 
   /** Out-of-vocabulary rate per group against a tokenizer vocabulary
@@ -2388,7 +957,8 @@ object TextAnalysis {
 
   /** The aggregation half of [[piiPrevalence]] — ONE per-group pass
     * with all four monotone sums, which is also what makes it legal
-    * as a streaming Update-mode aggregation (the twin's shape). */
+    * as a streaming Update-mode aggregation (the twin's shape; MAX
+    * fold, state ∝ |groups|). */
   def piiCounts(df: DataFrame, groupCol: String,
       textCol: String): DataFrame = {
     def hit(re: String): Column =
@@ -2484,14 +1054,16 @@ object TextAnalysis {
 
   /** Per-(group, gram) adjacent-bigram INSTANCE counts — the state
     * table the online diversity monitor maintains (a grouped
-    * [[knBigramCounts]]); Σ n per group is the instance total and the
+    * [[NgramLm.ngrams]]); Σ n per group is the instance total and the
     * key count the distinct total, so [[diversityRatios]] over the
     * fold reproduces [[distinctNgramRatio]] exactly. Uses the RAW
     * `split(text, "\\s+")` stream — leading/trailing whitespace keeps
     * its empty token, exactly as [[distinctNgramRatio]]'s totals
     * (`size(tokens)`) and distinct side (wordShingles) count it; a
     * filtered stream here would diverge from the batch monitor on
-    * such text. */
+    * such text. On a streaming frame it is ONE Update-mode
+    * aggregation whose counts are monotone (MAX fold); state ∝
+    * distinct (group, gram) pairs. */
   def groupedBigramCounts(df: DataFrame, groupCol: String,
       textCol: String): DataFrame =
     df.select(col(groupCol), tokens(col(textCol)).as("__t"))

@@ -440,52 +440,6 @@ object EventStreams {
       .select(col(idCol), col(groupCol), col("epoch"))
   }
 
-  /** Online corpus-diversity maintenance — the streaming half of
-    * [[graft.ext.TextAnalysis.distinctNgramRatio]] (n = 2):
-    * [[graft.ext.TextAnalysis.groupedBigramCounts]] VERBATIM as the
-    * ONE Update-mode (group, gram) aggregation; counts MONOTONE → MAX
-    * fold; per group, Σ folded counts IS the instance total and the
-    * key count the distinct total, so
-    * [[graft.ext.TextAnalysis.diversityRatios]] over the fold
-    * reproduces the batch monitor exactly. State ∝ distinct (group,
-    * gram) pairs — the diversity artifact itself. */
-  def streamingDiversityCounts(docs: DataFrame, groupCol: String,
-      textCol: String): DataFrame =
-    graft.ext.TextAnalysis.groupedBigramCounts(docs, groupCol, textCol)
-
-  /** Online Kneser–Ney count maintenance — the LM-training analogue
-    * of [[streamingTermCounts]]:
-    * [[graft.ext.TextAnalysis.knBigramCounts]] VERBATIM as the ONE
-    * Update-mode (w1, w2) aggregation (the bigram explode is
-    * stateless, the counts MONOTONE → MAX fold); the continuation
-    * statistics derive from the folded table through the SHARED
-    * [[graft.ext.TextAnalysis.knTable]] expressions. State ∝ distinct
-    * bigrams — the LM artifact, never the corpus. */
-  def streamingKnCounts(docs: DataFrame, textCol: String): DataFrame =
-    graft.ext.TextAnalysis.knBigramCounts(docs, textCol)
-
-  /** Online Kneser–Ney TRIGRAM count maintenance — [[streamingKnCounts]]
-    * one order up: [[graft.ext.TextAnalysis.knTrigramCounts]] VERBATIM
-    * as the ONE Update-mode (w1, w2, w3) aggregation (stateless
-    * explode, MONOTONE counts → MAX fold); the smoothed model derives
-    * from the folded table through the SHARED
-    * [[graft.ext.TextAnalysis.knTrigramProbabilities]]. State ∝
-    * distinct trigrams — the LM artifact, never the corpus. */
-  def streamingKnTrigramCounts(docs: DataFrame,
-      textCol: String): DataFrame =
-    graft.ext.TextAnalysis.knTrigramCounts(docs, textCol)
-
-  /** Line-quality filtering at ingest —
-    * [[graft.ext.Curation.lineQualityFilter]] VERBATIM on the
-    * streaming frame (pure projection: split, integer-rational HOF
-    * filter, rejoin — zero state, Append-legal; the
-    * [[streamingFim]]/[[streamingStandardize]] convention, twins
-    * cannot drift by construction). */
-  def streamingLineQualityFilter(docs: DataFrame, idCol: String,
-      textCol: String, minAlphaE9: Long): DataFrame =
-    graft.ext.Curation.lineQualityFilter(docs, idCol, textCol,
-      minAlphaE9)
-
   /** Online OOV-rate maintenance — the streaming half of
     * [[graft.ext.TextAnalysis.oovRate]]: the vocabulary collapses to
     * an xxhash64 plan-literal long set (the [[streamingContamination]]
@@ -518,18 +472,6 @@ object EventStreams {
       .agg(sum(col("__nt")).as("n_tokens"),
         sum(col("__oov")).as("n_oov"))
   }
-
-  /** Online PII-prevalence maintenance — the streaming half of
-    * [[graft.ext.TextAnalysis.piiPrevalence]]: the governance counters
-    * kept fresh at ingest. [[graft.ext.TextAnalysis.piiCounts]]
-    * VERBATIM (one Update-mode per-group aggregation, rlike flags
-    * in-scan, all four sums MONOTONE → MAX fold); rates derive from
-    * the folded counts through the SHARED
-    * [[graft.ext.TextAnalysis.piiRates]] expressions. State ∝
-    * |groups|. */
-  def streamingPiiCounts(docs: DataFrame, groupCol: String,
-      textCol: String): DataFrame =
-    graft.ext.TextAnalysis.piiCounts(docs, groupCol, textCol)
 
   /** Online distribution-drift count maintenance — the streaming half
     * of [[graft.ext.Stats.chiSquareDrift]]: ONE Update-mode per-bucket
@@ -579,170 +521,6 @@ object EventStreams {
         sum(col("n_tokens")).as("n_tokens"),
         sum(col("n_bpe_tokens")).as("n_bpe_tokens"),
         sum(length(col(textCol)).cast("long")).as("n_chars"))
-
-  /** FIM at ingest — [[graft.ext.Curation.fimTransform]] VERBATIM on
-    * the streaming frame (the streamingStandardize convention: when
-    * the batch operator is a pure projection — hash selection, two
-    * code-point cuts, mode draw, zero state — the SAME method is the
-    * streaming operator, so the twins cannot drift by construction).
-    * Stateless, Append-legal with no watermark; exactly-once per doc
-    * because each row's transform is self-contained. */
-  def streamingFim(docs: DataFrame, idCol: String, textCol: String,
-      seed: String, rate: Double): DataFrame =
-    graft.ext.Curation.fimTransform(docs, idCol, textCol, seed, rate)
-
-  /** Online trained-LM document scoring — the serving half of the
-    * Kneser–Ney family: arriving documents score against a SAVED
-    * bigram model ([[graft.ext.TextAnalysis.knScoreFacts]] VERBATIM —
-    * the shared derivation): bigram explode, three stream-static
-    * joins against the model tables (probabilities + both back-off
-    * marginals, all derived from `counts` — materialize it: static
-    * sides re-evaluate per micro-batch), the 1-row B broadcast, then
-    * ONE Update-mode per-doc aggregation. Each doc's state is
-    * write-once (a doc arrives in one batch); the zero-row spine for
-    * sub-2-token docs is the fold's decision downstream
-    * ([[graft.ext.TextAnalysis.knScoreFinish]]). */
-  /** Serve-twin model materialization — used ONLY where measured to
-    * win. The static side of a stream-static model join re-optimizes
-    * and re-executes on every micro-batch, so eagerly
-    * localCheckpoint+broadcast-ing the derived model tables trades N
-    * upfront driver-sequential jobs against per-batch recompute. A
-    * same-window min5 A/B at sf0.1 (r18 optimization round) showed
-    * the trade pays when the static-side derivation is DEEP — the
-    * open-vocabulary serve (vocab fold + `<unk>` re-aggregation
-    * before the cascade: 4.22 → 2.84–3.18 s across two windows). For
-    * Witten–Bell the A/B was inconsistent across windows (2.70 vs
-    * 4.07 against identity 3.00) — kept in-tree. For the shallow
-    * bigram KN/estd/mKN/stupid-backoff families the model tables are
-    * one aggregation off the already-checkpointed count table and the
-    * eager materialization LOST 0.5–1.1 s/row (q260 2.48→3.02, q268
-    * 3.96→4.71), so those wrappers keep the in-tree derivation
-    * (MatIdentity default). The TRIGRAM estd/mkn serves (q282/q286)
-    * were re-A/B'd in r19 (VERDICT item 4): six derived model tables
-    * per micro-batch is the next-deepest static side, and eager mat
-    * read at-or-better in two interleaved min5 rounds (q282
-    * 4.57/5.41 → 4.44/5.24, q286 4.88/5.45 → 4.63/5.46 — inside the
-    * noise band but never worse), so they take the production
-    * train-once posture. Value-neutral either way (lineage cut only),
-    * so every twin still faces its batch operator's own oracle. */
-  private val serveMat: DataFrame => DataFrame =
-    graft.ext.TextAnalysis.modelMat
-
-  def streamingKnScore(docs: DataFrame, idCol: String, textCol: String,
-      counts: DataFrame): DataFrame =
-    graft.ext.TextAnalysis.knScoreFacts(docs, idCol, textCol, counts)
-
-  /** Online trained-LM document scoring at n=3 — the trigram order of
-    * [[streamingKnScore]]: arriving documents score against a SAVED
-    * trigram model through
-    * [[graft.ext.TextAnalysis.knTrigramScoreFacts]] VERBATIM (the
-    * shared derivation): trigram explode, five stream-static joins
-    * against the model and its marginal tables (materialize `tri`:
-    * static sides re-evaluate per micro-batch), the 1-row B
-    * broadcast, then ONE Update-mode per-doc aggregation. The
-    * zero-row spine for sub-3-token docs is the fold's decision
-    * downstream ([[graft.ext.TextAnalysis.knScoreFinish]]). */
-  def streamingKnTrigramScore(docs: DataFrame, idCol: String,
-      textCol: String, tri: DataFrame): DataFrame =
-    graft.ext.TextAnalysis.knTrigramScoreFacts(docs, idCol, textCol,
-      tri)
-
-  /** Online trained-LM scoring at the PRODUCTION (estimated)
-    * discount — [[streamingKnScore]] with
-    * [[graft.ext.TextAnalysis.knScoreFactsEstimatedD]] VERBATIM (the
-    * shared derivation): same explode + stream-static model joins +
-    * ONE Update-mode per-doc agg; the estimated D rides the 1-row
-    * count-of-counts broadcast. Materialize `counts` — static sides
-    * re-evaluate per micro-batch. */
-  def streamingKnScoreEstimatedD(docs: DataFrame, idCol: String,
-      textCol: String, counts: DataFrame): DataFrame =
-    graft.ext.TextAnalysis.knScoreFactsEstimatedD(docs, idCol,
-      textCol, counts)
-
-  /** Online trigram trained-LM scoring at the PRODUCTION discounts —
-    * [[streamingKnTrigramScore]] with
-    * [[graft.ext.TextAnalysis.knTrigramScoreFactsEstimatedD]]
-    * VERBATIM; both per-level estimated discounts ride the two 1-row
-    * count-of-counts broadcasts. Materialize `tri`. */
-  def streamingKnTrigramScoreEstimatedD(docs: DataFrame,
-      idCol: String, textCol: String, tri: DataFrame): DataFrame =
-    graft.ext.TextAnalysis.knTrigramScoreFactsEstimatedD(docs, idCol,
-      textCol, tri, serveMat)
-
-  /** OPEN-VOCABULARY online scoring — [[streamingKnScore]] with
-    * [[graft.ext.TextAnalysis.knScoreFactsUnk]] VERBATIM: arriving
-    * tokens map through the broadcast vocabulary (stream-static dim
-    * joins) before the cascade, so unseen words score the model's
-    * real p(`<unk>`|ctx) online too. Materialize `counts` and
-    * `vocab`. */
-  def streamingKnScoreUnk(docs: DataFrame, idCol: String,
-      textCol: String, counts: DataFrame,
-      vocab: DataFrame): DataFrame =
-    graft.ext.TextAnalysis.knScoreFactsUnk(docs, idCol, textCol,
-      counts, vocab, serveMat)
-
-  /** Online STUPID BACKOFF scoring — [[streamingKnTrigramScore]]'s
-    * shape with [[graft.ext.TextAnalysis.stupidBackoffScoreFacts]]
-    * VERBATIM: five stream-static count-table joins (no continuation
-    * marginals — the Brants trade shows up as a SHALLOWER serve than
-    * KN's) + ONE Update-mode per-doc agg. Materialize all three
-    * count tables. */
-  def streamingStupidBackoffScore(docs: DataFrame, idCol: String,
-      textCol: String, uni: DataFrame, bi: DataFrame,
-      tri: DataFrame): DataFrame =
-    graft.ext.TextAnalysis.stupidBackoffScoreFacts(docs, idCol,
-      textCol, uni, bi, tri)
-
-  /** Online WITTEN–BELL scoring — [[streamingKnScore]]'s shape with
-    * [[graft.ext.TextAnalysis.wittenBellScoreFacts]] VERBATIM: the
-    * unigram table replaces KN's continuation marginal in the
-    * stream-static joins. Materialize `counts` and `uni`. */
-  def streamingWittenBellScore(docs: DataFrame, idCol: String,
-      textCol: String, counts: DataFrame,
-      uni: DataFrame): DataFrame =
-    graft.ext.TextAnalysis.wittenBellScoreFacts(docs, idCol,
-      textCol, counts, uni)
-
-  /** Online trained-LM scoring under MODIFIED Kneser–Ney —
-    * [[streamingKnScore]] with
-    * [[graft.ext.TextAnalysis.knScoreFactsModified]] VERBATIM; the
-    * three count-indexed discounts ride the 1-row count-of-counts
-    * broadcast. Materialize `counts`. */
-  def streamingKnScoreModified(docs: DataFrame, idCol: String,
-      textCol: String, counts: DataFrame): DataFrame =
-    graft.ext.TextAnalysis.knScoreFactsModified(docs, idCol,
-      textCol, counts)
-
-  /** Online trigram trained-LM scoring under MODIFIED KN —
-    * [[streamingKnTrigramScore]] with
-    * [[graft.ext.TextAnalysis.knTrigramScoreFactsModified]] VERBATIM;
-    * both levels' three discounts ride the two 1-row count-of-counts
-    * broadcasts. Materialize `tri`. */
-  def streamingKnTrigramScoreModified(docs: DataFrame,
-      idCol: String, textCol: String, tri: DataFrame): DataFrame =
-    graft.ext.TextAnalysis.knTrigramScoreFactsModified(docs, idCol,
-      textCol, tri, serveMat)
-
-  /** Unicode cleanup at ingest — [[graft.ext.TextAnalysis.unicodeClean]]
-    * VERBATIM on the streaming frame (the [[streamingFim]] convention:
-    * a pure zero-shuffle projection — NFC + control strip + collapse +
-    * trim — is its own streaming operator). Stateless, Append-legal,
-    * no watermark. */
-  def streamingUnicodeClean(docs: DataFrame, textCol: String,
-      out: String = "clean_text"): DataFrame =
-    graft.ext.TextAnalysis.unicodeClean(docs, textCol, out)
-
-  /** Span corruption at ingest — [[graft.ext.Curation.spanCorrupt]]
-    * VERBATIM on the streaming frame (the [[streamingFim]] convention:
-    * the batch operator is a pure zero-shuffle projection — per-row
-    * array HOFs over the document's own tokens, zero state — so the
-    * SAME method is the streaming operator and the twins cannot drift
-    * by construction). Stateless, Append-legal, no watermark. */
-  def streamingSpanCorrupt(docs: DataFrame, idCol: String,
-      textCol: String, seed: String, startDenom: Int = 8,
-      spanLen: Int = 2): DataFrame =
-    graft.ext.Curation.spanCorrupt(docs, idCol, textCol, seed,
-      startDenom, spanLen)
 
   /** Online eval-side leakage facts — the streaming half of
     * [[graft.ext.Curation.evalLeakage]]: per arriving corpus document,
@@ -1048,18 +826,6 @@ object EventStreams {
         mx.cast("double") / col("__sz").cast("double"))
         .otherwise(lit(0.0)).as("top_word_frac"))
   }
-
-  /** Online feature standardization at ingest — the streaming twin of
-    * [[graft.ext.Similarity.standardize]]: μ/σ train ONCE in batch
-    * (the ≤ dims-row quantized-moment artifact, persistable) and
-    * every arriving vector z-scores map-only against the plan-literal
-    * arrays — [[graft.ext.Similarity.standardizeApply]] VERBATIM, the
-    * same method on batch and micro-batch frames, which is the point
-    * of the train/apply split. Stateless, no watermark, exactly-once
-    * per row; dimension mismatches raise (the batch guard). */
-  def streamingStandardize(vectors: DataFrame, vecCol: String,
-      stats: DataFrame, out: String = "zvec"): DataFrame =
-    graft.ext.Similarity.standardizeApply(vectors, vecCol, stats, out)
 
   /** Online ANN serving against SAVED SQ8 codes — the serving shape
     * the on-codes paths ([[graft.ext.Similarity.sq8TopKOnCodes]])

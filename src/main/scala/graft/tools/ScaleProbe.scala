@@ -3,7 +3,8 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.GraftSession
-import graft.ext.{Curation, Dedup, Graph, Search, Similarity, TextAnalysis}
+import graft.ext.{Curation, Dedup, Graph, NgramLm, Search, Similarity,
+  TextAnalysis}
 import graft.ranges.RangeJoin
 
 /** Local scale stress: replicate the sf tables N× (ids offset per copy)
@@ -329,23 +330,24 @@ object ScaleProbe {
     // replicated copies repeat the same bigrams: distinct stays flat
     // while instances grow — the map-side partial collapse is what
     // the bytes measure (the distinct_ngrams axis)
-    timeOrRun("kn_counts")(TextAnalysis.knTable(
-      TextAnalysis.knBigramCounts(docs, "text"))
+    timeOrRun("kn_counts")(NgramLm.continuationTable(
+      NgramLm.ngrams(docs, "text", 2, None))
       .select(sum("n"), sum("n1plus_pre")).head())
     // the smoothed derivation: two more aggs over the COLLAPSED
     // table + the 1-row B broadcast — same flat-distinct axis as
     // kn_counts
-    timeOrRun("kn_probabilities")(TextAnalysis.knProbabilities(
-      TextAnalysis.knBigramCounts(docs, "text"))
+    timeOrRun("kn_probabilities")(NgramLm.probabilities(
+      Map(2 -> NgramLm.ngrams(docs, "text", 2, None)), 2, NgramLm.Fixed)
       .select(sum("p_e9")).head())
     // the serving axis: doc bigram INSTANCES (grow with copies) join
     // the materialized model + two marginals (flat — replicated
     // copies share bigrams), then ONE per-doc agg
     timeOrRun("kn_doc_score") {
-      val model = TextAnalysis.knBigramCounts(
-          docs.filter(pmod(col("doc_id"), lit(5)) === 0), "text")
-        .localCheckpoint(true)
-      TextAnalysis.knScoreDocs(docs, "doc_id", "text", model)
+      val model = NgramLm.train(
+          docs.filter(pmod(col("doc_id"), lit(5)) === 0), "text", 2,
+          NgramLm.Fixed)
+      NgramLm.scoreDocs(docs, "doc_id", "text", model, 2,
+          NgramLm.Fixed, None)
         .select(sum("sum_p_e9"), sum("n_bigrams")).head()
     }
     // zero-shuffle map-only: the cost axis is pure scan+project CPU
@@ -356,44 +358,46 @@ object ScaleProbe {
     // (ctx pairs, continuation pairs, the (w2,w3) re-aggs) — distinct
     // trigrams stay flat under replication like the bigram axis, but
     // the collapsed table itself is ~|V| larger
-    timeOrRun("kn3_probabilities")(TextAnalysis.knTrigramProbabilities(
-      TextAnalysis.knTrigramCounts(docs, "text"))
+    timeOrRun("kn3_probabilities")(NgramLm.probabilities(
+      Map(3 -> NgramLm.ngrams(docs, "text", 3, None)), 3, NgramLm.Fixed)
       .select(sum("p3_e9")).head())
     // trigram serving: doc trigram INSTANCES join the materialized
     // model + FOUR marginal tables + B — the n=3 cost over q250's
     // three-join shape
     timeOrRun("kn3_doc_score") {
-      val model = TextAnalysis.knTrigramCounts(
-          docs.filter(pmod(col("doc_id"), lit(5)) === 0), "text")
-        .localCheckpoint(true)
-      TextAnalysis.knScoreDocsTrigram(docs, "doc_id", "text", model)
+      val model = NgramLm.train(
+          docs.filter(pmod(col("doc_id"), lit(5)) === 0), "text", 3,
+          NgramLm.Fixed)
+      NgramLm.scoreDocs(docs, "doc_id", "text", model, 3,
+          NgramLm.Fixed, None)
         .select(sum("sum_p_e9"), sum("n_trigrams")).head()
     }
     // modified-KN derivation: the pinned-D shape plus ONE more 1-row
     // count-of-counts broadcast (n1..n4) and per-context K-counts
     // folded into the same ctx agg — distinct-bigram axis, flat
     // under replication like kn_probabilities
-    timeOrRun("mkn_probabilities")(TextAnalysis.knProbabilitiesModified(
-      TextAnalysis.knBigramCounts(docs, "text"))
+    timeOrRun("mkn_probabilities")(NgramLm.probabilities(
+      Map(2 -> NgramLm.ngrams(docs, "text", 2, None)), 2, NgramLm.Modified)
       .select(sum("p_e9")).head())
     // mKN serving: identical join shape to kn_doc_score (instances ×
     // model + 2 marginals) — the three discounts ride the 1-row
     // broadcast, so the serving cost should read AT the pinned-D axis
     timeOrRun("mkn_doc_score") {
-      val model = TextAnalysis.knBigramCounts(
-          docs.filter(pmod(col("doc_id"), lit(5)) === 0), "text")
-        .localCheckpoint(true)
-      TextAnalysis.knScoreDocsModified(docs, "doc_id", "text", model)
+      val model = NgramLm.train(
+          docs.filter(pmod(col("doc_id"), lit(5)) === 0), "text", 2,
+          NgramLm.Modified)
+      NgramLm.scoreDocs(docs, "doc_id", "text", model, 2,
+          NgramLm.Modified, None)
         .select(sum("sum_p_e9"), sum("n_bigrams")).head()
     }
     // mKN trigram serving: kn3_doc_score's five-join shape with both
     // levels' count-of-counts on 1-row broadcasts
     timeOrRun("mkn3_doc_score") {
-      val model = TextAnalysis.knTrigramCounts(
-          docs.filter(pmod(col("doc_id"), lit(5)) === 0), "text")
-        .localCheckpoint(true)
-      TextAnalysis.knScoreDocsTrigramModified(docs, "doc_id", "text",
-          model)
+      val model = NgramLm.train(
+          docs.filter(pmod(col("doc_id"), lit(5)) === 0), "text", 3,
+          NgramLm.Modified)
+      NgramLm.scoreDocs(docs, "doc_id", "text", model, 3,
+          NgramLm.Modified, None)
         .select(sum("sum_p_e9"), sum("n_trigrams")).head()
     }
     // stupid-backoff serving: the Brants trade measured — five count
@@ -401,23 +405,19 @@ object ScaleProbe {
     // serve at the same instance count (the paper's point, as a
     // number)
     timeOrRun("sb_doc_score") {
-      val train = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-      val uni = TextAnalysis.unigramTable(train, "text")
-        .localCheckpoint(true)
-      val bi = TextAnalysis.knBigramCounts(train, "text")
-        .localCheckpoint(true)
-      val tri = TextAnalysis.knTrigramCounts(train, "text")
-        .localCheckpoint(true)
-      TextAnalysis.stupidBackoffScoreDocs(docs, "doc_id", "text",
-          uni, bi, tri)
+      val model = NgramLm.train(
+          docs.filter(pmod(col("doc_id"), lit(5)) === 0), "text", 3,
+          NgramLm.StupidBackoff)
+      NgramLm.scoreDocs(docs, "doc_id", "text", model, 3,
+          NgramLm.StupidBackoff, None)
         .select(sum("sum_p_e9"), sum("n_trigrams")).head()
     }
     // the q269 composition: LM score+gate (instance joins + slim
     // semi-join) in FRONT of the full curation pipeline
     timeOrRun("lm_gated_pipeline") {
-      val model = TextAnalysis.knBigramCounts(
-          docs.filter(pmod(col("doc_id"), lit(5)) === 0), "text")
-        .localCheckpoint(true)
+      val model = NgramLm.train(
+          docs.filter(pmod(col("doc_id"), lit(5)) === 0), "text", 2,
+          NgramLm.Fixed)
       // the replicated probe frame carries (doc_id, text) only — give
       // the pipeline its source column from the id hash
       val d3 = docs.withColumn("source",
@@ -428,7 +428,7 @@ object ScaleProbe {
         .select(sum("n_chars_clean"), count(lit(1))).head()
     }
     timeOrRun("collocations")(TextAnalysis.collocationLift(
-      TextAnalysis.knBigramCounts(docs, "text"), minCount = 2)
+      NgramLm.ngrams(docs, "text", 2, None), minCount = 2)
       .select(sum("lift_e9")).head())
     // gate -> chunk -> pack in one frame: the only corpus-sized
     // exchange is the pack cumsum on the shard key

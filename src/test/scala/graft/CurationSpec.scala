@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.core.GraftSession
-import graft.ext.{Curation, TextAnalysis}
+import graft.ext.{Curation, NgramLm, TextAnalysis}
 
 class CurationSpec extends SparkSpecBase {
   import spark.implicits._
@@ -86,9 +86,8 @@ class CurationSpec extends SparkSpecBase {
     import Curation.CurationConfig
     val docs = GraftSession.table(spark, "/root/testdata/sf0.001",
       "documents").select("doc_id", "source", "text")
-    val model = graft.ext.TextAnalysis.knBigramCounts(
-        docs.where(col("doc_id") % 2 === 0), "text")
-      .localCheckpoint(true)
+    val model = NgramLm.train(docs.where(col("doc_id") % 2 === 0), "text",
+      2, NgramLm.Fixed)
     val base = Curation.curationPipeline(docs)
     // tau = 0 with a model: only docs with >= 1 bigram survive the
     // gate; the heuristic minTokens gate subsumes that here, so the
@@ -100,8 +99,8 @@ class CurationSpec extends SparkSpecBase {
     assert(base.count() === tau0.count())
     // a median-ish tau cuts SOME docs but not all, and the survivors
     // are exactly the score-gated subset (exact-integer compare)
-    val facts = graft.ext.TextAnalysis.knScoreFacts(
-      docs, "doc_id", "text", model)
+    val facts = NgramLm.facts(docs, "doc_id", "text", model, 2,
+      NgramLm.Fixed, None)
     val tau = 34000000L
     val expectKeep = facts
       .filter(col("sum_p_e9") >= col("n_bigrams") * tau)
@@ -136,19 +135,17 @@ class CurationSpec extends SparkSpecBase {
     val en = docs.where(col("lang") === "en")
       .select("doc_id", "source", "text")
     val d = docs.select("doc_id", "source", "text")
-    val bi = graft.ext.TextAnalysis.knBigramCounts(en, "text")
-      .localCheckpoint(true)
-    val tri = graft.ext.TextAnalysis.knTrigramCounts(en, "text")
-      .localCheckpoint(true)
+    val bi = NgramLm.train(en, "text", 2, NgramLm.Fixed)
+    val tri = NgramLm.train(en, "text", 3, NgramLm.Fixed)
     val tau = 40000000L
     val triGated = Curation.curationPipeline(d,
       CurationConfig(lmMinMeanPE9 = tau), Some(tri),
-      lmScorer = graft.ext.TextAnalysis.knTrigramScoreFacts(_, _, _, _))
+      lmScorer = (3, NgramLm.Fixed))
     val biGated = Curation.curationPipeline(d,
       CurationConfig(lmMinMeanPE9 = tau), Some(bi))
     // the trigram gate keeps exactly the trigram-score-gated subset
-    val expectKeep = graft.ext.TextAnalysis.knTrigramScoreFacts(
-        d, "doc_id", "text", tri)
+    val expectKeep = NgramLm.facts(d, "doc_id", "text", tri, 3,
+        NgramLm.Fixed, None)
       .filter(col("sum_p_e9") >= col("n_trigrams") * tau)
       .select("doc_id")
     assert(triGated.count() > 0)
@@ -163,7 +160,7 @@ class CurationSpec extends SparkSpecBase {
     // estimated-D scorers also satisfy the facts contract
     val estGated = Curation.curationPipeline(d,
       CurationConfig(lmMinMeanPE9 = tau), Some(bi),
-      lmScorer = graft.ext.TextAnalysis.knScoreFactsEstimatedD(_, _, _, _))
+      lmScorer = (2, NgramLm.Estimated))
     assert(estGated.count() > 0)
     // the modified-KN scorer plugs in and keeps exactly the
     // mKN-score-gated subset (the q288 composition); at the same tau
@@ -172,9 +169,9 @@ class CurationSpec extends SparkSpecBase {
     val mknTau = 33500000L
     val mknGated = Curation.curationPipeline(d,
       CurationConfig(lmMinMeanPE9 = mknTau), Some(bi),
-      lmScorer = graft.ext.TextAnalysis.knScoreFactsModified(_, _, _, _))
-    val mknKeep = graft.ext.TextAnalysis.knScoreFactsModified(
-        d, "doc_id", "text", bi)
+      lmScorer = (2, NgramLm.Modified))
+    val mknKeep = NgramLm.facts(d, "doc_id", "text", bi, 2,
+        NgramLm.Modified, None)
       .filter(col("sum_p_e9") >= col("n_bigrams") * mknTau)
       .select("doc_id")
     assert(mknGated.count() > 0)
@@ -195,8 +192,8 @@ class CurationSpec extends SparkSpecBase {
     // model: "the cat sat"/"the cat ran" (the knScoreDocs fixture) —
     // pinned D=3/4: p(cat|the)=750000000, p(sat|cat)=p(ran|cat)
     // = 375000000
-    val model = graft.ext.TextAnalysis.knBigramCounts(
-      Seq("the cat sat", "the cat ran").toDF("text"), "text")
+    val model = Map(2 -> NgramLm.ngrams(
+      Seq("the cat sat", "the cat ran").toDF("text"), "text", 2, None))
     val docs = Seq(
       (1L, "aa", "the cat sat"), // mean 562500000 -> head
       (2L, "aa", "the cat"),     // mean 750000000 -> head
@@ -216,7 +213,7 @@ class CurationSpec extends SparkSpecBase {
     // scorer knob live: an impossible scorer ranking flips buckets
     val got2 = Curation.ccnetBuckets(docs, "doc_id", "lang", "text",
         model,
-        lmScorer = graft.ext.TextAnalysis.knScoreFactsModified(_, _, _, _))
+        lmScorer = (2, NgramLm.Modified))
       .orderBy("doc_id").collect().map(_.getString(3))
     assert(got2.length == 7)
   }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.{Dedup, Similarity, TextAnalysis}
+import graft.ext.{Dedup, NgramLm, Similarity, TextAnalysis}
 
 class ExtSpec extends SparkSpecBase {
   import spark.implicits._
@@ -1749,8 +1749,8 @@ class ExtSpec extends SparkSpecBase {
       "the cat ran",        // the-cat, cat-ran
       "cat",                // nothing
       "").toDF("text")
-    val got = TextAnalysis.knTable(
-        TextAnalysis.knBigramCounts(df, "text"))
+    val got = NgramLm.continuationTable(
+        NgramLm.ngrams(df, "text", 2, None))
       .orderBy("w1", "w2").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))
@@ -1768,7 +1768,7 @@ class ExtSpec extends SparkSpecBase {
     val train = Seq("the cat sat", "the cat ran").toDF("text")
     // counts: (the,cat,2) (cat,sat,1) (cat,ran,1); B=4 instances
     // lt: the=2 cat=2; rt: cat=2 sat=1 ran=1
-    val counts = TextAnalysis.knBigramCounts(train, "text")
+    val counts = NgramLm.ngrams(train, "text", 2, None)
     val all = TextAnalysis.collocationLift(counts, minCount = 1)
       .orderBy("w1", "w2").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2),
@@ -1788,8 +1788,8 @@ class ExtSpec extends SparkSpecBase {
     val train = Seq("the cat sat", "the cat ran").toDF("text")
     // counts: (the,cat,2) (cat,sat,1) (cat,ran,1); B=3
     // ctx: the(c1=2,post=1) cat(c1=2,post=2); pre: cat=1 sat=1 ran=1
-    val counts = TextAnalysis.knBigramCounts(train, "text")
-    val probs = TextAnalysis.knProbabilities(counts)
+    val counts = NgramLm.ngrams(train, "text", 2, None)
+    val probs = NgramLm.probabilities(Map(2 -> counts), 2, NgramLm.Fixed)
       .orderBy("w1", "w2").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3)))
@@ -1806,7 +1806,8 @@ class ExtSpec extends SparkSpecBase {
       (4L, "the ran"),     // backoff: 3*post(the)*pre(ran) /(4*2*3)
       (5L, "solo")         // < 2 tokens: zero row via the spine
     ).toDF("doc_id", "text")
-    val got = TextAnalysis.knScoreDocs(docs, "doc_id", "text", counts)
+    val got = NgramLm.scoreDocs(docs, "doc_id", "text", Map(2 -> counts),
+        2, NgramLm.Fixed, None)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3)))
@@ -1823,8 +1824,9 @@ class ExtSpec extends SparkSpecBase {
     val train = Seq("the cat sat", "the cat ran").toDF("text")
     // counts: (the,cat,2) (cat,sat,1) (cat,ran,1); n1=2 n2=1 M=4
     // D = 2/4 -> d_e9 = 500000000; B=3, pc = 1e9//3 = 333333333
-    val got = TextAnalysis.knProbabilitiesEstimatedD(
-        TextAnalysis.knBigramCounts(train, "text"))
+    val got = NgramLm.probabilities(
+        Map(2 -> NgramLm.ngrams(train, "text", 2, None)), 2,
+        NgramLm.Estimated)
       .orderBy("w1", "w2").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))
@@ -1835,8 +1837,9 @@ class ExtSpec extends SparkSpecBase {
       ("cat", "sat", 1L, 500000000L, 416666666L),
       ("the", "cat", 2L, 500000000L, 833333333L)))
     // every count >= 3: n1 = n2 = 0, M = 0 -> D=0, pure ML n/c1
-    val deg = TextAnalysis.knProbabilitiesEstimatedD(
-        Seq(("a", "b", 3L), ("a", "c", 6L)).toDF("w1", "w2", "n"))
+    val deg = NgramLm.probabilities(
+        Map(2 -> Seq(("a", "b", 3L), ("a", "c", 6L)).toDF("w1", "w2", "n")),
+        2, NgramLm.Estimated)
       .orderBy("w2").collect()
       .map(r => (r.getString(1), r.getLong(3), r.getLong(4)))
     assert(deg.toSeq == Seq(
@@ -1851,8 +1854,8 @@ class ExtSpec extends SparkSpecBase {
     // cont: (b,c) pre23=2; (c,a)/(a,b)/(b,d) all 1 — B=4
     // mid: b nmid2=3 post2=2; a/c nmid2=1 post2=1
     // pre: a=b=c=d=1
-    val probs = TextAnalysis.knTrigramProbabilities(
-        TextAnalysis.knTrigramCounts(train, "text"))
+    val probs = NgramLm.probabilities(
+        Map(3 -> NgramLm.ngrams(train, "text", 3, None)), 3, NgramLm.Fixed)
       .orderBy("w1", "w2", "w3").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2),
         r.getLong(3), r.getLong(4), r.getLong(5)))
@@ -1882,8 +1885,9 @@ class ExtSpec extends SparkSpecBase {
     // p2(b,d) = (2e9 + 1500000000) // 15 = 233333333
     // p3 = (0 + 5*t12*p2) // (c12*5): (a,b,*) t12=2 c12=2;
     //      single-context rows collapse to their p2
-    val got = TextAnalysis.knTrigramProbabilitiesEstimatedD(
-        TextAnalysis.knTrigramCounts(train, "text"))
+    val got = NgramLm.probabilities(
+        Map(3 -> NgramLm.ngrams(train, "text", 3, None)), 3,
+        NgramLm.Estimated)
       .orderBy("w1", "w2", "w3").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
@@ -1904,7 +1908,7 @@ class ExtSpec extends SparkSpecBase {
   test("knScoreDocsTrigram: every back-off branch of the two-level " +
       "cascade by hand; sub-3-token docs keep zero rows; floor mean") {
     val train = Seq("a b c a b d", "x b c").toDF("text")
-    val model = TextAnalysis.knTrigramCounts(train, "text")
+    val model = Map(3 -> NgramLm.ngrams(train, "text", 3, None))
     val docs = Seq(
       (1L, "a b c"),   // seen trigram: 531249999
       (2L, "a b b"),   // ctx (a,b) seen, tri unseen; p2 middle-
@@ -1918,8 +1922,8 @@ class ExtSpec extends SparkSpecBase {
       (7L, "a b c a")  // two tri: 531249999 + 578125000 = 1109374999
                        // floor mean 554687499
     ).toDF("doc_id", "text")
-    val got = TextAnalysis.knScoreDocsTrigram(docs, "doc_id", "text",
-        model)
+    val got = NgramLm.scoreDocs(docs, "doc_id", "text", model, 3,
+        NgramLm.Fixed, None)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3)))
@@ -1939,7 +1943,7 @@ class ExtSpec extends SparkSpecBase {
     // counts: (the,cat,2) (cat,sat,1) (cat,ran,1); n1=2 n2=1 M=4
     // model (from the q273 spec): p(cat|the)=833333333,
     // p(sat|cat)=p(ran|cat)=416666666; B=3, pc=333333333
-    val counts = TextAnalysis.knBigramCounts(train, "text")
+    val counts = NgramLm.ngrams(train, "text", 2, None)
     val docs = Seq(
       (1L, "the cat sat"), // seen+seen: 833333333+416666666
       (2L, "dog cat"),     // w1 unseen, w2 known: pc = 333333333
@@ -1948,8 +1952,8 @@ class ExtSpec extends SparkSpecBase {
                            // = (2*1*333333333)//8 = 83333333
       (5L, "solo")         // < 2 tokens: zero row via the spine
     ).toDF("doc_id", "text")
-    val got = TextAnalysis.knScoreDocsEstimatedD(docs, "doc_id",
-        "text", counts)
+    val got = NgramLm.scoreDocs(docs, "doc_id", "text", Map(2 -> counts),
+        2, NgramLm.Estimated, None)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3)))
@@ -1962,9 +1966,9 @@ class ExtSpec extends SparkSpecBase {
     // M=0 model (every count >= 3): seen bigram scores ML; unseen
     // bigram with a KNOWN context gets ZERO interpolation mass
     val deg = Seq(("a", "b", 3L), ("a", "c", 6L)).toDF("w1", "w2", "n")
-    val got2 = TextAnalysis.knScoreDocsEstimatedD(
+    val got2 = NgramLm.scoreDocs(
         Seq((1L, "a b"), (2L, "a z")).toDF("doc_id", "text"),
-        "doc_id", "text", deg)
+        "doc_id", "text", Map(2 -> deg), 2, NgramLm.Estimated, None)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(2)))
     assert(got2.toSeq == Seq((1L, 333333333L), (2L, 0L)))
@@ -1976,7 +1980,7 @@ class ExtSpec extends SparkSpecBase {
     // t1=5 t2=0 M3=5; cc1=3 cc2=1 M2=5; B=4, pc=250000000
     // model p2: (b,c)=566666666 (c,a)=(a,b)=550000000 (b,d)=233333333
     // seen p3: (a,b,*) = p2 (top term zero at n=1, M3=5 -> n*M3=t1)
-    val model = TextAnalysis.knTrigramCounts(train, "text")
+    val model = Map(3 -> NgramLm.ngrams(train, "text", 3, None))
     val docs = Seq(
       (1L, "a b c"),   // seen trigram: p3 = p2(b,c) = 566666666
       (2L, "a b b"),   // ctx seen, tri unseen: λ3 = t1*t12/(c12*M3)
@@ -1988,8 +1992,8 @@ class ExtSpec extends SparkSpecBase {
       (6L, "a b"),     // < 3 tokens: zero row via the spine
       (7L, "a b c a")  // 566666666 + p3(b,c,a)=p2(c,a)=550000000
     ).toDF("doc_id", "text")
-    val got = TextAnalysis.knScoreDocsTrigramEstimatedD(docs,
-        "doc_id", "text", model)
+    val got = NgramLm.scoreDocs(docs, "doc_id", "text", model, 3,
+        NgramLm.Estimated, None)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3)))
@@ -2014,7 +2018,7 @@ class ExtSpec extends SparkSpecBase {
     // p(cat|the): n=2 -> dsel=d2: ((2e9-2e9)*3 + 2e9*1)//(2*3)
     //   = 333333333 (pure discount mass — the clip branch live)
     // p(sat|cat)=p(ran|cat): ((1e9-5e8)*3 + 1e9*1)//(2*3) = 416666666
-    val counts = TextAnalysis.knBigramCounts(train, "text")
+    val counts = NgramLm.ngrams(train, "text", 2, None)
     val docs = Seq(
       (1L, "the cat sat"), // seen+seen: 333333333+416666666
       (2L, "dog cat"),     // w1 unseen, w2 known: 1e9//3 = 333333333
@@ -2023,8 +2027,8 @@ class ExtSpec extends SparkSpecBase {
                            // = 2e9//6 = 333333333
       (5L, "solo")         // < 2 tokens: zero row via the spine
     ).toDF("doc_id", "text")
-    val got = TextAnalysis.knScoreDocsModified(docs, "doc_id",
-        "text", counts)
+    val got = NgramLm.scoreDocs(docs, "doc_id", "text", Map(2 -> counts),
+        2, NgramLm.Modified, None)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3)))
@@ -2037,9 +2041,9 @@ class ExtSpec extends SparkSpecBase {
     // M=0 model (every count >= 3): all three discounts are 0, so a
     // seen bigram scores ML and unseen-with-known-context gets ZERO
     val deg = Seq(("a", "b", 3L), ("a", "c", 6L)).toDF("w1", "w2", "n")
-    val got2 = TextAnalysis.knScoreDocsModified(
+    val got2 = NgramLm.scoreDocs(
         Seq((1L, "a b"), (2L, "a z")).toDF("doc_id", "text"),
-        "doc_id", "text", deg)
+        "doc_id", "text", Map(2 -> deg), 2, NgramLm.Modified, None)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(2)))
     assert(got2.toSeq == Seq((1L, 333333333L), (2L, 0L)))
@@ -2060,7 +2064,7 @@ class ExtSpec extends SparkSpecBase {
     // seen p3 all n=1 -> top term (1e9-d31)=0: p3 = gam3*p2//(c12*1e9)
     //   p3(a,b,c)=2e9*216666666//2e9 = 216666666
     //   p3(b,c,a)=550000000
-    val model = TextAnalysis.knTrigramCounts(train, "text")
+    val model = Map(3 -> NgramLm.ngrams(train, "text", 3, None))
     val docs = Seq(
       (1L, "a b c"),   // seen trigram: 216666666
       (2L, "a b b"),   // ctx seen, tri unseen: (w2,w3)=(b,b) unseen,
@@ -2073,8 +2077,8 @@ class ExtSpec extends SparkSpecBase {
       (6L, "a b"),     // < 3 tokens: zero row via the spine
       (7L, "a b c a")  // 216666666 + p3(b,c,a)=550000000
     ).toDF("doc_id", "text")
-    val got = TextAnalysis.knScoreDocsTrigramModified(docs,
-        "doc_id", "text", model)
+    val got = NgramLm.scoreDocs(docs, "doc_id", "text", model, 3,
+        NgramLm.Modified, None)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3)))
@@ -2094,13 +2098,13 @@ class ExtSpec extends SparkSpecBase {
     val train = Seq("the cat sat", "the cat ran").toDF("text")
     // unigrams: the=2 cat=2 sat=1 ran=1; top-3 by (n desc, word asc)
     // = {cat, the, ran}; sat -> <unk>
-    val vocab = TextAnalysis.knVocabTopK(train, "text", 3)
+    val vocab = NgramLm.vocabTopK(train, "text", 3)
     assert(vocab.orderBy("word").as[String].collect().toSeq ==
       Seq("cat", "ran", "the"))
     // raw counts (the,cat,2)(cat,sat,1)(cat,ran,1) fold to
     // (the,cat,2)(cat,<unk>,1)(cat,ran,1) — model-sized re-agg
-    val counts = TextAnalysis.knBigramCounts(train, "text")
-    val folded = TextAnalysis.knCountsWithUnk(counts, vocab)
+    val counts = NgramLm.ngrams(train, "text", 2, None)
+    val folded = NgramLm.withUnk(counts, 2, vocab)
       .orderBy("w1", "w2").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     assert(folded.toSeq == Seq(
@@ -2120,8 +2124,8 @@ class ExtSpec extends SparkSpecBase {
                              // = 125000000
       (5L, "solo")           // < 2 tokens: zero row via the spine
     ).toDF("doc_id", "text")
-    val got = TextAnalysis.knScoreDocsUnk(docs, "doc_id", "text",
-        counts, vocab)
+    val got = NgramLm.scoreDocs(docs, "doc_id", "text", Map(2 -> counts),
+        2, NgramLm.Fixed, Some(vocab))
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3)))
@@ -2143,8 +2147,8 @@ class ExtSpec extends SparkSpecBase {
     // B=3; gam(the)=d2=2e9 (k2=1); gam(cat)=2*d1=1e9 (k1=2).
     // p(cat|the): n=2 -> d2: ((2e9-2e9)*3 + 2e9*1)//(2*3) = 333333333
     // p(<unk>|cat) = p(ran|cat): ((1e9-5e8)*3 + 1e9*1)//6 = 416666666
-    val vocab = TextAnalysis.knVocabTopK(train, "text", 3)
-    val counts = TextAnalysis.knBigramCounts(train, "text")
+    val vocab = NgramLm.vocabTopK(train, "text", 3)
+    val counts = NgramLm.ngrams(train, "text", 2, None)
     val docs = Seq(
       (1L, "the cat sat"),   // 333333333 + (cat,<unk>) 416666666
       (2L, "the cat zebra"), // OOV zebra -> <unk>: SAME as doc 1
@@ -2154,8 +2158,8 @@ class ExtSpec extends SparkSpecBase {
                              // = 333333333
       (5L, "solo")           // < 2 tokens: zero row via the spine
     ).toDF("doc_id", "text")
-    val got = TextAnalysis.knScoreDocsUnkModified(docs, "doc_id",
-        "text", counts, vocab)
+    val got = NgramLm.scoreDocs(docs, "doc_id", "text", Map(2 -> counts),
+        2, NgramLm.Modified, Some(vocab))
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3)))
@@ -2173,9 +2177,9 @@ class ExtSpec extends SparkSpecBase {
     val train = Seq("a b c a b d", "x b c").toDF("text")
     // uni: a=2 b=3 c=2 d=1 x=1, N=9; bi: (a,b)2 (b,c)2 (c,a)1 (b,d)1
     // (x,b)1; tri all 1
-    val uni = TextAnalysis.unigramTable(train, "text")
-    val bi = TextAnalysis.knBigramCounts(train, "text")
-    val tri = TextAnalysis.knTrigramCounts(train, "text")
+    val uni = NgramLm.ngrams(train, "text", 1, None)
+    val bi = NgramLm.ngrams(train, "text", 2, None)
+    val tri = NgramLm.ngrams(train, "text", 3, None)
     assert(uni.agg(sum("n")).head().getLong(0) == 9L)
     val docs = Seq(
       (1L, "a b c"),   // seen tri: c123/c12 = 1e9//2 = 500000000
@@ -2187,8 +2191,8 @@ class ExtSpec extends SparkSpecBase {
       (6L, "a b c a")  // 500000000 + (b,c,a): 1e9//c12(b,c)=2
                        // = 500000000
     ).toDF("doc_id", "text")
-    val got = TextAnalysis.stupidBackoffScoreDocs(docs, "doc_id",
-        "text", uni, bi, tri)
+    val got = NgramLm.scoreDocs(docs, "doc_id", "text",
+        Map(1 -> uni, 2 -> bi, 3 -> tri), 3, NgramLm.StupidBackoff, None)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3)))
@@ -2208,9 +2212,10 @@ class ExtSpec extends SparkSpecBase {
     // uni: the=2 cat=2 sat=1 ran=1, N=6
     // bi: (the,cat)2 (cat,sat)1 (cat,ran)1
     // ctx: the c1=2 T1=1; cat c1=2 T1=2
-    val uni = TextAnalysis.unigramTable(train, "text")
-    val counts = TextAnalysis.knBigramCounts(train, "text")
-    val model = TextAnalysis.wittenBellProbabilities(counts, uni)
+    val uni = NgramLm.ngrams(train, "text", 1, None)
+    val counts = NgramLm.ngrams(train, "text", 2, None)
+    val model = NgramLm.probabilities(Map(1 -> uni, 2 -> counts), 2,
+        NgramLm.WittenBell)
       .orderBy("w1", "w2").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(3)))
     // p(cat|the) = (2*6+1*2)*1e9//(3*6) = 777777777
@@ -2228,8 +2233,8 @@ class ExtSpec extends SparkSpecBase {
                            // = 1e9//18 = 55555555
       (5L, "solo")         // < 2 tokens: zero row via the spine
     ).toDF("doc_id", "text")
-    val got = TextAnalysis.wittenBellScoreDocs(docs, "doc_id",
-        "text", counts, uni)
+    val got = NgramLm.scoreDocs(docs, "doc_id", "text",
+        Map(1 -> uni, 2 -> counts), 2, NgramLm.WittenBell, None)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3)))
@@ -2250,7 +2255,7 @@ class ExtSpec extends SparkSpecBase {
     // pre: p=2 q=2 r=1; B=5
     val counts = Seq(("a", "p", 1L), ("a", "q", 2L), ("a", "r", 3L),
       ("b", "p", 4L), ("b", "q", 1L)).toDF("w1", "w2", "n")
-    val got = TextAnalysis.knProbabilitiesModified(counts)
+    val got = NgramLm.probabilities(Map(2 -> counts), 2, NgramLm.Modified)
       .orderBy("w1", "w2").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
@@ -2261,8 +2266,9 @@ class ExtSpec extends SparkSpecBase {
       ("b", "p", 4L, 500000000L, 500000000L, 1000000000L, 720000000L),
       ("b", "q", 1L, 500000000L, 500000000L, 1000000000L, 220000000L)))
     // n2=0: D2 falls back to D1; n4=0 leaves D3 = 3n3M/(n3M) = 3
-    val fb = TextAnalysis.knProbabilitiesModified(
-        Seq(("a", "p", 1L), ("a", "q", 3L)).toDF("w1", "w2", "n"))
+    val fb = NgramLm.probabilities(
+        Map(2 -> Seq(("a", "p", 1L), ("a", "q", 3L)).toDF("w1", "w2", "n")),
+        2, NgramLm.Modified)
       .orderBy("w2").collect()
       .map(r => (r.getString(1), r.getLong(3), r.getLong(4),
         r.getLong(5), r.getLong(6)))
@@ -2272,17 +2278,19 @@ class ExtSpec extends SparkSpecBase {
       ("p", 1000000000L, 1000000000L, 3000000000L, 500000000L),
       ("q", 1000000000L, 1000000000L, 3000000000L, 500000000L)))
     // 2*n2*M < 3*n1*n3 clips D2 at 0 (n1=4 n2=1 n3=4 n4=0 M=6)
-    val clip = TextAnalysis.knProbabilitiesModified(
-        Seq(("a", "p", 1L), ("a", "q", 1L), ("b", "p", 1L),
+    val clip = NgramLm.probabilities(
+        Map(2 -> Seq(("a", "p", 1L), ("a", "q", 1L), ("b", "p", 1L),
           ("b", "q", 1L), ("c", "p", 2L), ("c", "q", 3L),
           ("d", "p", 3L), ("d", "q", 3L), ("e", "p", 3L))
-          .toDF("w1", "w2", "n"))
+          .toDF("w1", "w2", "n")),
+        2, NgramLm.Modified)
       .select("d1_e9", "d2_e9", "d3_e9").distinct().collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(clip.toSeq == Seq((666666666L, 0L, 3000000000L)))
     // M=0: all discounts zero, pure ML
-    val deg = TextAnalysis.knProbabilitiesModified(
-        Seq(("a", "b", 3L), ("a", "c", 6L)).toDF("w1", "w2", "n"))
+    val deg = NgramLm.probabilities(
+        Map(2 -> Seq(("a", "b", 3L), ("a", "c", 6L)).toDF("w1", "w2", "n")),
+        2, NgramLm.Modified)
       .orderBy("w2").collect()
       .map(r => (r.getString(1), r.getLong(3), r.getLong(6)))
     assert(deg.toSeq == Seq(
@@ -2301,7 +2309,7 @@ class ExtSpec extends SparkSpecBase {
     val tri = Seq(("a", "b", "x", 1L), ("a", "b", "y", 2L),
       ("a", "b", "z", 3L), ("c", "b", "x", 4L), ("c", "b", "w", 1L))
       .toDF("w1", "w2", "w3", "n")
-    val got = TextAnalysis.knTrigramProbabilitiesModified(tri)
+    val got = NgramLm.probabilities(Map(3 -> tri), 3, NgramLm.Modified)
       .orderBy("w1", "w2", "w3").collect()
       .map(r => (r.getString(0), r.getString(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7),

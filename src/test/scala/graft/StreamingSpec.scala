@@ -1675,7 +1675,7 @@ class StreamingSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[(Long, String, String)]
-    val q = EventStreams.streamingPiiCounts(
+    val q = TextAnalysis.piiCounts(
         mem.toDS().toDF("id", "source", "text"), "source", "text")
       .writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
@@ -1744,7 +1744,7 @@ class StreamingSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[(Long, String, String)]
-    val q = EventStreams.streamingDiversityCounts(
+    val q = TextAnalysis.groupedBigramCounts(
         mem.toDS().toDF("id", "grp", "text"), "grp", "text")
       .writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
@@ -1802,16 +1802,15 @@ class StreamingSpec extends SparkSpecBase {
 
   test("streamingKnCounts: cross-batch MAX-fold converges to the batch " +
       "LM table through the shared continuation derivation") {
-    import graft.ext.TextAnalysis
+    import graft.ext.NgramLm
     val docs = Seq((1L, "the cat sat"), (2L, "the cat ran"), (3L, "cat"))
-    val batch = TextAnalysis.knTable(TextAnalysis.knBigramCounts(
-        docs.toDF("id", "text"), "text"))
+    val batch = NgramLm.continuationTable(NgramLm.ngrams(
+        docs.toDF("id", "text"), "text", 2, None))
       .orderBy("w1", "w2").collect().map(_.toSeq).toSeq
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[(Long, String)]
-    val q = EventStreams.streamingKnCounts(
-        mem.toDS().toDF("id", "text"), "text")
+    val q = NgramLm.ngrams(mem.toDS().toDF("id", "text"), "text", 2, None)
       .writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
       .format("memory").queryName("kn_counts").start()
@@ -1823,7 +1822,7 @@ class StreamingSpec extends SparkSpecBase {
         .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
         .groupBy(_._1).view.mapValues(_.map(_._2).max)
         .toSeq.map { case ((w1, w2), n) => (w1, w2, n) }
-      val online = TextAnalysis.knTable(folded.toDF("w1", "w2", "n"))
+      val online = NgramLm.continuationTable(folded.toDF("w1", "w2", "n"))
         .orderBy("w1", "w2").collect().map(_.toSeq).toSeq
       assert(online == batch, s"online $online vs batch $batch")
     } finally q.stop()
@@ -1832,20 +1831,19 @@ class StreamingSpec extends SparkSpecBase {
   test("streamingKnScoreEstimatedD: Update-mode serving at the " +
       "estimated discount converges to the batch scorer through the " +
       "shared facts/finish halves") {
-    import graft.ext.TextAnalysis
+    import graft.ext.NgramLm
     val train = Seq("the cat sat", "the cat ran").toDF("text")
-    val model = TextAnalysis.knBigramCounts(train, "text")
-      .localCheckpoint(true)
+    val model = NgramLm.train(train, "text", 2, NgramLm.Estimated)
     val docs = Seq((1L, "the cat sat"), (2L, "dog cat"),
       (3L, "the ran"), (4L, "solo"))
-    val batch = TextAnalysis.knScoreDocsEstimatedD(
-        docs.toDF("doc_id", "text"), "doc_id", "text", model)
+    val batch = NgramLm.scoreDocs(docs.toDF("doc_id", "text"), "doc_id",
+        "text", model, 2, NgramLm.Estimated, None)
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[(Long, String)]
-    val q = EventStreams.streamingKnScoreEstimatedD(
-        mem.toDS().toDF("doc_id", "text"), "doc_id", "text", model)
+    val q = NgramLm.facts(mem.toDS().toDF("doc_id", "text"), "doc_id",
+        "text", model, 2, NgramLm.Estimated, None)
       .writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
       .format("memory").queryName("kn_estd_score").start()
@@ -1857,9 +1855,8 @@ class StreamingSpec extends SparkSpecBase {
         .groupBy(_._1).view
         .mapValues(vs => vs.maxBy(v => (v._2, v._3))).toSeq
         .map(_._2)
-      val online = TextAnalysis.knScoreFinish(
-          docs.map(_._1).toDF("doc_id"),
-          folded.toDF("doc_id", "n_bigrams", "sum_p_e9"), "doc_id")
+      val online = NgramLm.finish(docs.map(_._1).toDF("doc_id"),
+          folded.toDF("doc_id", "n_bigrams", "sum_p_e9"), "doc_id", 2)
         .orderBy("doc_id").collect().map(_.toSeq).toSeq
       assert(online == batch, s"online $online vs batch $batch")
     } finally q.stop()
@@ -1875,7 +1872,7 @@ class StreamingSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[(Long, String)]
-    val q = EventStreams.streamingLineQualityFilter(
+    val q = Curation.lineQualityFilter(
         mem.toDS().toDF("doc_id", "text"), "doc_id", "text", 800000000L)
       .writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
@@ -1899,7 +1896,7 @@ class StreamingSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[(Long, String)]
-    val q = EventStreams.streamingFim(mem.toDS().toDF("doc_id", "text"),
+    val q = Curation.fimTransform(mem.toDS().toDF("doc_id", "text"),
         "doc_id", "text", "f1", rate = 1.0)
       .writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
