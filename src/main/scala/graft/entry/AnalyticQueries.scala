@@ -1,10 +1,12 @@
 package graft.entry
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import graft.core.GraftSession
 import graft.ext.NgramLm
+import graft.streaming.EventStreams
 
 /** Round-2 analytic operator coverage: multi-dimensional aggregation
   * (CUBE), the full window-rank family, decorrelated scalar subqueries,
@@ -20,32 +22,6 @@ object AnalyticQueries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     GraftSession.table(s, dir, name)
 
-  /** Memoized sorted replay feed, keyed by (session, sf dir) — see the
-    * note inside [[replayThirds]]. Keyed on the SparkSession OBJECT
-    * (reference equality — SparkSession doesn't override equals), not
-    * its identityHashCode: identity hashes are not unique, so a hash
-    * collision could serve a persisted Dataset bound to a different,
-    * possibly stopped session. Values are Dataset[EventStreams.Event];
-    * typed as Any to keep the cache a plain field. */
-  private val replayFeedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Any]
-
-  /** Sweep session-keyed memo caches on every access: entries whose
-    * session has STOPPED are dropped (their persisted/checkpointed
-    * blocks died with the context; the map entry would otherwise pin
-    * the session object and its plan graph for the life of the JVM —
-    * spec suites spin up many sessions). O(cache size) per call and
-    * these caches hold a handful of entries, so the sweep is free
-    * next to the work being memoized. */
-  private[entry] def evictStoppedSessions[V](
-      cache: java.util.concurrent.ConcurrentHashMap[(SparkSession, String), V])
-      : Unit = {
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      if (it.next().getKey._1.sparkContext.isStopped) it.remove()
-    }
-  }
-
   /** Run `body` with `settings` in the session conf, then leave each key
     * as it was: set to its old value, or unset if it was not set. */
   private def withConf[A](s: SparkSession, settings: (String, String)*)(
@@ -60,62 +36,35 @@ object AnalyticQueries {
     }
   }
 
-  /** Shared harness for the streaming oracle rows (q118/q119/q121):
-    * replay the event log through `op`'s micro-batch pipeline in three
-    * TIME-ORDERED batches (sorted on the operators' own exact-micros
-    * key — a millis-only sort could split a shared millisecond across
-    * a batch boundary against the micros timeline, ADVICE r7) and
-    * return the raw sink rows.
+  /** The replay harness every streaming row runs through: feed `feed`
+    * to `op`'s micro-batch pipeline in three `order`-ordered batches
+    * and return the raw sink rows. Callers fold the sink rows —
+    * matrix-, users- or vocabulary-sized — on the driver.
     *
-    * Scale shape: SPARK does the sort (a distributed, spill-aware
-    * orderBy on (unix_micros, event_id)); the driver only STREAMS the
-    * sorted result partition-by-partition through `toLocalIterator`,
-    * so it never holds more than one partition of events — a 10×
-    * event table changes batch count, not driver memory. (MemoryStream
-    * feeding is inherently driver-side; the operator under test is
-    * keyed state, bounded per user.) Callers fold the sink rows —
-    * matrix- or users-sized — on the driver. */
-  private def replayThirds(s: SparkSession, dir: String,
-      op: org.apache.spark.sql.Dataset[graft.streaming.EventStreams.Event] =>
-        org.apache.spark.sql.Dataset[_],
-      mode: org.apache.spark.sql.streaming.OutputMode =
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-      flush: Boolean = false,
+    * Scale shape: Spark range-partitions `feed` into THREE partitions
+    * on `order` and sorts within each — the partitions ARE the
+    * micro-batches, so batches stay ordered across boundaries — and
+    * the driver streams one partition at a time through
+    * `toLocalIterator`, so it never holds more than one batch (3 fetch
+    * jobs; a 32-partition orderBy paid ~35 scheduler round-trips per
+    * run). Each call sorts its own feed and keeps nothing after it
+    * returns: the sort is small next to the per-batch state cost
+    * (BENCH.md, round 12).
+    *
+    * `flush` makes a sentinel from the last row fed — the row with the
+    * largest `order` key — and feeds it as a fourth batch, so
+    * timer- and watermark-driven operators close their final windows;
+    * the fold filters the sentinel's own emissions. */
+  private[graft] def replay[T](s: SparkSession, feed: Dataset[T],
+      order: Seq[Column])(op: Dataset[T] => Dataset[_],
+      mode: OutputMode = OutputMode.Update(),
+      flush: Option[T => T] = None,
       stateParts: Int = 4,
-      noDataBatches: Option[Boolean] = None)
-      : Array[org.apache.spark.sql.Row] = {
-    import s.implicits._
+      noDataBatches: Option[Boolean] = None): Array[Row] = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.EventStreams
+    implicit val enc: org.apache.spark.sql.Encoder[T] = feed.encoder
     implicit val sqlCtx = s.sqlContext
-    val ev = t(s, dir, "events")
-    // unix_micros == the old driver key floorDiv(getTime,1000)·10⁶ +
-    // nanos/1000 — the exact-micros walk order, sorted by Spark into
-    // THREE range partitions that ARE the micro-batches: partition
-    // boundaries fall on the sort key, so batches stay time-ordered,
-    // and the driver streams one partition at a time (3 fetch jobs —
-    // a 32-partition orderBy + per-partition toLocalIterator paid ~35
-    // scheduler round-trips per run and tripled the harness tax)
-    val key = unix_micros(col("ts"))
-    // The sorted three-partition feed is IDENTICAL for all nine replay
-    // rows, but each used to pay the full scan+sort again (~30% of the
-    // bench total was this harness, VERDICT r11 #6) — memoize the
-    // persisted Dataset per (session, sf dir). Only the sort is shared;
-    // every query still replays its own micro-batches through its own
-    // stream, and the driver still holds at most one partition at a
-    // time (toLocalIterator over the persisted partitions).
-    evictStoppedSessions(replayFeedCache)
-    val sorted = replayFeedCache.computeIfAbsent(
-      (s, dir), _ =>
-        GraftSession.tsTimestamp(ev)
-          .select(col("event_id"), col("ts"), col("user_id"),
-            col("event_type"), col("value"))
-          .repartitionByRange(3, key.asc, col("event_id").asc)
-          .sortWithinPartitions(key.asc, col("event_id").asc)
-          .as[EventStreams.Event]
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ).asInstanceOf[org.apache.spark.sql.Dataset[EventStreams.Event]]
-    val mem = MemoryStream[EventStreams.Event]
+    val mem = MemoryStream[T]
     val sink = "replay_sink_" + java.util.UUID.randomUUID.toString
       .replace("-", "")
     // Size the stream's STATE partitioning to the harness load: the
@@ -123,15 +72,13 @@ object AnalyticQueries {
     // shuffle.partitions, and 32 state-store instances × several
     // stages × 4 micro-batches is pure task overhead for 100k-row
     // replays (the stream-stream q132 pays it hardest). Measured at
-    // sf0.1 across all nine replay rows: 8 → 28.8 s, 4 → 23.9 s,
-    // 2 → 24.3 s — 4 is the AGGREGATE knee; the timer/flush-driven
-    // rows have their own optima, so `stateParts` is per-query
-    // (round-13 per-row sweep in BENCH.md), with an env override for
-    // re-measuring. At real scale the same knob sizes state
-    // partitions to throughput. Restored after the stream so batch
-    // plans are untouched.
-    val parts = sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTS")
-      .map(_.trim.toInt).getOrElse(stateParts)
+    // sf0.1 across the nine event replay rows: 8 → 28.8 s,
+    // 4 → 23.9 s, 2 → 24.3 s — 4 is the AGGREGATE knee; the
+    // timer/flush-driven rows have their own optima, so `stateParts`
+    // is per-query (round-13 per-row sweep in BENCH.md). At real scale
+    // the same knob sizes state partitions to throughput. Restored
+    // after the stream so batch plans are untouched.
+    //
     // No-data micro-batches exist so watermark-driven work (Append
     // emissions, event-time timers, eviction) can run without new
     // input. Every UPDATE-mode replay row here is a plain streaming
@@ -150,103 +97,37 @@ object AnalyticQueries {
     // future Update-mode row using event-time timers must likewise
     // opt back IN consciously (ADVICE r18).
     val ndbKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val ndb = noDataBatches.getOrElse(
-      mode != org.apache.spark.sql.streaming.OutputMode.Update())
+    val ndb = noDataBatches.getOrElse(mode != OutputMode.Update())
     val q = withConf(s, ndbKey -> ndb.toString,
-        "spark.sql.shuffle.partitions" -> parts.toString) {
+        "spark.sql.shuffle.partitions" -> stateParts.toString) {
       op(mem.toDS()).writeStream
         .outputMode(mode)
         .format("memory").queryName(sink).start()
     }
     try {
-      val it = sorted.rdd
-        .mapPartitionsWithIndex((i, rows) => rows.map(e => (i, e)))
+      val it = feed
+        .repartitionByRange(3, order: _*)
+        .sortWithinPartitions(order: _*)
+        .rdd
+        .mapPartitionsWithIndex((i, rs) => rs.map(d => (i, d)))
         .toLocalIterator
-      val batch =
-        new scala.collection.mutable.ArrayBuffer[EventStreams.Event]
-      var cur = -1
-      var lastMicros = Long.MinValue
-      def feed(): Unit = if (batch.nonEmpty) {
-        mem.addData(batch.toSeq: _*); q.processAllAvailable()
-        batch.clear()
-      }
-      while (it.hasNext) {
-        val (p, e) = it.next()
-        if (p != cur) { feed(); cur = p }
-        lastMicros = Math.max(lastMicros,
-          Math.floorDiv(e.ts.getTime, 1000L) * 1000000L +
-            e.ts.getNanos / 1000L)
-        batch += e
-      }
-      feed()
-      if (flush && lastMicros != Long.MinValue) {
-        // a far-future sentinel pushes the watermark past every real
-        // day so timer-driven operators (q148) close their final days;
-        // the fold filters the sentinel's own "__flush" emissions
-        val maxMs = Math.floorDiv(lastMicros, 1000L)
-        mem.addData(EventStreams.Event(-1L,
-          new java.sql.Timestamp(maxMs + 11L * 86400000L), -1L,
-          "__flush", 0.0))
-        q.processAllAvailable()
-      }
-      s.table(sink).collect()
-    } finally {
-      q.stop()
-      s.catalog.dropTempView(sink)
-    }
-  }
-
-  /** Typed replay harness (the [[replayThirds]] shape for arbitrary
-    * row types): feed a Dataset through a MemoryStream in three
-    * `ordCols`-ordered batches and return the raw sink rows. Same
-    * scale posture: Spark range-partitions and sorts, the driver
-    * streams one partition at a time. */
-  private[graft] def replayTypedThirds[T](s: SparkSession, rows: Dataset[T],
-      ordCols: Seq[String], op: Dataset[T] => DataFrame,
-      mode: org.apache.spark.sql.streaming.OutputMode,
-      stateParts: Int = 4,
-      noDataBatches: Option[Boolean] = None)(
-      implicit enc: org.apache.spark.sql.Encoder[T])
-      : Array[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
-    val mem = MemoryStream[T]
-    val sink = "typed_sink_" + java.util.UUID.randomUUID.toString
-      .replace("-", "")
-    val parts = sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTS")
-      .map(_.trim.toInt).getOrElse(stateParts)
-    // Update-mode rows skip no-data micro-batches — same reasoning
-    // and measurement as [[replayThirds]]; `noDataBatches` is the
-    // same explicit per-operator override.
-    val ndbKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val ndb = noDataBatches.getOrElse(
-      mode != org.apache.spark.sql.streaming.OutputMode.Update())
-    val q = withConf(s, ndbKey -> ndb.toString,
-        "spark.sql.shuffle.partitions" -> parts.toString) {
-      op(mem.toDS()).writeStream
-        .outputMode(mode)
-        .format("memory").queryName(sink).start()
-    }
-    try {
-      val sorted = rows
-        .repartitionByRange(3, ordCols.map(col): _*)
-        .sortWithinPartitions(ordCols.map(col): _*)
-      val it = sorted.rdd
-        .mapPartitionsWithIndex((i, rs) => rs.map(d => (i, d)),
-          preservesPartitioning = false)
-        .toLocalIterator: Iterator[(Int, T)]
       val batch = new scala.collection.mutable.ArrayBuffer[T]
+      var last = Option.empty[T]
       var cur = -1
-      def feed(): Unit = if (batch.nonEmpty) {
+      def feedBatch(): Unit = if (batch.nonEmpty) {
         mem.addData(batch.toSeq: _*); q.processAllAvailable()
+        last = Some(batch.last)
         batch.clear()
       }
       while (it.hasNext) {
         val (p, d) = it.next()
-        if (p != cur) { feed(); cur = p }
+        if (p != cur) { feedBatch(); cur = p }
         batch += d
       }
-      feed()
+      feedBatch()
+      for (f <- flush; l <- last) {
+        mem.addData(f(l)); q.processAllAvailable()
+      }
       s.table(sink).collect()
     } finally {
       q.stop()
@@ -254,19 +135,40 @@ object AnalyticQueries {
     }
   }
 
-  /** Docs-corpus replay harness (q175/q182/q187): (doc_id, text) in
-    * three doc_id-ordered batches. */
-  private def replayDocsThirds(s: SparkSession, docs: DataFrame,
-      op: DataFrame => DataFrame,
-      mode: org.apache.spark.sql.streaming.OutputMode =
-        org.apache.spark.sql.streaming.OutputMode.Update())
-      : Array[org.apache.spark.sql.Row] = {
+  /** The event log as a replay feed, in the operators' exact-micros
+    * walk order: a millis-only sort could split a shared millisecond
+    * across a batch boundary against the micros timeline (ADVICE r7).
+    * `unix_micros` equals the operators' own key
+    * floorDiv(getTime, 1000)·10⁶ + nanos/1000. */
+  private def events(s: SparkSession,
+      dir: String): Dataset[EventStreams.Event] = {
     import s.implicits._
-    replayTypedThirds[(Long, String)](s,
+    GraftSession.tsTimestamp(t(s, dir, "events"))
+      .select(col("event_id"), col("ts"), col("user_id"),
+        col("event_type"), col("value"))
+      .as[EventStreams.Event]
+  }
+
+  private val byTime = Seq(unix_micros(col("ts")), col("event_id"))
+
+  /** The event rows' flush sentinel: 11 days past the last event pushes
+    * the watermark past every real day, so timer-driven operators
+    * (q148, q186) close their final windows. */
+  private val flushEvents: EventStreams.Event => EventStreams.Event =
+    last => EventStreams.Event(-1L,
+      new java.sql.Timestamp(last.ts.getTime + 11L * 86400000L), -1L,
+      "__flush", 0.0)
+
+  /** The docs corpus as a replay feed: (doc_id, text) in three
+    * doc_id-ordered batches. */
+  private def replayDocs(s: SparkSession, docs: DataFrame,
+      op: DataFrame => DataFrame,
+      mode: OutputMode = OutputMode.Update()): Array[Row] = {
+    import s.implicits._
+    replay(s,
       docs.select(col("doc_id").cast("long").as("doc_id"), col("text"))
         .as[(Long, String)],
-      Seq("doc_id"),
-      ds => op(ds.toDF("doc_id", "text")), mode)
+      Seq(col("doc_id")))(ds => op(ds.toDF("doc_id", "text")), mode)
   }
 
   /** Streaming LM serve rows: the model trains once in batch on the en
@@ -284,7 +186,7 @@ object AnalyticQueries {
     val model = NgramLm.train(en, "text", order, smoother)
     val vocab = vocabK.map(k =>
       NgramLm.vocabTopK(en, "text", k).localCheckpoint(true))
-    val raw = replayDocsThirds(s, d.select("doc_id", "text"),
+    val raw = replayDocs(s, d.select("doc_id", "text"),
       df => NgramLm.facts(df, "doc_id", "text", model, order, smoother,
         vocab))
     val folded = raw
@@ -309,7 +211,7 @@ object AnalyticQueries {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     import scala.jdk.CollectionConverters._
-    val raw = replayDocsThirds(s, docs,
+    val raw = replayDocs(s, docs,
       df => NgramLm.ngrams(df, "text", order, None))
     val folded = raw
       .map(r => (0 until order).map(r.getString) -> r.getLong(order))
@@ -618,8 +520,8 @@ object AnalyticQueries {
 
     // The streaming path faces the oracle end-to-end (VERDICT r7 Next
     // #7): the event log replays through streaming/EventStreams
-    // .streamingTransitions — a real MemoryStream + flatMapGroupsWith-
-    // State micro-batch pipeline, three time-ordered batches — and the
+    // .streamingTransitions — a real flatMapGroupsWithState
+    // micro-batch pipeline, three time-ordered batches — and the
     // summed per-batch DELTAS must rebuild q110's exact transition
     // matrix against the SAME DuckDB SQL. State carry across batch
     // boundaries (the per-user (type, ts, id) seed) is exactly what a
@@ -627,7 +529,7 @@ object AnalyticQueries {
     // harness feeding the stream, not the operator (which is keyed
     // state, bounded per user); the matrix itself is |types|²=25 rows.
     "q118_streaming_transitions" -> ((s, dir) => {
-      val deltas = replayThirds(s, dir,
+      val deltas = replay(s, events(s, dir), byTime)(
         graft.streaming.EventStreams.streamingTransitions)
       // fold the delta stream to the matrix: exact long sums per
       // (from, to), probability as one IEEE division — q110's device
@@ -654,7 +556,7 @@ object AnalyticQueries {
     // cross a week·1000 boundary). Retention rate derives from the
     // exact summed longs, one IEEE division per row.
     "q119_streaming_retention" -> ((s, dir) => {
-      val deltas = replayThirds(s, dir,
+      val deltas = replay(s, events(s, dir), byTime)(
         graft.streaming.EventStreams.streamingRetention(_,
           bucketWidthMs = 604800000L))
       val matrix = deltas
@@ -681,7 +583,7 @@ object AnalyticQueries {
     // carried from batch 1) would diverge.
     "q121_streaming_funnel" -> ((s, dir) => {
       import s.implicits._
-      val updates = replayThirds(s, dir,
+      val updates = replay(s, events(s, dir), byTime)(
         graft.streaming.EventStreams.streamingFunnel(_,
           Seq("view", "click", "purchase")))
       val NONE = Long.MinValue
@@ -723,7 +625,7 @@ object AnalyticQueries {
     // diverge on every straddling version.
     "q127_streaming_scd2" -> ((s, dir) => {
       import s.implicits._
-      val rows = replayThirds(s, dir,
+      val rows = replay(s, events(s, dir), byTime)(
         graft.streaming.EventStreams.streamingScd2)
       val folded = rows
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
@@ -752,10 +654,12 @@ object AnalyticQueries {
       // completes them; a no-data batch can only advance the watermark
       // and EVICT buffered state, never produce a row (outer joins and
       // timer operators, which do emit on watermark advance, are not
-      // in this plan). ReplayProf r19: the three trailing no-data
-      // batches cost 0.51-0.58 s each, ~38% of the stream wall; rows=0
-      // in every one. Oracle stays green at sf0.01 + sf0.001.
-      val rows = replayThirds(s, dir, ds =>
+      // in this plan). Round 19 measured the three trailing no-data
+      // batches at 0.51-0.58 s each, ~38% of the stream wall, rows=0 in
+      // every one (`graft.tools.ReplayProf q132_streaming_attribution`
+      // prints the per-batch progress). Oracle stays green at sf0.01 +
+      // sf0.001.
+      val rows = replay(s, events(s, dir), byTime)(ds =>
         graft.streaming.EventStreams.streamingAttribution(ds, "click",
           "purchase", maxGapSeconds = 3600),
         org.apache.spark.sql.streaming.OutputMode.Append(),
@@ -784,7 +688,7 @@ object AnalyticQueries {
       val checks = Seq(InRange("value", 0.0, 250.0),
         InSet("event_type", Seq("view", "click", "purchase", "signup")),
         NotNull("value"))
-      val rows = replayThirds(s, dir, ds =>
+      val rows = replay(s, events(s, dir), byTime)(ds =>
         graft.streaming.EventStreams.streamingQuality(ds.toDF(), checks,
           window_ = "1 day"))
       val folded = rows
@@ -1042,7 +946,7 @@ object AnalyticQueries {
       // stateParts=2: per-row knee (round-13 sweep, BENCH.md) — the
       // windowed-histogram state is small and 2 state-store instances
       // beat the 9-row aggregate's knee of 4 here (3.67 vs 3.98 s)
-      val raw = replayThirds(s, dir,
+      val raw = replay(s, events(s, dir), byTime)(
         ds => graft.streaming.EventStreams.streamingValueHistogram(ds)
           .as[(Long, String, Long, Long)],
         stateParts = 2)
@@ -1070,7 +974,7 @@ object AnalyticQueries {
       import s.implicits._
       // stateParts=2: per-row knee (round-13 sweep, BENCH.md) — the
       // per-(day,type) moment state is tiny; 2.70 vs 3.10 s at 4
-      val raw = replayThirds(s, dir,
+      val raw = replay(s, events(s, dir), byTime)(
         ds => graft.streaming.EventStreams.streamingCorrState(ds)
           .as[(Long, String, Long, Long, Long, Long, Long, Long)],
         stateParts = 2)
@@ -1102,13 +1006,13 @@ object AnalyticQueries {
     "q148_streaming_gap_fill" -> ((s, dir) => {
       import s.implicits._
       import graft.streaming.EventStreams
-      val raw = replayThirds(s, dir,
+      val raw = replay(s, events(s, dir), byTime)(
         ds => EventStreams.streamingGapFill(
           ds.filter(e => e.event_type == "__flush" ||
             graft.ext.Curation.hashU32Jvm("gf1",
               e.event_id.toString) < 42949672L)),
         mode = org.apache.spark.sql.streaming.OutputMode.Append(),
-        flush = true)
+        flush = Some(flushEvents))
       val rows = raw
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
           r.getInt(3)))
@@ -1146,7 +1050,7 @@ object AnalyticQueries {
     // DuckDB peel — two fully independent paths, one ground truth.
     "q165_streaming_kcore" -> ((s, dir) => {
       import graft.streaming.EventStreams
-      val births = replayThirds(s, dir,
+      val births = replay(s, events(s, dir), byTime)(
         ds => EventStreams.streamingEdgeBirths(ds, minCount = 15L))
         .map(r => (r.getString(0), r.getString(1)))
       // the exactly-once birth contract is load-bearing for the graph
@@ -1162,7 +1066,7 @@ object AnalyticQueries {
 
     // The ELEVENTH streaming twin: online boilerplate-frequency
     // maintenance (the streaming form of q171's batch delta). The
-    // rebuilt-lines corpus replays through a MemoryStream in three
+    // rebuilt-lines corpus replays through the harness in three
     // doc_id-ordered batches; one streaming aggregation maintains
     // per-line distinct-doc counts (array_distinct per doc = the batch
     // countDistinct, since docs arrive exactly once); Update emissions
@@ -1172,7 +1076,7 @@ object AnalyticQueries {
     // keys on xxhash64: 16-byte state rows, same counts).
     "q175_streaming_boilerplate" -> ((s, dir) => {
       import s.implicits._
-      val rows = replayDocsThirds(s, TextQueries.rebuiltLines(s, dir, 4),
+      val rows = replayDocs(s, TextQueries.rebuiltLines(s, dir, 4),
         df => graft.streaming.EventStreams
           .streamingLineFrequency(df, "text"))
       rows.map(r => r.getString(0) -> r.getLong(1))
@@ -1184,7 +1088,7 @@ object AnalyticQueries {
 
     // The TWELFTH streaming twin: online CDC chunk-frequency
     // maintenance (q175's device at CHUNK granularity — VERDICT r12
-    // Next #6). The raw documents replay through the same MemoryStream
+    // Next #6). The raw documents replay through the same replay
     // harness in three doc_id-ordered batches; the native rolling-hash
     // chunker runs map-side ON THE STREAM, a streaming aggregation
     // maintains (chunk_h, n_docs); MAX-folded Update emissions with a
@@ -1192,7 +1096,7 @@ object AnalyticQueries {
     // q178 batch SQL computes.
     "q182_streaming_cdc_freq" -> ((s, dir) => {
       import s.implicits._
-      val rows = replayDocsThirds(s,
+      val rows = replayDocs(s,
         t(s, dir, "documents").select(col("doc_id"), col("text")),
         df => graft.streaming.EventStreams
           .streamingChunkFrequency(df, "text", w = 8, modulus = 32))
@@ -1214,11 +1118,11 @@ object AnalyticQueries {
     // not data.
     "q186_streaming_sessionize" -> ((s, dir) => {
       import s.implicits._
-      val raw = replayThirds(s, dir,
+      val raw = replay(s, events(s, dir), byTime)(
         ds => graft.streaming.EventStreams.sessionizeByGap(ds,
           gapMs = 28800000L),
         mode = org.apache.spark.sql.streaming.OutputMode.Append(),
-        flush = true)
+        flush = Some(flushEvents))
       raw.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(4), r.getLong(5)))
         .filter(_._1 != -1L)
@@ -1239,7 +1143,7 @@ object AnalyticQueries {
     "q187_streaming_band_index" -> ((s, dir) => {
       import s.implicits._
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val raw = replayDocsThirds(s, docs,
+      val raw = replayDocs(s, docs,
         df => graft.streaming.EventStreams.streamingBandIndex(
           df, "doc_id", "text", shingleN = 3, k = 12, bands = 4)
           .toDF("a_id", "b_id"),
@@ -1262,8 +1166,7 @@ object AnalyticQueries {
       val rows = t(s, dir, "documents")
         .select(col("source"), col("doc_id"), col("n_chars"))
         .as[(String, Long, Long)]
-      val raw = replayTypedThirds[(String, Long, Long)](s, rows,
-        Seq("doc_id"),
+      val raw = replay(s, rows, Seq(col("doc_id")))(
         ds => graft.streaming.EventStreams.streamingGroupQuota(ds, k = 10),
         org.apache.spark.sql.streaming.OutputMode.Append())
       val folded = raw
@@ -1289,7 +1192,7 @@ object AnalyticQueries {
     // streaming dropDuplicates grows forever.
     "q192_streaming_ingest_dedup" -> ((s, dir) => {
       import s.implicits._
-      val raw = replayThirds(s, dir,
+      val raw = replay(s, events(s, dir), byTime)(
         ds => {
           val doubled = ds.toDF()
             .withColumn("__copy", explode(array(lit(0), lit(1))))
@@ -1323,7 +1226,7 @@ object AnalyticQueries {
         .select(col("doc_id"), col("text"))
         .unionByName(d.filter(col("doc_id") < 10)
           .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      val raw = replayDocsThirds(s, feed,
+      val raw = replayDocs(s, feed,
         df => graft.streaming.EventStreams.streamNewRows(
             df, snapshot, md5(col("text")))
           .select("doc_id"),
@@ -1345,7 +1248,7 @@ object AnalyticQueries {
     "q198_streaming_classifier" -> ((s, dir) => {
       import s.implicits._
       val (m, p) = TextQueries.pinnedModel(s)
-      val raw = replayDocsThirds(s,
+      val raw = replayDocs(s,
         t(s, dir, "documents").select("doc_id", "text"),
         df => graft.streaming.EventStreams.streamingClassifierGate(
             df, "doc_id", "text", m, p)
@@ -1369,7 +1272,7 @@ object AnalyticQueries {
     "q199_streaming_dsir" -> ((s, dir) => {
       import s.implicits._
       val (m, p) = TextQueries.pinnedModel(s)
-      val raw = replayDocsThirds(s,
+      val raw = replayDocs(s,
         t(s, dir, "documents").select("doc_id", "text"),
         df => graft.streaming.EventStreams.streamingImportanceGate(
             df, "doc_id", "text", m, p,
@@ -1400,7 +1303,7 @@ object AnalyticQueries {
     "q200_streaming_nb_counts" -> ((s, dir) => {
       import s.implicits._
       val sentinel = graft.streaming.EventStreams.DocSentinel
-      val raw = replayDocsThirds(s,
+      val raw = replayDocs(s,
         t(s, dir, "documents").select("doc_id", "text"),
         df => graft.streaming.EventStreams.streamingTermCounts(
           df.withColumn("label",
@@ -1435,7 +1338,7 @@ object AnalyticQueries {
     "q202_streaming_contamination" -> ((s, dir) => {
       import s.implicits._
       val d = t(s, dir, "documents")
-      val raw = replayDocsThirds(s,
+      val raw = replayDocs(s,
         d.filter(col("doc_id") >= 10).select("doc_id", "text"),
         df => graft.streaming.EventStreams.streamingContamination(
           df, "doc_id", "text",
@@ -1472,8 +1375,7 @@ object AnalyticQueries {
         .select(col("vec_id").cast("long").as("_1"),
           col("embedding").as("_2"))
         .as[(Long, Array[Float])]
-      val raw = replayTypedThirds[(Long, Array[Float])](s, feed,
-        Seq("_1"),
+      val raw = replay(s, feed, Seq(col("_1")))(
         ds => graft.streaming.EventStreams.streamingSq8Serve(
           ds.toDF("vec_id", "embedding"), "vec_id", "embedding",
           codes, "vec_id", "sq8_code", mm),
@@ -1502,8 +1404,7 @@ object AnalyticQueries {
       val feed = e.select(col("vec_id").cast("long").as("_1"),
           col("embedding").as("_2"))
         .as[(Long, Array[Float])]
-      val raw = replayTypedThirds[(Long, Array[Float])](s, feed,
-        Seq("_1"),
+      val raw = replay(s, feed, Seq(col("_1")))(
         ds => graft.ext.Similarity.standardizeApply(
             ds.toDF("vec_id", "embedding"), "embedding", stats)
           .select(col("vec_id"), col("zvec")),
@@ -1527,8 +1428,7 @@ object AnalyticQueries {
         .select(col("doc_id").cast("long").as("_1"),
           col("lang").as("_2"), col("text").as("_3"))
         .as[(Long, String, String)]
-      val raw = replayTypedThirds[(Long, String, String)](s, feed,
-        Seq("_1"),
+      val raw = replay(s, feed, Seq(col("_1")))(
         ds => graft.ext.TextAnalysis.groupedBigramCounts(
           ds.toDF("doc_id", "lang", "text"), "lang", "text"),
         mode = org.apache.spark.sql.streaming.OutputMode.Update())
@@ -1583,8 +1483,7 @@ object AnalyticQueries {
       // 1→6.73, 2→6.57, 4→7.00, 8→7.72 s) — the symmetric-hash join
       // carries 4 state stores per side per partition, so fewer,
       // fuller state partitions win at this replay size
-      val raw = replayTypedThirds[(Long, java.sql.Timestamp, String)](
-        s, feed, Seq("_1"),
+      val raw = replay(s, feed, Seq(col("_1")))(
         ds => graft.streaming.EventStreams.streamStreamMinhashPairs(
           ds.toDF("doc_id", "ts", "text"), "doc_id", "text", "ts",
           docShingles = Some(store)),
@@ -1607,7 +1506,7 @@ object AnalyticQueries {
         when(pmod(col("doc_id"), lit(7)) === 0,
           concat(col("text"), lit(" cafe\u0301\u0007  end")))
           .otherwise(col("text")))
-      val raw = replayDocsThirds(s, planted.select("doc_id", "text"),
+      val raw = replayDocs(s, planted.select("doc_id", "text"),
         df => graft.ext.TextAnalysis.unicodeClean(df, "text")
           .select(col("doc_id"), length(col("text")).as("n_before"),
             length(col("clean_text")).as("n_after"), col("clean_text")),
@@ -1650,8 +1549,7 @@ object AnalyticQueries {
         .select(col("vec_id").cast("long").as("_1"),
           col("embedding").as("_2"))
         .as[(Long, Array[Float])]
-      val raw = replayTypedThirds[(Long, Array[Float])](s, feed,
-        Seq("_1"),
+      val raw = replay(s, feed, Seq(col("_1")))(
         ds => graft.streaming.EventStreams.streamingIvfSq8Serve(
           ds.toDF("vec_id", "embedding"), "vec_id", "embedding",
           coded, "vec_id", "cid", "sq8_code", mm, cents),
@@ -1758,7 +1656,7 @@ object AnalyticQueries {
     // parity. Faces q242's own oracle SQL row-for-row.
     "q243_streaming_line_filter" -> ((s, dir) => {
       import s.implicits._
-      val raw = replayDocsThirds(s,
+      val raw = replayDocs(s,
         TextQueries.rebuiltLines(s, dir, 4),
         df => graft.ext.Curation.lineQualityFilter(
           df, "doc_id", "text", minAlphaE9 = 860000000L),
@@ -1789,8 +1687,7 @@ object AnalyticQueries {
       val feed = d.select(col("doc_id").cast("long").as("_1"),
           col("source").as("_2"), col("text").as("_3"))
         .as[(Long, String, String)]
-      val raw = replayTypedThirds[(Long, String, String)](s, feed,
-        Seq("_1"),
+      val raw = replay(s, feed, Seq(col("_1")))(
         ds => graft.streaming.EventStreams.streamingOovCounts(
           ds.toDF("doc_id", "source", "text"), "source", "text", vocab),
         mode = org.apache.spark.sql.streaming.OutputMode.Update())
@@ -1825,8 +1722,7 @@ object AnalyticQueries {
         .select(col("doc_id").cast("long").as("_1"),
           col("source").as("_2"), col("text").as("_3"))
         .as[(Long, String, String)]
-      val raw = replayTypedThirds[(Long, String, String)](s, feed,
-        Seq("_1"),
+      val raw = replay(s, feed, Seq(col("_1")))(
         ds => graft.ext.TextAnalysis.piiCounts(
           ds.toDF("doc_id", "source", "text"), "source", "text"),
         mode = org.apache.spark.sql.streaming.OutputMode.Update())
@@ -1855,8 +1751,7 @@ object AnalyticQueries {
           col("lang").as("_2"),
           (length(col("source")) > 4).as("_3"))
         .as[(Long, String, Boolean)]
-      val raw = replayTypedThirds[(Long, String, Boolean)](s, feed,
-        Seq("_1"),
+      val raw = replay(s, feed, Seq(col("_1")))(
         ds => graft.streaming.EventStreams.streamingDriftCounts(
           ds.toDF("doc_id", "lang", "is_cur"), "lang", "is_cur"),
         mode = org.apache.spark.sql.streaming.OutputMode.Update())
@@ -1883,8 +1778,7 @@ object AnalyticQueries {
         .select(col("doc_id").cast("long").as("_1"),
           col("lang").as("_2"), col("text").as("_3"))
         .as[(Long, String, String)]
-      val raw = replayTypedThirds[(Long, String, String)](s, feed,
-        Seq("_1"),
+      val raw = replay(s, feed, Seq(col("_1")))(
         ds => graft.streaming.EventStreams.streamingConfusionCounts(
           graft.ext.TextAnalysis.withLangId(
             ds.toDF("doc_id", "lang", "text"), "text",
@@ -1912,8 +1806,7 @@ object AnalyticQueries {
         .select(col("doc_id").cast("long").as("_1"),
           col("lang").as("_2"), col("text").as("_3"))
         .as[(Long, String, String)]
-      val raw = replayTypedThirds[(Long, String, String)](s, feed,
-        Seq("_1"),
+      val raw = replay(s, feed, Seq(col("_1")))(
         ds => graft.streaming.EventStreams.streamingFertilityCounts(
           ds.toDF("doc_id", "lang", "text"), "lang", "text"),
         mode = org.apache.spark.sql.streaming.OutputMode.Update())
@@ -1937,7 +1830,7 @@ object AnalyticQueries {
     // identical. Faces q227's own oracle SQL row-for-row.
     "q228_streaming_fim" -> ((s, dir) => {
       import s.implicits._
-      val raw = replayDocsThirds(s,
+      val raw = replayDocs(s,
         t(s, dir, "documents").select("doc_id", "text"),
         df => graft.ext.Curation.fimTransform(
           df, "doc_id", "text", seed = "fim1", rate = 0.75),
@@ -1956,7 +1849,7 @@ object AnalyticQueries {
     // row-for-row.
     "q253_streaming_span_corrupt" -> ((s, dir) => {
       import s.implicits._
-      val raw = replayDocsThirds(s,
+      val raw = replayDocs(s,
         t(s, dir, "documents").select("doc_id", "text"),
         df => graft.ext.Curation.spanCorrupt(
           df, "doc_id", "text", seed = "sc1", startDenom = 8,
@@ -1984,8 +1877,7 @@ object AnalyticQueries {
         .select(col("doc_id").cast("long").as("_1"),
           col("lang").as("_2"), col("text").as("_3"))
         .as[(Long, String, String)]
-      val raw = replayTypedThirds[(Long, String, String)](s, feed,
-        Seq("_1"),
+      val raw = replay(s, feed, Seq(col("_1")))(
         ds => graft.streaming.EventStreams.streamingFertilityCounts(
             ds.toDF("doc_id", "lang", "text"), "lang", "text")
           .select(col("lang"), col("n_tokens")),
@@ -2017,7 +1909,7 @@ object AnalyticQueries {
       val feed = d.select(col("doc_id").cast("long").as("_1"),
           col("lang").as("_2"))
         .as[(Long, String)]
-      val raw = replayTypedThirds[(Long, String)](s, feed, Seq("_1"),
+      val raw = replay(s, feed, Seq(col("_1")))(
         ds => graft.streaming.EventStreams.streamingMixtureExecute(
           ds.toDF("doc_id", "lang"), "doc_id", "lang", alloc,
           seed = "um1"),
@@ -2040,7 +1932,7 @@ object AnalyticQueries {
       import s.implicits._
       val d = t(s, dir, "documents")
       val evalT = d.filter(col("doc_id") < 10)
-      val raw = replayDocsThirds(s,
+      val raw = replayDocs(s,
         d.filter(col("doc_id") >= 10).select("doc_id", "text"),
         df => graft.streaming.EventStreams.streamingEvalLeakage(
           df, "doc_id", "text",
@@ -2087,8 +1979,7 @@ object AnalyticQueries {
         .select(col("doc_id").cast("long").as("_1"), col("text").as("_2"),
           coalesce(col("lang") === "en", lit(false)).as("_3"))
         .as[(Long, String, Boolean)]
-      val raw = replayTypedThirds[(Long, String, Boolean)](s, feed,
-        Seq("_1"),
+      val raw = replay(s, feed, Seq(col("_1")))(
         ds => graft.streaming.EventStreams.streamingScoreCounts(
           ds.toDF("doc_id", "text", "is_en"), "text", "is_en",
           m, p, label = "en"),
@@ -2111,7 +2002,7 @@ object AnalyticQueries {
     // oracle SQL row-for-row.
     "q214_streaming_repetition" -> ((s, dir) => {
       import s.implicits._
-      val raw = replayDocsThirds(s,
+      val raw = replayDocs(s,
         t(s, dir, "documents").select("doc_id", "text"),
         df => graft.streaming.EventStreams.streamingRepetitionGate(
           df, "doc_id", "text"),

@@ -98,14 +98,17 @@ object VectorQueries {
     * SparkSession OBJECT (reference equality), not its
     * identityHashCode — identity hashes are not unique, and a
     * collision would hand a new session a cached plan bound to a
-    * stopped one (specs spin up fresh sessions). */
+    * stopped one (specs spin up fresh sessions). Entries of stopped
+    * sessions are dropped on every access: their checkpointed blocks
+    * died with the context, and the entry would otherwise pin the
+    * session and its plan graph for the life of the JVM. */
   private val ccArtifactCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
       (DataFrame, DataFrame)]
 
   private def ccDeltaArtifacts(s: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    AnalyticQueries.evictStoppedSessions(ccArtifactCache)
+    ccArtifactCache.keySet.removeIf(_._1.sparkContext.isStopped)
     ccArtifactCache.computeIfAbsent(
       (s, dir), _ => {
         import graft.ext.Dedup

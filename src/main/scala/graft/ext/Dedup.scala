@@ -241,7 +241,12 @@ object Dedup {
     * (no CacheManager entry, so no cross-invocation plan dedup) and its
     * blocks are released by the ContextCleaner when the result is
     * dropped. `materializeSets` is retained for API stability; both
-    * paths now materialize the set table exactly once. */
+    * paths now materialize the set table exactly once.
+    *
+    * Precondition: `idCol` is unique in `df`. The set table groups by
+    * id, so rows sharing an id merge into one shingle set and their
+    * pairs come out wrong. It is not checked here: a check would cost
+    * every call an extra job. */
   def prefixJaccardJoin(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleN: Int = 3,
       materializeSets: Boolean = false): DataFrame = {
@@ -267,15 +272,10 @@ object Dedup {
       .select(col("__id"),
         transform(col("__st"), s => s.getField("__tok")).as("__toks"),
         size(col("__st")).cast("long").as("__n"))
+    // The one eager step: a single localCheckpoint of the set table,
+    // whose blocks the prefix self-join and both verify sides read (see
+    // "Execution shape" above for its lifetime).
     val ordered = orderedLazy.localCheckpoint(true)
-    // The lazy-persist path makes THIS OPERATOR eager overall (the
-    // small pair result is localCheckpoint'ed at the end) so `ordered`
-    // can be unpersisted before returning. Leaving the cache live
-    // would let Spark's CacheManager dedup the identical plan on a
-    // LATER invocation over the same input — a repeat caller (or a
-    // min-of-N bench run) would silently read the previous run's
-    // cached set table instead of computing it. Sharing is scoped to
-    // one invocation; every call computes from its inputs.
     val prefixLen = (col("__n") -
       floor(lit(threshold) * col("__n").cast("double")).cast("long") +
       lit(1L)).cast("int")

@@ -911,79 +911,9 @@ object EventStreams {
       .select("q_id", "n_id", "sqdist")
   }
 
-  /** Streaming minhash near-dup vs a static snapshot — the online form
-    * of [[graft.ext.Dedup.minhashNearDupDelta]]: arriving documents
-    * emit (a_id, b_id, jaccard) pairs against the snapshot corpus,
-    * using the SAVED [[graft.ext.Dedup.minhashBands]] artifact for
-    * candidates. Entirely STATELESS (no state store, no watermark):
-    * the k-minhash signature and band keys compute per row (the
-    * map-only `minhashSignature` formulation — value-identical to the
-    * batch aggregation pass), candidates come from a stream-static
-    * equality join on (band, bkey), and verification is a per-pair
-    * SCALAR jaccard over the two distinct-shingle arrays — no
-    * streaming aggregation anywhere, so the plan is append-mode legal
-    * and per-batch work is ∝ the batch's band collisions.
-    *
-    * Contracts: (1) at-least-once per pair — a pair colliding in
-    * several bands emits once per colliding band; key the sink on
-    * (a_id, b_id) or set-dedupe downstream (the batch twin emits each
-    * pair once). (2) stream×stream pairs are out of scope (two new
-    * docs arriving near in time pair up at the next snapshot
-    * compaction — [[graft.ext.Dedup.minhashNearDupDelta]]'s job).
-    * (3) the DERIVED static frames (the per-key grouped band table and
-    * the snapshot shingle arrays) are `.cache()`d here — static sides
-    * of stream-static joins re-evaluate per micro-batch, and caching
-    * only the caller's input rows would still re-pay a full-snapshot
-    * aggregation + shingle pass per batch; first batch materializes
-    * them, later batches reuse (MEMORY_AND_DISK, so an oversized
-    * snapshot spills rather than OOMs). They live in the CacheManager
-    * until `spark.catalog.clearCache()` or session end. */
-  def streamMinhashNearDup(stream: DataFrame, snapshot: DataFrame,
-      snapshotBands: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, k: Int = 12, bands: Int = 4,
-      threshold: Double = 0.5): DataFrame = {
-    require(k % bands == 0, "k must be divisible by bands")
-    val rows = k / bands
-    val spark = snapshot.sparkSession
-    import graft.functions.TextFunctions.{bandKeys, minhashSignature}
-    def shArr(c: org.apache.spark.sql.Column) =
-      graft.functions.expressions.TextExpressions.wordShingles(
-        spark, c, shingleN)
-    val withBands = stream
-      .select(col(idCol).as("__sid"), shArr(col(textCol)).as("__sharr"))
-      // signature projected BEFORE bandKeys slices it — inline it and
-      // every band re-runs all k minhash scans (the q187 4x lesson)
-      .select(col("__sid"), col("__sharr"),
-        minhashSignature(col("__sharr"), k).as("__sig"))
-      .select(col("__sid"), col("__sharr"),
-        explode(bandKeys(col("__sig"), bands, rows)).as("__b"))
-      .select(col("__sid"), col("__sharr"),
-        col("__b.band").as("band"), col("__b.bkey").as("bkey"))
-    // one static row per band key -> a stream band row matches at most
-    // once; snapshot ids fan back out AFTER the join. Both derived
-    // frames cache (scaladoc point 3): per-batch work must be ∝ the
-    // batch's collisions, not a re-run of the snapshot aggregation
-    val byKey = snapshotBands.groupBy("band", "bkey")
-      .agg(collect_list(col("__id")).as("__oids")).cache()
-    val snapSh = snapshot.select(col(idCol).as("__oid"),
-      shArr(col(textCol)).as("__osharr")).cache()
-    withBands.join(byKey, Seq("band", "bkey"))
-      .select(col("__sid"), col("__sharr"), explode(col("__oids")).as("__oid"))
-      .filter(col("__sid") =!= col("__oid"))
-      .join(snapSh, Seq("__oid"))
-      .withColumn("__inter",
-        size(array_intersect(col("__sharr"), col("__osharr"))))
-      .withColumn("jaccard", col("__inter").cast("double") /
-        (size(col("__sharr")) + size(col("__osharr")) - col("__inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(least(col("__sid"), col("__oid")).as("a_id"),
-        greatest(col("__sid"), col("__oid")).as("b_id"), col("jaccard"))
-  }
-
-  /** STREAM×STREAM near-duplicate pairs — the case
-    * [[streamMinhashNearDup]] documents as out of scope (two new docs
-    * arriving near in time): a WATERMARKED SELF-JOIN of the arriving
-    * stream on its LSH band keys. Each arriving doc computes its
+  /** STREAM×STREAM near-duplicate pairs (two new docs arriving near
+    * in time, which a stream-vs-snapshot join cannot pair): a
+    * WATERMARKED SELF-JOIN of the arriving stream on its LSH band keys. Each arriving doc computes its
     * k-minhash signature and band keys map-only (the SAME
     * minhashSignature/bandKeys columns as the batch operator, so the
     * candidate sets agree); the stream joins ITSELF on (band, bkey)
@@ -1019,8 +949,8 @@ object EventStreams {
     * contract); self-contained, at-least-once per pair — once per
     * colliding band, dedupe downstream. (2) pairs farther apart
     * than `window` in event time do NOT pair here — they are the
-    * snapshot compaction's job ([[streamMinhashNearDup]] /
-    * [[graft.ext.Dedup.minhashNearDupDelta]]). Append-legal. */
+    * snapshot compaction's job
+    * ([[graft.ext.Dedup.minhashNearDupDelta]]). Append-legal. */
   def streamStreamMinhashPairs(docs: DataFrame, idCol: String,
       textCol: String, tsCol: String, shingleN: Int = 3, k: Int = 12,
       bands: Int = 4, threshold: Double = 0.5,
@@ -1158,13 +1088,12 @@ object EventStreams {
 
   final case class BandBucket(ids: Seq[Long])
 
-  /** ONLINE LSH band-index maintenance — the stateful completion of
-    * [[streamMinhashNearDup]] (which is stream-vs-SNAPSHOT and scopes
-    * stream×stream pairs out): band buckets live in keyed state, every
-    * arriving doc emits candidate pairs against its buckets' existing
-    * members AND the batch's other newcomers, then joins the bucket —
-    * so the full pair set (old×new and new×new) appears online, with
-    * no snapshot compaction step. This is the streaming form of the
+  /** ONLINE LSH band-index maintenance — the stateful form of the
+    * stream-vs-snapshot band join: band buckets live in keyed state,
+    * every arriving doc emits candidate pairs against its buckets'
+    * existing members AND the batch's other newcomers, then joins the
+    * bucket — so the full pair set (old×new and new×new) appears
+    * online, with no snapshot compaction step. This is the streaming form of the
     * batch LSH candidate join: per-key state is one id list per
     * OCCUPIED band bucket (the [[graft.ext.Dedup.minhashBands]]
     * artifact itself, keyed), and lifetime emissions per bucket are

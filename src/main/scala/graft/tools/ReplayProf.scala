@@ -1,204 +1,41 @@
 package graft.tools
 
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 
-/** Scratch decomposition of the streaming replay harness floor (r18
-  * optimization round): where does a ~3.6 s streaming twin actually
-  * spend its time? Phases timed: sorted-feed prep (paid once per
-  * session by the memoized harness), stream start (planning the first
-  * IncrementalExecution), each addData+processAllAvailable round, and
-  * stop. Not part of the driver contract. */
+/** Per-micro-batch profile of streaming SparkEntry rows, read from the
+  * replay harness itself: a StreamingQueryListener prints each batch's
+  * input row count and `durationMs` phases while the named rows run.
+  *
+  * Usage: ReplayProf <sfDir> <row>... (e.g. `tools/jrun.sh
+  * graft.tools.ReplayProf /path/to/sf0.1 q265_stream_stream_neardup`) */
 object ReplayProf {
-
-  /** Phase decomposition of q265 (stream-stream near-dup), mirroring
-    * its entry: store checkpoint, feed sort, stream batches. */
-  def profQ265(s: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
-    import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[rp] $label%-32s ${(System.nanoTime - t0) / 1e9}%8.3f s")
-      r
-    }
-    (1 to 2).foreach { round =>
-      println(s"== q265 round $round ==")
-      val d = graft.core.GraftSession.table(s, sfDir, "documents")
-      val store = time("store shingles ckpt") {
-        d.select(col("doc_id").cast("long").as("__id"),
-            graft.functions.expressions.TextExpressions.wordShingles(
-              s, col("text"), 3).as("__sharr"))
-          .localCheckpoint(true)
-      }
-      val feed = d
-        .select(col("doc_id").cast("long").as("_1"),
-          expr("timestampadd(SECOND, CAST(doc_id % 600 AS INT)," +
-            " TIMESTAMP'2026-01-01 00:00:00')").as("_2"),
-          col("text").as("_3"))
-        .as[(Long, java.sql.Timestamp, String)]
-      val sorted = time("feed sort") {
-        val x = feed.repartitionByRange(3, col("_1"))
-          .sortWithinPartitions(col("_1"))
-        x.count(); x
-      }
-      val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = time("stream start") {
-        try graft.streaming.EventStreams.streamStreamMinhashPairs(
-            mem.toDS().toDF("doc_id", "ts", "text"), "doc_id", "text",
-            "ts", docShingles = Some(store))
-          .writeStream.outputMode(org.apache.spark.sql.streaming
-            .OutputMode.Append())
-          .format("memory").queryName(s"rp265_$round").start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      }
-      val parts = sorted.rdd.mapPartitionsWithIndex((i, rows) =>
-        Iterator.single(i -> rows.toArray)).collect().sortBy(_._1)
-      parts.foreach { case (i, batch) =>
-        time(s"batch $i (${batch.length} rows)") {
-          mem.addData(batch.toSeq: _*); q.processAllAvailable()
-        }
-      }
-      q.recentProgress.foreach { p =>
-        println(s"[rp]   batch=${p.batchId} rows=${p.numInputRows} " +
-          s"durations=${new java.util.TreeMap[String, java.lang.Long](p.durationMs)}")
-      }
-      time("stop")(q.stop())
-      s.catalog.dropTempView(s"rp265_$round")
-    }
-  }
-
-  /** Phase decomposition of q132 (streaming attribution — the only
-    * OTHER stream-stream join row): feed sort, stream start, per-batch
-    * cost, and the per-batch duration maps, which separate data
-    * batches from trailing NO-DATA batches (Append mode keeps them;
-    * an inner stream-stream join can emit nothing in one — they are
-    * pure eviction). RP_Q132_PARTS sets the state partition count,
-    * RP_Q132_NDB=false disables no-data batches for the A/B. */
-  def profQ132(s: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
-    import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[rp] $label%-32s ${(System.nanoTime - t0) / 1e9}%8.3f s")
-      r
-    }
-    val ev = graft.core.GraftSession.table(s, sfDir, "events")
-    val key = unix_micros(col("ts"))
-    val parts = sys.env.getOrElse("RP_Q132_PARTS", "4")
-    val ndb = sys.env.getOrElse("RP_Q132_NDB", "true")
-    (1 to 2).foreach { round =>
-      println(s"== q132 round $round (parts=$parts ndb=$ndb) ==")
-      val sorted = time("feed sort+persist") {
-        val d = graft.core.GraftSession.tsTimestamp(ev)
-          .select(col("event_id"), col("ts"), col("user_id"),
-            col("event_type"), col("value"))
-          .repartitionByRange(3, key.asc, col("event_id").asc)
-          .sortWithinPartitions(key.asc, col("event_id").asc)
-          .as[graft.streaming.EventStreams.Event]
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        d.count(); d
-      }
-      val mem = MemoryStream[graft.streaming.EventStreams.Event]
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      val ndbKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val prevNdb = s.conf.get(ndbKey)
-      s.conf.set("spark.sql.shuffle.partitions", parts)
-      s.conf.set(ndbKey, ndb)
-      val q = time("stream start") {
-        try graft.streaming.EventStreams.streamingAttribution(
-            mem.toDS(), "click", "purchase", maxGapSeconds = 3600)
-          .writeStream.outputMode(OutputMode.Append())
-          .format("memory").queryName(s"rp132_$round").start()
-        finally {
-          s.conf.set("spark.sql.shuffle.partitions", prev)
-          s.conf.set(ndbKey, prevNdb)
-        }
-      }
-      val batches = time("collect partitions") {
-        sorted.rdd.mapPartitionsWithIndex((i, rows) =>
-          Iterator.single(i -> rows.toArray)).collect().sortBy(_._1)
-      }
-      batches.foreach { case (i, batch) =>
-        time(s"batch $i (${batch.length} rows)") {
-          mem.addData(batch.toSeq: _*); q.processAllAvailable()
-        }
-      }
-      q.recentProgress.foreach { p =>
-        println(s"[rp]   batch=${p.batchId} rows=${p.numInputRows} " +
-          s"durations=${new java.util.TreeMap[String, java.lang.Long](p.durationMs)}")
-      }
-      time("stop")(q.stop())
-      s.catalog.dropTempView(s"rp132_$round")
-      sorted.unpersist()
-    }
-  }
-
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val s = graft.core.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val sfDir +: rows = args.toSeq
+    val s = graft.core.GraftSession.local()
     s.sparkContext.setLogLevel("WARN")
-    import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = s.sqlContext
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[rp] $label%-32s ${(System.nanoTime - t0) / 1e9}%8.3f s")
-      r
-    }
-    graft.SparkEntry.queries("q01_pricing_summary")(s, sfDir).count()
-    if (sys.env.contains("RP_Q265")) { profQ265(s, sfDir); s.stop(); return }
-    if (sys.env.contains("RP_Q132")) { profQ132(s, sfDir); s.stop(); return }
-    val ev = graft.core.GraftSession.table(s, sfDir, "events")
-    val key = unix_micros(col("ts"))
-    (1 to 2).foreach { round =>
-      println(s"== round $round ==")
-      val sorted = time("feed sort+persist") {
-        val d = graft.core.GraftSession.tsTimestamp(ev)
-          .select(col("event_id"), col("ts"), col("user_id"),
-            col("event_type"), col("value"))
-          .repartitionByRange(3, key.asc, col("event_id").asc)
-          .sortWithinPartitions(key.asc, col("event_id").asc)
-          .as[graft.streaming.EventStreams.Event]
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        d.count(); d
+    val started, ended = new AtomicInteger
+    s.streams.addListener(new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = started.incrementAndGet()
+      def onQueryProgress(e: QueryProgressEvent): Unit = {
+        val p = e.progress
+        println(s"[rp]   batch=${p.batchId} rows=${p.numInputRows} " +
+          s"durationMs=${new java.util.TreeMap(p.durationMs)}")
       }
-      val mem = MemoryStream[graft.streaming.EventStreams.Event]
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "2")
-      val q = time("stream start") {
-        val w = graft.streaming.EventStreams.streamingValueHistogram(
-            mem.toDS()).as[(Long, String, Long, Long)]
-          .writeStream.outputMode(OutputMode.Update())
-          .format("memory").queryName(s"rp_sink_$round")
-        val w2 = sys.env.get("RP_CKPT_DIR").fold(w) { base =>
-          w.option("checkpointLocation",
-            s"$base/rp_${round}_${java.util.UUID.randomUUID}")
-        }
-        try w2.start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      }
-      val parts = time("collect partitions") {
-        sorted.rdd.mapPartitionsWithIndex((i, rows) =>
-          Iterator.single(i -> rows.toArray)).collect().sortBy(_._1)
-      }
-      parts.foreach { case (i, batch) =>
-        time(s"batch $i (${batch.length} rows)") {
-          mem.addData(batch.toSeq: _*); q.processAllAvailable()
-        }
-      }
-      q.recentProgress.foreach { p =>
-        val d = p.durationMs
-        println(s"[rp]   progress batch=${p.batchId} rows=${p.numInputRows} " +
-          s"durations=${new java.util.TreeMap[String, java.lang.Long](d)}")
-      }
-      time("stop")(q.stop())
-      s.catalog.dropTempView(s"rp_sink_$round")
-      sorted.unpersist()
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = ended.incrementAndGet()
+    })
+    rows.foreach { row =>
+      println(s"[rp] == $row ==")
+      val t0 = System.nanoTime()
+      val n = graft.SparkEntry.queries(row)(s, sfDir).collect().length
+      val secs = (System.nanoTime() - t0) / 1e9
+      // listener events arrive asynchronously: wait for this row's
+      // streams to report their end before printing its total
+      val deadline = System.nanoTime() + 10000000000L
+      while (ended.get < started.get && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      println(f"[rp] $row: $n rows out, $secs%.3f s")
     }
     s.stop()
   }

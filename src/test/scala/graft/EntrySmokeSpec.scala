@@ -15,6 +15,35 @@ class EntrySmokeSpec extends SparkSpecBase {
     assert(missing.isEmpty, s"oracleSql without queries: $missing")
   }
 
+  test("q183 plan shape: one array_intersect evaluation and one " +
+      "REPARTITION_BY_NUM shuffle (the verify's optimizer fence holds)") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayIntersect
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM,
+      ShuffleExchangeExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val df = SparkEntry.queries("q183_prefix_jaccard_join")(spark, sf)
+    assert(df.collect().nonEmpty, "fixture must plant near-dup pairs")
+    val root = df.queryExecution.executedPlan
+    val plan = nodes(root)
+    // without the fence, PushPredicateThroughJoin copies the jaccard
+    // filter, array_intersect and all, into the b-side join condition
+    val intersects = plan.flatMap(_.expressions.flatMap(
+      _.collect { case a: ArrayIntersect => a }))
+    assert(intersects.size == 1,
+      s"array_intersect evaluated ${intersects.size}x:\n$root")
+    val pinned = plan.collect {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e
+    }
+    assert(pinned.size == 1, s"REPARTITION_BY_NUM shuffles: $pinned")
+  }
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs at sf0.001") {
       val df = fn(spark, sf)

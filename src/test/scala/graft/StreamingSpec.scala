@@ -26,9 +26,10 @@ class StreamingSpec extends SparkSpecBase {
           e.ts.getNanos / 1000L, e.event_id))
   }
 
-  /** Shared replay harness (the spec-side twin of the entry layer's
-    * replayThirds): feed `batches` through `op`'s micro-batch pipeline
-    * into a memory sink and return the materialized sink table. */
+  /** Spec-side replay of hand-picked batches (the entry rows use
+    * `AnalyticQueries.replay`): feed `batches` through `op`'s
+    * micro-batch pipeline into a memory sink and return the
+    * materialized sink table. */
   private def replayToSink(name: String,
       batches: Seq[Seq[EventStreams.Event]],
       op: org.apache.spark.sql.Dataset[EventStreams.Event] =>
@@ -1233,39 +1234,6 @@ class StreamingSpec extends SparkSpecBase {
     assert(got.toSet == expect) // same docs, same argmax, same decimals
   }
 
-  test("streamMinhashNearDup: streamed pairs == batch delta's cross pairs") {
-    // sf0.001 plants near-dups across the 250 boundary (the q84 shape)
-    val d = GraftSession.spread(GraftSession.table(spark, sf, "documents"))
-      .select("doc_id", "text")
-    val snapshot = d.filter(col("doc_id") < 250).cache()
-    val newDocs = d.filter(col("doc_id") >= 250)
-    val bands = graft.ext.Dedup.minhashBands(
-      snapshot, "doc_id", "text", 3, 12, 4).cache()
-    // ground truth: the batch delta restricted to cross-boundary pairs
-    // (stream×stream is out of the streaming operator's scope — a_id is
-    // the LEAST id, so a snapshot-side id marks a cross pair)
-    val want = graft.ext.Dedup.minhashNearDupDelta(newDocs, snapshot,
-        bands, "doc_id", "text", 3, 12, 4, 0.5)
-      .filter(col("a_id") < 250)
-      .as[(Long, Long, Double)].collect().toSet
-
-    val dir = tmpDir("stream-neardup-in")
-    newDocs.write.mode("overwrite").parquet(dir)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", 1) // force MULTIPLE micro-batches
-      .parquet(dir)
-    // set compare: the streaming contract is at-least-once per pair
-    // (multi-band collisions re-emit); values must match exactly —
-    // the scalar array_intersect jaccard equals the batch count join
-    val got = EventStreams.runToMemory(spark,
-        EventStreams.streamMinhashNearDup(stream, snapshot, bands,
-          "doc_id", "text"), "neardup_stream")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(want.nonEmpty, "fixture must plant cross-boundary near-dups")
-    assert(got == want)
-  }
-
   test("streamingBandIndex: cross-batch AND same-batch pairs, " +
       "deduped candidates == batch LSH candidates; maxBucket is loud") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -1913,18 +1881,33 @@ class StreamingSpec extends SparkSpecBase {
 
   test("replay harness leaves the session conf as it found it, also on failure") {
     val ndb = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val sc = spark.sparkContext
+    // frames other suites cached in this shared session are not this
+    // case's concern: start from an empty cache
+    spark.catalog.clearCache()
     val before = spark.conf.getAll
     assert(!before.contains(ndb))
-    graft.SparkEntry.queries("q132_streaming_attribution")(spark, sf).collect()
-    assert(spark.conf.getAll == before)
+    val rdds = sc.getPersistentRDDs.keySet
+    // one session, three replays: Append with no-data batches off
+    // (q132), the flush sentinel (q186), Update on two state parts
+    // (q152). None may leave a cached feed for the next one to read.
+    Seq("q132_streaming_attribution", "q186_streaming_sessionize",
+        "q152_streaming_percentiles").foreach { row =>
+      graft.SparkEntry.queries(row)(spark, sf).collect()
+      assert(spark.conf.getAll == before, row)
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$row left a cached plan")
+      val added = sc.getPersistentRDDs.keySet -- rdds
+      assert(added.isEmpty, s"$row left persisted RDDs $added")
+    }
     // a failing op, with shuffle.partitions unset as well
     val parts = "spark.sql.shuffle.partitions"
     spark.conf.unset(parts)
     try {
       val unset = spark.conf.getAll
       val err = intercept[IllegalStateException](
-        graft.entry.AnalyticQueries.replayTypedThirds[(Long, String)](spark,
-          Seq((1L, "a")).toDS(), Seq("_1"),
+        graft.entry.AnalyticQueries.replay[(Long, String)](spark,
+          Seq((1L, "a")).toDS(), Seq(col("_1")))(
           _ => throw new IllegalStateException("op failed"),
           org.apache.spark.sql.streaming.OutputMode.Update()))
       assert(err.getMessage == "op failed")

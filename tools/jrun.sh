@@ -3,6 +3,8 @@
 # local profiling and plan capture; the DRIVER contract stays
 # `sbt "runMain graft.Bench"` — this script is tooling only).
 # Usage: tools/jrun.sh <mainClass> [args...]
+# Runs the classes compiled in this script's own checkout (sbt compile).
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 MAIN="$1"; shift
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
@@ -16,5 +18,5 @@ exec java $OPENS $JRUN_EXTRA_OPTS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"
