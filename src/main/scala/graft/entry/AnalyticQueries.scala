@@ -602,8 +602,7 @@ object AnalyticQueries {
     // CDC log — per user, consecutive same-type events collapse into
     // one VERSION row with [valid_from, valid_to) validity and a
     // per-key version number. One user-keyed shuffle, two shared-sort
-    // window passes (lag change-detect, lead stitch); the incremental
-    // scd2Merge path is spec-pinned ≡ this full rebuild (SnapshotSpec).
+    // window passes (lag change-detect, lead stitch).
     "q124_scd2_history" -> ((s, dir) => {
       val ev = t(s, dir, "events")
       graft.ext.Snapshot.scd2FromLog(
@@ -734,8 +733,8 @@ object AnalyticQueries {
     // classified added/changed/unchanged (SCD2 has no deletes, so
     // `removed` is structurally empty here — SnapshotSpec covers it),
     // rolled up per (change_type, old, new) transition. The two diff
-    // instants derive from ONE bounded min/max aggregate (the Layout
-    // device) with pure integer arithmetic mirrored in the oracle.
+    // instants derive from ONE bounded min/max aggregate with pure
+    // integer arithmetic mirrored in the oracle.
     "q128_snapshot_diff" -> ((s, dir) => {
       val evt = t(s, dir, "events")
       val ev = evt.select(col("user_id"), col("event_id"),
@@ -1482,13 +1481,20 @@ object AnalyticQueries {
       // stateParts=2: per-row knee (r18 optimization sweep at n=3:
       // 1→6.73, 2→6.57, 4→7.00, 8→7.72 s) — the symmetric-hash join
       // carries 4 state stores per side per partition, so fewer,
-      // fuller state partitions win at this replay size
+      // fuller state partitions win at this replay size.
+      // noDataBatches = false (q132's reasoning): the plan is ONE
+      // watermarked INNER stream-stream join, then
+      // dropDuplicatesWithinWatermark and stateless stream-static
+      // joins — none of them emits in a no-data batch, which can only
+      // advance the watermark and evict state. Every pair appears in
+      // the data batch where its later doc arrives. ReplayProf at
+      // sf0.01 showed three rows=0 batches, ~30% of trigger time.
       val raw = replay(s, feed, Seq(col("_1")))(
         ds => graft.streaming.EventStreams.streamStreamMinhashPairs(
           ds.toDF("doc_id", "ts", "text"), "doc_id", "text", "ts",
           docShingles = Some(store)),
         mode = org.apache.spark.sql.streaming.OutputMode.Append(),
-        stateParts = 2)
+        stateParts = 2, noDataBatches = Some(false))
       raw.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .toSeq
         .toDF("a_id", "b_id", "jaccard")

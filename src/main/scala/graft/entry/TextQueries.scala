@@ -1223,7 +1223,7 @@ object TextQueries {
         .orderBy("doc_id")
     }))
 
-  // short-doc fallback branch mirrors TextFunctions.shingles: documents
+  // short-doc fallback branch mirrors the native word shingler: documents
   // with < n tokens collapse to one whole-doc shingle (without it, the
   // oracle would yield zero shingles for short docs and diverge)
   private val shingleCte =

@@ -3,8 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Training-data curation passes: deterministic global shuffle, sharded
-  * export, and weighted corpus mixing.
+/** Training-data curation passes: hash sharding, sequence packing,
+  * weighted corpus mixing and sampling.
   *
   * Everything is hash-derandomized (md5 over seed + row id, like
   * [[Sampling]]): the "random" order and the sampling decisions are pure
@@ -24,9 +24,9 @@ object Curation {
   def hashU32(seed: String, id: Column): Column =
     conv(substring(shuffleKey(seed, id), 1, 8), 16, 10).cast("long")
 
-  /** JVM-side twins of [[shuffleKey]]/[[hashU32]]/[[shard]] for state
-    * code (streaming packing) that must agree bit-for-bit with the
-    * column forms. */
+  /** JVM-side twins of [[shuffleKey]]/[[hashU32]] for code outside the
+    * plan (state functions, typed filters) that must agree bit-for-bit
+    * with the column forms. */
   def shuffleKeyJvm(seed: String, id: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s"$seed#$id".getBytes("UTF-8"))
@@ -34,9 +34,6 @@ object Curation {
 
   def hashU32Jvm(seed: String, id: String): Long =
     java.lang.Long.parseLong(shuffleKeyJvm(seed, id).substring(0, 8), 16)
-
-  def shardJvm(seed: String, id: String, nShards: Int): Long =
-    hashU32Jvm(seed, id) % nShards
 
   /** The Efraimidis–Spirakis weighted-sampling key for (seed, id, w):
     * u = (hashU32 + 0.5)/2³² ∈ (0, 1), key = ln(u)/w. Taking the k
@@ -307,38 +304,10 @@ object Curation {
         "cluster", "split")
   }
 
-  /** Deterministic global shuffle: total order by hash rank (id as
-    * tiebreak). Plans as one range-partitioned sort — the scalable way
-    * to permute 100 TB (sample-based range boundaries, no single-point
-    * bottleneck), and every epoch's order is reproducible from the
-    * seed. */
-  def deterministicShuffle(df: DataFrame, idCol: String,
-      seed: String): DataFrame =
-    df.orderBy(shuffleKey(seed, col(idCol)).asc, col(idCol).asc)
-
   /** Shard assignment in [0, nShards) — stable bucketing for sharded
     * training export (each shard is itself hash-shuffled). */
   def shard(seed: String, id: Column, nShards: Int): Column =
     pmod(hashU32(seed, id), lit(nShards.toLong))
-
-  /** Sharded training export: writes `shard=0 .. shard=n-1` parquet
-    * directories, each shard holding its hash-assigned rows in
-    * seed-deterministic shuffle order. One shuffle total: rows
-    * range-partition on the shard value (a range over n distinct ints
-    * maps ~one shard per task — hash-repartition would collide shard
-    * values and leave ~1/e of tasks empty while others write several
-    * shards sequentially) and are sorted (shard, key) within each task;
-    * the leading shard sort also satisfies the dynamic-partition
-    * writer's required ordering, so no second sort is inserted.
-    * Re-running with the same seed reproduces the same per-shard row
-    * content and order. */
-  def exportShards(df: DataFrame, idCol: String, seed: String,
-      nShards: Int, path: String): Unit =
-    df.withColumn("shard", shard(seed, col(idCol), nShards))
-      .repartitionByRange(nShards, col("shard"))
-      .sortWithinPartitions(col("shard"),
-        shuffleKey(seed, col(idCol)), col(idCol))
-      .write.mode("overwrite").partitionBy("shard").parquet(path)
 
   /** Length-grouped micro-batching — the padding-waste minimizer of
     * training dataloaders (the "sortish"/LengthGroupedSampler idea,
@@ -406,21 +375,6 @@ object Curation {
       .withColumn("pack_offset", col("__start") % budget)
       .drop("__skey", "__start")
   }
-
-  /** Packed training export: [[packSequences]] written as the on-disk
-    * artifact a data loader consumes — `shard=N` parquet directories
-    * with rows in (pack, pack_offset) order, so a sequential read of a
-    * shard IS the concatenated token stream. Same one-shuffle plan as
-    * [[exportShards]] (range partition on shard, in-task sort that also
-    * satisfies the dynamic-partition writer); same seed ⇒ byte-identical
-    * re-runs. */
-  def exportPacked(df: DataFrame, idCol: String, tokensCol: String,
-      budget: Long, seed: String, nShards: Int, path: String): Unit =
-    packSequences(df, idCol, tokensCol, budget, seed, nShards)
-      .repartitionByRange(nShards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("pack"), col("pack_offset"),
-        col(idCol))
-      .write.mode("overwrite").partitionBy("shard").parquet(path)
 
   /** Benchmark-contamination check: per corpus document, the fraction of
     * its distinct word n-gram shingles that also occur anywhere in
@@ -563,9 +517,9 @@ object Curation {
     * (which can only thin): a source with weight w is replicated
     * `floor(w)` times plus one more copy with probability `frac(w)`,
     * hash-derandomized per row. Emits a `copy` index (0-based) so
-    * output rows stay distinct and a downstream
-    * [[deterministicShuffle]] by (id, copy) spreads the replicas
-    * through the epoch instead of leaving them adjacent.
+    * output rows stay distinct and a downstream hash shuffle
+    * ([[shuffleKey]]) by (id, copy) spreads the replicas through the
+    * epoch instead of leaving them adjacent.
     *
     * Map-only fanout: `explode(sequence(...))` inside the scan — no
     * shuffle, no join; upweighting a 100 TB source is one pass writing
@@ -728,18 +682,12 @@ object Curation {
     * domains, inherently ≤ thousands. Overflow bound (documented, not
     * checked): `epochCap·Σtokens·|groups|` must stay below 2⁶³ —
     * at 100 TB (~2.5·10¹³ tokens), epochCap 4 and 10⁴ groups is
-    * ~10¹⁸, inside the bound. */
-  def unimaxAllocation(df: DataFrame, groupCol: String,
-      tokensCol: String, epochCap: Long, budget: Long): DataFrame = {
-    require(budget >= 0, s"budget must be >= 0 (got $budget): the " +
-      "even-split tail would silently yield negative alloc_tokens")
-    unimaxCore(df, groupCol, tokensCol, epochCap, lit(budget))
-  }
-
-  /** [[unimaxAllocation]] with the budget expressed as a FRACTION
-    * `budgetNum/budgetDen` of the corpus' own total token count — the
-    * scale-invariant spelling ("train for 1.5 epochs worth of the
-    * corpus under a 2-epoch-per-language cap"). */
+    * ~10¹⁸, inside the bound.
+    *
+    * The budget is the FRACTION `budgetNum/budgetDen` of the corpus'
+    * own total token count — the scale-invariant spelling ("train for
+    * 1.5 epochs worth of the corpus under a 2-epoch-per-language
+    * cap"). */
   def unimaxAllocationOfTotal(df: DataFrame, groupCol: String,
       tokensCol: String, epochCap: Long, budgetNum: Long,
       budgetDen: Long): DataFrame = {
@@ -839,7 +787,7 @@ object Curation {
   }
 
   /** Materialize a mixture allocation into the actual training stream:
-    * given per-group token allocations (the [[unimaxAllocation]]
+    * given per-group token allocations (the [[unimaxAllocationOfTotal]]
     * output shape — `groupCol`, `n_tokens`, `alloc_tokens`), emit one
     * (row, epoch) instance per time each document is seen. Each group
     * runs `alloc div n_tokens` FULL epochs (every doc repeated, epochs
@@ -853,9 +801,9 @@ object Curation {
     * table onto the corpus, then a map-only explode of
     * `sequence(0, e)` + the threshold filter — the corpus never
     * shuffles; the output is bigger than the input by design (it IS
-    * the epoch-expanded stream — feed it to [[deterministicShuffle]]
-    * / [[packSequences]]). The threshold arithmetic widens through
-    * DECIMAL(20,0) so `rem · 2³²` stays exact past int64. */
+    * the epoch-expanded stream — feed it to [[packSequences]]). The
+    * threshold arithmetic widens through DECIMAL(20,0) so `rem · 2³²`
+    * stays exact past int64. */
   def executeMixture(df: DataFrame, groupCol: String, idCol: String,
       alloc: DataFrame, seed: String): DataFrame = {
     val a = alloc.select(col(groupCol),

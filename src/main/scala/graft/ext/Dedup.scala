@@ -332,9 +332,8 @@ object Dedup {
   def simhashNearDup(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame = {
     // one md5 per token (explode), then 60 codegen'd integer vote sums in
-    // a single aggregation — the per-row simhash60() expression
-    // re-evaluates the token-hash array per bit (60× the md5 work);
-    // value-identical otherwise.
+    // a single aggregation — a per-row higher-order expression would
+    // re-evaluate the token-hash array per bit (60× the md5 work).
     val tok = df.select(col(idCol).as("__id"),
       explode(tokens(col(textCol))).as("__tok"))
       .withColumn("__h",
@@ -687,10 +686,8 @@ object Dedup {
     * one exchange pair), `localCheckpoint` truncating the lineage each
     * round, converging in diameter(G) iterations. Dedup graphs are
     * shallow by construction (near-dup clusters are quasi-cliques), so
-    * diameter is small; for graphs with long chains use
-    * [[connectedComponentsStar]] (O(log²) rounds regardless of
-    * diameter). Convergence is checked with an any-change probe per
-    * round; `maxIter` bounds the worst case.
+    * diameter is small. Convergence is checked with an any-change
+    * probe per round; `maxIter` bounds the worst case.
     *
     * Output: (id, comp), one row per vertex that appears in any edge.
     */
@@ -715,9 +712,7 @@ object Dedup {
     connectedComponentsRounds(edges, srcCol, dstCol, maxIter)._1
 
   /** [[connectedComponents]] also returning the PROPAGATION ROUND
-    * count — the scale-diagnostic axis (rounds ≈ graph diameter for
-    * min-propagation, O(log²|V|) for the star variant; ScaleProbe
-    * compares the two on long-chain graphs). */
+    * count — the scale-diagnostic axis (rounds ≈ graph diameter). */
   private[graft] def connectedComponentsRounds(edges: DataFrame,
       srcCol: String, dstCol: String,
       maxIter: Int = 25): (DataFrame, Int) = {
@@ -769,94 +764,8 @@ object Dedup {
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds " +
-          "(graph diameter exceeds maxIter): raise maxIter or use " +
-          "connectedComponentsStar, whose rounds are diameter-independent")
+          "(graph diameter exceeds maxIter): raise maxIter")
     (labels, iter)
-  }
-
-  /** [[connectedComponents]] by alternating star contraction (the
-    * MapReduce CC algorithm of Kiveris et al., "Connected Components
-    * in MapReduce and Beyond"): rounds are O(log²|V|) REGARDLESS of
-    * graph diameter, where min-propagation needs diameter(G) rounds —
-    * the variant to use when components can be long chains (linked
-    * page graphs, reference chains), not the quasi-cliques of near-dup
-    * dedup.
-    *
-    * Each round runs two halves over the current edge set, each one
-    * aggregation + one join, hash-partitioned on the center vertex:
-    *  - large-star: every vertex connects its LARGER neighbors to its
-    *    minimum neighborhood member (keeps components connected,
-    *    strictly reduces large-vertex depth);
-    *  - small-star: every vertex connects its smaller-or-equal
-    *    neighbors (and itself) to that minimum (contracts toward the
-    *    root).
-    * At fixpoint the edges form stars rooted at each component's
-    * minimum id; the root maps to itself in the output. Same contract
-    * as [[connectedComponents]]: (id, comp) for every vertex in any
-    * edge. */
-  def connectedComponentsStar(edges: DataFrame, srcCol: String,
-      dstCol: String, maxIter: Int = 50): DataFrame =
-    connectedComponentsStarRounds(edges, srcCol, dstCol, maxIter)._1
-
-  /** [[connectedComponentsStar]] also returning the contraction ROUND
-    * count (each round = one large-star + one small-star half). */
-  private[graft] def connectedComponentsStarRounds(edges: DataFrame,
-      srcCol: String, dstCol: String,
-      maxIter: Int = 50): (DataFrame, Int) = {
-    def sym(e: DataFrame): DataFrame =
-      e.union(e.select(col("__v"), col("__u")).toDF("__u", "__v"))
-    // m(u) = min(N(u) ∪ {u}) per center vertex
-    def minNbr(s: DataFrame): DataFrame =
-      s.groupBy("__u").agg(min(col("__v")).as("__mn"))
-        .select(col("__u"), least(col("__mn"), col("__u")).as("__m"))
-    def clean(e: DataFrame): DataFrame =
-      e.filter(col("__u") =!= col("__v")).distinct()
-    // large-star: {(v, m(u)) : v ∈ N(u), v > u}
-    def largeStar(e: DataFrame): DataFrame = {
-      val s = sym(e)
-      clean(s.join(minNbr(s), Seq("__u"))
-        .filter(col("__v") > col("__u"))
-        .select(col("__v").as("__u"), col("__m").as("__v")))
-    }
-    // small-star: {(v, m(u)) : v ∈ N(u), v ≤ u} ∪ {(u, m(u))} — the
-    // center MUST attach itself or a two-vertex component disconnects
-    def smallStar(e: DataFrame): DataFrame = {
-      val s = sym(e)
-      val m = minNbr(s)
-      clean(s.join(m, Seq("__u"))
-        .filter(col("__v") <= col("__u"))
-        .select(col("__v").as("__u"), col("__m").as("__v"))
-        .union(m.select(col("__u"), col("__m").as("__v"))))
-    }
-    var (e, eRdd) = materialize(clean(edges
-      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
-      .select(col(srcCol).as("__u"), col(dstCol).as("__v"))))
-    val (vertices, _) = materialize(
-      sym(e).select(col("__u").as("id")).distinct())
-    var iter = 0
-    var converged = e.isEmpty
-    while (!converged && iter < maxIter) {
-      val (next, nextRdd) = materialize(smallStar(largeStar(e)))
-      // fixpoint: the edge set stopped changing (star edges map to
-      // themselves through both halves)
-      converged = next.count() == e.count() && next.except(e).isEmpty
-      eRdd.unpersist() // next is materialized; drop the old blocks
-      e = next
-      eRdd = nextRdd
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponentsStar did not converge in $maxIter rounds " +
-          "— raise maxIter (rounds are O(log^2 |V|), so this points at " +
-          "a pathological or enormous graph)")
-    // stars: every remaining edge points v -> root; roots self-map
-    (vertices
-      .join(sym(e).groupBy(col("__u").as("id"))
-        .agg(min(col("__v")).as("__nbr")), Seq("id"), "left")
-      .select(col("id"),
-        least(col("id"), coalesce(col("__nbr"), col("id"))).as("comp")),
-      iter)
   }
 
   /** Incremental connected components: fold a NEW edge batch into an
@@ -881,7 +790,7 @@ object Dedup {
     *
     * Precondition: `prev` is min-labeled and closed (every member of a
     * component maps to the same comp = the component's min id) — i.e. a
-    * [[connectedComponents]]/[[connectedComponentsStar]] output, or a
+    * [[connectedComponents]] output, or a
     * previous output of this method. Output: the same contract, over
     * old ∪ delta vertices; delta == full recompute is spec-asserted
     * and oracle-checked (q139 against q73's ground truth).
@@ -1143,11 +1052,7 @@ object Dedup {
     * merge of the two (line_hash, n_docs) tables — work ∝ batch lines
     * + distinct corpus lines, never ∝ historical corpus text. Returns
     * the rewritten batch; call [[mergedLineFrequency]] for the updated
-    * snapshot to persist, and [[newlyFrequentLines]] for the hashes
-    * that crossed the threshold THIS batch — the retro-invalidation
-    * set (a later map-only filter pass over the history finds the old
-    * docs that now need rewriting; that pass scans, it never
-    * shuffles). */
+    * snapshot to persist. */
   def removeBoilerplateLinesDelta(newDf: DataFrame, snapshot: DataFrame,
       idCol: String, textCol: String, maxDocFreq: Int,
       sep: String = "\\R", maxFrequentLines: Int = 4 << 20): DataFrame = {
@@ -1166,43 +1071,6 @@ object Dedup {
     snapshot.unionByName(delta)
       .groupBy("line_hash")
       .agg(sum(col("n_docs")).as("n_docs"))
-
-  /** Hashes that crossed the frequency threshold in this batch — lines
-    * that were NOT boilerplate when the history was rewritten but are
-    * now. Both inputs are the bounded artifact; both frequent sets are
-    * heavy-hitter-bounded, so the anti join broadcasts. */
-  def newlyFrequentLines(snapshot: DataFrame, merged: DataFrame,
-      maxDocFreq: Int): DataFrame =
-    merged.where(col("n_docs") > maxDocFreq).select("line_hash")
-      .join(broadcast(snapshot.where(col("n_docs") > maxDocFreq)
-          .select("line_hash")),
-        Seq("line_hash"), "left_anti")
-
-  /** The retro-invalidation APPLY: restrict the history to docs
-    * containing at least one of the given line hashes (the
-    * [[newlyFrequentLines]] output) — the docs whose stored rewrite is
-    * now stale. MAP-ONLY: the hash set is bounded (threshold
-    * crossings ⊆ the heavy-hitter-bounded frequent set), collects, and
-    * each doc tests its own line array with `exists` — the history
-    * scans once and never shuffles. Feed the result to
-    * [[removeBoilerplateLines]]-style rewrite with the merged frequent
-    * set to heal it. */
-  def docsContainingLines(df: DataFrame, textCol: String,
-      lineHashes: DataFrame, sep: String = "\\R",
-      maxFrequentLines: Int = 4 << 20): DataFrame = {
-    val hs = lineHashes.limit(maxFrequentLines + 1).collect()
-      .map(_.getLong(0))
-    require(hs.length <= maxFrequentLines,
-      s"more than $maxFrequentLines invalidation hashes — rewrite the " +
-        "history in full instead of retro-patching")
-    if (hs.isEmpty) df.limit(0)
-    else {
-      val setLit = typedlit(hs)
-      df.where(exists(lineUnits(textCol, sep),
-        l => graft.functions.expressions.SketchExpressions
-          .inLongSet(df.sparkSession, xxhash64(l), setLit)))
-    }
-  }
 
   /** Corpus-wide exact line dedup, keep-first (the CCNet paragraph-
     * dedup pass proper): every distinct line keeps exactly its FIRST

@@ -1,240 +1,14 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
-
-/** Multimodal (image/audio/video) column plumbing.
-  *
-  * Media payloads are opaque `binary` columns with typed metadata — the
-  * parquet-native representation that scales: bytes stay columnar,
-  * metadata prunes, and decode happens inside executor partitions.
-  *
-  * Decode is four-tier: payloads the in-JDK `javax.imageio` codecs
-  * recognize (PNG/JPEG/GIF/BMP) decode for REAL — true pixel
-  * dimensions plus an 8-bin luminance histogram feature; payloads the
-  * in-JDK `javax.sound.sampled` providers recognize (WAV/AIFF/AU)
-  * decode for real too — true sample rate/channels/duration plus an
-  * 8-bin RMS envelope; video CONTAINERS parse for real (MP4/ISO BMFF
-  * and RIFF AVI headers are public specs — true dimensions, duration,
-  * track count), while video FRAME decode needs a codec the JDK does
-  * not ship and stays stubbed ([[sampleFrames]]); anything else falls
-  * back to a deterministic fake so the pipeline shape stays testable
-  * end-to-end. The Spark-side contract is real throughout: schema,
-  * batch iteration shape (`mapPartitions`, the Scala analogue of
-  * `mapInPandas` batches), partition sizing, and the metadata/feature
-  * schema are exactly what further codecs plug into.
+/** Perceptual hashes for media near-dup detection, on decoded
+  * features: the DCT pHash of a 32×32 luminance grid and the
+  * energy-delta fingerprint of a 64-bin audio envelope. Both are
+  * integer-exact, so the SQL oracles replay them bit for bit. graft
+  * does not decode media payloads: the rows (q98, q103) hash grids and
+  * envelopes synthesized from md5 bytes ([[syntheticGrid]],
+  * [[syntheticEnvelope]]), which both engines compute identically.
   */
 object Multimodal {
-
-  /** Decode ceiling (~64 MP ≈ 256 MB RGBA raster): payloads declaring
-    * larger dimensions degrade to the deterministic fake. */
-  private val MaxDecodePixels = 64L * 1024 * 1024
-
-  final case class MediaRow(id: Long, modality: String, payload: Array[Byte])
-
-  /** One feature row per payload. Modality decides which fields are
-    * live: images fill (width, height), audio fills (sample_rate,
-    * n_channels, duration_ms), video containers fill (width, height,
-    * duration_ms) plus n_channels = declared track/stream count; the
-    * rest stays 0. `feature` is the 8-bin modality feature — luminance
-    * histogram for images, RMS envelope (one bin per temporal eighth)
-    * for audio, container byte-value histogram for video. */
-  final case class MediaFeatures(id: Long, modality: String, n_bytes: Int,
-      checksum: String, width: Int, height: Int, sample_rate: Int,
-      n_channels: Int, duration_ms: Long, feature: Array[Float])
-
-  /** Wrap a text/binary source column as a media payload with metadata. */
-  def asMedia(df: DataFrame, idCol: String, payloadCol: String,
-      modality: String): DataFrame =
-    df.select(col(idCol).cast("long").as("id"), lit(modality).as("modality"),
-      col(payloadCol).cast("binary").as("payload"))
-      .withColumn("n_bytes", length(col("payload")))
-      .withColumn("checksum", md5(col("payload")))
-
-  /** Decode one payload, trying each real tier in turn: `javax.imageio`
-    * (PNG/JPEG/GIF/BMP), `javax.sound.sampled` (WAV/AIFF/AU), then the
-    * video container header parse (MP4/AVI). Payloads no tier
-    * recognizes fall back to a deterministic fake so the pipeline shape
-    * stays testable. */
-  private[ext] def decodeOne(r: MediaRow): MediaFeatures = {
-    val bytes = r.payload
-    val n = bytes.length
-    val checksum = java.security.MessageDigest.getInstance("MD5")
-      .digest(bytes).map("%02x".format(_)).mkString
-    decodeImage(bytes) match {
-      case Some((w, h, feat)) =>
-        return MediaFeatures(r.id, r.modality, n, checksum, w, h, 0, 0, 0L, feat)
-      case None =>
-    }
-    decodeAudio(bytes) match {
-      case Some((rate, chans, durMs, feat)) =>
-        return MediaFeatures(r.id, r.modality, n, checksum, 0, 0,
-          rate, chans, durMs, feat)
-      case None =>
-    }
-    decodeVideoMeta(bytes) match {
-      case Some((w, h, tracks, durMs, feat)) =>
-        return MediaFeatures(r.id, r.modality, n, checksum, w, h,
-          0, tracks, durMs, feat)
-      case None =>
-    }
-    // deterministic fake, stable across re-runs for testability
-    val fw = 1 + (math.abs(bytes.headOption.getOrElse(0: Byte).toInt) % 64)
-    val fh = 1 + (n % 64)
-    val feat = Array.tabulate(8)(i =>
-      (if (n == 0) 0f else bytes(i % n).toFloat / 128f))
-    MediaFeatures(r.id, r.modality, n, checksum, fw, fh, 0, 0, 0L, feat)
-  }
-
-  /** Shared `javax.imageio` scaffolding for [[decodeImage]] and
-    * [[phash64]]: magic-sniff reader lookup, the decompression-bomb
-    * header gate, and the dispose/close/NonFatal degradation contract
-    * live HERE once — a fix to the decode contract must not need
-    * applying in two places. */
-  private def withDecodedImage[T](bytes: Array[Byte])(
-      f: java.awt.image.BufferedImage => T): Option[T] = {
-    if (bytes.length < 8) return None
-    val iis = javax.imageio.ImageIO.createImageInputStream(
-      new java.io.ByteArrayInputStream(bytes))
-    // documented no-SPI case returns null; the finally's close() would
-    // then NPE and fail the partition instead of degrading to the fake
-    if (iis == null) return None
-    try {
-      val readers = javax.imageio.ImageIO.getImageReaders(iis)
-      if (!readers.hasNext) return None
-      val reader = readers.next()
-      try {
-        reader.setInput(iis)
-        // header-declared dimensions gate the decode: a few-KB
-        // decompression-bomb PNG declaring 50000x50000 would allocate a
-        // ~10 GB raster in read(0) and OOM the executor (an Error, not
-        // caught by NonFatal) instead of degrading to the fake
-        val (dw, dh) = (reader.getWidth(0), reader.getHeight(0))
-        if (dw.toLong * dh > MaxDecodePixels) return None
-        Some(f(reader.read(0)))
-      } finally reader.dispose()
-    } catch {
-      case scala.util.control.NonFatal(_) => None
-    } finally iis.close()
-  }
-
-  /** In-JDK image decode (PNG/JPEG/GIF/BMP/WBMP): true dimensions plus
-    * an 8-bin normalized luminance histogram sampled on a ≤64×64 grid —
-    * bounded work per image regardless of resolution. Returns None when
-    * no installed reader claims the bytes (magic-sniff via
-    * `getImageReaders`, cheap for non-image payloads) or the decode
-    * fails, so corrupt files degrade to the fake instead of failing the
-    * partition. */
-  private[graft] def decodeImage(bytes: Array[Byte]): Option[(Int, Int, Array[Float])] =
-    withDecodedImage(bytes) { img =>
-      val w = img.getWidth
-      val h = img.getHeight
-      // ceil division: floor (w/64) gives up to 127 samples per axis
-      // for 65..127-px dimensions — ~4x the documented 64x64 bound
-      val stepX = math.max(1, (w + 63) / 64)
-      val stepY = math.max(1, (h + 63) / 64)
-      val hist = new Array[Float](8)
-      var total = 0
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val rgb = img.getRGB(x, y)
-          val lum = (((rgb >> 16) & 0xff) * 299 +
-            ((rgb >> 8) & 0xff) * 587 + (rgb & 0xff) * 114) / 1000
-          hist(math.min(7, lum >> 5)) += 1f
-          total += 1
-          x += stepX
-        }
-        y += stepY
-      }
-      if (total > 0) { var i = 0; while (i < 8) { hist(i) /= total; i += 1 } }
-      (w, h, hist)
-    }
-
-  /** Decode ceiling for audio PCM payloads (~200 MB of decoded PCM):
-    * like MaxDecodePixels, bounds what one row may allocate. */
-  private val MaxDecodeAudioBytes = 200L * 1024 * 1024
-
-  /** Shared `javax.sound.sampled` scaffolding for [[decodeAudio]] and
-    * [[audioFingerprint64]] (the audio twin of [[withDecodedImage]]):
-    * magic-sniff stream open, conversion to 16-bit little-endian signed
-    * PCM (U-law/A-law and other JDK-convertible encodings included),
-    * the declared-frame-count allocation gate, and the close/NonFatal
-    * degradation contract. `f` receives the converted format and the
-    * raw PCM bytes. */
-  private def withPcm16[T](bytes: Array[Byte])(
-      f: (javax.sound.sampled.AudioFormat, Array[Byte]) => T): Option[T] = {
-    if (bytes.length < 12) return None
-    try {
-      val raw = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      try {
-        val fmt0 = raw.getFormat
-        val pcm = new javax.sound.sampled.AudioFormat(
-          javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED,
-          fmt0.getSampleRate, 16, fmt0.getChannels,
-          2 * fmt0.getChannels, fmt0.getSampleRate, false)
-        val in =
-          if (fmt0.getEncoding ==
-              javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-              fmt0.getSampleSizeInBits == 16 && !fmt0.isBigEndian) raw
-          else javax.sound.sampled.AudioSystem.getAudioInputStream(pcm, raw)
-        val fmt = in.getFormat
-        // a declared frame count gates allocation like the image-bomb
-        // check; AU streams may declare NOT_SPECIFIED (-1) and are then
-        // bounded by the read cap below
-        val declared = in.getFrameLength
-        if (declared > 0 && declared * fmt.getFrameSize > MaxDecodeAudioBytes)
-          return None
-        val pcmBytes = readAtMost(in, MaxDecodeAudioBytes)
-        if (pcmBytes.length / fmt.getFrameSize == 0) return None
-        Some(f(fmt, pcmBytes))
-      } finally raw.close()
-    } catch {
-      case _: javax.sound.sampled.UnsupportedAudioFileException => None
-      case scala.util.control.NonFatal(_) => None
-    }
-  }
-
-  /** `nBins`-bin RMS amplitude envelope (0..1 per bin, channels mixed)
-    * of 16-bit little-endian signed PCM — bin i covers the i-th
-    * temporal `1/nBins` of the clip. */
-  private def rmsEnvelope(fmt: javax.sound.sampled.AudioFormat,
-      pcmBytes: Array[Byte], nBins: Int): Array[Double] = {
-    val nFrames = pcmBytes.length / fmt.getFrameSize
-    val chans = fmt.getChannels
-    val nSamples = nFrames * chans
-    val sumSq = new Array[Double](nBins)
-    val cnt = new Array[Long](nBins)
-    var i = 0
-    while (i < nSamples) {
-      val lo = pcmBytes(2 * i) & 0xff
-      val hi = pcmBytes(2 * i + 1).toInt
-      val s = ((hi << 8) | lo) / 32768.0
-      val bin = math.min(nBins - 1, ((i / chans) * nBins.toLong / nFrames).toInt)
-      sumSq(bin) += s * s
-      cnt(bin) += 1
-      i += 1
-    }
-    Array.tabulate(nBins)(b =>
-      if (cnt(b) == 0) 0.0 else math.sqrt(sumSq(b) / cnt(b)))
-  }
-
-  /** In-JDK audio decode (`javax.sound.sampled`: WAV/AIFF/AU): true
-    * (sample_rate_hz, n_channels, duration_ms) plus an 8-bin RMS
-    * envelope. Returns None when no installed provider claims the bytes
-    * (the magic sniff throws UnsupportedAudioFileException, cheap for
-    * non-audio payloads) or the decode fails, so corrupt files degrade
-    * to the fake instead of failing the partition. */
-  private[graft] def decodeAudio(
-      bytes: Array[Byte]): Option[(Int, Int, Long, Array[Float])] =
-    withPcm16(bytes) { (fmt, pcmBytes) =>
-      val nFrames = pcmBytes.length / fmt.getFrameSize
-      val feat = rmsEnvelope(fmt, pcmBytes, 8).map(_.toFloat)
-      val durMs = math.round(nFrames * 1000.0 / fmt.getSampleRate)
-      (math.round(fmt.getSampleRate), fmt.getChannels, durMs, feat)
-    }
 
   /** 63-bit energy-delta acoustic fingerprint of a 64-value envelope:
     * bit i is set iff `env(i+1) > env(i)` — the sign of the envelope
@@ -251,199 +25,6 @@ object Multimodal {
     var i = 0
     while (i < 63) { if (env(i + 1) > env(i)) bits |= 1L << i; i += 1 }
     bits
-  }
-
-  /** Real-audio fingerprint: decode via `javax.sound.sampled`, 64-bin
-    * RMS envelope, [[fingerprintFromEnvelope]]. None on undecodable
-    * bytes — same degradation contract as [[decodeAudio]]. */
-  def audioFingerprint64(bytes: Array[Byte]): Option[Long] =
-    withPcm16(bytes) { (fmt, pcmBytes) =>
-      fingerprintFromEnvelope(rmsEnvelope(fmt, pcmBytes, 64))
-    }
-
-  /** Per-partition audio-fingerprint column over a media frame:
-    * (id, afp); rows no audio provider claims are dropped — the audio
-    * twin of [[withPhash]]. */
-  def withAudioFingerprint(media: DataFrame): DataFrame = {
-    implicit val encIn = Encoders.product[MediaRow]
-    implicit val enc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    media.select("id", "modality", "payload").as[MediaRow]
-      .mapPartitions(_.flatMap(r =>
-        audioFingerprint64(r.payload).map(h => (r.id, h))))
-      .toDF("id", "afp")
-  }
-
-  // ---- video container metadata (pure header parse — no JDK video
-  // codec exists, but the CONTAINER formats are public specs: ISO BMFF
-  // / ISO 14496-12 for MP4, Microsoft RIFF AVI. Dimensions, duration
-  // and track count come from the headers; frame DECODE stays stubbed.)
-
-  private def u32be(b: Array[Byte], p: Int): Long =
-    ((b(p) & 0xffL) << 24) | ((b(p + 1) & 0xffL) << 16) |
-      ((b(p + 2) & 0xffL) << 8) | (b(p + 3) & 0xffL)
-
-  private def u32le(b: Array[Byte], p: Int): Long =
-    ((b(p + 3) & 0xffL) << 24) | ((b(p + 2) & 0xffL) << 16) |
-      ((b(p + 1) & 0xffL) << 8) | (b(p) & 0xffL)
-
-  private def fourcc(b: Array[Byte], p: Int): String =
-    new String(b, p, 4, java.nio.charset.StandardCharsets.US_ASCII)
-
-  /** ISO-BMFF box walk over [start, end): (type, payloadStart,
-    * payloadEnd) triples. Defensive: bounded box count, 64-bit and
-    * to-end sizes handled, malformed sizes terminate the walk. */
-  private def mp4Boxes(b: Array[Byte], start: Int,
-      end: Int): Seq[(String, Int, Int)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int)]
-    var p = start
-    var guard = 0
-    while (p + 8 <= end && guard < 128) {
-      val size32 = u32be(b, p)
-      val typ = fourcc(b, p + 4)
-      val (payload, boxEnd): (Int, Long) =
-        if (size32 == 0L) (p + 8, end.toLong) // box extends to end
-        else if (size32 == 1L) { // 64-bit largesize
-          if (p + 16 > end) return out.toSeq
-          val sz = (u32be(b, p + 8) << 32) | u32be(b, p + 12)
-          (p + 16, p + sz)
-        } else (p + 8, p + size32)
-      if (size32 != 0L && size32 != 1L && size32 < 8L) return out.toSeq
-      if (boxEnd > end || boxEnd < payload) return out.toSeq
-      out += ((typ, payload, boxEnd.toInt))
-      p = boxEnd.toInt
-      guard += 1
-    }
-    out.toSeq
-  }
-
-  /** MP4/ISO-BMFF: (width, height, n_tracks, duration_ms) from
-    * moov/mvhd + moov/trak/tkhd. Width/height are the maxima over
-    * tracks (video tracks declare nonzero 16.16 fixed-point dims;
-    * audio-only tracks declare 0×0). */
-  private def decodeMp4(bytes: Array[Byte]): Option[(Int, Int, Int, Long)] = {
-    if (bytes.length < 16) return None
-    val top = mp4Boxes(bytes, 0, bytes.length)
-    // magic gate: a real BMFF file leads with ftyp (or at least has moov)
-    if (!top.exists(t => t._1 == "ftyp" || t._1 == "moov")) return None
-    val moov = top.find(_._1 == "moov").getOrElse(return None)
-    val kids = mp4Boxes(bytes, moov._2, moov._3)
-    var timescale = 0L; var duration = 0L
-    kids.find(_._1 == "mvhd").foreach { case (_, p, e) =>
-      if (p + 4 <= e) {
-        val v = bytes(p) & 0xff
-        if (v == 1 && p + 32 <= e) { // duration reads bytes p+24..p+31
-          timescale = u32be(bytes, p + 20)
-          duration = (u32be(bytes, p + 24) << 32) | u32be(bytes, p + 28)
-        } else if (v == 0 && p + 20 <= e) {
-          timescale = u32be(bytes, p + 12)
-          duration = u32be(bytes, p + 16)
-        }
-      }
-    }
-    var w = 0; var h = 0; var tracks = 0
-    kids.filter(_._1 == "trak").foreach { case (_, tp, te) =>
-      tracks += 1
-      mp4Boxes(bytes, tp, te).find(_._1 == "tkhd").foreach { case (_, p, e) =>
-        val off = if ((bytes(p) & 0xff) == 1) 88 else 76
-        if (p + off + 8 <= e) {
-          w = math.max(w, (u32be(bytes, p + off) >> 16).toInt)
-          h = math.max(h, (u32be(bytes, p + off + 4) >> 16).toInt)
-        }
-      }
-    }
-    if (tracks == 0 && timescale == 0L) return None
-    val durMs = if (timescale > 0) duration * 1000L / timescale else 0L
-    Some((w, h, tracks, durMs))
-  }
-
-  /** RIFF AVI: (width, height, n_streams, duration_ms) from the avih
-    * main header inside LIST hdrl. All fields little-endian. */
-  private def decodeAvi(bytes: Array[Byte]): Option[(Int, Int, Int, Long)] = {
-    if (bytes.length < 24) return None
-    if (fourcc(bytes, 0) != "RIFF" || fourcc(bytes, 8) != "AVI ") return None
-    var p = 12
-    var guard = 0
-    while (p + 8 <= bytes.length && guard < 64) {
-      val id = fourcc(bytes, p)
-      val sz = u32le(bytes, p + 4)
-      if (sz < 0 || p + 8 + sz > bytes.length) return None
-      if (id == "LIST" && sz >= 4 && fourcc(bytes, p + 8) == "hdrl") {
-        // scan hdrl children for avih
-        var q = p + 12
-        val end = p + 8 + sz.toInt
-        var g2 = 0
-        while (q + 8 <= end && g2 < 64) {
-          val cid = fourcc(bytes, q)
-          val csz = u32le(bytes, q + 4).toInt
-          if (csz < 0 || q + 8 + csz > end) return None
-          if (cid == "avih" && csz >= 40) {
-            val d = q + 8
-            val usPerFrame = u32le(bytes, d)
-            val totalFrames = u32le(bytes, d + 16)
-            val streams = u32le(bytes, d + 24).toInt
-            val w = u32le(bytes, d + 32).toInt
-            val h = u32le(bytes, d + 36).toInt
-            // both fields are untrusted u32s; their product can pass
-            // Long.MaxValue (~1.8e19 > 9.2e18) and wrap negative
-            val durMs = BigInt(usPerFrame) * BigInt(totalFrames) / 1000
-            if (!durMs.isValidLong) return None
-            return Some((w, h, streams, durMs.toLong))
-          }
-          q += 8 + csz + (csz & 1) // RIFF chunks pad to even
-          g2 += 1
-        }
-        return None
-      }
-      p += 8 + sz.toInt + (sz.toInt & 1)
-      guard += 1
-    }
-    None
-  }
-
-  /** Video-container metadata decode: MP4 then AVI; plus an 8-bin
-    * byte-value histogram over (a bounded sample of) the payload as the
-    * container feature. Frame decode needs a codec the JDK doesn't
-    * ship — [[sampleFrames]] remains the documented stub for that. */
-  private[graft] def decodeVideoMeta(
-      bytes: Array[Byte]): Option[(Int, Int, Int, Long, Array[Float])] =
-    try decodeMp4(bytes).orElse(decodeAvi(bytes)).map {
-      case (w, h, tracks, durMs) =>
-        val hist = new Array[Float](8)
-        val step = math.max(1, bytes.length / 65536)
-        var i = 0; var total = 0
-        while (i < bytes.length) {
-          hist((bytes(i) >> 5) & 7) += 1f
-          total += 1
-          i += step
-        }
-        if (total > 0) { var j = 0; while (j < 8) { hist(j) /= total; j += 1 } }
-        (w, h, tracks, durMs, hist)
-    } catch {
-      case scala.util.control.NonFatal(_) => None // malformed → fake
-    }
-
-  /** Read up to `cap` bytes from the stream (bounded allocation). */
-  private def readAtMost(in: java.io.InputStream, cap: Long): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](64 * 1024)
-    var total = 0L
-    var n = in.read(buf)
-    while (n >= 0 && total < cap) {
-      out.write(buf, 0, math.min(n.toLong, cap - total).toInt)
-      total += n
-      n = in.read(buf)
-    }
-    out.toByteArray
-  }
-
-  /** Partition-batched decode/feature-extract — executors iterate rows in
-    * partition batches exactly as a vectorized codec UDF would; no
-    * collect, no driver involvement. */
-  def decodeFeatures(media: DataFrame): Dataset[MediaFeatures] = {
-    implicit val enc = Encoders.product[MediaFeatures]
-    implicit val encIn = Encoders.product[MediaRow]
-    media.select("id", "modality", "payload").as[MediaRow]
-      .mapPartitions(_.map(decodeOne))
   }
 
   // ---- DCT perceptual hash (pHash) ----
@@ -515,8 +96,7 @@ object Multimodal {
     * oracle parity device (the pinned-centroid family): image DECODE is
     * not SQL-expressible, so the hash-checked query synthesizes the
     * post-decode grid from md5 bytes both engines can compute
-    * identically, and the real-decode path ([[phash64]]) is certified
-    * by the PNG-fixture spec instead. Structure: consecutive ids share
+    * identically. Structure: consecutive ids share
     * a base grid (`id / 2 * 2` seeds 64 md5 calls, 16 pixels each);
     * odd ids get one pixel nudged by +40 mod 256 — a perceptual
     * near-twin whose Hamming distance to its even partner lands in the
@@ -543,8 +123,7 @@ object Multimodal {
     * parity device, the audio twin of [[syntheticGrid]]: audio DECODE
     * is not SQL-expressible, so the hash-checked query synthesizes the
     * post-decode RMS envelope from md5 bytes both engines can compute
-    * identically, and the real-decode path ([[audioFingerprint64]]) is
-    * certified by the WAV-fixture spec instead. Same twin structure:
+    * identically. Same twin structure:
     * consecutive ids share a base envelope (`id / 2 * 2` seeds 4 md5
     * calls of 16 values each, seed string `"g@b"` so grids and
     * envelopes never coincide); odd ids get ONE bin nudged +40 mod 256,
@@ -567,74 +146,4 @@ object Multimodal {
     }
     env
   }
-
-  /** Real-image perceptual hash: decode via `javax.imageio`,
-    * area-average luminance onto a 32×32 grid (averaging, not point
-    * sampling, so a resized twin lands on nearly the same grid), then
-    * [[phashFromGrid]]. None when no installed reader claims the bytes,
-    * the decode fails, or the header declares a decompression bomb —
-    * same degradation contract as [[decodeImage]]. */
-  def phash64(bytes: Array[Byte]): Option[Long] =
-    withDecodedImage(bytes) { img =>
-      val w = img.getWidth
-      val h = img.getHeight
-      val grid = new Array[Int](1024)
-      var r = 0
-      while (r < 32) {
-        // Long bounds math: (r+1)*h overflows Int at h = 2^26 (a 1×64M
-        // strip passes the pixel gate exactly), collapsing the last
-        // blocks to single rows and silently changing the hash
-        val rLo = (r.toLong * h / 32).toInt
-        val rHi = math.max(rLo + 1, ((r + 1).toLong * h / 32).toInt)
-        var c = 0
-        while (c < 32) {
-          val cLo = (c.toLong * w / 32).toInt
-          val cHi = math.max(cLo + 1, ((c + 1).toLong * w / 32).toInt)
-          var sum = 0L; var n = 0
-          var y = rLo
-          while (y < rHi) {
-            var x = cLo
-            while (x < cHi) {
-              val rgb = img.getRGB(x, y)
-              sum += (((rgb >> 16) & 0xff) * 299 +
-                ((rgb >> 8) & 0xff) * 587 + (rgb & 0xff) * 114) / 1000
-              n += 1
-              x += 1
-            }
-            y += 1
-          }
-          grid(r * 32 + c) = (sum / n).toInt
-          c += 1
-        }
-        r += 1
-      }
-      phashFromGrid(grid)
-    }
-
-  /** Per-partition pHash column over a media frame: (id, phash), rows
-    * whose payload no image reader claims are dropped (they have no
-    * perceptual identity; exact byte dedup already covers them via
-    * `checksum`). Same mapPartitions batch shape as [[decodeFeatures]];
-    * feed the result to [[Dedup.hammingNearDup]] for near-dup pairs. */
-  def withPhash(media: DataFrame): DataFrame = {
-    implicit val encIn = Encoders.product[MediaRow]
-    implicit val enc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    media.select("id", "modality", "payload").as[MediaRow]
-      .mapPartitions(_.flatMap(r =>
-        phash64(r.payload).map(h => (r.id, h))))
-      .toDF("id", "phash")
-  }
-
-  /** Frame-sample stub for video-like payloads: every k-th chunk of the
-    * payload becomes a "frame" row (explode shape of real frame
-    * sampling). */
-  def sampleFrames(media: DataFrame, chunkBytes: Int, everyK: Int): DataFrame =
-    media
-      .withColumn("n_frames",
-        greatest(lit(1), (length(col("payload")) / chunkBytes).cast("int")))
-      .withColumn("frame_idx",
-        explode(sequence(lit(0), col("n_frames") - 1, lit(everyK))))
-      .withColumn("frame",
-        expr(s"substring(payload, frame_idx * $chunkBytes + 1, $chunkBytes)"))
-      .select("id", "modality", "frame_idx", "frame")
 }

@@ -8,15 +8,11 @@ import graft.functions.VectorFunctions._
 /** Approximate-nearest-neighbor search over an embedding column
   * (BASELINE.json north star).
   *
-  * Two paths:
-  *  - [[bruteForceTopK]] — exact: broadcast the (small) query set against
-  *    the corpus, rank per query. One pass over the corpus, no corpus
-  *    shuffle; this is the correct plan whenever |queries| is
-  *    broadcastable, at any corpus size.
-  *  - [[lshTopK]] — scale path when the query set is itself huge: both
-  *    sides bucket by deterministic random-hyperplane LSH; only
-  *    same-bucket (plus probe-adjacent) pairs are scored. Recall is
-  *    tunable via nBits/nProbes.
+  * [[bruteForceTopK]] is exact: broadcast the (small) query set against
+  * the corpus, rank per query. One pass over the corpus, no corpus
+  * shuffle; this is the correct plan whenever |queries| is
+  * broadcastable, at any corpus size. The IVF, SQ8 and PQ families
+  * below trade recall for scanning fewer or smaller vectors.
   */
 object Similarity {
 
@@ -772,43 +768,6 @@ object Similarity {
       q, k)
   }
 
-  /** PQ with exact re-ranking — the standard production pairing: ADC
-    * over codes produces a `shortlist`-deep candidate set per query
-    * (cheap, compressed scan of the WHOLE corpus), then only those
-    * shortlist vectors are fetched and re-ranked with exact squared L2.
-    * Recall@k approaches ADC recall@shortlist, which is far higher than
-    * ADC recall@k (quantization error re-orders neighbors locally, it
-    * rarely expels them from a deep shortlist).
-    *
-    * Scale shape: the corpus is scanned once over m-byte codes; the
-    * only full vectors that move are the |queries|×shortlist fetch,
-    * via a broadcast semi-filter — the corpus is never shuffled. */
-  def pqTopKRerank(corpus: DataFrame, idCol: String, vecCol: String,
-      codebooks: DataFrame, queryPred: org.apache.spark.sql.Column,
-      k: Int, shortlist: Int): DataFrame = {
-    require(shortlist >= k, "shortlist must be >= k")
-    val cand = pqTopKAdc(corpus, idCol, vecCol, codebooks, queryPred,
-      shortlist)
-    val vecs = corpus.select(col(idCol).as("n_id"),
-      col(vecCol).cast("array<double>").as("__cv"))
-    val q = corpus.filter(queryPred)
-      .select(col(idCol).as("q_id"),
-        col(vecCol).cast("array<double>").as("__qv"))
-    // shortlist ids broadcast twice (they are |q|*shortlist rows): the
-    // corpus-side vector fetch stays a broadcast join, no corpus shuffle
-    val fetched = vecs.join(broadcast(cand), Seq("n_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .withColumn("__d", graft.functions.VectorFunctions
-        .l2sqFast(col("__qv"), col("__cv")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("__d").asc, col("n_id").asc)
-    // see pqTopKAdc: null L2 (length-mismatched vector) must not rank
-    fetched.filter(col("__d").isNotNull)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "n_id", "rank")
-  }
-
   /** IVF-PQ — the billion-scale ANN layout (FAISS IVFPQ): the corpus
     * is coarse-quantized into IVF cells AND stored as m-byte PQ codes;
     * a query probes its `nProbe` nearest cells and ADC-scores ONLY
@@ -817,8 +776,7 @@ object Similarity {
     * bytes-per-candidate ~16-32×. Everything on the corpus side is the
     * same two map-only codegen kernels as [[ivfAssign]]/[[pqEncode]];
     * the query side (probe list + LUT) broadcasts — the corpus never
-    * shuffles. Compose with a [[pqTopKRerank]]-style exact re-rank for
-    * recall-critical use. */
+    * shuffles. */
   def ivfPqTopK(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, codebooks: DataFrame,
       queryPred: org.apache.spark.sql.Column, k: Int,
@@ -881,29 +839,14 @@ object Similarity {
     * the codebooks spend their ksub codewords on the (much tighter)
     * within-cell distribution instead of re-describing cell positions.
     * Same determinism and sampling contract as [[pqTrain]]. Use with
-    * [[pqEncodeResidual]]/[[ivfPqTopKResidual]] — raw-vector ADC
-    * against residual codebooks is meaningless. */
+    * [[ivfPqTopKResidual]] — raw-vector ADC against residual codebooks
+    * is meaningless. */
   def pqTrainResidual(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, m: Int, ksub: Int, iters: Int = 3,
       sampleSize: Int = 4096): DataFrame = {
     val (cids, matrix) = collectCentroids(centroids)
     pqTrain(withCellResidual(corpus, vecCol, cids, matrix), idCol,
       "__rv", m, ksub, iters, sampleSize)
-  }
-
-  /** [[pqEncode]] of the RESIDUAL, also emitting the cell id: adds
-    * (cid, pq_code) in one map-only pass — the persisted layout for
-    * [[ivfPqTopKOnCodesResidual]]. */
-  def pqEncodeResidual(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, codebooks: DataFrame): DataFrame = {
-    val (cids, matrix) = collectCentroids(centroids)
-    val cbs = collectCodebooks(codebooks)
-    val codes = encodeIndexCols("__rv", cbs).zip(cbs).map {
-      case (idx, (cc, _)) => element_at(typedLit(cc), idx + lit(1))
-    }
-    withCellResidual(corpus, vecCol, cids, matrix)
-      .withColumn("pq_code", array(codes: _*))
-      .drop("__rv")
   }
 
   /** [[ivfPqTopK]] with RESIDUAL encoding: corpus codes quantize
@@ -936,35 +879,6 @@ object Similarity {
         lutFor(cbs, col("__rqv")).as("__lut"))
     scoreAdcRanked(enc.select(col(idCol).as("n_id"), col("cid"),
       col("__code")), q, k)
-  }
-
-  /** [[ivfPqTopKOnCodes]] for a RESIDUAL-encoded layout
-    * ([[pqTrainResidual]] + [[pqEncodeResidual]] persisted once) — the
-    * serving path: per-probe residual LUTs against loaded artifacts,
-    * only probed cells' m-byte codes scored. */
-  def ivfPqTopKOnCodesResidual(encoded: DataFrame, idCol: String,
-      cellCol: String, codeCol: String,
-      queries: DataFrame, qIdCol: String, qVecCol: String,
-      centroids: DataFrame, codebooks: DataFrame, k: Int,
-      nProbe: Int = 1): DataFrame = {
-    require(nProbe >= 1, "nProbe must be >= 1")
-    val (cids, matrix) = collectCentroids(centroids)
-    val cbs = collectCodebooks(codebooks)
-    requireCanonicalCids(cbs)
-    val q = queries
-      .select(col(qIdCol).as("q_id"),
-        col(qVecCol).cast("array<double>").as("__qv"))
-      .withColumn("__p",
-        explode(probeCellsWithIdx(col("__qv"), cids, matrix, nProbe)))
-      .withColumn("__rqv", zip_with(col("__qv"),
-        element_at(typedLit(matrix.map(_.toSeq)),
-          col("__p.idx") + lit(1)),
-        (a, b) => a - b))
-      .select(col("q_id"), col("__p.cid").as("cid"),
-        lutFor(cbs, col("__rqv")).as("__lut"))
-    scoreAdcRanked(encoded.select(col(idCol).as("n_id"),
-      col(cellCol).as("cid"),
-      col(codeCol).cast("array<long>").as("__code")), q, k)
   }
 
   /** The ONE ADC tail every PQ path funnels through (the rankTopK
@@ -1002,7 +916,7 @@ object Similarity {
     * thousand sample vectors already determine. Fully deterministic
     * (hash sample order, fixed-order sums). Returns (sub, cid, cvec)
     * with cids 0..ksub-1 per subspace, ready for
-    * [[pqEncode]]/[[pqTopKAdc]]/[[pqTopKRerank]]. */
+    * [[pqEncode]]/[[pqTopKAdc]]. */
   def pqTrain(corpus: DataFrame, idCol: String, vecCol: String, m: Int,
       ksub: Int, iters: Int = 3, sampleSize: Int = 4096): DataFrame = {
     require(m >= 1, "need m >= 1 subspaces")
@@ -1106,7 +1020,7 @@ object Similarity {
     * Returns the row-major rotation matrix (rows = reordered principal
     * directions); apply with [[rotate]] — one codegen mat-vec per row,
     * map-only — and feed the rotated column to
-    * [[pqTrain]]/[[pqEncode]]/[[pqTopKAdc]]/[[pqTopKRerank]]. Gains are
+    * [[pqTrain]]/[[pqEncode]]/[[pqTopKAdc]]. Gains are
     * data-dependent: large when dimensions are correlated or variance
     * is skewed, nil on isotropic data (see ExtSpec's anisotropic
     * construction).
@@ -1253,40 +1167,5 @@ object Similarity {
       sweep += 1
     }
     (Array.tabulate(d)(i => a(i)(i)), v)
-  }
-
-  /** Multi-probe LSH top-k: queries probe their own bucket plus every
-    * bucket at Hamming distance 1 (each hyperplane bit flipped once) —
-    * the standard recall lever: candidates grow ×(nBits+1) while the
-    * corpus stays bucketed once. Deterministic (no RNG anywhere). */
-  def lshTopKMultiProbe(corpus: DataFrame, idCol: String, vecCol: String,
-      nBits: Int, k: Int, dims: Int = 64): DataFrame = {
-    val b = corpus.select(col(idCol).as("__id"), col(vecCol).as("__vec"),
-      lshBucket(col(vecCol), nBits, dims).as("__bucket"))
-    val probes = b.withColumn("__probe",
-      explode(array(col("__bucket") +:
-        (0 until nBits).map(i =>
-          col("__bucket").bitwiseXOR(lit(1L << i))): _*)))
-    val pairs = probes.as("x").join(b.as("y"),
-        col("x.__probe") === col("y.__bucket") &&
-          col("x.__id") =!= col("y.__id"))
-      .select(col("x.__id").as("q_id"), col("y.__id").as("n_id"),
-        cosineFast(col("x.__vec"), col("y.__vec")).as("cos"))
-    rankTopK(pairs, k)
-  }
-
-  /** LSH-bucketed candidate scoring: rows are assigned an `nBits`
-    * hyperplane bucket; pairs within a bucket are scored and ranked.
-    * Single-probe; see [[lshTopKMultiProbe]] for the recall lever. */
-  def lshTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      nBits: Int, k: Int, dims: Int = 64): DataFrame = {
-    val b = corpus.select(col(idCol).as("__id"), col(vecCol).as("__vec"),
-      lshBucket(col(vecCol), nBits, dims).as("__bucket"))
-    val pairs = b.as("x").join(b.as("y"),
-        col("x.__bucket") === col("y.__bucket") &&
-          col("x.__id") =!= col("y.__id"))
-      .select(col("x.__id").as("q_id"), col("y.__id").as("n_id"),
-        cosineFast(col("x.__vec"), col("y.__vec")).as("cos"))
-    rankTopK(pairs, k)
   }
 }

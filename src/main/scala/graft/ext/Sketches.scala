@@ -185,14 +185,9 @@ object Sketches {
       .filter(col("cnt") >= threshold)
   }
 
-  /** The estimator over a bottom-k array (scala side — shared with the
-    * streaming sketch): exact size under k, else `(k-1)·2^32 / U(k)`. */
-  def estimate(mins: Array[Long], k: Int): Double =
-    if (mins.length < k) mins.length.toDouble
-    else (k - 1).toDouble * 4294967296.0 / mins(k - 1).toDouble
-
-  /** The same estimator as a Column over a [[BottomK]] result, for
-    * queries that embed the sketch in a wider aggregation (q27). */
+  /** The KMV estimator as a Column over a [[BottomK]] result: exact
+    * size under k, else `(k-1)·2^32 / U(k)`. For queries that embed the
+    * sketch in a wider aggregation (q27). */
   def kmvEstimate(mins: Column, k: Int): Column =
     when(size(mins) < k, size(mins).cast("double"))
       .otherwise(lit((k - 1).toDouble * 4294967296.0) /

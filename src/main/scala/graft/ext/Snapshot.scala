@@ -53,55 +53,6 @@ object Snapshot {
         :+ col("version_seq") :+ col("valid_from") :+ col("valid_to"): _*)
   }
 
-  /** Incremental merge: fold a NEW batch of change-log rows into an
-    * existing history without re-reading the closed versions. Contract
-    * (the append-only CDC regime): every delta row's `tsCol` is strictly
-    * greater than its key's current `valid_from` in `history` — i.e.
-    * deltas arrive in timeline order, which is what a checkpointed CDC
-    * consumer guarantees.
-    *
-    * Plan: only the CURRENT rows (`valid_to IS NULL`, one per key) leave
-    * the history; they re-enter compaction as the baseline row so
-    * leading no-change delta rows collapse into the open version, then
-    * the already-closed rows union back untouched (plus one projected
-    * map-side `max(version_seq)` aggregate over them for version
-    * numbering continuity — keys-sized output, never the history's
-    * rows). Nothing history-sized is ever shuffled; the windowed
-    * compaction runs over |current keys| + |delta| rows only.
-    *
-    * Equivalence `merge(scd2(log1), log2) == scd2(log1 ∪ log2)` is
-    * spec-pinned (SnapshotSpec). */
-  def scd2Merge(history: DataFrame, delta: DataFrame, keys: Seq[String],
-      tracked: Seq[String], tsCol: String,
-      tieBreak: Seq[String] = Nil): DataFrame = {
-    val closed = history.filter(col("valid_to").isNotNull)
-    val current = history.filter(col("valid_to").isNull)
-      .select((keys ++ tracked).map(col) :+ col("valid_from").as(tsCol): _*)
-    val logCols = (keys ++ tracked :+ tsCol) ++ tieBreak
-    // The baseline (current) row has no tieBreak payload; NULLs-first
-    // ascending order would sort it ahead of any delta row at the same
-    // ts — which the contract rules out anyway (delta ts strictly
-    // greater).
-    val currentPadded = tieBreak.foldLeft(current)((d, c) =>
-      d.withColumn(c, lit(null)))
-    val rebuilt = scd2FromLog(
-      currentPadded.select(logCols.map(col): _*)
-        .unionByName(delta.select(logCols.map(col): _*)),
-      keys, tracked, tsCol, tieBreak)
-    // Version continuity without touching the closed majority: closed
-    // versions keep their 1..k numbering (scd2FromLog numbers versions
-    // contiguously per key), the rebuilt segment restarts at 1 and is
-    // offset by each key's closed count — a keys-sized join against the
-    // SMALL side (current ∪ delta), never a shuffle of the history.
-    val base = closed.groupBy(keys.map(col): _*)
-      .agg(max(col("version_seq")).as("__base"))
-    closed.unionByName(
-      rebuilt.join(base, keys, "left")
-        .withColumn("version_seq",
-          col("version_seq") + coalesce(col("__base"), lit(0L)))
-        .select(closed.columns.map(col): _*))
-  }
-
   /** Snapshot reconstruction: table state as of time `t` (one row per
     * key that existed then) — a filter, no join, no window. */
   def asOf(history: DataFrame, t: Long): DataFrame =

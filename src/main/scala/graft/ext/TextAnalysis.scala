@@ -55,14 +55,9 @@ object TextAnalysis {
         (nChars - size(toks) + 1).cast("double") / size(toks).cast("double"))
   }
 
-  /** Composite keep/drop quality gate (tunable thresholds). */
-  def qualityFilter(minChars: Int = 50, maxChars: Int = 100000,
-      minAlphaRatio: Double = 0.5): Column =
-    col("n_chars").between(minChars, maxChars) &&
-      col("alpha_ratio") >= minAlphaRatio
-
-  /** Rolling-window content fingerprint per document (native one-pass
-    * shingler; value-identical to `TextFunctions.fingerprint`). */
+  /** Rolling-window content fingerprint per document: the minimum md5
+    * over its distinct word n-gram shingles (native one-pass shingler),
+    * stable under small edits at the ends. */
   def withFingerprint(df: DataFrame, textCol: String, n: Int = 8): DataFrame =
     df.withColumn("fingerprint",
       array_min(transform(graft.functions.expressions.TextExpressions
@@ -611,10 +606,10 @@ object TextAnalysis {
     * for every repeated word — corpus work stays a single map-only
     * pass, nothing shuffles. The per-word rank-greedy merge loop is
     * imperative, so this runs as a typed `mapPartitions`
-    * (the [[Multimodal]] justification: no Column/Expression form
-    * exists for an iterative fixpoint; this is a scan-shaped batch op,
-    * never a per-query kernel). Output carries (idCol, out) — project
-    * other columns before or join on idCol after. */
+    * (no Column/Expression form exists for an iterative fixpoint;
+    * this is a scan-shaped batch op, never a per-query kernel). Output
+    * carries (idCol, out) — project other columns before or join on
+    * idCol after. */
   def bpeApply(df: DataFrame, idCol: String, textCol: String,
       merges: DataFrame, out: String = "bpe_tokens"): DataFrame = {
     val spark = df.sparkSession

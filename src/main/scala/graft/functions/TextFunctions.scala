@@ -53,14 +53,6 @@ object TextFunctions {
   def bpeTokens(text: Column): Column =
     regexp_extract_all(text, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0))
 
-  /** Distinct word n-gram shingles of a token array (space-joined).
-    * Short docs (< n tokens) collapse to one whole-doc shingle. */
-  def shingles(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      array_distinct(transform(sequence(lit(0), size(toks) - n),
-        i => array_join(slice(toks, i + 1, lit(n)), " "))))
-      .otherwise(array(array_join(toks, " ")))
-
   /** One minhash value: the minimum over shingles of a seeded md5,
     * truncated to 16 hex chars (lexicographic min of fixed-width hex ==
     * numeric min of the 64-bit value). */
@@ -79,31 +71,6 @@ object TextFunctions {
     array((0 until bands).map(b =>
       struct(lit(b).as("band"),
         md5(concat_ws(",", slice(sig, b * rows + 1, rows))).as("bkey"))): _*)
-
-  /** 60-bit simhash over a token array. Each token hashes to 60 bits
-    * (md5-derived, engine-portable); bit i of the result is the sign of
-    * the per-bit vote sum. 60 bits (not 64) so the value stays inside a
-    * signed long in every engine. */
-  def simhash60(toks: Column): Column = {
-    val hashes = transform(toks,
-      t => conv(substring(md5(t), 1, 15), 16, 10).cast("long"))
-    (0 until 60).map { i =>
-      val vote = aggregate(hashes, lit(0L),
-        (acc, v) => acc + (shiftright(v, i).bitwiseAND(lit(1L)) * lit(2L) - lit(1L)))
-      when(vote > 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
-
-  /** 15-bit chunk of a simhash — pigeonhole banding: two 60-bit values
-    * within Hamming distance 3 agree on at least one of 4 chunks. */
-  def simhashChunk(sim: Column, chunk: Int): Column =
-    shiftright(sim, chunk * 15).bitwiseAND(lit(0x7FFFL))
-
-  /** Content fingerprint: minimum md5 over word 8-gram shingles — a
-    * rolling-window document signature stable under small edits at the
-    * ends. */
-  def fingerprint(text: Column, n: Int = 8): Column =
-    array_min(transform(shingles(tokens(text), n), s => md5(s)))
 
   /** Count of DISTINCT tokens that appear in `markers` (set semantics on
     * both Spark and DuckDB). */

@@ -47,37 +47,10 @@ object VectorFunctions {
       org.apache.spark.sql.SparkSession.active,
       a.cast("array<double>"), b.cast("array<double>"))
 
-  /** Squared L2 distance. */
-  def l2sq(a: Column, b: Column): Column =
-    aggregate(zip_with(d(a), d(b), (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
-
-  /** Codegen'd squared L2 (same element order as [[l2sq]]). */
-  def l2sqFast(a: Column, b: Column): Column =
-    graft.functions.expressions.VectorExpressions.l2Squared(
-      org.apache.spark.sql.SparkSession.active,
-      a.cast("array<double>"), b.cast("array<double>"))
-
-  /** Deterministic pseudo-random hyperplane component for plane `p`,
-    * dimension `i`: md5-derived value in [-0.5, 0.5). Lets every executor
-    * (and any other engine) regenerate identical hyperplanes without
-    * shipping them. */
-  def hyperplaneComponent(p: Int, i: Column): Column =
-    (conv(substring(md5(concat(lit(s"hp${p}_"), i.cast("string"))), 1, 6), 16, 10)
-      .cast("double") / lit(16777216.0)) - lit(0.5)
-
-  /** Sign bit of the projection of `vec` onto deterministic hyperplane
-    * `p` — one bit of a random-hyperplane LSH signature. */
-  def hyperplaneBit(vec: Column, p: Int): Column = {
-    val proj = aggregate(
-      zip_with(d(vec), sequence(lit(0), size(vec) - 1),
-        (x, i) => x * hyperplaneComponent(p, i)),
-      lit(0.0), _ + _)
-    when(proj >= 0, lit(1)).otherwise(lit(0))
-  }
-
-  /** Driver-side precompute of hyperplane `p`'s components — md5-derived,
-    * value-identical to [[hyperplaneComponent]] (and to the SQL oracle's
-    * formula), but evaluated once instead of per row×dimension. */
+  /** Hyperplane `p`'s components, computed once per plan: component
+    * `i` is md5("hp<p>_<i>")'s first 24 bits scaled into [-0.5, 0.5),
+    * the SQL oracle's formula, so any engine regenerates identical
+    * hyperplanes without shipping them. */
   def hyperplaneComponents(p: Int, dims: Int): Seq[Double] = {
     val mdAlgo = java.security.MessageDigest.getInstance("MD5")
     (0 until dims).map { i =>
@@ -90,8 +63,7 @@ object VectorFunctions {
   /** `nBits`-bit random-hyperplane LSH bucket id for a vector. Vectors at
     * small angles collide with high probability — the bucket is the ANN
     * pre-filter (Charikar's SimHash for angular distance). Hyperplanes are
-    * literal arrays + a codegen'd dot product; the per-row md5 formulation
-    * ([[hyperplaneBit]]) is kept as the self-describing reference. */
+    * literal arrays + a codegen'd dot product. */
   def lshBucket(vec: Column, nBits: Int, dims: Int = 64): Column =
     (0 until nBits).map { p =>
       val plane = typedLit(hyperplaneComponents(p, dims))

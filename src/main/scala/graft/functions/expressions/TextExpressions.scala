@@ -10,7 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native shingling for the dedup hot path.
   *
-  * `TextFunctions.shingles(tokens(text), n)` composes four higher-order /
+  * The Column composition of distinct word n-gram shingles (kept as
+  * the reference in TextExprSpec) uses four higher-order /
   * collection expressions (split → sequence → transform(slice+array_join)
   * → array_distinct) that are interpreted per row and allocate one slice
   * array per shingle; at corpus scale the shingle explode dominates the

@@ -104,10 +104,10 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 /** Squared L2 distance; summation element order matches the interpreted
-  * `aggregate(zip_with(...))` form in VectorFunctions.l2sq. Length
-  * mismatch yields NULL (zip_with null-pads and the interpreted sum
-  * nulls out) — a truncated/dirty vector must not rank with an
-  * artificially small partial distance (the PqAdcDistance stance). */
+  * `aggregate(zip_with((x - y)²))` form. Length mismatch yields NULL
+  * (zip_with null-pads and the interpreted sum nulls out) — a
+  * truncated/dirty vector must not rank with an artificially small
+  * partial distance (the PqAdcDistance stance). */
 case class L2Squared(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -379,11 +379,6 @@ object VectorExpressions {
   def pqAdcDistance(spark: SparkSession, code: Column, lut: Column): Column = {
     ensureRegistered(spark)
     call_function("graft_pq_adc", code, lut)
-  }
-
-  def l2Squared(spark: SparkSession, a: Column, b: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_l2sq", a, b)
   }
 
   def matVec(spark: SparkSession, matrix: Column, vec: Column): Column = {

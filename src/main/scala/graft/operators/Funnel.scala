@@ -34,10 +34,9 @@ object Funnel {
     * machine computes the same thing in one pass; this staged form
     * stays in Catalyst — pushed filters, codegen aggregates — and is
     * SQL-replicable, which is what makes it oracle-checkable. For long
-    * step lists prefer [[funnelSinglePass]] or the [[funnelAuto]]
-    * dispatcher: beyond ~[[AUTO_SINGLE_PASS_STEPS]] steps the chained
-    * join rounds lose — measured 16× at 12 steps / 2M events, OOM at
-    * 10M, BENCH.md round 7.) */
+    * step lists prefer [[funnelSinglePass]]: beyond ~6 steps the
+    * chained join rounds lose — measured 16× at 12 steps / 2M events,
+    * OOM at 10M, BENCH.md round 7.) */
   def funnel(events: DataFrame, userCol: String, typeCol: String,
       tsCol: String, steps: Seq[String],
       horizon: Option[Long] = None): DataFrame = {
@@ -142,26 +141,4 @@ object Funnel {
           when(c =!= NONE, c).as(s"t${i + 1}")
         } :+ col("__reached").cast("int").as("step_reached"): _*)
   }
-
-  /** Steps above which [[funnelAuto]] switches to the single-pass state
-    * machine. Measured (BENCH.md round 7, 12-step list): staged = 16×
-    * slower at 2M events and OOMs local[32] at 10M (12 chained AQE
-    * join+agg rounds hold 12 rounds of shuffle + broadcast state at
-    * once); single-pass = one user-key shuffle, 4.5 s at 10M. At K ≤
-    * [[AUTO_SINGLE_PASS_STEPS]] the staged form wins (pushed per-type
-    * filters + codegen aggregates beat the sort-and-walk). */
-  val AUTO_SINGLE_PASS_STEPS = 6
-
-  /** [[funnel]] with the measured long-journey trade applied
-    * automatically: staged Catalyst form for short step lists,
-    * [[funnelSinglePass]] beyond [[AUTO_SINGLE_PASS_STEPS]] steps.
-    * Identical results either way (SessionizeSpec pins ≡ on the
-    * adversarial fixture). Note the single-pass type contract (integral
-    * `userCol`/`tsCol`) therefore applies to long step lists here. */
-  def funnelAuto(events: DataFrame, userCol: String, typeCol: String,
-      tsCol: String, steps: Seq[String],
-      horizon: Option[Long] = None): DataFrame =
-    if (steps.length > AUTO_SINGLE_PASS_STEPS)
-      funnelSinglePass(events, userCol, typeCol, tsCol, steps, horizon)
-    else funnel(events, userCol, typeCol, tsCol, steps, horizon)
 }

@@ -85,7 +85,7 @@ object RangeJoin {
   }
 
   /** Distinct left-row ids having at least one overlap partner — the
-    * shared machinery of [[overlapSemiJoin]]/[[overlapAntiJoin]]. The
+    * matched side of [[overlapAntiJoin]]. The
     * binned candidate join skips the canonical-bin dedup (existence
     * doesn't care how often a pair co-occurs); the id-distinct replaces
     * it. */
@@ -100,19 +100,9 @@ object RangeJoin {
       .select(col(leftId)).distinct()
   }
 
-  /** Interval semi-join: left rows overlapping ≥1 right interval, each
-    * at most once (bedtools `intersect -u`). `leftId` must uniquely
-    * identify left rows — the dedup that replaces emitting every
-    * pairing. */
-  def overlapSemiJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
-      lStart: String, lEnd: String, rStart: String, rEnd: String,
-      leftId: String, width: Long = 10000L): DataFrame =
-    left.join(matchedIds(left, right, keys, lStart, lEnd, rStart, rEnd,
-      leftId, width), Seq(leftId), "left_semi")
-
   /** Interval anti-join: left rows overlapping NO right interval
-    * (bedtools `intersect -v` — "unannotated reads"). Same plan as the
-    * semi form with the final join flipped to anti. */
+    * (bedtools `intersect -v` — "unannotated reads"). `leftId` must
+    * uniquely identify left rows. */
   def overlapAntiJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
       lStart: String, lEnd: String, rStart: String, rEnd: String,
       leftId: String, width: Long = 10000L): DataFrame =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -14,20 +14,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * abstraction.
   */
 object EventStreams {
-
-  /** Tumbling/sliding windowed aggregation with a watermark: event counts
-    * and value sums per (window, event_type). Works on batch or streaming
-    * frames — pass either. */
-  def windowedCounts(events: DataFrame, window_ : String = "5 minutes",
-      slide: String = "5 minutes", watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,6)")).cast("double").as("total"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"), col("event_type"),
-        col("n"), col("total"))
 
   final case class Event(event_id: Long, ts: java.sql.Timestamp,
       user_id: Long, event_type: String, value: Double)
@@ -174,40 +160,6 @@ object EventStreams {
         asLong(col("__sx"), "sum_x"), asLong(col("__sy"), "sum_y"),
         asLong(col("__sxx"), "sum_xx"), asLong(col("__syy"), "sum_yy"),
         asLong(col("__sxy"), "sum_xy"))
-  }
-
-  final case class SessionState(nEvents: Long, total: Double,
-      lastTs: Long)
-  final case class UserSession(user_id: Long, nEvents: Long, total: Double)
-
-  /** Custom stateful sessionization via mapGroupsWithState: per-user
-    * running aggregates with a processing-time idle timeout.
-    * `idleTimeoutMs <= 0` disables the timeout (finite/backfill streams:
-    * with a processing-time timeout the engine schedules empty
-    * micro-batches forever, so `processAllAvailable` never settles). */
-  def sessionize(events: Dataset[Event],
-      idleTimeoutMs: Long = 30 * 60 * 1000): Dataset[UserSession] = {
-    import events.sparkSession.implicits._
-    val conf = if (idleTimeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState[SessionState, UserSession](conf) {
-        (user: Long, batch: Iterator[Event], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            UserSession(user, s.nEvents, s.total)
-          } else {
-            val prev = state.getOption.getOrElse(SessionState(0L, 0.0, 0L))
-            var n = prev.nEvents; var tot = prev.total; var last = prev.lastTs
-            batch.foreach { e =>
-              n += 1; tot += e.value; last = math.max(last, e.ts.getTime)
-            }
-            state.update(SessionState(n, tot, last))
-            if (idleTimeoutMs > 0) state.setTimeoutDuration(idleTimeoutMs)
-            UserSession(user, n, tot)
-          }
-      }
   }
 
   final case class ClosedSession(user_id: Long, session_seq: Long,
@@ -596,8 +548,8 @@ object EventStreams {
     * guard, loud). `element_at` on a map LITERAL is a per-token linear
     * probe — O(|vocab|·tokens) per doc — which is fine for the pinned
     * marker-word gates this twin exists for; a 10⁶-term fastText vocab
-    * belongs in [[classifierGateForeachBatch]] (the per-micro-batch
-    * broadcast-join form, bit-parity spec'd), not in a plan literal. */
+    * belongs in the batch broadcast-join
+    * [[graft.ext.TextAnalysis.classifyLinear]], not in a plan literal. */
   def streamingClassifierGate(docs: DataFrame, idCol: String,
       textCol: String, termWeights: DataFrame, priors: DataFrame,
       maxModelRows: Int = 1 << 20): DataFrame = {
@@ -612,39 +564,6 @@ object EventStreams {
     withT.select(col(idCol), best.getField("label").as("label"),
       best.getField("score").cast("decimal(18,9)").as("score"))
   }
-
-  /** LARGE-VOCABULARY online classifier gate — the foreachBatch form
-    * of [[streamingClassifierGate]]: the map-literal gate's
-    * `element_at` probe is O(|vocab|) per token and its model must
-    * collect into a plan literal (`maxModelRows` guard), so a
-    * 10⁶-term fastText vocabulary cannot ride it. foreachBatch hands
-    * every micro-batch over as a BATCH frame, where the batch
-    * operator's broadcast-join plan
-    * ([[graft.ext.TextAnalysis.classifyLinear]]: explode → broadcast
-    * model join → per-doc aggregation → rank-1 window — all illegal
-    * inside a streaming plan) is legal and value-identical
-    * (bit-parity spec'd on a vocab past the literal limit: same exact
-    * decimal arithmetic, same tie-break).
-    *
-    * Delivery contract: exactly-once per doc within a batch (each
-    * verdict is self-contained); across restarts foreachBatch is
-    * at-least-once — key the sink on `idCol` or dedupe on `batchId`.
-    * Crossover guidance: for pinned gate models (10²–10⁴ terms) the
-    * stateless map-literal gate is cheaper — zero shuffle, zero
-    * broadcast per batch; past `maxModelRows` — or wherever
-    * O(|vocab|) per-token probes beat a ≤|labels|-rows-per-doc tuple
-    * shuffle — this form scales with the broadcast model instead. */
-  def classifierGateForeachBatch(docs: DataFrame, idCol: String,
-      textCol: String, termWeights: DataFrame, priors: DataFrame)(
-      emit: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        emit(graft.ext.TextAnalysis.classifyLinear(
-          batch.toDF(), idCol, textCol, termWeights, priors), batchId)
-    }
 
   /** Online DSIR importance scoring — the streaming form of
     * [[graft.ext.TextAnalysis.importanceWeights]]: per arriving
@@ -765,9 +684,8 @@ object EventStreams {
         col("weight").cast("decimal(18,9)"))
       .limit(maxModelRows + 1).collect()
     require(w.length <= maxModelRows,
-      s"model exceeds $maxModelRows rows — use " +
-        "classifierGateForeachBatch (the per-micro-batch broadcast-join " +
-        "form) or the batch classifyLinear for vocabularies this large")
+      s"model exceeds $maxModelRows rows — use the batch " +
+        "classifyLinear (broadcast-join form) for vocabularies this large")
     val byLabel = w.groupBy(_.getString(1)).view
       .mapValues(_.map(r => (r.getString(0), r.getDecimal(2))).toSeq)
       .toMap
@@ -1165,165 +1083,6 @@ object EventStreams {
       }
   }
 
-  /** Stream-static enrichment: join the live stream against a static
-    * dimension table. Stateless (no watermark, no state store) — the dim
-    * broadcasts into every micro-batch, so the stream side never
-    * shuffles; re-read the dim table per restart to pick up slowly
-    * changing dimensions. */
-  def enriched(events: DataFrame, dim: DataFrame, key: String,
-      joinType: String = "left"): DataFrame =
-    events.join(broadcast(dim), Seq(key), joinType)
-
-  final case class KmvEstimate(key: Long, kmv_distinct: Double)
-
-  /** Streaming cardinality: a running per-key distinct-count estimate
-    * with BOUNDED state — the KMV sketch ([[graft.ext.Sketches]]) as
-    * mapGroupsWithState state, k longs per key forever, where an exact
-    * streaming distinct would grow with the value universe. Emits each
-    * key's updated estimate every micro-batch, and because the sketch is
-    * a pure function of md5 hashes the streaming estimate equals the
-    * batch `Sketches.kmvDistinct` on the same prefix of the stream. */
-  def streamingDistinct(events: Dataset[Event], k: Int = 64)
-      : Dataset[KmvEstimate] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.functions.col
-    val sketch = new graft.ext.Sketches.BottomK(k)
-    events
-      .select(col("user_id"),
-        graft.ext.Sketches.hashU32(col("event_id")).as("hv"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[Array[Long], KmvEstimate](
-        GroupStateTimeout.NoTimeout) {
-        (key: Long, batch: Iterator[(Long, Long)],
-            state: GroupState[Array[Long]]) =>
-          var mins = state.getOption.getOrElse(Array.emptyLongArray)
-          batch.foreach { case (_, hv) => mins = sketch.reduce(mins, hv) }
-          state.update(mins)
-          KmvEstimate(key, graft.ext.Sketches.estimate(mins, k))
-      }
-  }
-
-  final case class PackedDoc(doc_id: Long, shard: Long, pack: Long,
-      pack_offset: Long)
-
-  /** Streaming sequence packing — the online form of
-    * [[graft.ext.Curation.packSequences]]: documents arriving on a
-    * stream are laid out into fixed token-budget training sequences
-    * per shard, with ONE Long of state per shard (the running token
-    * count) forever — where a batch repack would re-scan the corpus,
-    * the stream extends the layout incrementally.
-    *
-    * Order contract: within a micro-batch, documents pack in the same
-    * seed-deterministic hash order as the batch operator (so a
-    * single-batch stream reproduces `packSequences` bit-for-bit —
-    * spec-asserted); across micro-batches, in arrival order (an online
-    * packer cannot reorder what it already emitted). Shard assignment
-    * is the identical md5 derivation, via the JVM twins
-    * ([[graft.ext.Curation.shardJvm]]). */
-  def streamingPack(docs: Dataset[(Long, Long)], budget: Long,
-      seed: String, nShards: Int): Dataset[PackedDoc] = {
-    require(budget >= 1, "pack budget must be >= 1 token")
-    import docs.sparkSession.implicits._
-    import graft.ext.Curation
-    docs
-      .map { case (id, toks) =>
-        // one digest per doc: the shard is a pure function of the key
-        val skey = Curation.shuffleKeyJvm(seed, id.toString)
-        (java.lang.Long.parseLong(skey.substring(0, 8), 16) % nShards,
-          skey, id, toks)
-      }
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Long, PackedDoc](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (shard: Long, batch: Iterator[(Long, String, Long, Long)],
-            state: GroupState[Long]) =>
-          var cum = state.getOption.getOrElse(0L)
-          val out = batch.toSeq.sortBy { case (_, skey, id, _) => (skey, id) }
-            .map { case (_, _, id, toks) =>
-              val start = cum
-              cum += toks
-              PackedDoc(id, shard, start / budget, start % budget)
-            }
-          state.update(cum)
-          out.iterator
-      }
-  }
-
-  /** Watermark-buffered [[streamingPack]] — restores the batch
-    * operator's hash order across micro-batches within a bounded
-    * lateness window.
-    *
-    * [[streamingPack]] packs in arrival order across micro-batches by
-    * contract (an online packer cannot reorder what it already
-    * emitted), so a stream whose batches arrive out of hash order
-    * diverges from `packSequences` even on identical documents. This
-    * variant holds documents in per-shard state and only packs a
-    * document once the event-time watermark (input ts minus
-    * `lateness`) passes its timestamp — every release tranche is
-    * sorted by the batch operator's (shuffle_key, doc_id) order, and
-    * tranches release in watermark order. Consequences:
-    *  - any set of documents whose timestamps all fall inside one
-    *    lateness window is packed in EXACTLY the batch hash order,
-    *    regardless of arrival order or micro-batch boundaries
-    *    (spec: 3-batch out-of-order stream == `packSequences`
-    *    bit-for-bit);
-    *  - each document is emitted exactly once (Append mode), when its
-    *    tranche releases — vs. streamingPack's immediate Update;
-    *  - state per shard is the running token count plus the documents
-    *    still inside the lateness window — bounded by lateness x
-    *    per-shard arrival rate, the price of reordering. The
-    *    one-Long-state arrival-order packer remains the unbounded-
-    *    lateness choice.
-    */
-  def streamingPackWatermarked(docs: DataFrame, idCol: String,
-      tokensCol: String, tsCol: String, budget: Long, seed: String,
-      nShards: Int, lateness: String): Dataset[PackedDoc] = {
-    require(budget >= 1, "pack budget must be >= 1 token")
-    import docs.sparkSession.implicits._
-    import graft.ext.Curation
-    // shard/skey via the COLUMN twins, not a typed .map: a map would
-    // strip the event-time attribute and EventTimeTimeout then fails
-    // analysis ("Event-time timeout not supported without watermark")
-    docs
-      .select(
-        Curation.shard(seed, col(idCol).cast("long"), nShards).as("_1"),
-        Curation.shuffleKey(seed, col(idCol).cast("long")).as("_2"),
-        col(idCol).cast("long").as("_3"),
-        col(tokensCol).cast("long").as("_4"),
-        col(tsCol).cast("timestamp").as("_5"))
-      .withWatermark("_5", lateness)
-      .as[(Long, String, Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Seq[(String, Long, Long, Long)]),
-          PackedDoc](OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (shard: Long,
-            batch: Iterator[(Long, String, Long, Long, java.sql.Timestamp)],
-            state: GroupState[(Long, Seq[(String, Long, Long, Long)])]) =>
-          // same code path for data and timeout wake-ups: fold new rows
-          // into the buffer, release everything the watermark passed
-          val (cum0, buf0) = state.getOption.getOrElse(
-            (0L, Seq.empty[(String, Long, Long, Long)]))
-          val buf = buf0 ++ batch.map { case (_, skey, id, toks, ts) =>
-            (skey, id, toks, ts.getTime)
-          }
-          val wm = state.getCurrentWatermarkMs()
-          val (release, keep) = buf.partition(_._4 <= wm)
-          var cum = cum0
-          val out = release.sortBy { case (skey, id, _, _) => (skey, id) }
-            .map { case (_, id, toks, _) =>
-              val start = cum
-              cum += toks
-              PackedDoc(id, shard, start / budget, start % budget)
-            }
-          state.update((cum, keep))
-          // wake when the watermark reaches the oldest buffered doc
-          // (all kept rows have ts > wm, so the timestamp is valid)
-          if (keep.nonEmpty) state.setTimeoutTimestamp(keep.map(_._4).min)
-          out.iterator
-      }
-  }
-
   final case class FunnelUpdate(user_id: Long, step_reached: Int,
       step_ts: Seq[Long])
 
@@ -1334,15 +1093,14 @@ object EventStreams {
     * `Long.MinValue` = unreached) — an online funnel never re-scans
     * history, where the batch operator re-reads the log per run.
     *
-    * Order contract (the [[streamingPack]] convention): within a
-    * micro-batch events apply in (ts, then arrival) order, so a
-    * single-batch stream reproduces the batch funnel exactly
-    * (spec-asserted), and any stream whose batch boundaries respect
-    * event-time order does too. Cross-batch OUT-OF-ORDER events meet
-    * first-touch semantics: a step event arriving after a later-ts
-    * event already advanced the machine cannot retroactively lower a
-    * step time (the machine never rewinds) — bounded lateness needs a
-    * watermark buffer, the [[streamingPackWatermarked]] device, at the
+    * Order contract: within a micro-batch events apply in (ts, then
+    * arrival) order, so a single-batch stream reproduces the batch
+    * funnel exactly (spec-asserted), and any stream whose batch
+    * boundaries respect event-time order does too. Cross-batch
+    * OUT-OF-ORDER events meet first-touch semantics: a step event
+    * arriving after a later-ts event already advanced the machine
+    * cannot retroactively lower a step time (the machine never
+    * rewinds) — bounded lateness needs a watermark buffer, at the
     * price of lateness × rate state. Same-user step ties never advance
     * (strict `>`), matching both batch forms. */
   def streamingFunnel(events: Dataset[Event], steps: Seq[String],
@@ -1597,79 +1355,6 @@ object EventStreams {
       }
   }
 
-  final case class ActiveEstimate(bucket: Long, active_users: Double)
-
-  /** Online rolling active users (DAU/WAU) — the streaming face of
-    * [[graft.operators.Retention.rollingActive]]'s sketch mode: each
-    * (user, bucket) activity fans out map-side to the `window`
-    * bucket-ends it supports (the batch device), then a KMV sketch per
-    * bucket-end accumulates as mapGroupsWithState state — k longs per
-    * OCCUPIED BUCKET-END forever, regardless of user count or event
-    * volume, where exact streaming distinct state would grow with
-    * users × window. Emits each touched bucket-end's updated estimate
-    * every micro-batch; the estimate converges on the batch
-    * `rollingActive` answer within KMV error (~1/√k) and is
-    * arrival-order INDEPENDENT (a sketch of a set), so no time-order
-    * contract is needed — the one online event operator here that is
-    * exactly late-data-proof. */
-  def streamingRollingActive(events: Dataset[Event], bucketWidthMs: Long,
-      window: Int, k: Int = 256): Dataset[ActiveEstimate] = {
-    require(bucketWidthMs > 0 && window > 0, "positive bucket/window")
-    import events.sparkSession.implicits._
-    val sketch = new graft.ext.Sketches.BottomK(k)
-    events
-      .flatMap { e =>
-        val b = Math.floorDiv(e.ts.getTime, bucketWidthMs)
-        (0 until window).map(o => (b + o, e.user_id))
-      }
-      .toDF("bucket", "user_id")
-      .select(col("bucket"),
-        graft.ext.Sketches.hashU32(col("user_id")).as("hv"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[Array[Long], ActiveEstimate](
-        GroupStateTimeout.NoTimeout) {
-        (bucket: Long, batch: Iterator[(Long, Long)],
-            state: GroupState[Array[Long]]) =>
-          var mins = state.getOption.getOrElse(Array.emptyLongArray)
-          batch.foreach { case (_, hv) => mins = sketch.reduce(mins, hv) }
-          state.update(mins)
-          ActiveEstimate(bucket, graft.ext.Sketches.estimate(mins, k))
-      }
-  }
-
-  final case class TopEvent(key: Long, rank: Int, event_id: Long,
-      score_cents: Long)
-
-  /** Running per-key top-k: each micro-batch emits the key's current k
-    * highest-value events (value in exact cents; ties broken by smaller
-    * event id). State is the [[graft.ext.Sketches.TopK]] buffer — k
-    * (score, id) pairs per key forever, where a naive streaming rank
-    * would have to retain every event seen. The running result always
-    * equals the batch `Sketches.groupedTopK` over the stream's prefix. */
-  def streamingTopK(events: Dataset[Event], k: Int = 5)
-      : Dataset[TopEvent] = {
-    import events.sparkSession.implicits._
-    val agg = new graft.ext.Sketches.TopK(k)
-    events
-      .map(e => (e.user_id, math.floor(e.value * 100.0 + 0.5).toLong,
-        e.event_id))
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Seq[(Long, Long)], TopEvent](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: Long, batch: Iterator[(Long, Long, Long)],
-            state: GroupState[Seq[(Long, Long)]]) =>
-          var buf = state.getOption.getOrElse(Seq.empty)
-          batch.foreach { case (_, score, id) =>
-            buf = agg.reduce(buf, (score, id))
-          }
-          state.update(buf)
-          buf.iterator.zipWithIndex.map { case ((s, id), i) =>
-            TopEvent(key, i + 1, id, s)
-          }
-      }
-  }
-
   final case class FilledDay(event_type: String, day: Long,
       n_filled: Long, is_gap: Int)
 
@@ -1824,16 +1509,5 @@ object EventStreams {
           state.update(counts)
           births.iterator
       }
-  }
-
-  /** Run a streaming query over a batch of files synchronously into an
-    * in-memory sink (local smoke path): returns the materialized result
-    * table. */
-  def runToMemory(spark: SparkSession, streaming: DataFrame, name: String,
-      mode: OutputMode = OutputMode.Append): DataFrame = {
-    val q = streaming.writeStream.outputMode(mode)
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
   }
 }

@@ -139,8 +139,7 @@ object ScaleProbe {
       "chunk_32_8", "boilerplate_lines", "dedup_lines_keepfirst",
       "boilerplate_delta", "cdc_chunks", "cdc_dedup_keepfirst",
       "nb_train", "nb_classify",
-      "semantic_neardup_k256", "media_decode_1mb_rpp8",
-      "media_decode_1mb_rpp64", "media_decode_1mb_rpp500")
+      "semantic_neardup_k256")
     if (docProbes.exists(wanted)) {
     val docs = replicate(GraftSession.table(spark, sfDir, "documents")
       .select("doc_id", "text"), "doc_id", copies).cache()
@@ -706,41 +705,6 @@ object ScaleProbe {
         k = 256, iters = 1)
       Dedup.semanticNearDup(emb, "vec_id", "embedding", cents, 0.95).count()
     })
-
-    // multimodal partition sizing: ~1 MB real PNG payloads through the
-    // full decode path. One noise PNG is built once and shipped by
-    // broadcast (the DECODE cost is identical per row; generating 2 GB
-    // of distinct PNGs would just measure the generator). Decode work
-    // is bounded per row (<=64x64 luminance grid), so the variable
-    // under test is rows-per-partition — i.e. how many 1 MB payloads an
-    // executor thread holds at once.
-    {
-      val img = new java.awt.image.BufferedImage(650, 650,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val rnd = new java.util.Random(42)
-      for (y <- 0 until 650; x <- 0 until 650)
-        img.setRGB(x, y, rnd.nextInt()) // noise defeats PNG compression
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      val payload = bos.toByteArray
-      println(f"[probe] media payload bytes = ${payload.length}")
-      val bc = spark.sparkContext.broadcast(payload)
-      val nRows = 2000
-      for (rowsPerPart <- Seq(8, 64, 500)) {
-        val media = spark.range(nRows.toLong)
-          .repartition(nRows / rowsPerPart)
-          .select(col("id"), lit("img").as("modality"))
-          .withColumn("payload", lit(Array.emptyByteArray))
-        import org.apache.spark.sql.{Encoders, Row}
-        implicit val enc = Encoders.product[graft.ext.Multimodal.MediaRow]
-        val withBytes = media.map((r: Row) =>
-          graft.ext.Multimodal.MediaRow(r.getLong(0), r.getString(1),
-            bc.value))
-        time(s"media_decode_1mb_rpp$rowsPerPart")(
-          graft.ext.Multimodal.decodeFeatures(withBytes.toDF())
-            .agg(sum(col("n_bytes"))).head().getLong(0) / (1 << 20))
-      }
-    }
     } // docProbes guard
 
     // Round-14: the q197 end-to-end curation pipeline at corpus scale
@@ -1000,13 +964,9 @@ object ScaleProbe {
         .count())
     }
 
-    // SCD2 family (q124/q126 shape): full rebuild vs artifact-loaded
-    // incremental merge vs point-in-time enrich. The merge claim is
-    // the one to watch: its windowed compaction runs over
-    // |current keys| + |delta| rows only, so its bytes must sit far
-    // under the rebuild's (which shuffles the whole log once).
-    if (Seq("scd2_rebuild", "scd2_merge_delta", "scd2_enrich")
-        .exists(wanted)) {
+    // SCD2 family (q124/q126 shape): full rebuild vs point-in-time
+    // enrich against an artifact-loaded history.
+    if (Seq("scd2_rebuild", "scd2_enrich").exists(wanted)) {
       import graft.ext.Snapshot
       val evRaw = GraftSession.table(spark, sfDir, "events")
       val ev = replicate(evRaw
@@ -1019,11 +979,11 @@ object ScaleProbe {
           Seq("event_type"), "ts_us", Seq("event_id"))
         .agg(max("version_seq")).head())
       // history artifact (approxQuantile + compaction + parquet write)
-      // only when a probe that READS it is selected — scd2_rebuild
+      // only when the probe that READS it is selected — scd2_rebuild
       // alone must not pay for it
-      if (Seq("scd2_merge_delta", "scd2_enrich").exists(wanted)) {
+      if (wanted("scd2_enrich")) {
         // history over the oldest ~90% persisted to parquet (the
-        // loaded-artifact convention); the newest ~10% is the delta
+        // loaded-artifact convention)
         val cut = ev.stat.approxQuantile("ts_us", Array(0.9), 0.001)(0)
           .toLong
         val histDir = java.nio.file.Files
@@ -1032,10 +992,6 @@ object ScaleProbe {
             Seq("event_type"), "ts_us", Seq("event_id"))
           .write.mode("overwrite").parquet(histDir)
         val hist = spark.read.parquet(histDir)
-        val delta = ev.filter(col("ts_us") > cut)
-        time("scd2_merge_delta")(Snapshot.scd2Merge(hist, delta, keys,
-            Seq("event_type"), "ts_us", Seq("event_id"))
-          .agg(max("version_seq")).head())
         time("scd2_enrich")(Snapshot.enrichAsOf(
             ev.select("user_id", "event_id", "ts_us"),
             hist.withColumnRenamed("event_type", "state_type"),
@@ -1315,92 +1271,13 @@ object ScaleProbe {
       })
     }
 
-    // Layout FILES-touched probe (NOTES round-8 #1): ScaleLayoutSpec
-    // measures rows DECODED (row-group min/max pruning); at cluster
-    // scale the planner-level lever is FILE skipping — a table format
-    // (Delta/Iceberg) stores per-file column min/max at write time and
-    // never opens files whose range misses the predicate. This probe
-    // writes the same 2-dim corpus at a cluster-ish file count in
-    // three layouts and counts, per layout × slab dim, how many files
-    // a stats-aware planner would touch (file range intersects the
-    // slab). The per-file min/max aggregation below SIMULATES the
-    // stats the format would have persisted; its full scan is probe
-    // overhead, not part of the measured design.
-    // the productized file-skipping path (ext/Layout writeManifest /
-    // readPruned): one manifest build, then a 1% 2-dim slab read that
-    // opens only intersecting files — vs the same filter over the
-    // plain directory listing (row-group skipping still opens every
-    // footer)
-    if (Seq("manifest_build", "manifest_pruned_scan",
-        "manifest_full_scan").exists(wanted)) {
-      import graft.ext.Layout
-      val n = 2000000L
-      val df = spark.range(n).select(col("id"),
-        pmod(hash(col("id")), lit(100000)).cast("long").as("a"),
-        pmod(hash(col("id") * 7 + 3), lit(100000)).cast("long").as("b"))
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_probe_manifest_").toString + "/t"
-      Layout.writeZOrdered(df, Seq("a", "b"), dir, numFiles = 256)
-      timeOrRun("manifest_build")(
-        Layout.writeManifest(spark, dir, Seq("a", "b")))
-      // files-touched is a diagnostic computed OUTSIDE the timed
-      // region — timing a second full action over the pruned files
-      // would inflate the pruned row vs the single-count full row
-      time("manifest_pruned_scan")({
-        val d = Layout.readPruned(spark, dir,
-          Seq(("a", 41000.0, 42000.0), ("b", 10000.0, 90000.0)))
-        s"rows=${d.count()}"
-      })
-      val prunedFiles = Layout.readPruned(spark, dir,
-          Seq(("a", 41000.0, 42000.0), ("b", 10000.0, 90000.0)))
-        .select(input_file_name()).distinct().count()
-      println(s"[probe] manifest_pruned_scan files=$prunedFiles/256")
-      time("manifest_full_scan")({
-        spark.read.parquet(dir)
-          .filter(col("a") >= 41000 && col("a") <= 42000 &&
-            col("b") >= 10000 && col("b") <= 90000)
-          .count()
-      })
-    }
-
-    if (Seq("layout_files").exists(wanted)) {
-      import graft.ext.Layout
-      val n = 2000000L
-      val df = spark.range(n).select(col("id"),
-        pmod(hash(col("id")), lit(100000)).cast("long").as("a"),
-        pmod(hash(col("id") * 7 + 3), lit(100000)).cast("long").as("b"))
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_probe_layout_").toString
-      val files = 256
-      Layout.writeZOrdered(df, Seq("a", "b"), s"$base/z", files)
-      Layout.writeHilbertOrdered(df, Seq("a", "b"), s"$base/h", files)
-      df.repartitionByRange(files, col("a")).sortWithinPartitions("a")
-        .write.mode("overwrite").parquet(s"$base/lin")
-      def touched(dir: String, c: String, lo: Long, hi: Long): Long =
-        spark.read.parquet(dir)
-          .groupBy(input_file_name())
-          .agg(min(col(c)).as("mn"), max(col(c)).as("mx"))
-          .filter(col("mn") <= hi && col("mx") >= lo)
-          .count()
-      ranCount += 1
-      // 1% slab on each dim (domain 0..99999)
-      for ((name, dir) <- Seq(("linear_a", s"$base/lin"),
-          ("zorder", s"$base/z"), ("hilbert", s"$base/h"));
-          dim <- Seq("a", "b")) {
-        val t = touched(dir, dim, 41000L, 42000L)
-        println(f"[probe] layout_files $name%-9s slab=$dim " +
-          f"files=$t%4d / $files (n=$n)")
-      }
-    }
-
     // High-diameter CC: min-propagation pays ~diameter rounds (each a
-    // join + agg + checkpoint = a full Spark job), star contraction
-    // O(log²|V|) — the row that shows WHY the star variant exists.
+    // join + agg + checkpoint = a full Spark job).
     // 1500 disjoint chains of length 65 (diameter 64, ~97.5k edges):
     // component structure is irrelevant to round count (rounds = max
     // diameter over components), so many short-ish chains give the
     // diameter signal without a 4096-round run.
-    if (Seq("cc_minprop_d64", "cc_star_d64").exists(wanted)) {
+    if (wanted("cc_minprop_d64")) {
       val chains = 1500L
       val len = 65L
       // integer div (Spark `/` on longs is DOUBLE division — it would
@@ -1414,12 +1291,6 @@ object ScaleProbe {
       time("cc_minprop_d64")({
         val (labels, rounds) = Dedup.connectedComponentsRounds(
           pathE, "a", "b", maxIter = 200)
-        val comps = labels.select(countDistinct("comp")).head().getLong(0)
-        s"comps=$comps rounds=$rounds"
-      })
-      time("cc_star_d64")({
-        val (labels, rounds) = Dedup.connectedComponentsStarRounds(
-          pathE, "a", "b")
         val comps = labels.select(countDistinct("comp")).head().getLong(0)
         s"comps=$comps rounds=$rounds"
       })

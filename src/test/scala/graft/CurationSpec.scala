@@ -10,24 +10,6 @@ class CurationSpec extends SparkSpecBase {
   private lazy val corpus =
     (1L to 400L).map(i => (i, s"src${i % 4}")).toDF("id", "source")
 
-  test("deterministicShuffle: same order under any input partitioning") {
-    def run(parts: Int): Seq[Long] =
-      Curation.deterministicShuffle(corpus.repartition(parts), "id", "ep1")
-        .select("id").as[Long].collect().toSeq
-    val once = run(1)
-    assert(once.sorted == (1L to 400L)) // a permutation, nothing lost
-    assert(once != (1L to 400L)) // and actually permuted
-    assert(run(7) == once && run(32) == once)
-  }
-
-  test("different seeds give different permutations; same seed repeats") {
-    def perm(seed: String): Seq[Long] =
-      Curation.deterministicShuffle(corpus, "id", seed)
-        .select("id").as[Long].collect().toSeq
-    assert(perm("ep1") == perm("ep1"))
-    assert(perm("ep1") != perm("ep2"))
-  }
-
   test("groupQuota: deterministic top-k per group, ties break on the " +
       "caller's total order, partitioning-invariant") {
     import org.apache.spark.sql.functions.col
@@ -345,58 +327,6 @@ class CurationSpec extends SparkSpecBase {
       Seq("src0" -> 2.5, "src1" -> 0.0, "src2" -> 3.0), "mix2")
     assert(up.exceptAll(again).isEmpty && again.exceptAll(up).isEmpty)
     up.unpersist()
-  }
-
-  test("exportShards: complete, disjoint, per-shard deterministic order") {
-    val dir = tmpDir("shards")
-    Curation.exportShards(corpus, "id", "ep1", 4, dir)
-    val dirs = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("shard=")).map(_.getName).sorted
-    assert(dirs.toSeq == Seq("shard=0", "shard=1", "shard=2", "shard=3"))
-    val all = scala.collection.mutable.ArrayBuffer[Long]()
-    for (s <- 0 until 4) {
-      // no trailing sort: row order must be exactly as the writer left it
-      val ids = spark.read.parquet(s"$dir/shard=$s")
-        .select("id").as[Long].collect().toSeq
-      val expected = corpus
-        .filter(Curation.shard("ep1", col("id"), 4) === s)
-        .orderBy(Curation.shuffleKey("ep1", col("id")), col("id"))
-        .select("id").as[Long].collect().toSeq
-      assert(ids == expected, s"shard $s order/content")
-      all ++= ids
-    }
-    assert(all.sorted.toSeq == (1L to 400L)) // complete and disjoint
-  }
-
-  test("exportPacked: shard files are the concatenated token stream") {
-    val docs = (1L to 200L).map(i => (i, 1 + (i % 23).toInt))
-      .toDF("id", "toks")
-    val dir = tmpDir("packed")
-    Curation.exportPacked(docs, "id", "toks", budget = 32L,
-      seed = "pk1", nShards = 4, path = dir)
-    for (s <- 0 until 4) {
-      // no trailing sort: the written order IS the stream order
-      val rows = spark.read.parquet(s"$dir/shard=$s")
-        .select("id", "toks", "pack", "pack_offset")
-        .collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
-        .toSeq
-      assert(rows.nonEmpty)
-      // sequential read reproduces the running token count exactly
-      var cum = 0L
-      rows.foreach { case (id, toks, pack, off) =>
-        assert(pack == cum / 32 && off == cum % 32, s"doc $id shard $s")
-        cum += toks
-      }
-    }
-    // byte-identical re-run (same seed → same artifact)
-    val first = (0 until 4).map(s => spark.read
-      .parquet(s"$dir/shard=$s").select("id").as[Long].collect().toSeq)
-    Curation.exportPacked(docs.repartition(7), "id", "toks", budget = 32L,
-      seed = "pk1", nShards = 4, path = dir)
-    val again = (0 until 4).map(s => spark.read
-      .parquet(s"$dir/shard=$s").select("id").as[Long].collect().toSeq)
-    assert(again == first)
   }
 
   test("contamination: shingle-overlap fraction against a broadcast eval set") {
@@ -962,8 +892,9 @@ class CurationSpec extends SparkSpecBase {
   test("unimaxAllocation: hand case — capped prefix + even-split tail") {
     val df = Seq(("g0", 10L), ("g1", 20L), ("g2", 100L))
       .toDF("grp", "n")
-    val got = Curation.unimaxAllocation(df, "grp", "n",
-        epochCap = 2L, budget = 100L)
+    // total 130 tokens; budget 100 = 100/130 of the corpus
+    val got = Curation.unimaxAllocationOfTotal(df, "grp", "n",
+        epochCap = 2L, budgetNum = 100L, budgetDen = 130L)
       .orderBy("grp")
       .collect().map(r => (r.getString(0), r.getLong(3), r.getLong(4)))
     // caps 20/40/200; g0,g1 capped, g2 takes the leftover 40
@@ -986,8 +917,10 @@ class CurationSpec extends SparkSpecBase {
       val docRows = sizes.flatMap { case (g, n) =>
         if (n <= 1) Seq((g, n)) else Seq((g, n / 2), (g, n - n / 2))
       }
-      val got = Curation.unimaxAllocation(docRows.toDF("grp", "n"),
-          "grp", "n", cap, budget)
+      // an absolute budget B is the fraction B/total of the corpus
+      val total = math.max(sizes.map(_._2).sum, 1L)
+      val got = Curation.unimaxAllocationOfTotal(docRows.toDF("grp", "n"),
+          "grp", "n", cap, budgetNum = budget, budgetDen = total)
         .collect().map(r => r.getString(0) -> r.getLong(3)).toMap
       val want = unimaxSequential(sizes, cap, budget)
       assert(got == want, s"cap=$cap budget=$budget sizes=$sizes")

@@ -44,6 +44,34 @@ class EntrySmokeSpec extends SparkSpecBase {
     assert(pinned.size == 1, s"REPARTITION_BY_NUM shuffles: $pinned")
   }
 
+  test("q265 equals its batch twin q35 and runs no empty micro-batch") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val inputRows = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit =
+        inputRows.add(e.progress.numInputRows)
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = ended.countDown()
+    }
+    spark.streams.addListener(listener)
+    val streamed = try {
+      val rows = SparkEntry.queries("q265_stream_stream_neardup")(spark, sf)
+        .collect().map(_.toSeq).toSeq
+      // progress events arrive on the listener bus before the
+      // termination event
+      assert(ended.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      rows
+    } finally spark.streams.removeListener(listener)
+    val batch = SparkEntry.queries("q35_minhash_lsh")(spark, sf)
+      .collect().map(_.toSeq).toSeq
+    assert(batch.nonEmpty && streamed == batch)
+    val counts = inputRows.toArray.toSeq
+    assert(counts.nonEmpty, "no micro-batch progress was reported")
+    assert(!counts.contains(0L), s"micro-batch input rows: $counts")
+  }
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs at sf0.001") {
       val df = fn(spark, sf)

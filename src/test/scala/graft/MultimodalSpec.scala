@@ -1,114 +1,9 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.ext.Multimodal
 
 class MultimodalSpec extends SparkSpecBase {
   import spark.implicits._
-
-  private lazy val media = Multimodal.asMedia(
-    Seq((1L, "abcdefghij"), (2L, "xyz"), (3L, "")).toDF("id", "blob"),
-    "id", "blob", "image")
-
-  test("asMedia: binary payload + metadata columns") {
-    val r = media.orderBy("id").collect()
-    assert(media.schema("payload").dataType.typeName == "binary")
-    assert(r(0).getAs[Int]("n_bytes") == 10)
-    assert(r(2).getAs[Int]("n_bytes") == 0)
-    // checksum matches md5 of the text bytes
-    val want = Seq((1L, "abcdefghij"), (2L, "xyz")).toDF("id", "t")
-      .select($"id", md5($"t").as("m")).collect()
-      .map(x => x.getLong(0) -> x.getString(1)).toMap
-    assert(r(0).getAs[String]("checksum") == want(1L))
-  }
-
-  test("decodeFeatures: mapPartitions batch decode, deterministic stub") {
-    val f = Multimodal.decodeFeatures(media).collect()
-      .map(x => x.id -> x).toMap
-    assert(f(1L).n_bytes == 10 && f(1L).feature.length == 8)
-    assert(f(1L).checksum == media.filter($"id" === 1)
-      .select("checksum").head().getString(0))
-    // deterministic: same input → same features on re-run
-    val again = Multimodal.decodeFeatures(media).collect().map(x => x.id -> x).toMap
-    assert(f(1L).feature.toSeq == again(1L).feature.toSeq)
-    assert(f(3L).n_bytes == 0) // empty payload handled
-  }
-
-  test("decodeFeatures: real PNG/JPEG decode via javax.imageio") {
-    // 37x19 PNG: left half black, right half white → bimodal histogram
-    def png(w: Int, h: Int, fmt: String): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until h; x <- 0 until w)
-        img.setRGB(x, y, if (x < w / 2) 0x000000 else 0xffffff)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, fmt, bos)
-      bos.toByteArray
-    }
-    val rows = Seq(
-      (1L, png(37, 19, "png")), (2L, png(64, 48, "jpg")),
-      (3L, "not an image at all".getBytes("UTF-8")))
-    val media = Multimodal.asMedia(rows.toDF("id", "blob"), "id", "blob", "image")
-    val f = Multimodal.decodeFeatures(media).collect().map(x => x.id -> x).toMap
-    assert(f(1L).width == 37 && f(1L).height == 19)
-    assert(f(2L).width == 64 && f(2L).height == 48)
-    // black|white split → mass concentrated in the darkest + brightest bins
-    val hist = f(1L).feature
-    assert(math.abs(hist.sum - 1f) < 1e-5f)
-    assert(hist(0) > 0.4f && hist(7) > 0.4f)
-    // non-image bytes degrade to the deterministic fake, not a failure
-    assert(f(3L).n_bytes == 19 && f(3L).feature.length == 8)
-  }
-
-  test("phash64: twins/resized/perturbed pair, distinct images don't") {
-    // smooth multi-frequency luminance field: faithful under resize
-    // (area-averaging on both sizes sees the same underlying signal)
-    // yet structured enough that distinct phases give distinct hashes
-    def scene(w: Int, h: Int, phase: Double, tweak: Int = 0): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until h; x <- 0 until w) {
-        val u = x.toDouble / w; val v = y.toDouble / h
-        val l0 = 128 + 55 * math.sin(6.2 * u + phase) *
-          math.cos(4.4 * v - phase) + 35 * math.sin(11.0 * (u + v) + 2 * phase)
-        val l = math.max(0, math.min(255, l0.toInt +
-          (if (tweak != 0 && x < 3 && y < 3) tweak else 0)))
-        img.setRGB(x, y, (l << 16) | (l << 8) | l)
-      }
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      bos.toByteArray
-    }
-    val rows = Seq(
-      (10L, scene(128, 96, 0.0)),           // original
-      (11L, scene(128, 96, 0.0)),           // byte-identical twin
-      (12L, scene(256, 192, 0.0)),          // 2x-resized twin
-      (13L, scene(128, 96, 0.0, tweak = 60)), // corner-perturbed
-      (20L, scene(128, 96, 2.1)),           // distinct scene
-      (21L, scene(128, 96, 4.0)),           // distinct scene
-      (30L, "definitely not an image".getBytes("UTF-8")))
-    val media = Multimodal.asMedia(rows.toDF("id", "blob"), "id", "blob",
-      "image")
-    val hashed = Multimodal.withPhash(media)
-    val hs = hashed.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // non-image rows drop (no perceptual identity)
-    assert(!hs.contains(30L) && hs.size == 6)
-    def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-    assert(ham(hs(10L), hs(11L)) == 0, "identical twin must hash equal")
-    assert(ham(hs(10L), hs(12L)) <= 3,
-      s"resized twin must stay in band: ${ham(hs(10L), hs(12L))}")
-    assert(ham(hs(10L), hs(13L)) <= 3,
-      s"small perturbation must stay in band: ${ham(hs(10L), hs(13L))}")
-    assert(ham(hs(10L), hs(20L)) > 3 && ham(hs(10L), hs(21L)) > 3 &&
-      ham(hs(20L), hs(21L)) > 3, "distinct scenes must not pair")
-    // end-to-end pairs: the twin cluster {10,11,12,13}, nothing else
-    val pairs = graft.ext.Dedup.hammingNearDup(hashed, "id", "phash")
-      .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((10L, 11L)) && pairs.contains((10L, 12L)) &&
-      pairs.contains((10L, 13L)))
-    assert(pairs.forall { case (a, b) => Set(10L, 11L, 12L, 13L)(a) &&
-      Set(10L, 11L, 12L, 13L)(b) }, s"unexpected pairs: $pairs")
-  }
 
   test("hammingNearDup: banded == all-pairs; phashFromGrid properties") {
     // banding completeness/soundness vs brute force over random sigs
@@ -146,104 +41,7 @@ class MultimodalSpec extends SparkSpecBase {
     assert(g4.indices.count(i => g4(i) != g5(i)) == 1)
   }
 
-  test("decodeImage: decompression-bomb headers degrade, never decode") {
-    // real PNG with the IHDR width/height bytes patched to 50000x50000:
-    // the header-declared raster (~10 GB) must be rejected BEFORE
-    // read(0) allocates it
-    val img = new java.awt.image.BufferedImage(4, 4,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    val bytes = bos.toByteArray
-    val big = 50000
-    for (i <- 0 until 4) { // IHDR: width at offset 16, height at 20
-      bytes(16 + i) = ((big >> (24 - 8 * i)) & 0xff).toByte
-      bytes(20 + i) = ((big >> (24 - 8 * i)) & 0xff).toByte
-    }
-    assert(Multimodal.decodeImage(bytes).isEmpty)
-    // and the row-level decode falls back to the fake instead of OOMing
-    val f = Multimodal.decodeFeatures(Multimodal.asMedia(
-      Seq((9L, bytes)).toDF("id", "blob"), "id", "blob", "image"))
-      .collect().head
-    assert(f.feature.length == 8 && f.width <= 64)
-  }
-
-  test("decodeAudio: real WAV decode via javax.sound.sampled") {
-    // 0.5 s, 8 kHz mono 16-bit PCM sine at full scale: RMS = 1/sqrt(2)
-    def wav(rateHz: Int, seconds: Double, amp: Double,
-        silentSecondHalf: Boolean): Array[Byte] = {
-      val n = (rateHz * seconds).toInt
-      val pcm = new Array[Byte](2 * n)
-      for (i <- 0 until n) {
-        val live = !silentSecondHalf || i < n / 2
-        val s = if (live)
-          (amp * 32767 * math.sin(2 * math.Pi * 440 * i / rateHz)).toInt
-        else 0
-        pcm(2 * i) = (s & 0xff).toByte
-        pcm(2 * i + 1) = ((s >> 8) & 0xff).toByte
-      }
-      val fmt = new javax.sound.sampled.AudioFormat(rateHz.toFloat, 16, 1, true, false)
-      val ais = new javax.sound.sampled.AudioInputStream(
-        new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.sound.sampled.AudioSystem.write(ais,
-        javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-      bos.toByteArray
-    }
-    val rows = Seq(
-      (1L, wav(8000, 0.5, 1.0, silentSecondHalf = false)),
-      (2L, wav(16000, 0.25, 0.5, silentSecondHalf = true)),
-      (3L, "definitely not audio".getBytes("UTF-8")))
-    val media = Multimodal.asMedia(rows.toDF("id", "blob"), "id", "blob", "audio")
-    val f = Multimodal.decodeFeatures(media).collect().map(x => x.id -> x).toMap
-    // true header values, not fakes
-    assert(f(1L).sample_rate == 8000 && f(1L).n_channels == 1)
-    assert(math.abs(f(1L).duration_ms - 500L) <= 1)
-    assert(f(2L).sample_rate == 16000 && f(2L).duration_ms == 250L)
-    // full-scale sine RMS ~ 0.707 in every eighth
-    assert(f(1L).feature.forall(v => math.abs(v - 0.707f) < 0.02f))
-    // envelope localizes energy: first half live, second half silent
-    val env = f(2L).feature
-    assert(env.take(4).forall(_ > 0.3f) && env.drop(4).forall(_ < 0.01f))
-    // audio rows leave image fields at 0; non-audio degrades to the fake
-    assert(f(1L).width == 0 && f(1L).height == 0)
-    assert(f(3L).sample_rate == 0 && f(3L).feature.length == 8)
-    // determinism across re-runs
-    val again = Multimodal.decodeFeatures(media).collect().map(x => x.id -> x).toMap
-    assert(f(1L).feature.toSeq == again(1L).feature.toSeq)
-  }
-
-  test("audioFingerprint64: volume-invariant envelope-delta bits on real WAVs") {
-    // amplitude-MODULATED carrier: the 64-bin RMS envelope rises and
-    // falls with the modulator, giving well-separated derivative signs
-    def wav(amp: Double, modCycles: Double, phase: Double): Array[Byte] = {
-      val rateHz = 8000; val n = 4000
-      val pcm = new Array[Byte](2 * n)
-      for (i <- 0 until n) {
-        val m = 0.55 + 0.45 * math.sin(2 * math.Pi * modCycles * i / n + phase)
-        val s = (amp * m * 32767 * math.sin(2 * math.Pi * 440 * i / rateHz)).toInt
-        pcm(2 * i) = (s & 0xff).toByte
-        pcm(2 * i + 1) = ((s >> 8) & 0xff).toByte
-      }
-      val fmt = new javax.sound.sampled.AudioFormat(rateHz.toFloat, 16, 1, true, false)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.sound.sampled.AudioSystem.write(
-        new javax.sound.sampled.AudioInputStream(
-          new java.io.ByteArrayInputStream(pcm), fmt, n.toLong),
-        javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-      bos.toByteArray
-    }
-    def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-    val base = Multimodal.audioFingerprint64(wav(0.9, 3, 0)).get
-    // volume-scaled twin: strict RMS inequalities survive positive
-    // scaling up to 16-bit quantization at the modulator's flat spots
-    val half = Multimodal.audioFingerprint64(wav(0.45, 3, 0)).get
-    assert(ham(base, half) <= 3, s"volume twin hamming ${ham(base, half)}")
-    // a different modulation shape is a different clip
-    val other = Multimodal.audioFingerprint64(wav(0.9, 7, 1.3)).get
-    assert(ham(base, other) > 3, s"distinct clip hamming ${ham(base, other)}")
-    assert(Multimodal.audioFingerprint64("not audio".getBytes("UTF-8")).isEmpty)
-    // envelope-delta bit semantics, exactly
+  test("fingerprintFromEnvelope: envelope-delta bit semantics, exactly") {
     assert(Multimodal.fingerprintFromEnvelope(
       Array.tabulate(64)(_.toDouble)) == Long.MaxValue) // bits 0..62 set
     assert(Multimodal.fingerprintFromEnvelope(
@@ -274,79 +72,5 @@ class MultimodalSpec extends SparkSpecBase {
       if java.lang.Long.bitCount(fp(a) ^ fp(b)) <= 3
     } yield (a, b)).toSet
     assert(got == want && want.nonEmpty, s"banded=${got.size} brute=${want.size}")
-  }
-
-  test("decodeVideoMeta: real MP4 (ISO BMFF) header parse") {
-    // hand-built per ISO 14496-12: ftyp + moov(mvhd + video trak +
-    // audio trak) + mdat — we control the writer, so every expected
-    // value is known exactly
-    def box(typ: String, payload: Array[Byte]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(8 + payload.length)
-      bb.putInt(8 + payload.length)
-      bb.put(typ.getBytes("US-ASCII")); bb.put(payload)
-      bb.array
-    }
-    val mvhd = java.nio.ByteBuffer.allocate(100) // v0 layout
-    mvhd.putInt(12, 1000) // timescale
-    mvhd.putInt(16, 5000) // duration → 5000 ms
-    def tkhd(w: Int, h: Int): Array[Byte] = {
-      val b = java.nio.ByteBuffer.allocate(84) // v0 layout
-      b.putInt(76, w << 16) // 16.16 fixed
-      b.putInt(80, h << 16)
-      box("tkhd", b.array)
-    }
-    val mp4 = box("ftyp", "isomiso2".getBytes("US-ASCII")) ++
-      box("moov", box("mvhd", mvhd.array) ++
-        box("trak", tkhd(640, 360)) ++ box("trak", tkhd(0, 0))) ++
-      box("mdat", Array.tabulate(300)(_.toByte))
-    val rows = Seq((1L, mp4),
-      (2L, mp4.take(40)), // truncated: no moov → fake
-      (3L, "certainly not a video container".getBytes("UTF-8")))
-    val media = Multimodal.asMedia(rows.toDF("id", "blob"), "id", "blob", "video")
-    val f = Multimodal.decodeFeatures(media).collect().map(x => x.id -> x).toMap
-    assert(f(1L).width == 640 && f(1L).height == 360)
-    assert(f(1L).duration_ms == 5000L)
-    assert(f(1L).n_channels == 2) // declared track count
-    assert(f(1L).sample_rate == 0)
-    assert(math.abs(f(1L).feature.sum - 1f) < 1e-4f)
-    // malformed / non-container bytes degrade to the deterministic fake
-    assert(f(2L).duration_ms == 0L && f(3L).duration_ms == 0L)
-    val again = Multimodal.decodeFeatures(media).collect().map(x => x.id -> x).toMap
-    assert(f(1L).feature.toSeq == again(1L).feature.toSeq)
-  }
-
-  test("decodeVideoMeta: real AVI (RIFF) header parse") {
-    def le(i: Int): Array[Byte] = {
-      val b = java.nio.ByteBuffer.allocate(4)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      b.putInt(i); b.array
-    }
-    val avih = java.nio.ByteBuffer.allocate(56)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    avih.putInt(0, 40000)  // us/frame (25 fps)
-    avih.putInt(16, 250)   // frames → 10 s
-    avih.putInt(24, 2)     // streams
-    avih.putInt(32, 320)   // width
-    avih.putInt(36, 240)   // height
-    val avihChunk = "avih".getBytes("US-ASCII") ++ le(56) ++ avih.array
-    val hdrl = "LIST".getBytes("US-ASCII") ++ le(4 + avihChunk.length) ++
-      "hdrl".getBytes("US-ASCII") ++ avihChunk
-    val body = "AVI ".getBytes("US-ASCII") ++ hdrl
-    val avi = "RIFF".getBytes("US-ASCII") ++ le(body.length) ++ body
-    val f = Multimodal.decodeFeatures(Multimodal.asMedia(
-      Seq((7L, avi)).toDF("id", "blob"), "id", "blob", "video"))
-      .collect().head
-    assert(f.width == 320 && f.height == 240)
-    assert(f.duration_ms == 10000L)
-    assert(f.n_channels == 2)
-  }
-
-  test("sampleFrames: explode shape with stride") {
-    val frames = Multimodal.sampleFrames(media.filter($"id" === 1), 3, 2)
-    val idx = frames.select("frame_idx").as[Int].collect().sorted.toSeq
-    assert(idx == Seq(0, 2)) // 10 bytes / 3 = 3 frames, stride 2 → 0, 2
-    val f0 = frames.filter($"frame_idx" === 0).select("frame").head()
-      .getAs[Array[Byte]](0)
-    assert(new String(f0) == "abc")
   }
 }

@@ -578,7 +578,7 @@ class RangesSpec extends SparkSpecBase {
     assert(plan.contains("BroadcastHashJoin"), plan)
   }
 
-  test("overlapSemiJoin/overlapAntiJoin partition the left side exactly") {
+  test("overlapAntiJoin: exactly the left rows with no overlapJoin partner") {
     val left = spark.range(2000).select(
       (col("id") % 3).as("k"),
       ((col("id") * 17) % 997).as("s1"),
@@ -589,22 +589,15 @@ class RangesSpec extends SparkSpecBase {
       ((col("id") * 29) % 997).as("s2"),
       ((col("id") * 29) % 997 + 1 + col("id") % 40).as("e2"),
       col("id").as("rid"))
-    val semi = RangeJoin.overlapSemiJoin(left, right, Seq("k"),
-      "s1", "e1", "s2", "e2", leftId = "lid", width = 64L)
-      .select("lid").as[Long].collect().toSet
     val anti = RangeJoin.overlapAntiJoin(left, right, Seq("k"),
       "s1", "e1", "s2", "e2", leftId = "lid", width = 64L)
       .select("lid").as[Long].collect().toSet
-    // exact partition of the left side, each row exactly once
-    assert((semi & anti).isEmpty && semi.size + anti.size == 2000)
-    assert(semi.nonEmpty && anti.nonEmpty)
-    // ground truth: distinct left ids of the full pairing join
-    val want = RangeJoin.overlapJoin(left, right, Seq("k"),
+    // ground truth: left ids minus the distinct left ids of the full
+    // pairing join
+    val matched = RangeJoin.overlapJoin(left, right, Seq("k"),
       "s1", "e1", "s2", "e2", width = 64L)
       .select("lid").as[Long].collect().toSet
-    assert(semi == want)
-    // semi keeps each matched row ONCE even with many partners
-    assert(RangeJoin.overlapSemiJoin(left, right, Seq("k"),
-      "s1", "e1", "s2", "e2", "lid", 64L).count() == semi.size)
+    assert(matched.nonEmpty && anti.nonEmpty)
+    assert(anti == (0L until 2000L).toSet -- matched)
   }
 }

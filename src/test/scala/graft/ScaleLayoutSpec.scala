@@ -1,188 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.{Layout, Skew}
+import graft.ext.Skew
 
-/** Pins the physical-layout behaviors the 100 TB design relies on:
-  * bucketed co-located joins (no shuffle exchange) and salted
-  * aggregation equivalence. */
+/** Pins the skew-handling behaviors the 100 TB design relies on:
+  * salted aggregation and join equivalence, bloom-prefiltered joins. */
 class ScaleLayoutSpec extends SparkSpecBase {
   import spark.implicits._
-
-  test("bucketed tables join without a shuffle exchange") {
-    val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    val ord = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    graft.ext.Layout.writeBucketed(li, "li_bucketed", "l_orderkey", 8)
-    graft.ext.Layout.writeBucketed(ord, "ord_bucketed", "o_orderkey", 8)
-
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val j = spark.table("li_bucketed")
-        .join(spark.table("ord_bucketed"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy("o_orderstatus").count()
-      val plan = j.queryExecution.executedPlan.toString
-      // the join itself must not repartition either side; the only
-      // exchange allowed is the one for the final tiny groupBy
-      val joinSection = plan.split("SortMergeJoin|ShuffledHashJoin").last
-      assert(!joinSection.contains("Exchange hashpartitioning"), plan)
-      assert(j.collect().map(_.getLong(1)).sum == li.count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
-  test("z-order layout prunes scans on BOTH clustered dimensions") {
-    import graft.ext.Layout
-    // two independent uniform dims: a single-dim sort can serve only
-    // one of them; z-order must serve both
-    val n = 200000L
-    val df = spark.range(n).select(col("id"),
-      pmod(hash(col("id")), lit(100000)).cast("long").as("a"),
-      pmod(hash(col("id") * 7 + 3), lit(100000)).cast("long").as("b"))
-    val zdir = tmpDir("zorder")
-    val ldir = tmpDir("linear")
-    // granularity = the file count here (each small file is one row
-    // group): a 1-D slab predicate intersects ~sqrt(F) of F files
-    // under 2-D z-order, so F=64 → ~1/8 of the data per dim
-    Layout.writeZOrdered(df, Seq("a", "b"), zdir, numFiles = 64)
-    df.repartitionByRange(64, col("a")).sortWithinPartitions("a")
-      .write.mode("overwrite").parquet(ldir)
-
-    // rows DECODED by the scan (post row-group/page pruning, pre
-    // residual filter) — the metric min/max stats actually move
-    def scannedRows(dir: String, pred: org.apache.spark.sql.Column): Long = {
-      val q = spark.read.parquet(dir).filter(pred)
-      q.collect()
-      q.queryExecution.executedPlan.collectLeaves()
-        .map(_.metrics("numOutputRows").value).sum
-    }
-    val predA = col("a") between (41000, 42000)
-    val predB = col("b") between (41000, 42000)
-    // same answers under every layout, first
-    val wantA = df.filter(predA).count()
-    val wantB = df.filter(predB).count()
-    assert(spark.read.parquet(zdir).filter(predA).count() == wantA)
-    assert(spark.read.parquet(zdir).filter(predB).count() == wantB)
-    // the linear layout prunes its sort dim but reads ~everything for
-    // the other; z-order must prune BOTH well below the linear b-scan
-    val zA = scannedRows(zdir, predA)
-    val zB = scannedRows(zdir, predB)
-    val lB = scannedRows(ldir, predB)
-    assert(lB > n / 2,
-      s"control broken: linear-by-a should scan ~all rows for b ($lB)")
-    // margins are deliberately loose: (1) the low-order interleave dim
-    // (b here) is inherently the weaker prune — its slab crosses ~2x
-    // the z-segments of the high-order dim (measured ~31k vs ~52k of
-    // 200k at 64 files); (2) repartitionByRange samples with an
-    // rddId-seeded RNG, so file boundaries (and exact scan counts)
-    // jitter a few percent run to run. 3x-on-both is the stable claim.
-    assert(zA < lB / 3 && zB < lB / 3,
-      s"z-order must prune both dims: zA=$zA zB=$zB vs linear-b=$lB")
-  }
-
-  test("manifest file skipping: exact rows, fewer files, stale fails loud") {
-    import graft.ext.Layout
-    val n = 100000L
-    val df = spark.range(n).select(col("id"),
-      pmod(hash(col("id")), lit(100000)).cast("long").as("a"),
-      pmod(hash(col("id") * 7 + 3), lit(100000)).cast("long").as("b"))
-    val dir = tmpDir("manifest") + "/t"
-    Layout.writeZOrdered(df, Seq("a", "b"), dir, numFiles = 32)
-    Layout.writeManifest(spark, dir, Seq("a", "b"))
-    // manifest is invisible to plain readers (underscore convention)
-    assert(spark.read.parquet(dir).count() == n)
-    def ids(d: org.apache.spark.sql.DataFrame) =
-      d.select("id").as[Long].collect().toSet
-    // pruned scan == plain filter, exactly — on one dim and on both
-    val want1 = ids(spark.read.parquet(dir)
-      .filter(col("a") >= 41000 && col("a") <= 42000))
-    val got1df = Layout.readPruned(spark, dir, Seq(("a", 41000.0, 42000.0)))
-    assert(ids(got1df) == want1 && want1.nonEmpty)
-    val want2 = ids(spark.read.parquet(dir)
-      .filter(col("a") >= 41000 && col("a") <= 42000 &&
-        col("b") >= 10000 && col("b") <= 90000))
-    assert(ids(Layout.readPruned(spark, dir,
-      Seq(("a", 41000.0, 42000.0), ("b", 10000.0, 90000.0)))) == want2)
-    // FILE skipping is real: the pruned plan reads fewer than half the
-    // files (1% slab on a 2-D z-order over 32 files)
-    val touched = got1df.select(input_file_name()).distinct().count()
-    assert(touched < 16, s"touched $touched of 32 files")
-    // empty intersection: empty result, schema intact, no crash
-    val none = Layout.readPruned(spark, dir, Seq(("a", -50.0, -10.0)))
-    assert(none.count() == 0 &&
-      none.schema == spark.read.parquet(dir).schema)
-    // unknown column fails loudly
-    intercept[IllegalArgumentException] {
-      Layout.readPruned(spark, dir, Seq(("zzz", 0.0, 1.0)))
-    }
-    // an overwrite wipes the manifest with the directory → the missing-
-    // manifest guard fires (loud, never silent)
-    df.limit(500).repartition(2).write.mode("overwrite")
-      .parquet(dir + "2")
-    val errNo = intercept[IllegalArgumentException] {
-      Layout.readPruned(spark, dir + "2", Seq(("a", 0.0, 1e9)))
-    }
-    assert(errNo.getMessage.contains("writeManifest"))
-    Layout.writeManifest(spark, dir + "2", Seq("a"))
-    assert(Layout.readPruned(spark, dir + "2",
-      Seq(("a", 0.0, 1e9))).count() == 500)
-    // stale manifest (a data file vanished underneath it) fails loudly
-    val gone = new java.io.File(dir + "2").listFiles()
-      .filter(f => f.getName.startsWith("part-") &&
-        f.getName.endsWith(".parquet")).head
-    assert(gone.delete())
-    val err = intercept[IllegalArgumentException] {
-      Layout.readPruned(spark, dir + "2", Seq(("a", 0.0, 1e9)))
-    }
-    assert(err.getMessage.contains("stale"))
-  }
-
-  test("hilbertValue is a true Hilbert curve; prunes like z-order") {
-    import graft.ext.Layout
-    // ground-truth property check on the FULL 16x16 grid (bits=4):
-    // a Hilbert index is a bijection onto 0..n^2-1 whose consecutive
-    // cells are Manhattan-adjacent — the defining locality property,
-    // checked directly instead of trusting the bit-twiddle
-    val bits = 4
-    val side = 1 << bits
-    val grid = spark.range(side.toLong * side).select(
-      (col("id") / side).cast("long").as("x"),
-      (col("id") % side).cast("long").as("y"))
-    // min/max normalization maps 0..15 onto buckets 0..(2^bits-1)
-    // exactly when the data spans the full range — it does here
-    val hv = Layout.hilbertValue(grid, Seq("x", "y"), bits)
-    val cells = grid.select(col("x"), col("y"), hv.as("d"))
-      .collect().map(r => (r.getLong(2), (r.getLong(0), r.getLong(1))))
-      .sortBy(_._1)
-    assert(cells.map(_._1).toSeq == (0L until side.toLong * side),
-      "hilbert d must be a bijection onto 0..n^2-1")
-    cells.sliding(2).foreach { case Array((d1, (x1, y1)), (_, (x2, y2))) =>
-      assert(math.abs(x1 - x2) + math.abs(y1 - y2) == 1,
-        s"cells at d=$d1,${d1 + 1} not adjacent: ($x1,$y1)->($x2,$y2)")
-    }
-    // and the layout prunes at least as well as the z-order bound
-    val n = 200000L
-    val df = spark.range(n).select(col("id"),
-      pmod(hash(col("id")), lit(100000)).cast("long").as("a"),
-      pmod(hash(col("id") * 7 + 3), lit(100000)).cast("long").as("b"))
-    val hdir = tmpDir("hilbert")
-    Layout.writeHilbertOrdered(df, Seq("a", "b"), hdir, numFiles = 64)
-    def scanned(pred: org.apache.spark.sql.Column): Long = {
-      val q = spark.read.parquet(hdir).filter(pred)
-      q.collect()
-      q.queryExecution.executedPlan.collectLeaves()
-        .map(_.metrics("numOutputRows").value).sum
-    }
-    val predA = col("a") between (41000, 42000)
-    val predB = col("b") between (41000, 42000)
-    assert(spark.read.parquet(hdir).filter(predA).count() ==
-      df.filter(predA).count())
-    val hA = scanned(predA)
-    val hB = scanned(predB)
-    info(s"hilbert scanned: a-slab=$hA b-slab=$hB of $n")
-    assert(hA < n / 3 && hB < n / 3,
-      s"hilbert layout must prune both dims: hA=$hA hB=$hB")
-  }
 
   test("salted aggregation == plain aggregation") {
     val df = spark.range(20000)
@@ -289,38 +113,6 @@ class ScaleLayoutSpec extends SparkSpecBase {
     val smallStr = small.select(col("k").cast("string").as("k"), col("w"))
     intercept[IllegalArgumentException] {
       Skew.bloomPrefilteredJoin(bigInt, smallStr, Seq("k"))
-    }
-  }
-
-  test("compact: ceil(bytes/target) files, content and clustering kept") {
-    val src = tmpDir("compact_src") + "/t"
-    val dst = tmpDir("compact_dst") + "/t"
-    spark.range(200000).select(col("id"), (col("id") % 97).as("k"))
-      .repartition(64) // the small-files regime: 64 tiny parquet files
-      .write.mode("overwrite").parquet(src)
-    def parts(p: String): Seq[java.io.File] =
-      new java.io.File(p).listFiles.toSeq
-        .filter(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-    val srcFiles = parts(src)
-    assert(srcFiles.length == 64)
-    val bytes = srcFiles.map(_.length).sum
-    val n = Layout.compact(spark, src, dst, targetBytes = bytes / 4 + 1,
-      sortCols = Seq("id"))
-    assert(n == 4 && parts(dst).length == n)
-    // nothing lost, nothing duplicated
-    assert(spark.read.parquet(dst).select("id").as[Long].collect().sorted
-      .toSeq == (0L until 200000L))
-    // the sorted rewrite keeps range-clustering: per-file id ranges
-    // are disjoint, so min/max skipping on id survives compaction
-    val ranges = parts(dst).map { f =>
-      val d = spark.read.parquet(f.getAbsolutePath)
-        .agg(min("id"), max("id")).head()
-      (d.getLong(0), d.getLong(1))
-    }.sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Seq(a, b) => assert(a._2 < b._1, s"overlapping files: $a $b")
-      case _ =>
     }
   }
 }

@@ -232,29 +232,4 @@ class SessionizeSpec extends SparkSpecBase {
     assert(exchanges == 1, s"single-pass funnel must shuffle once:\n$plan")
     assert(!plan.contains("Join"), "single-pass funnel must not join")
   }
-
-  test("funnelAuto: staged plan at K<=6, single-pass plan above, same rows") {
-    import graft.operators.Funnel
-    val ev = Seq(
-      (1L, "s1", 10L), (1L, "s2", 20L), (1L, "s3", 30L), (1L, "s4", 40L),
-      (1L, "s5", 50L), (1L, "s6", 60L), (1L, "s7", 70L),
-      (2L, "s1", 5L), (2L, "s3", 6L) // stalls at s2
-    ).toDF("user_id", "event_type", "ts")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.toSeq.map(Option(_))).toSet
-    // above the threshold: dispatches to the one-shuffle state machine
-    val long = Seq("s1", "s2", "s3", "s4", "s5", "s6", "s7")
-    val auto7 = Funnel.funnelAuto(ev, "user_id", "event_type", "ts", long)
-    val plan7 = auto7.queryExecution.executedPlan.toString()
-    assert(!plan7.contains("Join"), "auto at 7 steps must be single-pass")
-    assert(rows(auto7) ==
-      rows(Funnel.funnel(ev, "user_id", "event_type", "ts", long)))
-    // at/below: stays on the staged oracle-checkable form
-    val short = Seq("s1", "s2", "s3")
-    val auto3 = Funnel.funnelAuto(ev, "user_id", "event_type", "ts", short)
-    assert(auto3.queryExecution.executedPlan.toString().contains("Join"),
-      "auto at 3 steps must be the staged join form")
-    assert(rows(auto3) ==
-      rows(Funnel.funnelSinglePass(ev, "user_id", "event_type", "ts", short)))
-  }
 }

@@ -48,35 +48,6 @@ class SnapshotSpec extends SparkSpecBase {
       ("k", "a", 3L, 4L, None)))
   }
 
-  test("merge(hist(log1), log2) == hist(log1 ∪ log2) — per-key time split") {
-    // split so every delta ts is strictly greater than its key's last
-    // history ts (the CDC contract): global cut at ts <= 250
-    val log1 = log.filter($"ts" <= 250)
-    val log2 = log.filter($"ts" > 250)
-    val merged = Snapshot.scd2Merge(hist(log1), log2,
-      Seq("k"), Seq("v"), "ts", Seq("seq"))
-    assert(rows(merged).toSeq == rows(hist(log)).toSeq)
-  }
-
-  test("merge with keys that are delta-only and history-only") {
-    val log1 = log.filter($"k" =!= "u2") // u2 appears only in delta
-    val log2 = log.filter($"k" === "u2")
-    val merged = Snapshot.scd2Merge(hist(log1), log2,
-      Seq("k"), Seq("v"), "ts", Seq("seq"))
-    assert(rows(merged).toSeq == rows(hist(log)).toSeq)
-  }
-
-  test("merge collapses a leading no-change delta into the open version") {
-    val h = hist(Seq(("k", "a", 10L, 1L)).toDF("k", "v", "ts", "seq"))
-    val delta = Seq(("k", "a", 20L, 2L), ("k", "b", 30L, 3L))
-      .toDF("k", "v", "ts", "seq")
-    val m = rows(Snapshot.scd2Merge(h, delta, Seq("k"), Seq("v"), "ts",
-      Seq("seq"))).toSeq
-    assert(m == Seq( // NOT three versions: the ts=20 'a' is absorbed
-      ("k", "a", 1L, 10L, Some(30L)),
-      ("k", "b", 2L, 30L, None)))
-  }
-
   test("asOf reconstructs the snapshot at any instant") {
     val h = hist(log)
     def snap(t: Long) = Snapshot.asOf(h, t)

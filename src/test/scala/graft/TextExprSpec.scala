@@ -26,8 +26,12 @@ class TextExprSpec extends SparkSpecBase {
       val df = cases.toDF("text")
       val got = df.select(TextExpressions.wordShingles(spark, col("text"), n))
         .as[Seq[String]].collect().toSeq
+      val toks = TextFunctions.tokens(col("text"))
       val want = df.select(
-          TextFunctions.shingles(TextFunctions.tokens(col("text")), n))
+          when(size(toks) >= n,
+            array_distinct(transform(sequence(lit(0), size(toks) - n),
+              i => array_join(slice(toks, i + 1, lit(n)), " "))))
+            .otherwise(array(array_join(toks, " "))))
         .as[Seq[String]].collect().toSeq
       assert(got == want, s"n=$n")
     }
