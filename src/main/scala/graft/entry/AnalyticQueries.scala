@@ -1007,9 +1007,9 @@ object AnalyticQueries {
       import graft.streaming.EventStreams
       val raw = replay(s, events(s, dir), byTime)(
         ds => EventStreams.streamingGapFill(
-          ds.filter(e => e.event_type == "__flush" ||
-            graft.ext.Curation.hashU32Jvm("gf1",
-              e.event_id.toString) < 42949672L)),
+          ds.filter(col("event_type") === "__flush" ||
+            graft.ext.Curation.hashU32("gf1", col("event_id")) <
+              42949672L)),
         mode = org.apache.spark.sql.streaming.OutputMode.Append(),
         flush = Some(flushEvents))
       val rows = raw

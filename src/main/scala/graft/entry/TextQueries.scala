@@ -127,10 +127,9 @@ object TextQueries {
   }
 
   /** The q197 stage composition — now the PUBLIC user API
-    * [[graft.ext.Curation.curationPipeline]] with every threshold a
-    * [[graft.ext.Curation.CurationConfig]] field (VERDICT r14 Next
-    * #6); q197 pins the config DEFAULTS, so the flagship row gates
-    * exactly what a default-config user runs. Kept as a thin alias so
+    * [[graft.ext.Curation.curationPipeline]]; q197 pins its constants
+    * and the config DEFAULT, so the flagship row gates exactly what a
+    * default-config user runs. Kept as a thin alias so
     * ScaleProbe's call sites read unchanged. */
   private[graft] def curationPipeline(d: DataFrame): DataFrame =
     graft.ext.Curation.curationPipeline(d)

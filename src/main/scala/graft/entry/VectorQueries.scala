@@ -1317,9 +1317,9 @@ object VectorQueries {
     * (deletion is non-monotone, so the LIST is the trick that fits it
     * into monotone recursion); extra rounds past the fixpoint append
     * empty lists — the fixpoint is idempotent. The round cap matches
-    * kCore's own maxIter (100, vs the old 25) AND the tail asserts the
-    * last two rounds agree, so a graph whose peeling depth outruns the
-    * cap fails loudly as a harness error instead of reporting an
+    * kCore's own round limit (Graph.MaxKCoreRounds = 100) AND the tail
+    * asserts the last two rounds agree, so a graph whose peeling depth
+    * outruns the cap fails loudly as a harness error instead of reporting an
     * under-peeled (too large) core against a correct operator. */
   /** q189: the same 4 synchronous LPA rounds unrolled as CTE stages —
     * per round, neighbor-label counts then a (count desc, label asc)

@@ -24,17 +24,6 @@ object Curation {
   def hashU32(seed: String, id: Column): Column =
     conv(substring(shuffleKey(seed, id), 1, 8), 16, 10).cast("long")
 
-  /** JVM-side twins of [[shuffleKey]]/[[hashU32]] for code outside the
-    * plan (state functions, typed filters) that must agree bit-for-bit
-    * with the column forms. */
-  def shuffleKeyJvm(seed: String, id: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$seed#$id".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-
-  def hashU32Jvm(seed: String, id: String): Long =
-    java.lang.Long.parseLong(shuffleKeyJvm(seed, id).substring(0, 8), 16)
-
   /** The Efraimidis–Spirakis weighted-sampling key for (seed, id, w):
     * u = (hashU32 + 0.5)/2³² ∈ (0, 1), key = ln(u)/w. Taking the k
     * LARGEST keys is exactly a weighted sample WITHOUT replacement
@@ -188,30 +177,21 @@ object Curation {
     df.withColumn("quota_rank", row_number().over(w).cast("long"))
   }
 
-  /** Tunables of [[curationPipeline]] — the end-to-end curation
-    * composition promoted to a real user API. The gated flagship row
-    * (q197) pins exactly these defaults: change a default and the
-    * oracle row changes with it. */
-  final case class CurationConfig(
-      minTokens: Long = 20L,
-      minAlphaRatio: Double = 0.805,
-      lineWidth: Int = 4,
-      maxLineDocFreq: Int = 2,
-      quotaK: Long = 10L,
-      splitSeed: String = "cp1",
-      splits: Seq[(String, Double)] =
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
-      // LM-gate threshold (floor-e9 mean bigram probability), live
-      // only when curationPipeline receives an lmModel
-      lmMinMeanPE9: Long = 0L)
+  /** The tunable of [[curationPipeline]]: the LM-gate threshold
+    * (floor-e9 mean bigram probability), live only when the pipeline
+    * receives an lmModel. */
+  final case class CurationConfig(lmMinMeanPE9: Long = 0L)
 
   /** The END-TO-END curation pipeline over a (doc_id, source, text)
-    * frame, as ONE query: quality gate (token count + alpha ratio) →
-    * corpus-level boilerplate-line removal over the survivors → exact
+    * frame, as ONE query: quality gate (>= 20 tokens, alpha ratio >=
+    * 0.805) → corpus-level boilerplate-line removal over the survivors
+    * (lines of 4 tokens, dropped when in more than 2 docs) → exact
     * corpus-wide line dedup keep-first → fingerprint near-dup clusters
-    * on the ORIGINAL text → per-source quota ranked on CLEANED length
-    * → leakage-safe hash split keyed on the CLUSTER (near-dup docs can
-    * never straddle train/test). Emits every quality survivor: kept
+    * on the ORIGINAL text → per-source quota of 10 ranked on CLEANED
+    * length → leakage-safe 80/10/10 hash split keyed on the CLUSTER
+    * (near-dup docs can never straddle train/test). The gated
+    * flagship row (q197) pins these constants: change one and the
+    * oracle row changes with it. Emits every quality survivor: kept
     * docs carry their quota_rank, cut docs carry NULL — which also
     * makes the cluster column non-vacuous (a doc whose twin won
     * keep-first shows cluster != doc_id and inherits the twin's
@@ -250,8 +230,6 @@ object Curation {
       lmModel: Option[Map[Int, DataFrame]] = None,
       lmScorer: (Int, NgramLm.Smoother) = (2, NgramLm.Fixed)): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(cfg.quotaK >= 1, "quotaK must be >= 1")
-    require(cfg.lineWidth >= 1, "lineWidth must be >= 1")
     val gated = lmModel match {
       case Some(m) =>
         // the scorer is pluggable (any order × smoother). The compare
@@ -277,14 +255,12 @@ object Curation {
       case None => d
     }
     val perDoc = TextAnalysis.withQualitySignals(gated, "text")
-      .filter(col("n_tokens") >= cfg.minTokens &&
-        col("alpha_ratio") >= cfg.minAlphaRatio)
+      .filter(col("n_tokens") >= 20L && col("alpha_ratio") >= 0.805)
       .select(col("doc_id"), col("source"),
         graft.functions.TextFunctions.rebuiltLineText(
-          graft.functions.TextFunctions.tokens(col("text")),
-          cfg.lineWidth).as("text"))
+          graft.functions.TextFunctions.tokens(col("text")), 4).as("text"))
     val bp = Dedup.removeBoilerplateLines(perDoc, "doc_id", "text",
-      maxDocFreq = cfg.maxLineDocFreq)
+      maxDocFreq = 2)
     val cleaned = Dedup.dedupLinesKeepFirst(
         bp.select("doc_id", "source", "text"), "doc_id", "text")
       .select(col("doc_id"), col("source"),
@@ -298,8 +274,9 @@ object Curation {
         groupCols = Seq("source"),
         order = Seq(col("n_chars_clean").desc, col("doc_id").asc))
       .withColumn("quota_rank",
-        when(col("quota_rank") <= cfg.quotaK, col("quota_rank")))
-    assignSplits(ranked, "cluster", cfg.splitSeed, cfg.splits)
+        when(col("quota_rank") <= 10L, col("quota_rank")))
+    assignSplits(ranked, "cluster", "cp1",
+        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
       .select("doc_id", "source", "n_chars_clean", "quota_rank",
         "cluster", "split")
   }
@@ -464,7 +441,7 @@ object Curation {
     * insert). Fractions are fixed-point longs over 2^32, so boundaries
     * are exact, not float-accumulated. */
   def assignSplits(df: DataFrame, idCol: String, seed: String,
-      splits: Seq[(String, Double)], out: String = "split"): DataFrame = {
+      splits: Seq[(String, Double)]): DataFrame = {
     require(splits.nonEmpty, "need at least one split")
     require(splits.forall(_._2 >= 0.0), "split fractions must be >= 0")
     require(math.abs(splits.map(_._2).sum - 1.0) < 1e-9,
@@ -478,7 +455,7 @@ object Curation {
         lit(splits.last._1)) { case (acc, ((name, _), bound)) =>
       when(u < bound, lit(name)).otherwise(acc)
     }
-    df.withColumn(out, expr)
+    df.withColumn("split", expr)
   }
 
   /** Leakage-safe split assignment: [[assignSplits]] hashed on the
@@ -499,18 +476,18 @@ object Curation {
     * Scale shape: the component table is PAIRS-sized (only items that
     * appear in an edge), never corpus-sized — the left join back to
     * `items` broadcasts whenever the dup set does, and the hash
-    * assignment stays map-only. Output adds `cluster` and `out`.
+    * assignment stays map-only. Output adds `cluster` and `split`.
     */
   def leakageSafeSplit(items: DataFrame, pairs: DataFrame, idCol: String,
       aCol: String, bCol: String, seed: String,
-      splits: Seq[(String, Double)], out: String = "split"): DataFrame = {
+      splits: Seq[(String, Double)]): DataFrame = {
     val comp = Dedup.connectedComponents(pairs, aCol, bCol)
       .select(col("id").as("__cc_id"), col("comp").as("__cc_comp"))
     val clustered = items
       .join(comp, col(idCol) === col("__cc_id"), "left")
       .withColumn("cluster", coalesce(col("__cc_comp"), col(idCol)))
       .drop("__cc_id", "__cc_comp")
-    assignSplits(clustered, "cluster", seed, splits, out)
+    assignSplits(clustered, "cluster", seed, splits)
   }
 
   /** Epoch-weighted UP-sampling mix — the complement of [[mixSources]]
@@ -588,18 +565,18 @@ object Curation {
     * (chosen, rejected) pair with its margin. Deterministic extremes —
     * chosen = max(score, id), rejected = min(score, id) — so an
     * all-tied group still yields a stable (highest-id, lowest-id)
-    * pair; groups with one usable row (or margin < `minMargin`) emit
-    * nothing; NULL scores never participate.
+    * pair; groups with one usable row emit nothing; NULL scores never
+    * participate.
     *
     * ONE hash aggregation with map-side partial min/max structs — no
     * window, no per-group sort: a million-member group costs what a
     * two-member group costs beyond the scan, and only (group,
     * 2×struct, count) partials shuffle. */
   def preferencePairs(df: DataFrame, groupCol: String, idCol: String,
-      scoreCol: String, minMargin: Double = 0.0): DataFrame =
-    // NaN would win every max (Spark orders NaN above all doubles) and
-    // sail through the margin gate — exclude it with the NULLs; the
-    // double cast makes the guard type-safe for decimal scores too
+      scoreCol: String): DataFrame =
+    // NaN would win every max (Spark orders NaN above all doubles) —
+    // exclude it with the NULLs; the double cast makes the guard
+    // type-safe for decimal scores too
     df.where(col(scoreCol).isNotNull &&
         !isnan(col(scoreCol).cast("double")))
       .groupBy(col(groupCol))
@@ -609,8 +586,7 @@ object Curation {
         min(struct(col(scoreCol).as("__s"), col(idCol).as("__i")))
           .as("__r"),
         count(lit(1)).as("__n"))
-      .where(col("__n") > 1 && col("__c.__i") =!= col("__r.__i") &&
-        (col("__c.__s") - col("__r.__s")) >= minMargin)
+      .where(col("__n") > 1 && col("__c.__i") =!= col("__r.__i"))
       .select(col(groupCol),
         col("__c.__i").as("chosen_id"),
         col("__r.__i").as("rejected_id"),
@@ -626,18 +602,16 @@ object Curation {
     * select on. Higher mean probability = lower perplexity = head,
     * so the rank is (mean_p_e9 DESC, id) — fully deterministic, and
     * `ntile(3)` is engine-portable (same fencepost rule in Spark and
-    * DuckDB, pinned by q55's quartiles). The scorer is pluggable
-    * like the LM gate's ([[NgramLm.scoreDocs]] at any order and
-    * smoother). Scale: the scorer's instance joins (linear), then
-    * ONE window keyed by language — the corpus shuffles once on the
+    * DuckDB, pinned by q55's quartiles). The scorer is
+    * [[NgramLm.scoreDocs]] at order 2 with the fixed smoother. Scale:
+    * the scorer's instance joins (linear), then ONE window keyed by
+    * language — the corpus shuffles once on the
     * language key; no global sort. */
   def ccnetBuckets(docs: DataFrame, idCol: String, langCol: String,
-      textCol: String, lmModel: Map[Int, DataFrame],
-      lmScorer: (Int, NgramLm.Smoother) = (2, NgramLm.Fixed)): DataFrame = {
+      textCol: String, lmModel: Map[Int, DataFrame]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (order, smoother) = lmScorer
-    val scored = NgramLm.scoreDocs(docs, idCol, textCol, lmModel, order,
-      smoother, None)
+    val scored = NgramLm.scoreDocs(docs, idCol, textCol, lmModel, 2,
+      NgramLm.Fixed, None)
     val w = Window.partitionBy(col(langCol))
       .orderBy(col("mean_p_e9").desc, col(idCol))
     docs.select(col(idCol), col(langCol))
@@ -885,25 +859,17 @@ object Curation {
       .otherwise(array_join(kept, "\n")))
   }
 
-  /** Every knob of [[mixturePipeline]]; q231 pins the defaults. */
-  final case class MixtureConfig(
-      minTokens: Long = 20L,
-      minAlphaRatio: Double = 0.805,
-      epochCap: Long = 2L,
-      budgetNum: Long = 3L,
-      budgetDen: Long = 2L,
-      seed: String = "mx1",
-      nShards: Int = 8)
-
   /** The END-TO-END mixture pipeline over a (doc_id, lang, text)
-    * frame, as ONE query: quality gate (token count + alpha ratio) →
-    * [[unimaxAllocationOfTotal]] over the SURVIVORS (the allocation
+    * frame, as ONE query: quality gate (>= 20 tokens, alpha ratio >=
+    * 0.805) → [[unimaxAllocationOfTotal]] (at most 2 epochs, a budget
+    * of 3/2 of the surviving tokens) over the SURVIVORS (the allocation
     * must see the post-gate sizes — allocating on raw counts would
     * over-budget heavily-filtered languages) → [[executeMixture]] into
     * (doc, epoch) training instances → per-INSTANCE deterministic
     * shuffle key and export shard (keyed on `epoch:doc`, so two epochs
     * of the same document land in different shards and positions — the
-    * repeated-data-spread every multi-epoch run wants).
+    * repeated-data-spread every multi-epoch run wants), over 8 shards
+    * and seed "mx1". q231 pins these constants.
     *
     * Plan shape: the corpus is scanned twice (once collapsing to the
     * |langs|-row allocation, once expanding instances against the
@@ -912,22 +878,18 @@ object Curation {
     * `repartitionByRange(shard)` write is the only exchange, carrying
     * the instance stream it exports. Output: doc_id, lang, epoch,
     * shard, skey (order by skey = the reproducible epoch order). */
-  def mixturePipeline(d: DataFrame,
-      cfg: MixtureConfig = MixtureConfig()): DataFrame = {
-    require(cfg.nShards >= 1, "nShards must be >= 1")
+  def mixturePipeline(d: DataFrame): DataFrame = {
     val gated = TextAnalysis.withQualitySignals(d, "text")
-      .filter(col("n_tokens") >= cfg.minTokens &&
-        col("alpha_ratio") >= cfg.minAlphaRatio)
+      .filter(col("n_tokens") >= 20L && col("alpha_ratio") >= 0.805)
       .select(col("doc_id"), col("lang"),
         col("n_tokens").cast("long").as("n_tokens"))
     val alloc = unimaxAllocationOfTotal(gated, "lang", "n_tokens",
-      cfg.epochCap, cfg.budgetNum, cfg.budgetDen)
+      2L, 3L, 2L)
     val instKey = concat_ws(":", col("epoch"), col("doc_id"))
     executeMixture(gated.select("doc_id", "lang"), "lang", "doc_id",
-        alloc, cfg.seed)
-      .withColumn("skey", shuffleKey(cfg.seed + ":ord", instKey))
-      .withColumn("shard",
-        hashU32(cfg.seed + ":shard", instKey) % cfg.nShards)
+        alloc, "mx1")
+      .withColumn("skey", shuffleKey("mx1:ord", instKey))
+      .withColumn("shard", hashU32("mx1:shard", instKey) % 8)
       .select(col("doc_id"), col("lang"), col("epoch"), col("shard"),
         col("skey"))
   }

@@ -240,16 +240,14 @@ object Dedup {
     * and per-invocation: the checkpoint RDD is private to this call
     * (no CacheManager entry, so no cross-invocation plan dedup) and its
     * blocks are released by the ContextCleaner when the result is
-    * dropped. `materializeSets` is retained for API stability; both
-    * paths now materialize the set table exactly once.
+    * dropped.
     *
     * Precondition: `idCol` is unique in `df`. The set table groups by
     * id, so rows sharing an id merge into one shingle set and their
     * pairs come out wrong. It is not checked here: a check would cost
     * every call an extra job. */
   def prefixJaccardJoin(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, shingleN: Int = 3,
-      materializeSets: Boolean = false): DataFrame = {
+      threshold: Double, shingleN: Int = 3): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     // per-doc DISTINCT shingles MAP-SIDE (array_distinct before the
@@ -424,23 +422,13 @@ object Dedup {
     * (whole-document duplicates below the gram size are [[exact]]'s
     * job; spans can't be shorter than a gram).
     *
-    * Scale: the shuffle carries one 20-byte row per char position.
-    * `winnowW > 1` thins it by WINNOWING (Schleimer et al., "Winnowing:
-    * Local Algorithms for Document Fingerprinting", SIGMOD 2003): only
-    * grams whose hash is the minimum of their trailing `winnowW`-gram
-    * window ship. Selection is content-defined, hence ALIGNMENT-
-    * INVARIANT — both copies of a duplicated span select the same gram
-    * offsets no matter where the span sits in each document, so every
-    * span of length >= gramLen + winnowW - 1 is still detected (a fixed
-    * position stride has no such guarantee: copies collide only when
-    * their start offsets agree modulo the stride). Reported extents
-    * snap to selected grams, under-covering each span end by < winnowW
-    * chars. winnowW = 1 is exact.
+    * Scale: the shuffle carries one 20-byte row per char position:
+    * every gram ships (the gram expression runs with winnowing window
+    * 1, which selects each gram), so extents are exact.
     */
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
-      gramLen: Int = 20, winnowW: Int = 1): DataFrame = {
+      gramLen: Int = 20): DataFrame = {
     require(gramLen >= 2, "gramLen must be >= 2")
-    require(winnowW >= 1, "winnowW must be >= 1")
     val W = org.apache.spark.sql.expressions.Window
     val wDoc = W.partitionBy("__id").orderBy("__pos")
     // gram hashing AND winnowing selection run inside ONE codegen'd
@@ -454,21 +442,19 @@ object Dedup {
       .filter(length(col(textCol)) >= gramLen)
       .select(col(idCol).as("__id"),
         explode(graft.functions.expressions.TextExpressions.winnowedGrams(
-          df.sparkSession, col(textCol), gramLen, winnowW)).as("__g"))
+          df.sparkSession, col(textCol), gramLen, 1)).as("__g"))
       .select(col("__id"), col("__g.pos").as("__pos"), col("__g.gh").as("__gh"))
     val dup = g.groupBy("__gh")
       .agg(countDistinct(col("__id")).as("__nd"))
       .filter(col("__nd") >= 2)
       .select("__gh")
-    // consecutive selected grams inside one duplicated span are at most
-    // winnowW positions apart, so spans merge across gaps of winnowW-1
-    // (winnowW = 1 degenerates to plain overlap merging)
+    // plain overlap merging: a gram opens a new span iff it starts past
+    // every earlier gram's end
     g.join(dup, Seq("__gh"), "leftsemi")
       .withColumn("__new",
         when(col("__pos") >
           coalesce(max(col("__pos") + gramLen - 1)
-            .over(wDoc.rowsBetween(W.unboundedPreceding, -1)), lit(-1))
-            + (winnowW - 1), 1)
+            .over(wDoc.rowsBetween(W.unboundedPreceding, -1)), lit(-1)), 1)
           .otherwise(0))
       .withColumn("__span", sum(col("__new"))
         .over(wDoc.rowsBetween(W.unboundedPreceding, W.currentRow)))
@@ -509,7 +495,7 @@ object Dedup {
     * supplementary-plane chars. `chars_removed` therefore counts code
     * units too (identical for BMP text, the oracle-parity regime). */
   def removeDuplicateSpans(df: DataFrame, idCol: String, textCol: String,
-      gramLen: Int = 20, winnowW: Int = 1): DataFrame = {
+      gramLen: Int = 20): DataFrame = {
     val spark = df.sparkSession
     import graft.functions.expressions.TextExpressions.{charUnitLength, charUnitSubstr}
     val W = org.apache.spark.sql.expressions.Window
@@ -522,7 +508,7 @@ object Dedup {
     // once (minhashNearDupDelta precedent; same localCheckpoint
     // durability trade, documented there).
     val (sp, _) = materialize(
-      duplicateSpans(df, idCol, textCol, gramLen, winnowW)
+      duplicateSpans(df, idCol, textCol, gramLen)
         .select(col(idCol).as("__id"), col("span_start").as("st"),
           col("span_end").as("en")))
     // kept segments: the complement of the (sorted, disjoint) spans —
@@ -632,8 +618,9 @@ object Dedup {
     *  2. new rows probe it in-scan (codegen'd
     *     [[graft.functions.expressions.BloomMightContain]]): a negative
     *     probe is DEFINITE absence, so only bloom-hit candidates (true
-    *     duplicates + the fpp sliver) need exact checking — at typical
-    *     delta-vs-corpus overlap that excludes almost every row;
+    *     duplicates + the 1% false-positive sliver) need exact
+    *     checking — at typical delta-vs-corpus overlap that excludes
+    *     almost every row;
     *  3. the candidate keys broadcast to a semi-scan of `existing`; the
     *     matched key set (bounded by the candidate set) broadcasts back
     *     for one anti join over the delta — a bloom-miss row can never
@@ -648,21 +635,14 @@ object Dedup {
     * names present in both frames), e.g. `md5(col("text"))` or the
     * canonical prefix hash.
     *
-    * `expectedItems` sizes the Bloom filter WITHOUT counting `existing`
-    * first — callers usually know the snapshot cardinality (a saved
-    * artifact carries it; a warehouse table has stats). Supplying it
-    * removes a full extra pass over the snapshot: the two documented
-    * scans (bloom build, confirm semi-scan) are then the only ones. An
-    * underestimate only raises the effective fpp (more exact checks),
-    * never wrongness; the count fallback keeps the zero-knowledge call
-    * working. */
+    * The Bloom filter is sized by a count of `existing`, one pass
+    * before the two documented scans (bloom build, confirm semi-scan). */
   def newRowsBloom(newDf: DataFrame, existing: DataFrame,
-      key: org.apache.spark.sql.Column, fpp: Double = 0.01,
-      expectedItems: Option[Long] = None): DataFrame = {
+      key: org.apache.spark.sql.Column): DataFrame = {
     val spark = newDf.sparkSession
-    val nExisting = math.max(1L, expectedItems.getOrElse(existing.count()))
+    val nExisting = math.max(1L, existing.count())
     val (bits, k) = Sketches.buildBloomBits(
-      existing.select(xxhash64(key).as("__k")), "__k", nExisting, fpp)
+      existing.select(xxhash64(key).as("__k")), "__k", nExisting, 0.01)
     val probe = Sketches.bloomMightContain(spark, xxhash64(key), bits, k)
     val candKeys = newDf.filter(probe).select(key.as("__h")).distinct()
     val matched = existing
@@ -687,7 +667,7 @@ object Dedup {
     * round, converging in diameter(G) iterations. Dedup graphs are
     * shallow by construction (near-dup clusters are quasi-cliques), so
     * diameter is small. Convergence is checked with an any-change
-    * probe per round; `maxIter` bounds the worst case.
+    * probe per round; [[MaxCcRounds]] bounds the worst case.
     *
     * Output: (id, comp), one row per vertex that appears in any edge.
     */
@@ -707,15 +687,18 @@ object Dedup {
          org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) =
     org.apache.spark.sql.graftshim.CheckpointShim.materialize(df)
 
-  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-      maxIter: Int = 25): DataFrame =
-    connectedComponentsRounds(edges, srcCol, dstCol, maxIter)._1
+  def connectedComponents(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    connectedComponentsRounds(edges, srcCol, dstCol)._1
+
+  /** Propagation rounds after which [[connectedComponents]] gives up
+    * and throws (rounds ≈ graph diameter). */
+  private val MaxCcRounds = 25
 
   /** [[connectedComponents]] also returning the PROPAGATION ROUND
     * count — the scale-diagnostic axis (rounds ≈ graph diameter). */
   private[graft] def connectedComponentsRounds(edges: DataFrame,
-      srcCol: String, dstCol: String,
-      maxIter: Int = 25): (DataFrame, Int) = {
+      srcCol: String, dstCol: String): (DataFrame, Int) = {
     // symmetrize in ONE scan: union(edges, edges.flipped) would evaluate
     // the (possibly expensive — a whole near-dup join in q73) edge plan
     // twice, once per union branch
@@ -732,7 +715,7 @@ object Dedup {
       .withColumn("comp", col("id")))
     var iter = 0
     var converged = false
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < MaxCcRounds) {
       // min neighbor label per vertex, then fold into the own label with
       // a left join (vertices with no smaller neighbor keep theirs). The
       // __chg flag rides along so the checkpointing action doubles as
@@ -763,8 +746,8 @@ object Dedup {
     // dedup pass must fail loudly instead of keeping duplicates
     if (!converged)
       throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds " +
-          "(graph diameter exceeds maxIter): raise maxIter")
+        s"connectedComponents did not converge in $MaxCcRounds rounds " +
+          "(graph diameter exceeds the round limit)")
     (labels, iter)
   }
 
@@ -796,7 +779,7 @@ object Dedup {
     * and oracle-checked (q139 against q73's ground truth).
     */
   def connectedComponentsDelta(prev: DataFrame, newEdges: DataFrame,
-      srcCol: String, dstCol: String, maxIter: Int = 25): DataFrame = {
+      srcCol: String, dstCol: String): DataFrame = {
     // the SAME edge filters the full CC applies: a half-null edge
     // contributes no vertex there, and neither does a SELF-LOOP (the
     // full CC's symmetrize step drops id =!= neighbor pairs) — so
@@ -830,7 +813,7 @@ object Dedup {
       .join(tb, col(dstCol) === col("__tb_id"), "left")
       .select(coalesce(col("__ta_comp"), col(srcCol)).as("__ca"),
         coalesce(col("__tb_comp"), col(dstCol)).as("__cb"))
-    val relabel = connectedComponents(contracted, "__ca", "__cb", maxIter)
+    val relabel = connectedComponents(contracted, "__ca", "__cb")
       .select(col("id").as("__old"), col("comp").as("__new"))
     val updatedPrev = prev
       .join(broadcast(relabel), col("comp") === col("__old"), "left")
@@ -950,8 +933,12 @@ object Dedup {
   /** The shared line-unit definition (TextFunctions.lineUnits) bound
     * to a column name — one definition for the per-doc signal and the
     * corpus-level passes, so they can't drift on what a "line" is. */
-  private def lineUnits(textCol: String, sep: String) =
-    graft.functions.TextFunctions.lineUnits(col(textCol), sep)
+  private def lineUnits(textCol: String) =
+    graft.functions.TextFunctions.lineUnits(col(textCol))
+
+  /** Ceiling on the corpus-frequent line set that
+    * [[removeBoilerplateLines]] collects to the driver. */
+  private val MaxFrequentLines = 4 << 20
 
   /** CCNet-style corpus-level boilerplate-line removal: delete from
     * every document the lines that occur in more than `maxDocFreq`
@@ -965,7 +952,7 @@ object Dedup {
     *     docs per line hash; hashes above the threshold are by
     *     construction heavy hitters, so the frequent set is bounded by
     *     totalLines / maxDocFreq and collects to a driver set (the
-    *     broadcast-anchors convention; `maxFrequentLines` bounds it
+    *     broadcast-anchors convention; [[MaxFrequentLines]] bounds it
     *     loudly rather than OOMing the driver).
     *  2. rewrite: MAP-ONLY — each doc filters its own line array
     *     against the broadcast hash set and rejoins with "\n" (the
@@ -978,10 +965,9 @@ object Dedup {
     * NULL/empty docs pin to ("", 0, 0). Output replaces `textCol` and
     * appends exact `n_lines_kept` / `n_lines_dropped` counts. */
   def removeBoilerplateLines(df: DataFrame, idCol: String, textCol: String,
-      maxDocFreq: Int, sep: String = "\\R",
-      maxFrequentLines: Int = 4 << 20): DataFrame = {
+      maxDocFreq: Int): DataFrame = {
     require(maxDocFreq >= 1, "maxDocFreq must be >= 1")
-    val units = lineUnits(textCol, sep)
+    val units = lineUnits(textCol)
     val frequent = df
       .select(col(idCol).as("__id"), explode(units).as("__l"))
       .select(col("__id"), xxhash64(col("__l")).as("__h"))
@@ -989,8 +975,7 @@ object Dedup {
       .agg(countDistinct(col("__id")).as("__df"))
       .where(col("__df") > maxDocFreq)
       .select("__h")
-    rewriteWithoutLines(df, textCol, frequent, sep, maxDocFreq,
-      maxFrequentLines)
+    rewriteWithoutLines(df, textCol, frequent, maxDocFreq)
   }
 
   /** The map-only pass 2 shared by [[removeBoilerplateLines]] and its
@@ -999,18 +984,17 @@ object Dedup {
     * is the graft_in_long_set expression — ONE array<bigint> plan
     * literal and an O(1) per-executor hash-set probe — not `isin`,
     * whose N literal CHILDREN grind the analyzer at the set sizes the
-    * maxFrequentLines bound allows. */
+    * MaxFrequentLines bound allows. */
   private def rewriteWithoutLines(df: DataFrame, textCol: String,
-      frequentHashes: DataFrame, sep: String, maxDocFreq: Int,
-      maxFrequentLines: Int): DataFrame = {
-    val units = lineUnits(textCol, sep)
-    val hs = frequentHashes.limit(maxFrequentLines + 1).collect()
+      frequentHashes: DataFrame, maxDocFreq: Int): DataFrame = {
+    val units = lineUnits(textCol)
+    val hs = frequentHashes.limit(MaxFrequentLines + 1).collect()
       .map(_.getLong(0))
-    require(hs.length <= maxFrequentLines,
-      s"more than $maxFrequentLines corpus-frequent lines at " +
+    require(hs.length <= MaxFrequentLines,
+      s"more than $MaxFrequentLines corpus-frequent lines at " +
         s"maxDocFreq=$maxDocFreq — raise the threshold (the frequent " +
         "set is bounded by totalLines/maxDocFreq; a bound this loose " +
-        "would not broadcast) or raise maxFrequentLines explicitly")
+        "would not broadcast)")
     val kept =
       if (hs.isEmpty) units
       else {
@@ -1033,10 +1017,10 @@ object Dedup {
     * by DISTINCT lines (never corpus size). Build once over the
     * history, persist like q84 persists the minhash band table, then
     * fold batches in with [[removeBoilerplateLinesDelta]]. */
-  def lineFrequencySnapshot(df: DataFrame, idCol: String, textCol: String,
-      sep: String = "\\R"): DataFrame =
+  def lineFrequencySnapshot(df: DataFrame, idCol: String,
+      textCol: String): DataFrame =
     df.select(col(idCol).as("__id"),
-        explode(lineUnits(textCol, sep)).as("__l"))
+        explode(lineUnits(textCol)).as("__l"))
       .select(col("__id"), xxhash64(col("__l")).as("line_hash"))
       .groupBy("line_hash")
       .agg(countDistinct(col("__id")).as("n_docs"))
@@ -1054,14 +1038,13 @@ object Dedup {
     * the rewritten batch; call [[mergedLineFrequency]] for the updated
     * snapshot to persist. */
   def removeBoilerplateLinesDelta(newDf: DataFrame, snapshot: DataFrame,
-      idCol: String, textCol: String, maxDocFreq: Int,
-      sep: String = "\\R", maxFrequentLines: Int = 4 << 20): DataFrame = {
+      idCol: String, textCol: String, maxDocFreq: Int): DataFrame = {
     require(maxDocFreq >= 1, "maxDocFreq must be >= 1")
     val merged = mergedLineFrequency(snapshot,
-      lineFrequencySnapshot(newDf, idCol, textCol, sep))
+      lineFrequencySnapshot(newDf, idCol, textCol))
     rewriteWithoutLines(newDf, textCol,
       merged.where(col("n_docs") > maxDocFreq).select("line_hash"),
-      sep, maxDocFreq, maxFrequentLines)
+      maxDocFreq)
   }
 
   /** Fold a batch's line-frequency table into the snapshot (both sides
@@ -1090,9 +1073,9 @@ object Dedup {
     *
     * Same 64-bit-hash matching convention and NULL/empty pinning as
     * [[removeBoilerplateLines]]. */
-  def dedupLinesKeepFirst(df: DataFrame, idCol: String, textCol: String,
-      sep: String = "\\R"): DataFrame = {
-    val units = lineUnits(textCol, sep)
+  def dedupLinesKeepFirst(df: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
+    val units = lineUnits(textCol)
     val lines = df
       .select(col(idCol).as("__id"), posexplode(units).as(Seq("__p", "__l")))
       .select(col("__id"), col("__p"), xxhash64(col("__l")).as("__h"))

@@ -288,15 +288,18 @@ object Graph {
     * sub-k vertices' edges, checkpoint-materialized so lineage stays
     * flat ([[pageRank]]/CC discipline). Rounds = peeling DEPTH (how
     * many onion layers come off before the core stabilizes), not |V|;
-    * the edge set only shrinks. Fails loudly if maxIter rounds don't
-    * reach the fixpoint.
+    * the edge set only shrinks. Fails loudly if [[MaxKCoreRounds]]
+    * rounds don't reach the fixpoint.
     *
     * @return (id, degree) for every k-core vertex, degree measured
     *         INSIDE the core (so every returned degree ≥ k)
     */
-  def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      maxIter: Int = 100): DataFrame =
-    kCoreRounds(edges, srcCol, dstCol, k, maxIter)._1
+  def kCore(edges: DataFrame, srcCol: String, dstCol: String,
+      k: Int): DataFrame =
+    kCoreRounds(edges, srcCol, dstCol, k)._1
+
+  /** Peeling rounds after which [[kCore]] gives up and throws. */
+  private val MaxKCoreRounds = 100
 
   /** [[kCore]] plus the number of peeling rounds actually run — the
     * probe-facing variant (the [[graft.ext.Dedup.connectedComponentsRounds]]
@@ -304,7 +307,7 @@ object Graph {
     * anti-joins + a checkpoint = a full Spark job), so ScaleProbe
     * records them alongside wall/shuffle. */
   private[graft] def kCoreRounds(edges: DataFrame, srcCol: String,
-      dstCol: String, k: Int, maxIter: Int = 100): (DataFrame, Int) = {
+      dstCol: String, k: Int): (DataFrame, Int) = {
     require(k >= 1, "k must be >= 1")
     // mixed-type endpoints would otherwise fail deep in the symmetrize
     // array(struct(..)) with an opaque common-type analysis error — or,
@@ -327,7 +330,7 @@ object Graph {
       org.apache.spark.sql.graftshim.CheckpointShim.materialize(sym0)
     var iter = 0
     var converged = false
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < MaxKCoreRounds) {
       // materialize the (small) sub-k set ONCE per round: it feeds the
       // convergence probe AND both anti-joins — left as a plan it would
       // re-run the degree aggregation up to three times per round
@@ -351,9 +354,9 @@ object Graph {
     }
     if (!converged)
       throw new IllegalStateException(
-        s"kCore did not reach the fixpoint in $maxIter peeling rounds " +
-          "— raise maxIter (rounds are the peeling depth, so this " +
-          "points at a pathological onion graph)")
+        s"kCore did not reach the fixpoint in $MaxKCoreRounds peeling " +
+          "rounds (rounds are the peeling depth, so this points at a " +
+          "pathological onion graph)")
     // a partially-peeled edge set would over-report the core — only
     // the fixpoint leaves this method
     (cur.groupBy(col("__u").as("id"))

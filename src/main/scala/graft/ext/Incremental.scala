@@ -119,7 +119,7 @@ object Incremental {
   }
 
   /** Winsorized mean off the exact histogram: clamp every value to its
-    * group's [pLo, pHi] grid percentiles (the
+    * group's [p5, p95] grid percentiles (the
     * [[percentilesFromState]] rank selection), then aggregate the
     * CLAMPED UNITS — integer arithmetic end to end, one IEEE division
     * at the edge, so the result is engine-reproducible bit for bit.
@@ -130,12 +130,10 @@ object Incremental {
     * percentiles lesson) and the cut table is group-sized, so the
     * join broadcasts. Output: (keys…, n_values, lo_unit, hi_unit,
     * winsorized_mean). */
-  def winsorizedMean(hist: DataFrame, keys: Seq[String], scale: Double,
-      lo: (Int, Int) = (5, 100), hi: (Int, Int) = (95, 100)): DataFrame = {
-    require(lo._1 * hi._2 <= hi._1 * lo._2,
-      s"lo percentile must not exceed hi: $lo vs $hi")
+  def winsorizedMean(hist: DataFrame, keys: Seq[String],
+      scale: Double): DataFrame = {
     val cuts = percentilesFromState(hist, keys,
-        Seq(("__lo", lo._1, lo._2), ("__hi", hi._1, hi._2)))
+        Seq(("__lo", 5, 100), ("__hi", 95, 100)))
       .select(keys.map(col) :+ col("__lo") :+ col("__hi"): _*)
     // cuts derive FROM hist, so the join is a self-join — alias both
     // sides or the analyzer rejects the key columns as ambiguous
@@ -182,17 +180,11 @@ object Incremental {
     * `snapA.join(snapB, keys)` (keys, A payload, B payload). */
   def joinDelta(snapA: DataFrame, deltaA: DataFrame,
       snapB: DataFrame, deltaB: DataFrame,
-      keys: Seq[String],
-      broadcastDeltas: Boolean = true): DataFrame = {
+      keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "joinDelta needs at least one key")
-    // broadcastDeltas = false for backfill-sized deltas (initial
-    // loads): the hint would otherwise force the whole batch through
-    // the driver's broadcast ceiling instead of letting the planner
-    // pick a shuffle join
-    def d(df: DataFrame) = if (broadcastDeltas) broadcast(df) else df
-    val newA = snapA.join(d(deltaB), keys)
-    val newB = d(deltaA).join(snapB, keys)
-    val newBoth = deltaA.join(d(deltaB), keys)
+    val newA = snapA.join(broadcast(deltaB), keys)
+    val newB = broadcast(deltaA).join(snapB, keys)
+    val newBoth = deltaA.join(broadcast(deltaB), keys)
     // align all three to the canonical snapA⋈snapB column order
     val cols = snapA.join(snapB, keys).columns.map(col).toSeq
     newB.select(cols: _*)
@@ -201,19 +193,19 @@ object Incremental {
   }
 
   /** Value-domain histogram state — the mergeable form of EXACT order
-    * statistics: quantize to an integer grid (`unit = floor(v·scale
-    * + 0.5)`), keep `(keys…, unit, c)`. Counts add, so
+    * statistics: quantize to an integer grid of 1/100ths (`unit =
+    * floor(v·100 + 0.5)`), keep `(keys…, unit, c)`. Counts add, so
     * `histogramMerge(state(a), state(b)) == state(a ∪ b)` EXACTLY and
     * any percentile is a read-time rank selection — an incrementally
     * maintained exact median/p99, which mergeable INTERPOLATING
     * sketches cannot give. State size is bounded by |groups| × |value
     * grid| regardless of row count — the trade that makes it a state
     * table; for unbounded-domain measures use a sketch instead. */
-  def histogramState(df: DataFrame, keys: Seq[String], valueCol: String,
-      scale: Double = 100.0): DataFrame =
+  def histogramState(df: DataFrame, keys: Seq[String],
+      valueCol: String): DataFrame =
     df.filter(col(valueCol).isNotNull)
       .groupBy(keys.map(col) :+
-        floor(col(valueCol) * lit(scale) + lit(0.5)).cast("long")
+        floor(col(valueCol) * lit(100.0) + lit(0.5)).cast("long")
           .as("unit"): _*)
       .agg(count(lit(1)).as("c"))
 

@@ -19,10 +19,8 @@ import org.apache.spark.sql.functions._
   *     no matter how many checks ride along.
   *   - Uniqueness rides the same Aggregate as `COUNT(*complete) -
   *     COUNT(DISTINCT cols)`. Exact distinct makes Catalyst plan an
-  *     Expand (one duplicated stream per distinct clause) — the honest
-  *     oracle-checkable default; pass `exact = false` to swap in HLL
-  *     `approx_count_distinct` (single stream, no Expand) when ±2%
-  *     violation counts are acceptable at full scale.
+  *     Expand (one duplicated stream per distinct clause) — the price
+  *     of oracle-checkable exact violation counts.
   *   - Each foreign-key check is one LEFT JOIN against the DISTINCT dim
   *     keys + the same conditional-sum Aggregate. The dim key set is
   *     deduplicated before the join, so Catalyst broadcasts it whenever
@@ -134,8 +132,7 @@ object Quality {
   }
 
   /** Run the suite; see object doc for the plan shape. */
-  def suite(df: DataFrame, checks: Seq[Check],
-      exact: Boolean = true): DataFrame = {
+  def suite(df: DataFrame, checks: Seq[Check]): DataFrame = {
     require(checks.nonEmpty, "suite needs at least one check")
     require(checks.map(_.name).distinct.size == checks.size,
       "duplicate check names — same constraint listed twice")
@@ -155,14 +152,7 @@ object Quality {
             case (Unique(cols), i) =>
               val complete = cols.map(col(_).isNotNull).reduce(_ && _)
               val distinctCnt =
-                if (exact) countDistinct(col(cols.head),
-                  cols.tail.map(col): _*)
-                // NULL-component rows must be invisible to the sketch
-                // too (countDistinct drops them; a bare struct() is
-                // never NULL and would skew violations by the full
-                // null-row count)
-                else approx_count_distinct(
-                  when(complete, struct(cols.map(col): _*)))
+                countDistinct(col(cols.head), cols.tail.map(col): _*)
               (sum(complete.cast("long")) - distinctCnt).as(s"__v_$i")
             case (c, i) => sum(violation(c)).as(s"__v_$i")
           }

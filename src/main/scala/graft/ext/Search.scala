@@ -16,6 +16,12 @@ import graft.functions.TextFunctions.tokens
   */
 object Search {
 
+  /** BM25's `k1` and `b`: the classic defaults, chosen here also
+    * because both (and k1+1) are exactly representable doubles — no
+    * cross-engine constant-folding hazard. */
+  private val K1 = 1.5
+  private val B = 0.75
+
   /** BM25 relevance of every document against a literal term list —
     * Robertson/Sparck-Jones BM25 with one deliberate substitution: the
     * idf factor is the RATIONAL core `(N - df + 0.5)/(df + 0.5)` rather
@@ -37,12 +43,9 @@ object Search {
     *  The corpus is read twice and shuffled never; at 100 TB both reads
     *  run at storage bandwidth and the broadcast is one row.
     *
-    * `k1 = 1.5` and `b = 0.75` are the classic defaults chosen here
-    * also because both (and k1+1) are exactly representable doubles —
-    * no cross-engine constant-folding hazard. Docs matching no term
-    * score 0 and are filtered out. */
+    * Docs matching no term score 0 and are filtered out. */
   def bm25(df: DataFrame, idCol: String, textCol: String,
-      terms: Seq[String], k1: Double = 1.5, b: Double = 0.75): DataFrame = {
+      terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "bm25 needs at least one query term")
     require(terms.distinct == terms, "duplicate query terms would double-count")
     val toks = tokens(col(textCol))
@@ -61,11 +64,11 @@ object Search {
     // summed in term-list order so the fold is reproducible bit-for-bit
     val scored = withTf.crossJoin(broadcast(stats)).withColumn("score", {
       val avgdl = col("__sumdl") / col("__n")
-      val lenNorm = lit(k1) * (lit(1.0 - b) + lit(b) * (col("__dl").cast("double") / avgdl))
+      val lenNorm = lit(K1) * (lit(1.0 - B) + lit(B) * (col("__dl").cast("double") / avgdl))
       terms.indices.map { i =>
         val tf = col(tfCol(i)).cast("double")
         val idf = (col("__n") - col(s"__df$i") + lit(0.5)) / (col(s"__df$i") + lit(0.5))
-        idf * (tf * lit(k1 + 1.0)) / (tf + lenNorm)
+        idf * (tf * lit(K1 + 1.0)) / (tf + lenNorm)
       }.reduceLeft(_ + _)
     })
     val outCols = col(idCol) +: col("__dl").as("dl") +:
@@ -293,15 +296,15 @@ object Search {
   /** Reciprocal-rank fusion (Cormack/Clarke/Büttcher, SIGIR 2009) —
     * the standard hybrid-retrieval combiner: merge the ranked lists of
     * N systems (lexical BM25 + dense ANN is the classic RAG pair) by
-    * `score(d) = Σ_systems 1/(k0 + rank_s(d))`, documents missing from
+    * `score(d) = Σ_systems 1/(60 + rank_s(d))`, documents missing from
     * a system's list contributing 0. RRF needs no score calibration
     * across systems — only ranks — which is exactly why it is the
     * default fusion in hybrid search engines.
     *
-    * Each contribution is computed as `floor(10⁹ / (k0 + rank))` —
+    * Each contribution is computed as `floor(10⁹ / (60 + rank))` —
     * EXACT integer arithmetic (the e9 fixed-point of the reciprocal),
     * so the fused ordering replays bit-for-bit in any engine; with
-    * k0 = 60 (the paper's constant) adjacent ranks differ by ≥ ~2500
+    * 60 (the paper's k constant) adjacent ranks differ by ≥ ~2500
     * units at rank ≤ 600, so the integer truncation cannot reorder
     * any pair the true reciprocal sum wouldn't.
     *
@@ -315,11 +318,10 @@ object Search {
     * the corpus-sized work happened inside each system's own
     * zero-shuffle retrieval plan. */
   def rrfFuse(systems: Seq[(String, DataFrame)], idCol: String,
-      rankCol: String, k0: Int = 60): DataFrame = {
+      rankCol: String): DataFrame = {
     require(systems.nonEmpty, "rrfFuse needs at least one ranked system")
     require(systems.map(_._1).distinct.size == systems.size,
       "system names must be unique")
-    require(k0 >= 0, s"k0 must be non-negative (got $k0)")
     val joined = systems
       .map { case (n, df) =>
         df.select(col(idCol), col(rankCol).cast("long").as(s"rank_$n"))
@@ -327,7 +329,7 @@ object Search {
       .reduceLeft((a, b) => a.join(b, Seq(idCol), "full_outer"))
     val score = systems
       .map { case (n, _) =>
-        coalesce(expr(s"CAST(1000000000 AS BIGINT) div ($k0 + rank_$n)"),
+        coalesce(expr(s"CAST(1000000000 AS BIGINT) div (60 + rank_$n)"),
           lit(0L))
       }
       .reduceLeft(_ + _)

@@ -60,16 +60,16 @@ object Similarity {
   /** SQ8 encode against a trained [[sq8MinMax]] artifact:
     * code = round((x − mn)·255/(mx − mn)) clamped to [0, 255]
     * (constant dimensions pin to 0). Map-only: the artifact rides as
-    * two plan-literal arrays (`maxDims` guard), one fused transform
+    * two plan-literal arrays ([[MaxArtifactDims]] guard), one fused transform
     * per row — the corpus never shuffles. The arithmetic is one fixed
     * left-associated IEEE expression over exact float→double casts,
     * and both engines round positive halves away from zero, so codes
     * replay bit-for-bit in the oracle. */
   def sq8Encode(df: DataFrame, vecCol: String, minMax: DataFrame,
-      out: String = "sq8_code", maxDims: Int = 4096): DataFrame = {
-    val mm = minMax.orderBy("dim").limit(maxDims + 1).collect()
-    require(mm.nonEmpty && mm.length <= maxDims,
-      s"sq8 artifact must have 1..$maxDims dims (got ${mm.length})")
+      out: String = "sq8_code"): DataFrame = {
+    val mm = minMax.orderBy("dim").limit(MaxArtifactDims + 1).collect()
+    require(mm.nonEmpty && mm.length <= MaxArtifactDims,
+      s"sq8 artifact must have 1..$MaxArtifactDims dims (got ${mm.length})")
     require(mm.zipWithIndex.forall { case (r, i) => r.getInt(0) == i },
       "sq8 artifact dims must be contiguous from 0")
     val mnLit = array(mm.map(r => lit(r.getDouble(1))): _*)
@@ -146,12 +146,10 @@ object Similarity {
     * float ADC, the whole verdict after cell assignment is
     * hash-exact. Corpus side is two map-only codegen passes (one cell
     * assign, one encode), no corpus shuffle; the candidate join is
-    * cell-equality. `nProbe > 1` fans each query to its n nearest
-    * cells (the recall lever; the corpus is never re-bucketed). */
+    * cell-equality: each query searches its own cell. */
   def ivfSq8TopK(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, queryPred: org.apache.spark.sql.Column,
-      k: Int, nProbe: Int = 1): DataFrame = {
-    require(nProbe >= 1, "nProbe must be >= 1")
+      k: Int): DataFrame = {
     val (cids, matrix) = collectCentroids(centroids)
     val coded = sq8Encode(
       assignWith(corpus.select(col(idCol), col(vecCol)), vecCol,
@@ -159,15 +157,8 @@ object Similarity {
       vecCol, sq8MinMax(corpus, vecCol))
     val n = coded.select(col(idCol).as("n_id"), col("cid"),
       col("sq8_code").as("__nc"))
-    val q =
-      if (nProbe == 1)
-        coded.filter(queryPred).select(col(idCol).as("q_id"),
-          col("cid"), col("sq8_code").as("__qc"))
-      else
-        coded.filter(queryPred).select(col(idCol).as("q_id"),
-          explode(probeCells(col(vecCol), cids, matrix, nProbe))
-            .as("cid"),
-          col("sq8_code").as("__qc"))
+    val q = coded.filter(queryPred).select(col(idCol).as("q_id"),
+      col("cid"), col("sq8_code").as("__qc"))
     val scored = n.join(q, Seq("cid"))
       .filter(col("n_id") =!= col("q_id"))
       .withColumn("__d", zip_with(col("__qc"), col("__nc"),
@@ -192,12 +183,14 @@ object Similarity {
     * fixed IEEE tree over the exact integer sums (the q113/q151
     * mirrored-sqrt device), so every emitted double replays
     * bit-for-bit in an engine that mirrors the same tree. Constant
-    * dimensions (σ = 0) pin z to 0. Output: input plus `out` =
+    * dimensions (σ = 0) pin z to 0. Output: input plus `zvec` =
     * array<double> of z-scores. */
-  def standardize(corpus: DataFrame, vecCol: String,
-      out: String = "zvec", maxDims: Int = 4096): DataFrame =
-    standardizeApply(corpus, vecCol,
-      standardizeStats(corpus, vecCol), out, maxDims)
+  def standardize(corpus: DataFrame, vecCol: String): DataFrame =
+    standardizeApply(corpus, vecCol, standardizeStats(corpus, vecCol))
+
+  /** Ceiling on the dims of an SQ8 or standardize artifact, which
+    * rides in the plan as literal arrays. */
+  private val MaxArtifactDims = 4096
 
   /** The TRAINING half of [[standardize]]: per-dim exact quantized
     * integer moments (dim, n, s, ss) — the ≤ dims-row persistable
@@ -217,14 +210,13 @@ object Similarity {
     * identically on a batch frame or a micro-batch stream (no join,
     * no shuffle, no state; exactly-once per row). */
   def standardizeApply(df: DataFrame, vecCol: String,
-      statsDf: DataFrame, out: String = "zvec",
-      maxDims: Int = 4096): DataFrame = {
+      statsDf: DataFrame): DataFrame = {
     val stats = statsDf
       .select(col("dim").cast("int"), col("n").cast("long"),
         col("s").cast("decimal(38,0)"), col("ss").cast("decimal(38,0)"))
-      .orderBy("dim").limit(maxDims + 1).collect()
-    require(stats.nonEmpty && stats.length <= maxDims,
-      s"standardize artifact must have 1..$maxDims dims (got ${stats.length})")
+      .orderBy("dim").limit(MaxArtifactDims + 1).collect()
+    require(stats.nonEmpty && stats.length <= MaxArtifactDims,
+      s"standardize artifact must have 1..$MaxArtifactDims dims (got ${stats.length})")
     require(stats.zipWithIndex.forall { case (r, i) => r.getInt(0) == i },
       "standardize artifact dims must be contiguous from 0")
     // the SAME IEEE expressions the oracle mirrors: one division for
@@ -245,7 +237,7 @@ object Similarity {
       .otherwise(raise_error(concat(
         lit(s"standardize: vector dims != artifact dims ${stats.length} " +
           "(got "), size(col(vecCol)).cast("string"), lit(")"))))
-    df.withColumn(out, transform(checked, (x, i) => {
+    df.withColumn("zvec", transform(checked, (x, i) => {
       val s = element_at(sdLit, i + 1)
       when(s === 0.0, lit(0.0))
         .otherwise((x.cast("double") - element_at(muLit, i + 1)) / s)
@@ -480,17 +472,16 @@ object Similarity {
   /** The QUERY-side cell fan-out of [[ivfTopKProbed]] as a public
     * building block (the streaming serve path needs it against a
     * saved centroid artifact): each row gains an exploded `cid`
-    * column with its `nProbe` nearest cells — same L2 metric and cid
-    * tiebreak as [[ivfAssign]], so `nProbe = 1` reproduces the
+    * column with its nearest cell — same L2 metric and cid
+    * tiebreak as [[ivfAssign]], so it reproduces the
     * corpus-side assignment exactly. Map-only: the centroid table
     * collects once (driver-sized by the IVF contract) and rides as a
     * plan literal; meant for the query side, which is small. */
   def probeAssign(queries: DataFrame, vecCol: String,
-      centroids: DataFrame, nProbe: Int = 1): DataFrame = {
-    require(nProbe >= 1, "nProbe must be >= 1")
+      centroids: DataFrame): DataFrame = {
     val (cids, matrix) = collectCentroids(centroids)
     queries.withColumn("cid",
-      explode(probeCells(col(vecCol), cids, matrix, nProbe)))
+      explode(probeCells(col(vecCol), cids, matrix, 1)))
   }
 
   /** Multi-probe IVF top-k: the corpus stays single-cell (one map-only
@@ -537,7 +528,7 @@ object Similarity {
     * (callers previously had to supply centroids).
     *
     *  - init: farthest-point traversal over a deterministic hash
-    *    sample — ONE corpus pass collects the `sampleSize` vectors
+    *    sample — ONE corpus pass collects the 4096 vectors
     *    whose ids md5-hash smallest (TakeOrdered: no full sort
     *    materializes), then the driver greedily picks the sample
     *    vector farthest from the chosen set, k times. No RNG anywhere;
@@ -558,14 +549,14 @@ object Similarity {
     * 0..k-1 in init-hash order, ready for [[ivfAssign]]/[[ivfTopK]]/
     * [[ivfTopKProbed]]. */
   def trainCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int = 3, sampleSize: Int = 4096): DataFrame = {
+      k: Int, iters: Int = 3): DataFrame = {
     require(k >= 1 && iters >= 0, "need k >= 1 and iters >= 0")
     val spark = corpus.sparkSession
     import spark.implicits._
     val sample: Array[Seq[Double]] = corpus
       .select(col(vecCol).cast("array<double>").as("cvec"),
         md5(concat(lit("kmeans#"), col(idCol).cast("string"))).as("__h"))
-      .orderBy("__h").limit(math.max(k, sampleSize))
+      .orderBy("__h").limit(math.max(k, 4096))
       .collect().map(_.getSeq[Double](0))
     require(sample.length >= k,
       s"corpus has ${sample.length} vectors, cannot seed k=$k centroids; " +
@@ -748,9 +739,7 @@ object Similarity {
   def ivfPqTopKOnCodes(encoded: DataFrame, idCol: String,
       cellCol: String, codeCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
-      centroids: DataFrame, codebooks: DataFrame, k: Int,
-      nProbe: Int = 1): DataFrame = {
-    require(nProbe >= 1, "nProbe must be >= 1")
+      centroids: DataFrame, codebooks: DataFrame, k: Int): DataFrame = {
     val spark = encoded.sparkSession
     val (cids, matrix) = collectCentroids(centroids)
     val cbs = collectCodebooks(codebooks)
@@ -760,7 +749,7 @@ object Similarity {
         col(qVecCol).cast("array<double>").as("__qv"))
       .withColumn("__lut", lutFor(cbs)) // BEFORE the probe explode
       .withColumn("cid",
-        explode(probeCells(col("__qv"), cids, matrix, nProbe)))
+        explode(probeCells(col("__qv"), cids, matrix, 1)))
       .select("q_id", "cid", "__lut")
     scoreAdcRanked(encoded
       .select(col(idCol).as("n_id"), col(cellCol).as("cid"),
@@ -770,18 +759,16 @@ object Similarity {
 
   /** IVF-PQ — the billion-scale ANN layout (FAISS IVFPQ): the corpus
     * is coarse-quantized into IVF cells AND stored as m-byte PQ codes;
-    * a query probes its `nProbe` nearest cells and ADC-scores ONLY
-    * those cells' codes. Both reductions compose: the cell probe cuts
-    * the candidate set to nProbe/cells of the corpus, the codes cut
+    * a query probes its nearest cell and ADC-scores ONLY
+    * that cell's codes. Both reductions compose: the cell probe cuts
+    * the candidate set to 1/cells of the corpus, the codes cut
     * bytes-per-candidate ~16-32×. Everything on the corpus side is the
     * same two map-only codegen kernels as [[ivfAssign]]/[[pqEncode]];
     * the query side (probe list + LUT) broadcasts — the corpus never
     * shuffles. */
   def ivfPqTopK(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, codebooks: DataFrame,
-      queryPred: org.apache.spark.sql.Column, k: Int,
-      nProbe: Int = 1): DataFrame = {
-    require(nProbe >= 1, "nProbe must be >= 1")
+      queryPred: org.apache.spark.sql.Column, k: Int): DataFrame = {
     val spark = corpus.sparkSession
     val (cids, matrix) = collectCentroids(centroids)
     val cbs = collectCodebooks(codebooks)
@@ -791,9 +778,8 @@ object Similarity {
     val q = enc.filter(queryPred)
       .select(col(idCol).as("q_id"),
         col(vecCol).cast("array<double>").as("__qv"))
-      .withColumn("__lut", lutFor(cbs)) // BEFORE the probe explode, or
-      // the m×ksub×subdim LUT is recomputed nProbe times per query
-      .withColumn("cid", explode(probeCells(col("__qv"), cids, matrix, nProbe)))
+      .withColumn("__lut", lutFor(cbs)) // BEFORE the probe explode
+      .withColumn("cid", explode(probeCells(col("__qv"), cids, matrix, 1)))
       .select("q_id", "cid", "__lut")
     scoreAdcRanked(
       enc.select(col(idCol).as("n_id"), col("cid"), col("__code")),
@@ -858,9 +844,7 @@ object Similarity {
     * corpus never shuffles. */
   def ivfPqTopKResidual(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, codebooks: DataFrame,
-      queryPred: org.apache.spark.sql.Column, k: Int,
-      nProbe: Int = 1): DataFrame = {
-    require(nProbe >= 1, "nProbe must be >= 1")
+      queryPred: org.apache.spark.sql.Column, k: Int): DataFrame = {
     val (cids, matrix) = collectCentroids(centroids)
     val cbs = collectCodebooks(codebooks)
     val enc = withCellResidual(corpus, vecCol, cids, matrix)
@@ -870,7 +854,7 @@ object Similarity {
       .select(col(idCol).as("q_id"),
         col(vecCol).cast("array<double>").as("__qv"))
       .withColumn("__p",
-        explode(probeCellsWithIdx(col("__qv"), cids, matrix, nProbe)))
+        explode(probeCellsWithIdx(col("__qv"), cids, matrix, 1)))
       .withColumn("__rqv", zip_with(col("__qv"),
         element_at(typedLit(matrix.map(_.toSeq)),
           col("__p.idx") + lit(1)),
@@ -1031,13 +1015,13 @@ object Similarity {
     * stays live and is itself a deterministic function of the
     * matrix). */
   def opqRotation(corpus: DataFrame, idCol: String, vecCol: String, m: Int,
-      sampleSize: Int = 4096, maxSweeps: Int = 64): Seq[Seq[Double]] = {
+      maxSweeps: Int = 64): Seq[Seq[Double]] = {
     require(m >= 1, "need m >= 1 subspaces")
     val rawSample: Array[Seq[Double]] = corpus
       .select(col(vecCol).cast("array<double>").as("__v"),
         md5(concat(lit("opq#"), col(idCol).cast("string"))).as("__h"))
       .filter(col("__v").isNotNull)
-      .orderBy("__h").limit(math.max(2, sampleSize))
+      .orderBy("__h").limit(4096)
       .collect().map(_.getSeq[Double](0))
     require(rawSample.nonEmpty, "corpus is empty")
     val d = rawSample.head.length

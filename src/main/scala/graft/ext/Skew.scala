@@ -79,20 +79,17 @@ object Skew {
     *
     * AQE's skew-join split handles the SORT-MERGE case adaptively;
     * salting remains the portable form (works for hash joins, for
-    * pre-AQE stages, and composes with bucketed layouts). Only `inner`
-    * and `left` joins are allowed: with big on the left, unmatched
-    * small replicas can at worst drop (never duplicate); a right/full
-    * join would emit one null-padded row per unmatched REPLICA.
+    * pre-AQE stages, and composes with bucketed layouts). The join is
+    * inner: an outer join would emit one null-padded row per unmatched
+    * small-side REPLICA.
     */
   def saltedJoin(big: DataFrame, small: DataFrame, keys: Seq[String],
-      salts: Int, joinType: String = "inner"): DataFrame = {
+      salts: Int): DataFrame = {
     require(salts > 0, "salts must be positive")
-    require(Set("inner", "left", "left_outer", "leftouter")(joinType),
-      s"saltedJoin supports inner/left joins only, got $joinType")
     val bigS = big.withColumn("__salt", rowSalt(big, salts))
     val smallS = small.withColumn("__salt",
       explode(sequence(lit(0), lit(salts - 1))))
-    bigS.join(smallS, keys :+ "__salt", joinType).drop("__salt")
+    bigS.join(smallS, keys :+ "__salt").drop("__salt")
   }
 
   /** Bloom-prefiltered inner equi-join: the big side is map-filtered
@@ -105,7 +102,8 @@ object Skew {
     * `big.join(small, keys)` — which is why only INNER is offered
     * (an outer flavor would need the dropped rows back).
     *
-    * The filter is [[Sketches.buildBloomBits]] + the codegen
+    * The filter (1% false positives, sized by a count of `small`) is
+    * [[Sketches.buildBloomBits]] + the codegen
     * [[Sketches.bloomMightContain]] probe: one scan of the small keys
     * to build (bounded ≤128 MB by the plan-literal contract), then a
     * pure map filter riding the big scan inside whole-stage codegen —
@@ -113,9 +111,8 @@ object Skew {
     * no extra exchange anywhere.
     */
   def bloomPrefilteredJoin(big: DataFrame, small: DataFrame,
-      keys: Seq[String], fpp: Double = 0.01,
-      expectedItems: Option[Long] = None): DataFrame = {
-    val n = math.max(1L, expectedItems.getOrElse(small.count()))
+      keys: Seq[String]): DataFrame = {
+    val n = math.max(1L, small.count())
     // Hash both sides at the join's COMMON COERCED key type: the join
     // itself coerces an INT key to match a BIGINT/DOUBLE key, but
     // xxhash64 hashes native types differently — and a string
@@ -143,7 +140,7 @@ object Skew {
         case (k, t) => df(k).cast(t)
       }: _*)
     val (bits, k) = Sketches.buildBloomBits(
-      small.select(keyHash(small).as("__k")), "__k", n, fpp)
+      small.select(keyHash(small).as("__k")), "__k", n, 0.01)
     val probe = Sketches.bloomMightContain(big.sparkSession,
       keyHash(big), bits, k)
     big.filter(probe).join(small, keys)

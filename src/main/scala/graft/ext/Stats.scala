@@ -168,19 +168,14 @@ object Stats {
     *
     * Plan: ONE Aggregate over the table. Multiple exact countDistincts
     * make Catalyst plan an Expand (one duplicated stream per distinct
-    * column) — exact is the oracle-checkable default; pass
-    * `exact = false` to profile 100 TB with `approx_count_distinct`
-    * (HLL, single stream, no Expand) when ±2% is acceptable. The
+    * column) — the price of oracle-checkable exact counts. The
     * long-form pivot is driver-free: one literal-struct array inlined
     * over the single aggregate row. */
-  def profile(df: DataFrame, cols: Seq[String],
-      exact: Boolean = true): DataFrame = {
+  def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "profile needs at least one column")
-    def cnt(c: String): Column =
-      if (exact) countDistinct(col(c)) else approx_count_distinct(col(c))
     val aggs = count(lit(1)).as("__rows") +: cols.flatMap(c => Seq(
       sum(col(c).isNull.cast("long")).as(s"__nul_$c"),
-      cnt(c).as(s"__dst_$c"),
+      countDistinct(col(c)).as(s"__dst_$c"),
       min(col(c)).cast("string").as(s"__min_$c"),
       max(col(c)).cast("string").as(s"__max_$c")))
     df.agg(aggs.head, aggs.tail: _*)

@@ -20,9 +20,8 @@ object TextAnalysis {
     "de" -> Seq("der", "die", "und", "das", "ist", "von", "mit"))
 
   def withLangId(df: DataFrame, textCol: String,
-      markers: Seq[(String, Seq[String])] = DefaultMarkers,
-      out: String = "lang_guess"): DataFrame =
-    df.withColumn(out, langId(tokens(col(textCol)), markers))
+      markers: Seq[(String, Seq[String])] = DefaultMarkers): DataFrame =
+    df.withColumn("lang_guess", langId(tokens(col(textCol)), markers))
 
   /** Token counts: whitespace tokens and BPE-ish pre-tokens. */
   def withTokenCounts(df: DataFrame, textCol: String): DataFrame =
@@ -56,12 +55,12 @@ object TextAnalysis {
   }
 
   /** Rolling-window content fingerprint per document: the minimum md5
-    * over its distinct word n-gram shingles (native one-pass shingler),
+    * over its distinct word 8-gram shingles (native one-pass shingler),
     * stable under small edits at the ends. */
-  def withFingerprint(df: DataFrame, textCol: String, n: Int = 8): DataFrame =
+  def withFingerprint(df: DataFrame, textCol: String): DataFrame =
     df.withColumn("fingerprint",
       array_min(transform(graft.functions.expressions.TextExpressions
-        .wordShingles(df.sparkSession, col(textCol), n), s => md5(s))))
+        .wordShingles(df.sparkSession, col(textCol), 8), s => md5(s))))
 
   /** Intra-document repetition score (the Gopher/C4-style duplicate
     * n-gram filter): fraction of word n-grams that are repeats of an
@@ -136,10 +135,8 @@ object TextAnalysis {
   /** Exact duplicate-LINE repetition (the remaining Gopher §A1.1 rule
     * family next to [[withRepetitionScore]]'s gram distinct-ratio and
     * [[withTopGramCoverage]]'s one-phrase domination): how much of a
-    * document is exact copies of its own lines. `sep` picks the unit —
-    * the default "\\R" splits physical lines; "\\R{2,}" gives the
-    * paragraph variant of the same rule. Empty units (blank lines /
-    * separator runs) are dropped before counting so vertical
+    * document is exact copies of its own physical lines. Empty units
+    * (blank lines / separator runs) are dropped before counting so vertical
     * whitespace never counts as "duplication".
     *
     * Per doc: `n_lines` (non-empty units), `dup_line_fraction` =
@@ -155,9 +152,9 @@ object TextAnalysis {
     * million-line doc costs what a ten-line doc costs beyond the scan,
     * and the text column itself never shuffles (only distinct
     * (doc, line) units do, already collapsed by the partial agg). */
-  def withLineRepetition(df: DataFrame, idCol: String, textCol: String,
-      sep: String = "\\R"): DataFrame = {
-    val units = lineUnits(col(textCol), sep)
+  def withLineRepetition(df: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
+    val units = lineUnits(col(textCol))
     val cnt = df
       .select(col(idCol), explode(units).as("__line"))
       .groupBy(col(idCol), col("__line"))
@@ -391,21 +388,20 @@ object TextAnalysis {
   /** First-failing-rule quality verdict (the Dolma/FineWeb-style
     * filter-pipeline report): every document gets a verdict — `keep`,
     * or the NAME of the first gate it fails, in fixed rule order
-    * (too_short → low_alpha → high_punct → repetitive). Reporting the
+    * (too_short: < 5 tokens → low_alpha: alpha ratio < 0.5 →
+    * high_punct: punct ratio > 0.2 → repetitive: duplicate-bigram
+    * ratio > 0.2), in column `verdict`. Reporting the
     * reason, not just a boolean, is what makes large-scale filter
     * tuning possible (the rejection histogram IS the tuning signal).
     * Composes the existing one-pass signals; still map-only, no
     * shuffle. */
-  def qualityVerdict(df: DataFrame, textCol: String,
-      minTokens: Int = 5, minAlphaRatio: Double = 0.5,
-      maxPunctRatio: Double = 0.2, maxDupRatio: Double = 0.2,
-      out: String = "verdict"): DataFrame =
+  def qualityVerdict(df: DataFrame, textCol: String): DataFrame =
     withRepetitionScore(withQualitySignals(df, textCol), textCol, n = 2)
-      .withColumn(out,
-        when(col("n_tokens") < minTokens, lit("too_short"))
-          .when(col("alpha_ratio") < minAlphaRatio, lit("low_alpha"))
-          .when(col("punct_ratio") > maxPunctRatio, lit("high_punct"))
-          .when(col("dup_gram_ratio") > maxDupRatio, lit("repetitive"))
+      .withColumn("verdict",
+        when(col("n_tokens") < 5, lit("too_short"))
+          .when(col("alpha_ratio") < 0.5, lit("low_alpha"))
+          .when(col("punct_ratio") > 0.2, lit("high_punct"))
+          .when(col("dup_gram_ratio") > 0.2, lit("repetitive"))
           .otherwise(lit("keep")))
 
   /** Top TF-IDF term per document. The IDF factor is the RATIONAL
@@ -491,19 +487,19 @@ object TextAnalysis {
 
   /** Tokenizer-apply: encode every document as its array of vocabulary
     * token ids (= [[vocabulary]] ranks; out-of-vocab tokens map to
-    * `unkId`, default 0). The vocab ships as a literal map into a
+    * 0) in column `token_ids`. The vocab ships as a literal map into a
     * map-only `transform` — no join touches the corpus, the same
     * driver-sized-table contract as IVF centroids (a tokenizer vocab is
     * 32k–256k entries by construction). This is the last step before
     * [[Curation.packSequences]]: text → ids → packed shards. */
-  def encodeTokens(df: DataFrame, textCol: String, vocab: DataFrame,
-      unkId: Long = 0L, out: String = "token_ids"): DataFrame = {
+  def encodeTokens(df: DataFrame, textCol: String,
+      vocab: DataFrame): DataFrame = {
     val entries = vocab.select(col("term"), col("rank").cast("long"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val m = typedLit(entries)
-    df.withColumn(out,
+    df.withColumn("token_ids",
       transform(tokens(col(textCol)),
-        t => coalesce(element_at(m, t), lit(unkId))))
+        t => coalesce(element_at(m, t), lit(0L))))
   }
 
   /** JVM twin of [[graft.functions.TextFunctions.bpeTokens]] — the ONE
@@ -513,6 +509,9 @@ object TextAnalysis {
   private[graft] def jvmBpeTokens(text: String): Seq[String] =
     if (text == null) Seq.empty else PreTokenRe.findAllIn(text).toSeq
 
+  /** Ceiling on the distinct pre-tokens [[bpeTrain]] collects. */
+  private val MaxBpeWords = 262144
+
   /** Train a byte-pair-encoding merge table on the corpus — the
     * tokenizer-TRAINING half of the encode pipeline ([[encodeTokens]]
     * applies a finished vocab; this builds one). Classic BPE (Sennrich
@@ -520,7 +519,7 @@ object TextAnalysis {
     * merge decisions are a pure function of the WORD-FREQUENCY table,
     * so the distributed work is exactly ONE corpus pass (pre-token
     * explode → count, map-side combined); the merge loop then runs on
-    * that driver-sized table. `maxWords` is the bounded-collect
+    * that driver-sized table. [[MaxBpeWords]] is the bounded-collect
     * contract (same device as the IVF centroid and vocab caps — a hard
     * `require`, not a silent truncation): natural-language corpora
     * plateau at 10⁵-ish distinct pre-tokens regardless of corpus
@@ -541,8 +540,8 @@ object TextAnalysis {
     * U+E000..U+FFFF (UTF-16 surrogates sort below that range, real
     * code points above it). Training on such a corpus is cross-engine
     * replayable only if ranks are pinned explicitly. */
-  def bpeTrain(df: DataFrame, textCol: String, numMerges: Int,
-      maxWords: Int = 262144): DataFrame = {
+  def bpeTrain(df: DataFrame, textCol: String,
+      numMerges: Int): DataFrame = {
     require(numMerges >= 1, s"numMerges must be >= 1: $numMerges")
     val spark = df.sparkSession
     import spark.implicits._
@@ -551,9 +550,9 @@ object TextAnalysis {
       .groupBy("__w").agg(count(lit(1)).as("__n"))
       .orderBy("__w") // deterministic driver order
       .as[(String, Long)].collect()
-    require(wordRows.length <= maxWords,
+    require(wordRows.length <= MaxBpeWords,
       s"bpeTrain: ${wordRows.length} distinct pre-tokens exceed " +
-        s"maxWords=$maxWords — raise the cap or pre-filter the corpus")
+        s"$MaxBpeWords — pre-filter the corpus")
     // driver-side merge loop over the word table
     var words: Array[(Array[String], Long)] = wordRows.map { case (w, n) =>
       (w.codePoints().toArray.map((cp: Int) => new String(Character.toChars(cp))), n)
@@ -599,7 +598,7 @@ object TextAnalysis {
   }
 
   /** Apply a [[bpeTrain]] merge table: every document becomes its
-    * BPE-token array (`out`), the last text transform before
+    * BPE-token array (`bpe_tokens`), the last text transform before
     * [[encodeTokens]]/[[Curation.packSequences]]. The merge table
     * broadcasts (it is numMerges-sized); each task memoizes
     * word→tokens per partition, so the per-row cost is one map lookup
@@ -608,10 +607,10 @@ object TextAnalysis {
     * imperative, so this runs as a typed `mapPartitions`
     * (no Column/Expression form exists for an iterative fixpoint;
     * this is a scan-shaped batch op, never a per-query kernel). Output
-    * carries (idCol, out) — project other columns before or join on
-    * idCol after. */
+    * carries (idCol, bpe_tokens) — project other columns before or
+    * join on idCol after. */
   def bpeApply(df: DataFrame, idCol: String, textCol: String,
-      merges: DataFrame, out: String = "bpe_tokens"): DataFrame = {
+      merges: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val ranks: Map[(String, String), Int] = merges
@@ -659,7 +658,7 @@ object TextAnalysis {
           (id, jvmBpeTokens(text).flatMap(encodeWord))
         }
       }
-      .toDF(idCol, out)
+      .toDF(idCol, "bpe_tokens")
   }
 
   /** Corpus-conditional bigram familiarity — the language-model-flavored
@@ -720,11 +719,8 @@ object TextAnalysis {
     * nothing corpus-sized ever shuffles.
     *
     * Output: (query_term, term, cnt, distance), one row per vocab
-    * candidate within distance `maxEdits` of a query term. */
-  def spellCandidates(vocab: DataFrame, queries: Seq[String],
-      maxEdits: Int = 1): DataFrame = {
-    require(maxEdits == 1,
-      "deletion neighborhood is implemented for maxEdits = 1")
+    * candidate within distance 1 of a query term. */
+  def spellCandidates(vocab: DataFrame, queries: Seq[String]): DataFrame = {
     require(queries.nonEmpty, "spellCandidates needs query terms")
     def variants(colName: String): Column = explode(expr(
       s"""array_distinct(concat(array($colName),
@@ -742,7 +738,7 @@ object TextAnalysis {
       .select("query_term", "term", "cnt").distinct()
       .withColumn("distance",
         levenshtein(col("query_term"), col("term")).cast("long"))
-      .filter(col("distance") <= lit(maxEdits))
+      .filter(col("distance") <= lit(1))
   }
 
   /** Vocabulary-wide edit-distance-1 pair discovery — the SELF-JOIN
@@ -758,15 +754,14 @@ object TextAnalysis {
     * rows, and a vocab is corpus-sublinear); candidate pairs ∝ Σ over
     * variant keys |bucket|² — bounded by how many terms share a
     * deletion, never |vocab|². Returns (a, b, distance) with a < b. */
-  def editDistancePairs(vocab: DataFrame,
-      termCol: String = "term"): DataFrame = {
+  def editDistancePairs(vocab: DataFrame): DataFrame = {
     def variants(colName: String): Column = explode(expr(
       s"""array_distinct(concat(array($colName),
          |  transform(sequence(1, length($colName)), i ->
          |    concat(substr($colName, 1, i - 1),
          |           substr($colName, i + 1, length($colName))))))"""
         .stripMargin))
-    val v = vocab.select(col(termCol).as("__t"))
+    val v = vocab.select(col("term").as("__t"))
       .select(col("__t"), variants("__t").as("__var"))
     v.select(col("__t").as("a"), col("__var"))
       .join(v.select(col("__t").as("b"), col("__var")), Seq("__var"))
@@ -845,9 +840,8 @@ object TextAnalysis {
     regexp_replace(url, LongNumRe, "<NUM>")
   }
 
-  def withRedaction(df: DataFrame, textCol: String,
-      out: String = "text_redacted"): DataFrame =
-    df.withColumn(out, redact(col(textCol)))
+  def withRedaction(df: DataFrame, textCol: String): DataFrame =
+    df.withColumn("text_redacted", redact(col(textCol)))
 
   /** Unicode cleanup for corpus text — the normalization pass every
     * web-scraped corpus gets before hashing/dedup/tokenization (the
@@ -860,12 +854,12 @@ object TextAnalysis {
     * NFC is a pure function of the code-point sequence (JVM
     * Normalizer == DuckDB nfc_normalize by spec), and the regex
     * steps are plain character classes. On a streaming frame it is
-    * stateless and Append-legal with no watermark. */
-  def unicodeClean(df: DataFrame, textCol: String,
-      out: String = "clean_text"): DataFrame = {
+    * stateless and Append-legal with no watermark. Output column:
+    * `clean_text`. */
+  def unicodeClean(df: DataFrame, textCol: String): DataFrame = {
     val nfc = graft.functions.expressions.TextExpressions
       .nfcNormalize(df.sparkSession, col(textCol))
-    df.withColumn(out,
+    df.withColumn("clean_text",
       trim(regexp_replace(regexp_replace(nfc,
         "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", ""),
         "[ \\t]+", " ")))

@@ -14,15 +14,14 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** Non-empty line units of a text column: `sep` picks the unit
-    * ("\\R" = physical lines, "\\R{2,}" = paragraphs); blank units
-    * (separator runs) never count as content. THE one definition of
-    * "line" shared by the per-doc repetition signal
+  /** Non-empty physical line units (split on "\\R") of a text
+    * column; blank units (separator runs) never count as content. THE
+    * one definition of "line" shared by the per-doc repetition signal
     * (TextAnalysis.withLineRepetition) and every corpus-level line
     * dedup pass (Dedup.removeBoilerplateLines / dedupLinesKeepFirst),
     * so they can never drift on what a line is. */
-  def lineUnits(text: Column, sep: String = "\\R"): Column =
-    filter(split(text, sep), l => length(l) > 0)
+  def lineUnits(text: Column): Column =
+    filter(split(text, "\\R"), l => length(l) > 0)
 
   /** Deterministic w-token chunk "lines" rebuilt from a token array
     * and joined with \n — the oracle reconstruction device shared by

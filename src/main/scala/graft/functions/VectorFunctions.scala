@@ -63,10 +63,10 @@ object VectorFunctions {
   /** `nBits`-bit random-hyperplane LSH bucket id for a vector. Vectors at
     * small angles collide with high probability — the bucket is the ANN
     * pre-filter (Charikar's SimHash for angular distance). Hyperplanes are
-    * literal arrays + a codegen'd dot product. */
-  def lshBucket(vec: Column, nBits: Int, dims: Int = 64): Column =
+    * literal arrays + a codegen'd dot product, over 64 dims. */
+  def lshBucket(vec: Column, nBits: Int): Column =
     (0 until nBits).map { p =>
-      val plane = typedLit(hyperplaneComponents(p, dims))
+      val plane = typedLit(hyperplaneComponents(p, 64))
       when(dotFast(vec, plane) >= 0, lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
 }

@@ -70,8 +70,8 @@ object AsofJoin {
     (taggedLeft.unionByName(paddedRight), leftCols, rightPayloadCols)
   }
 
-  /** The final projection shared by every as-of variant: keep left
-    * rows, unpack the matched right payload. Expects `__match`. */
+  /** The final projection of [[asof]]: keep left rows, unpack the
+    * matched right payload. Expects `__match`. */
   private def finish(matched: DataFrame, keys: Seq[String],
       leftTs: String, leftCols: Seq[String],
       rightPayloadCols: Seq[String]): DataFrame =
@@ -119,152 +119,6 @@ object AsofJoin {
     finish(unioned
         .withColumn("__match", last(col("__r"), ignoreNulls = true).over(w)),
       keys, leftTs, leftCols, rightPayloadCols)
-  }
-
-  /** [[backward]] for FEW keys at extreme scale — the bucketed
-    * two-pass device the interval family uses
-    * ([[graft.ranges.IntervalSets.coverageDepthBucketed]]), applied to
-    * the as-of walk. The plain form's window partitions by the keys
-    * alone: 25 chromosomes (or one symbol, one tenant…) caps a
-    * 1000-executor cluster at 25 sort tasks no matter how many rows
-    * each key holds. Here the union-tag stream buckets by
-    * `timeline div bucketWidth` and
-    *
-    *  1. per (keys, bucket): one aggregation finds the LAST right row
-    *     of each occupied bucket (`max_by` on the walk order — right
-    *     rows are unique per (keys, ts), the documented precondition);
-    *  2. a window over THAT table (one row per occupied bucket) gives
-    *     each bucket its ENTERING match — the latest right payload in
-    *     any earlier bucket (`last(…, ignoreNulls)`);
-    *  3. per (keys, bucket): the plain running-`last` window, seeded by
-    *     `coalesce(local, entering)` — every earlier-bucket right row
-    *     sorts before every current-bucket row by construction
-    *     (bucketing is on the walk order itself), so the coalesce IS
-    *     the global running last.
-    *
-    * Results are identical to [[backward]]/[[forward]] (AsofSpec pins
-    * ≡ at several widths); the heavy sort now runs per (keys, bucket).
-    * The timeline must be integral, date, or timestamp (micros) — the
-    * bucketing is exact integer division; fractional timelines stay on
-    * the plain form. Pick `bucketWidth` in timeline units so keys ×
-    * buckets lands in the thousands-to-millions. */
-  def backwardBucketed(left: DataFrame, right: DataFrame,
-      keys: Seq[String], leftTs: String, rightTs: String,
-      bucketWidth: Long): DataFrame =
-    asofBucketed(left, right, keys, leftTs, rightTs, forward = false,
-      bucketWidth)
-
-  /** [[backwardBucketed]] with [[deriveBucketWidth]]'s width — the
-    * caller-free form (the interval family's deriveBucketWidth
-    * convention: one extra cheap aggregate buys a data-derived width
-    * instead of a guessed one). */
-  def backwardBucketed(left: DataFrame, right: DataFrame,
-      keys: Seq[String], leftTs: String, rightTs: String): DataFrame =
-    backwardBucketed(left, right, keys, leftTs, rightTs,
-      deriveBucketWidth(left, right, leftTs, rightTs))
-
-  /** [[forward]] on the bucketed two-pass plan — the negated-timeline
-    * evaluation of [[backwardBucketed]]. */
-  def forwardBucketed(left: DataFrame, right: DataFrame,
-      keys: Seq[String], leftTs: String, rightTs: String,
-      bucketWidth: Long): DataFrame =
-    asofBucketed(left, right, keys, leftTs, rightTs, forward = true,
-      bucketWidth)
-
-  /** [[forwardBucketed]] with [[deriveBucketWidth]]'s width. */
-  def forwardBucketed(left: DataFrame, right: DataFrame,
-      keys: Seq[String], leftTs: String, rightTs: String): DataFrame =
-    forwardBucketed(left, right, keys, leftTs, rightTs,
-      deriveBucketWidth(left, right, leftTs, rightTs))
-
-  /** Data-derived bucket width for the bucketed as-of forms: span of
-    * the COMBINED (left ∪ right) timeline divided into enough buckets
-    * that each holds ~`targetRowsPerBucket` union rows, floored at 256
-    * buckets so a small table still exercises the two-pass plan. One
-    * cheap two-table aggregate (min/max/count over the ts columns
-    * only — column-pruned to a single-column scan); width is in
-    * timeline units (micros for timestamps, days for dates, native
-    * units for integers), matching what [[backwardBucketed]] buckets
-    * on. Returns ≥ 1. */
-  def deriveBucketWidth(left: DataFrame, right: DataFrame,
-      leftTs: String, rightTs: String,
-      targetRowsPerBucket: Long = 32768L): Long = {
-    require(targetRowsPerBucket >= 1, "targetRowsPerBucket must be >= 1")
-    import org.apache.spark.sql.types.{DateType, TimestampNTZType,
-      TimestampType}
-    // union the RAW ts columns first: the set-op coercion unifies a
-    // mixed timestamp/date pair to one type — exactly what the
-    // bucketed join's own tagUnion does — and the unit conversion
-    // happens ONCE on the unified type. Converting per side would mix
-    // day-numbers with micros and derive a garbage width.
-    val raw = left.select(col(leftTs).as("__t"))
-      .union(right.select(col(rightTs).as("__t")))
-    val ord: Column = raw.schema("__t").dataType match {
-      case TimestampType => unix_micros(col("__t"))
-      case TimestampNTZType => unix_micros(col("__t").cast("timestamp"))
-      case DateType => col("__t").cast("int").cast("long")
-      case _ => col("__t").cast("long")
-    }
-    val both = raw.select(ord.as("__o"))
-    val r = both.agg(min(col("__o")).as("lo"), max(col("__o")).as("hi"),
-      count(col("__o")).as("n")).head()
-    if (r.isNullAt(0) || r.isNullAt(1)) 1L
-    else {
-      val domain = math.max(1L, r.getLong(1) - r.getLong(0) + 1)
-      val nBuckets = math.max(256L, r.getLong(2) / targetRowsPerBucket)
-      math.max(1L, domain / nBuckets)
-    }
-  }
-
-  private def asofBucketed(left: DataFrame, right: DataFrame,
-      keys: Seq[String], leftTs: String, rightTs: String,
-      forward: Boolean, bucketWidth: Long): DataFrame = {
-    require(bucketWidth >= 1, s"bucketWidth must be >= 1: $bucketWidth")
-    import org.apache.spark.sql.types.{ByteType, DateType, IntegerType,
-      LongType, ShortType, TimestampNTZType, TimestampType}
-    val (unioned, leftCols, rightPayloadCols) =
-      tagUnion(left, right, keys, leftTs, rightTs)
-    val sign = if (forward) -1L else 1L
-    // exact integer walk order (ascending == match order, the plain
-    // form's convention); fractional timelines have no exact bucketing
-    val ord: Column = unioned.schema("__ts").dataType match {
-      case TimestampType => lit(sign) * unix_micros(col("__ts"))
-      case TimestampNTZType =>
-        lit(sign) * unix_micros(col("__ts").cast("timestamp"))
-      case DateType => lit(sign) * col("__ts").cast("int").cast("long")
-      case ByteType | ShortType | IntegerType | LongType =>
-        lit(sign) * col("__ts").cast("long")
-      case dt => throw new IllegalArgumentException(
-        s"asof bucketed: timeline type $dt is not integral/date/" +
-          "timestamp — use the plain backward/forward form")
-    }
-    val kc = keys.map(col)
-    // truncating `div` is monotone in ord, which is all bucket ids need
-    // (bucket 0 is wider when ord spans zero — harmless)
-    val u = unioned.withColumn("__ord", ord)
-      .withColumn("__b", expr(s"__ord div ${bucketWidth}L"))
-    // 1+2: last right per occupied bucket, then the entering match.
-    // max_by ignores null-ordering rows, so left rows (null __rord)
-    // never win; an all-left bucket yields a null __blast, which
-    // last(ignoreNulls) carries past.
-    val bw = Window.partitionBy(kc: _*).orderBy(col("__b").asc)
-    val summary = u
-      .groupBy((kc :+ col("__b")): _*)
-      .agg(max_by(col("__r"), when(col("__src") === 0, col("__ord")))
-        .as("__blast"))
-      .withColumn("__enter", last(col("__blast"), ignoreNulls = true)
-        .over(bw.rowsBetween(Window.unboundedPreceding, -1)))
-      .select((kc :+ col("__b") :+ col("__enter")): _*)
-      .repartition((kc :+ col("__b")): _*)
-    // 3: the plain window, now per (keys, bucket), seeded by __enter
-    val w = Window.partitionBy((kc :+ col("__b")): _*)
-      .orderBy(col("__ord").asc, col("__src").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val matched = u.join(summary, keys :+ "__b")
-      .withColumn("__match",
-        coalesce(last(col("__r"), ignoreNulls = true).over(w),
-          col("__enter")))
-    finish(matched, keys, leftTs, leftCols, rightPayloadCols)
   }
 
   /** As-of join with a tolerance window: match only if the right row is

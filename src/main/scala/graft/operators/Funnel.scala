@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions._
   * Same-timestamp events do not advance the funnel (a conversion
   * cannot be simultaneous with its cause), and events before the
   * previous step never count — out-of-order journeys stall where the
-  * order breaks. An optional `horizon` (same unit as `tsCol`) bounds
-  * the whole journey: step i only counts within `t1 + horizon`.
+  * order breaks.
   */
 object Funnel {
 
@@ -38,8 +37,7 @@ object Funnel {
     * chained join rounds lose — measured 16× at 12 steps / 2M events,
     * OOM at 10M, BENCH.md round 7.) */
   def funnel(events: DataFrame, userCol: String, typeCol: String,
-      tsCol: String, steps: Seq[String],
-      horizon: Option[Long] = None): DataFrame = {
+      tsCol: String, steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
     require(steps.distinct == steps,
       "repeated step types are ambiguous — strict-after semantics" +
@@ -52,9 +50,7 @@ object Funnel {
         .select(col(userCol), col(tsCol).as("__ts"))
       val after = acc.head.join(cand, Seq(userCol))
         .filter(col("__ts") > col("__tcur"))
-      val bounded = horizon.fold(after)(h =>
-        after.filter(col("__ts") <= col("t1") + lit(h)))
-      bounded.groupBy(col(userCol), col("t1"))
+      after.groupBy(col(userCol), col("t1"))
         .agg(min(col("__ts")).as("__tcur")) :: acc
     }.reverse
     val perStep = stages.zipWithIndex.map { case (s, i) =>
@@ -94,8 +90,7 @@ object Funnel {
     * ties never advance, matching the staged `>`), so the first
     * accepted step-i event IS the minimum strictly-after candidate. */
   def funnelSinglePass(events: DataFrame, userCol: String, typeCol: String,
-      tsCol: String, steps: Seq[String],
-      horizon: Option[Long] = None): DataFrame = {
+      tsCol: String, steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
     require(steps.distinct == steps,
       "repeated step types are ambiguous — strict-after semantics" +
@@ -117,15 +112,12 @@ object Funnel {
           Ordering.by[(Int, Long), Long](_._2))
         val times = Array.fill(n)(NONE)
         var cur = 0
-        var t1 = 0L
         var tcur = 0L
         var i = 0
         while (i < journey.length && cur < n) {
           val (si, ts) = journey(i)
-          if (si == cur &&
-              (cur == 0 || (ts > tcur && horizon.forall(ts <= t1 + _)))) {
+          if (si == cur && (cur == 0 || ts > tcur)) {
             times(cur) = ts
-            if (cur == 0) t1 = ts
             tcur = ts
             cur += 1
           }

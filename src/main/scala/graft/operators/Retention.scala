@@ -87,36 +87,18 @@ object Retention {
     * activity still count that user (the window still covers them);
     * bucket-ends beyond the corpus's last activity are emitted for the
     * same reason, so the curve decays to zero over the final `window`
-    * buckets instead of cutting off.
-    *
-    * `exact = false` is the 100-TB escape hatch: the per-bucket-end
-    * count becomes an HLL++ `approx_count_distinct` (relative error
-    * `rsd`, default 2.3%), and because a distinct-count sketch is
-    * duplicate-insensitive the pair-collapsing `.distinct()` is
-    * DROPPED too — the exact form's only pair-proportional shuffle.
-    * The whole operator is then map-side: each task folds its raw
-    * events straight into one ~1.5 KB HLL register set per bucket-end
-    * it sees, and the shuffle carries only occupied-bucket-ends ×
-    * sketch-size × task-count bytes — flat in both the event count and
-    * the user count (the explode fan-out is per-row map CPU, never
-    * shuffled). The curve stays a DAU curve (±rsd); row set and column
-    * names are identical to the exact form. */
+    * buckets instead of cutting off. */
   def rollingActive(events: DataFrame, userCol: String, tsCol: String,
-      bucketWidth: Long, window: Int, exact: Boolean = true,
-      rsd: Double = 0.023): DataFrame = {
+      bucketWidth: Long, window: Int): DataFrame = {
     require(bucketWidth > 0, s"bucketWidth must be positive: $bucketWidth")
     require(window > 0, s"window must be positive: $window")
     requireIntegralTs(events, tsCol)
     val pairs = events
       .select(col(userCol),
         expr(s"CAST(`$tsCol` AS BIGINT) div ${bucketWidth}L").as("__bucket"))
-    val deduped = if (exact) pairs.distinct() else pairs
-    val fanned = deduped
+    val fanned = pairs.distinct()
       .select(col(userCol), explode(sequence(col("__bucket"),
         col("__bucket") + lit(window - 1L))).as("bucket"))
-    val activeCount =
-      if (exact) countDistinct(col(userCol))
-      else approx_count_distinct(col(userCol), rsd)
-    fanned.groupBy("bucket").agg(activeCount.as("active_users"))
+    fanned.groupBy("bucket").agg(countDistinct(col(userCol)).as("active_users"))
   }
 }

@@ -21,14 +21,14 @@ import org.apache.spark.sql.functions._
 object Sessionize {
 
   def byGap(df: DataFrame, keys: Seq[String], tsCol: String, gap: Long,
-      tieBreak: Seq[String] = Nil, out: String = "session_seq"): DataFrame = {
+      tieBreak: Seq[String] = Nil): DataFrame = {
     val order: Seq[Column] = (col(tsCol) +: tieBreak.map(col)).map(_.asc)
     val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
     // first row per key: lag is NULL -> comparison NULL -> otherwise(0)
     val breaks = when(col(tsCol) - lag(col(tsCol), 1).over(w) > gap, 1)
       .otherwise(0)
     df.withColumn("__brk", breaks)
-      .withColumn(out, sum(col("__brk"))
+      .withColumn("session_seq", sum(col("__brk"))
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .drop("__brk")
   }

@@ -45,28 +45,9 @@ import graft.operators.AsofJoin
   */
 object Closest {
 
-  /** @param maxDist  when set, candidates farther than this are
-    *                  dropped BEFORE the argmin — a query whose nearest
-    *                  feature exceeds the bound counts as unmatched
-    *                  (bedtools-closest-with-a-horizon semantics)
-    * @param keepUnmatched  when true, queries with no (surviving)
-    *                  candidate are emitted with NULL closest_id and
-    *                  distance instead of being dropped — the
-    *                  left-join form downstream enrichment wants
-    * @param coordBucket  when set, the two as-of alignments run on the
-    *                  bucketed two-pass plan
-    *                  ([[AsofJoin.backwardBucketed]], coordinate units)
-    *                  instead of one window per key — the few-key
-    *                  regime (25 chromosomes would otherwise cap the
-    *                  as-of sorts at 25 tasks regardless of cluster
-    *                  size). Results are identical (spec-pinned). */
   def closest(queries: DataFrame, features: DataFrame, keys: Seq[String],
       qStart: String, qEnd: String, fStart: String, fEnd: String,
-      fId: String, width: Long = 10000L,
-      maxDist: Option[Long] = None,
-      keepUnmatched: Boolean = false,
-      coordBucket: Option[Long] = None): DataFrame = {
-    require(maxDist.forall(_ >= 0), s"maxDist must be >= 0: $maxDist")
+      fId: String, width: Long = 10000L): DataFrame = {
     val kc = keys.map(col)
     // the answer is a pure function of the NATURAL query key (keys,
     // start, end) — candidates carry only that key, never the query
@@ -74,8 +55,7 @@ object Closest {
     // generators' shuffles; one keyed join re-attaches the payload at
     // the end (VERDICT r7 Next #4: the old form grouped and re-joined
     // on ALL query columns). Exact-duplicate query rows each get their
-    // own output row in BOTH match modes (the old inner form collapsed
-    // them; the two modes now agree).
+    // own output row.
     val qKey = keys ++ Seq(qStart, qEnd)
     val qNarrow = queries.select(qKey.map(col): _*)
     val qkc = qKey.map(col)
@@ -92,13 +72,7 @@ object Closest {
     val byEnd = features.groupBy((kc :+ col(fEnd).as("__fend")): _*)
       .agg(min(col(fId)).as("__fid"))
       .withColumn("__fcoord", col("__fend"))
-    def bwd(l: DataFrame, r: DataFrame, ts: String, rts: String) =
-      coordBucket.fold(AsofJoin.backward(l, r, keys, ts, rts))(w =>
-        AsofJoin.backwardBucketed(l, r, keys, ts, rts, w))
-    def fwd(l: DataFrame, r: DataFrame, ts: String, rts: String) =
-      coordBucket.fold(AsofJoin.forward(l, r, keys, ts, rts))(w =>
-        AsofJoin.forwardBucketed(l, r, keys, ts, rts, w))
-    val left = bwd(qNarrow, byEnd, qStart, "__fend")
+    val left = AsofJoin.backward(qNarrow, byEnd, keys, qStart, "__fend")
       .filter(col("__fid").isNotNull)
       .select(qkc :+ col("__fid") :+
         (col(qStart) - col("__fcoord")).cast("long").as("__dist"): _*)
@@ -107,22 +81,19 @@ object Closest {
     val byStart = features.groupBy((kc :+ col(fStart).as("__fstart")): _*)
       .agg(min(col(fId)).as("__fid"))
       .withColumn("__fcoord", col("__fstart"))
-    val right = fwd(qNarrow, byStart, qEnd, "__fstart")
+    val right = AsofJoin.forward(qNarrow, byStart, keys, qEnd, "__fstart")
       .filter(col("__fid").isNotNull)
       .select(qkc :+ col("__fid") :+
         (col("__fcoord") - col(qEnd)).cast("long").as("__dist"): _*)
 
     // integer-exact argmin per query key: lexicographic (distance, id)
-    val candidates = over.unionByName(left).unionByName(right)
-    val bounded = maxDist.fold(candidates)(d =>
-      candidates.filter(col("__dist") <= d))
-    val resolved = bounded
+    val resolved = over.unionByName(left).unionByName(right)
       .groupBy(qkc: _*)
       .agg(min(struct(col("__dist"), col("__fid"))).as("__best"))
       .select(qkc :+ col("__best.__fid").as("closest_id") :+
         col("__best.__dist").as("distance"): _*)
     // re-attach the query payload on the narrow natural key; inner
-    // drops unmatched queries, left NULL-fills them
-    queries.join(resolved, qKey, if (keepUnmatched) "left" else "inner")
+    // drops unmatched queries
+    queries.join(resolved, qKey)
   }
 }

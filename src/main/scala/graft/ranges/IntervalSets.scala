@@ -242,28 +242,27 @@ object IntervalSets {
     * applies to bin width, done directly (one aggregate scan over the
     * two coordinate columns) because callers hand these operators plain
     * DataFrames that rarely carry CBO column stats. The width targets
-    * `targetRowsPerBucket` rows per (key, bucket) window in the worst
+    * 32768 rows per (key, bucket) window in the worst
     * (single-key) case: buckets = max(256, rows / target) over the
     * combined coordinate domain, so
     *  - small inputs still spread across ≥256 windows (task-sized, and
     *    cheap — empty buckets cost nothing, only OCCUPIED buckets get
     *    summary rows);
     *  - at billions of rows the per-window sort stays bounded at
-    *    ~`targetRowsPerBucket` rows while the bucket-summary table —
+    *    ~32768 rows while the bucket-summary table —
     *    the single-task stitch window — stays rows/target, i.e. 4-5
     *    orders of magnitude smaller than the input.
     * Width only affects PERFORMANCE, never results (the bucketed specs
     * prove ≡ at widths from 1 to 10000). Empty input derives width 1. */
-  def deriveBucketWidth(df: DataFrame, startCol: String, endCol: String,
-      targetRowsPerBucket: Long = 32768L): Long = {
-    require(targetRowsPerBucket >= 1, "targetRowsPerBucket must be >= 1")
+  def deriveBucketWidth(df: DataFrame, startCol: String,
+      endCol: String): Long = {
     val r = df.agg(min(col(startCol).cast("long")).as("lo"),
       max(col(endCol).cast("long")).as("hi"),
       count(lit(1)).as("n")).head()
     if (r.isNullAt(0) || r.isNullAt(1)) 1L
     else {
       val domain = math.max(1L, r.getLong(1) - r.getLong(0) + 1)
-      val nBuckets = math.max(256L, r.getLong(2) / targetRowsPerBucket)
+      val nBuckets = math.max(256L, r.getLong(2) / 32768L)
       math.max(1L, domain / nBuckets)
     }
   }
@@ -321,9 +320,9 @@ object IntervalSets {
     * 10M single-key intervals the simple form's longest task is 87% of
     * its wall-clock — one core no matter the cluster — vs maxTask 5×
     * smaller and falling for the bucketed form). */
-  def mergeOverlappingBucketed(df: DataFrame, keys: Seq[String],
-      startCol: String, endCol: String, bucketWidth: Long,
-      gap: Long = 0L): DataFrame = {
+  private[graft] def mergeOverlappingBucketed(df: DataFrame,
+      keys: Seq[String], startCol: String, endCol: String,
+      bucketWidth: Long, gap: Long = 0L): DataFrame = {
     require(bucketWidth >= 1, "bucketWidth must be >= 1")
     require(gap >= 0, "gap must be >= 0")
     val kc = keys.map(col)
@@ -467,9 +466,9 @@ object IntervalSets {
     * materialize via CheckpointShim at call time) and the result is
     * backed by localCheckpointed RDDs that cannot be recomputed after
     * executor loss — re-run from source on failure. */
-  def subtractBucketed(a: DataFrame, b: DataFrame, keys: Seq[String],
-      aStart: String, aEnd: String, bStart: String, bEnd: String,
-      bucketWidth: Long): DataFrame = {
+  private[graft] def subtractBucketed(a: DataFrame, b: DataFrame,
+      keys: Seq[String], aStart: String, aEnd: String, bStart: String,
+      bEnd: String, bucketWidth: Long): DataFrame = {
     require(bucketWidth >= 1, "bucketWidth must be >= 1")
     val kc = keys.map(col)
     val events = subtractEvents(a, b, keys, aStart, aEnd, bStart, bEnd)
@@ -558,8 +557,9 @@ object IntervalSets {
     * counts this function exists for, forcing a broadcast is exactly
     * the wrong call; both sides are already clustered on the key, and
     * Spark may still choose to broadcast a small summary on its own. */
-  def coverageDepthBucketed(df: DataFrame, keys: Seq[String],
-      startCol: String, endCol: String, bucketWidth: Long): DataFrame = {
+  private[graft] def coverageDepthBucketed(df: DataFrame,
+      keys: Seq[String], startCol: String, endCol: String,
+      bucketWidth: Long): DataFrame = {
     require(bucketWidth >= 1, "bucketWidth must be >= 1")
     val kc = keys.map(col)
     val deltas = endpointEvents(df, keys, startCol, endCol)

@@ -22,16 +22,15 @@ object EventStreams {
     * on a stream: per event-time window, violation counts for each
     * row-local check (range drift, unexpected categories, null bursts
     * — the error-rate dashboard feed). Pure windowed aggregation:
-    * per-window partial sums, watermark-bounded state, no
+    * per-window partial sums, state bounded by a 1-hour watermark, no
     * per-key state at all. In Update mode the per-window counts are
     * emitted monotonically non-decreasing, so a keyed sink folds with
     * MAX per (window, check) — spec- and oracle-pinned (q131). */
   def streamingQuality(events: DataFrame,
       checks: Seq[graft.ext.Quality.Check],
-      window_ : String = "5 minutes",
-      watermark: String = "1 hour"): DataFrame =
+      window_ : String = "5 minutes"): DataFrame =
     graft.ext.Quality.windowedSuite(
-      events.withWatermark("ts", watermark),
+      events.withWatermark("ts", "1 hour"),
       org.apache.spark.sql.functions.window(col("ts"), window_),
       checks)
   /** Online boilerplate-frequency maintenance (the streaming twin of
@@ -49,10 +48,9 @@ object EventStreams {
     * (line_hash, n_docs) table; production keys on xxhash64(line)
     * (16-byte state rows) — the oracle row keys on the line itself so
     * DuckDB can replay it. */
-  def streamingLineFrequency(docs: DataFrame, textCol: String,
-      sep: String = "\\R"): DataFrame =
+  def streamingLineFrequency(docs: DataFrame, textCol: String): DataFrame =
     docs.select(explode(array_distinct(
-        graft.functions.TextFunctions.lineUnits(col(textCol), sep)))
+        graft.functions.TextFunctions.lineUnits(col(textCol))))
       .as("line"))
       .groupBy("line")
       .agg(count(lit(1)).as("n_docs"))
@@ -79,10 +77,11 @@ object EventStreams {
       .groupBy("chunk_h")
       .agg(count(lit(1)).as("n_docs"))
 
-  /** Online value-distribution monitoring: per event-time window and
-    * type, the quantized value-grid histogram (the Incremental
+  /** Online value-distribution monitoring: per event-time day window
+    * and type, the 1/100th value-grid histogram (the Incremental
     * histogramState device as a WINDOWED streaming aggregation) —
-    * pure watermark-bounded windowed state, no per-key custom state.
+    * pure windowed state bounded by a zero-delay watermark, no
+    * per-key custom state.
     * Update-mode emissions are per-(window, type, unit) counts, which
     * are MONOTONE, so a keyed sink folds with MAX (the
     * [[streamingQuality]] convention); read-time rank selection over
@@ -90,16 +89,14 @@ object EventStreams {
     * ([[graft.ext.Incremental.percentilesFromState]]). Emits
     * `(window_start_us, event_type, unit, c)` — epoch-micros window
     * bounds, the engine-portable form. */
-  def streamingValueHistogram(events: Dataset[Event],
-      window_ : String = "1 day", scale: Double = 100.0,
-      watermark: String = "0 seconds"): DataFrame =
+  def streamingValueHistogram(events: Dataset[Event]): DataFrame =
     events.toDF()
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", "0 seconds")
       .filter(col("value").isNotNull)
       .groupBy(
-        org.apache.spark.sql.functions.window(col("ts"), window_),
+        org.apache.spark.sql.functions.window(col("ts"), "1 day"),
         col("event_type"),
-        floor(col("value") * lit(scale) + lit(0.5)).cast("long")
+        floor(col("value") * lit(100.0) + lit(0.5)).cast("long")
           .as("unit"))
       .agg(count(lit(1)).as("c"))
       .select(unix_micros(col("window.start")).as("window_start"),
@@ -112,13 +109,11 @@ object EventStreams {
     * so every sum is exact LONG arithmetic — no decimal state needed;
     * magnitudes bounded: a day of 10⁹ cent-valued events stays under
     * int64). No custom state: a plain windowed streaming aggregate
-    * under the watermark, so Update emissions per key only grow —
+    * under a zero-delay watermark, so Update emissions per key only grow —
     * callers fold by max n and rank-derive r/slope at read time
     * ([[graft.ext.Incremental.corrFinish]] casts the long sums the
     * same way it casts decimals). */
-  def streamingCorrState(events: Dataset[Event],
-      window_ : String = "1 day",
-      watermark: String = "0 seconds"): DataFrame = {
+  def streamingCorrState(events: Dataset[Event]): DataFrame = {
     // products and sums accumulate in DECIMAL(38,0) (exact, cannot
     // wrap — the batch corrState discipline) and only render as LONG
     // at the output edge, where an out-of-range sum raises instead of
@@ -134,7 +129,7 @@ object EventStreams {
     val x = col("__x").cast("decimal(38,0)")
     val y = col("__y").cast("decimal(38,0)")
     events.toDF()
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", "0 seconds")
       .filter(col("value").isNotNull)
       .withColumn("__x",
         expr("(unix_micros(ts) % 86400000000) div 1000000"))
@@ -147,7 +142,7 @@ object EventStreams {
         raise_error(lit("streamingCorrState: value out of cent " +
           "range"))).otherwise(col("__y")))
       .groupBy(
-        org.apache.spark.sql.functions.window(col("ts"), window_),
+        org.apache.spark.sql.functions.window(col("ts"), "1 day"),
         col("event_type"))
       .agg(count(lit(1)).as("n_rows"),
         sum(x).cast("decimal(38,0)").as("__sx"),
@@ -168,7 +163,8 @@ object EventStreams {
       firstUs: Long, lastUs: Long)
 
   /** Event-time gap sessionization: a user's session closes when no event
-    * arrives within `gapMs` of EVENT time — driven by the watermark, so
+    * arrives within `gapMs` of EVENT time — driven by a zero-delay
+    * watermark, so
     * late data and wall-clock stalls don't corrupt sessions (unlike the
     * processing-time variant). Emits each session exactly once, on close:
     * mid-batch when a later event in the SAME micro-batch opens the next
@@ -186,53 +182,27 @@ object EventStreams {
     *
     * State lifetime: after a session closes, a tiny EMPTY state row
     * (just the seq counter) is kept so the user's next session numbers
-    * correctly. With the default `seqTtlGaps = 0` that row lives
-    * FOREVER — exact session_seq across any silence, but state grows
-    * with distinct users ever seen, which an unbounded keyspace (an
-    * open 100 TB/day feed) cannot afford. Set `seqTtlGaps = k > 0` to
-    * evict the empty row once the watermark passes k further gap
-    * periods of silence: state becomes bounded by ACTIVE users, at the
-    * documented cost that a user returning after the TTL restarts
-    * session_seq at 0. Pick k so gap·(1+k) exceeds the source's
-    * realistic return window, or key sinks on (user, start_us) rather
-    * than seq when running with a TTL. */
-  def sessionizeByGap(events: Dataset[Event], gapMs: Long,
-      watermarkDelay: String = "0 seconds",
-      seqTtlGaps: Int = 0): Dataset[ClosedSession] = {
+    * correctly. That row lives FOREVER — exact session_seq across any
+    * silence, but state grows with distinct users ever seen. */
+  def sessionizeByGap(events: Dataset[Event],
+      gapMs: Long): Dataset[ClosedSession] = {
     import events.sparkSession.implicits._
     val gapUs = gapMs * 1000L
     events
-      .withWatermark("ts", watermarkDelay)
+      .withWatermark("ts", "0 seconds")
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[GapState, ClosedSession](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (user: Long, batch: Iterator[Event], state: GroupState[GapState]) =>
           if (state.hasTimedOut) {
             val s = state.get
-            if (s.nEvents == 0L) {
-              // the empty counter row's TTL expired (reachable only
-              // with seqTtlGaps > 0): evict — the user's next session
-              // restarts at seq 0, the documented TTL trade
-              state.remove()
-              Iterator.empty
-            } else {
-              // keep the counter (an empty-session state): a remove()
-              // here would restart session_seq at 0 for the user's
-              // next session. Default: no timer, one tiny row per user
-              // forever; with seqTtlGaps > 0, arm the eviction timer
-              // k gap periods past the close (clamped above the
-              // current watermark — it may already have raced ahead).
-              state.update(GapState(s.seq + 1L, 0L, 0.0,
-                Long.MaxValue, Long.MinValue))
-              if (seqTtlGaps > 0) {
-                val target = Math.floorDiv(s.lastUs, 1000L) +
-                  gapMs * (1L + seqTtlGaps)
-                state.setTimeoutTimestamp(
-                  math.max(target, state.getCurrentWatermarkMs() + 1L))
-              }
-              Iterator(ClosedSession(user, s.seq, s.nEvents, s.total,
-                s.firstUs, s.lastUs))
-            }
+            // keep the counter (an empty-session state, no timer): a
+            // remove() here would restart session_seq at 0 for the
+            // user's next session
+            state.update(GapState(s.seq + 1L, 0L, 0.0,
+              Long.MaxValue, Long.MinValue))
+            Iterator(ClosedSession(user, s.seq, s.nEvents, s.total,
+              s.firstUs, s.lastUs))
           } else {
             val evs = batch.toArray
               .map(e => (exactMicros(e.ts), e.event_id, e.value))
@@ -283,18 +253,16 @@ object EventStreams {
     * watermark), exactly the stream-static join contract.
     *
     * Contract: the snapshot KEY SET must be broadcastable (its bitmap
-    * already is, 128 MB guard) — for snapshots whose keys are not,
-    * accept the configured fpp and drop the confirm join instead.
+    * already is, 128 MB guard). The bitmap is sized for 1% false
+    * positives by a plan-time count of the snapshot.
     * `key` must be an unresolved column expression valid on both
     * frames. */
   def streamNewRows(stream: DataFrame, snapshot: DataFrame,
-      key: org.apache.spark.sql.Column, fpp: Double = 0.01,
-      expectedItems: Option[Long] = None): DataFrame = {
+      key: org.apache.spark.sql.Column): DataFrame = {
     val spark = snapshot.sparkSession
-    // the hint removes the plan-time snapshot count, as in newRowsBloom
-    val n = math.max(1L, expectedItems.getOrElse(snapshot.count()))
+    val n = math.max(1L, snapshot.count())
     val (bits, k) = graft.ext.Sketches.buildBloomBits(
-      snapshot.select(xxhash64(key).as("__k")), "__k", n, fpp)
+      snapshot.select(xxhash64(key).as("__k")), "__k", n, 0.01)
     val probe = graft.ext.Sketches.bloomMightContain(
       spark, xxhash64(key), bits, k)
     val snapKeys = snapshot.select(key.as("__h")).distinct()
@@ -308,6 +276,14 @@ object EventStreams {
       .unionByName(stream.filter(!coalesce(probe, lit(false))))
   }
 
+  /** Ceilings on what the stateless gates below collect to the driver
+    * and ship into every micro-batch as plan literals. */
+  private val MaxEvalShingles = 4 << 20
+  private val MaxEvalItems = 1 << 14
+  private val MaxMixtureGroups = 1 << 16
+  private val MaxVocab = 4 << 20
+  private val MaxModelRows = 1 << 20
+
   /** Online benchmark-contamination gate — the streaming form of
     * [[graft.ext.Curation.contamination]]: per arriving document, the
     * fraction of its DISTINCT word n-gram shingles that occur anywhere
@@ -315,23 +291,22 @@ object EventStreams {
     * xxhash64-collapsed and collected to ONE plan-literal long set
     * probed per shingle (`graft_in_long_set`, O(1) per probe — the
     * removeBoilerplateLines device; an eval suite is KBs–MBs of
-    * shingles, loud `maxEvalShingles` guard), so every micro-batch is
+    * shingles, loud [[MaxEvalShingles]] guard), so every micro-batch is
     * a map-only scan. Exactness rides on 64-bit hash equality — the
     * same assumption the line-dedup winner election already makes; the
     * batch operator's string-equality join is the collision-free form
     * when that matters. Null-text docs emit nothing (the batch
     * contract: they can't be contaminated). */
   def streamingContamination(docs: DataFrame, idCol: String,
-      textCol: String, evalSet: DataFrame, evalTextCol: String = "text",
-      n: Int = 3, maxEvalShingles: Int = 4 << 20): DataFrame = {
+      textCol: String, evalSet: DataFrame, n: Int = 3): DataFrame = {
     val spark = evalSet.sparkSession
     val hs = evalSet
       .select(explode(graft.functions.expressions.TextExpressions
-        .wordShingles(spark, col(evalTextCol), n)).as("__s"))
+        .wordShingles(spark, col("text"), n)).as("__s"))
       .select(xxhash64(col("__s")).as("__h")).distinct()
-      .limit(maxEvalShingles + 1).collect().map(_.getLong(0))
-    require(hs.length <= maxEvalShingles,
-      s"eval corpus exceeds $maxEvalShingles distinct shingles — too " +
+      .limit(MaxEvalShingles + 1).collect().map(_.getLong(0))
+    require(hs.length <= MaxEvalShingles,
+      s"eval corpus exceeds $MaxEvalShingles distinct shingles — too " +
         "large for a plan literal; use the batch contamination join")
     val setLit = typedlit(hs)
     val withSh = docs.filter(col(textCol).isNotNull)
@@ -363,18 +338,17 @@ object EventStreams {
     * absent from the allocation emit nothing (the batch inner-join
     * contract). `element_at` on map literals is a linear probe — fine
     * for mixture groups (languages/domains), guarded by
-    * `maxGroups`. */
+    * [[MaxMixtureGroups]]. */
   def streamingMixtureExecute(docs: DataFrame, idCol: String,
-      groupCol: String, alloc: DataFrame, seed: String,
-      maxGroups: Int = 1 << 16): DataFrame = {
+      groupCol: String, alloc: DataFrame, seed: String): DataFrame = {
     val rows = alloc.where(col("n_tokens") > 0)
       .select(col(groupCol).cast("string").as("__g"),
         expr("alloc_tokens div n_tokens").as("__ef"),
         expr("CAST((alloc_tokens % n_tokens) AS DECIMAL(20,0))" +
           " * 4294967296 div n_tokens").as("__th"))
-      .limit(maxGroups + 1).collect()
-    require(rows.length <= maxGroups,
-      s"allocation exceeds $maxGroups groups — too large for plan " +
+      .limit(MaxMixtureGroups + 1).collect()
+    require(rows.length <= MaxMixtureGroups,
+      s"allocation exceeds $MaxMixtureGroups groups — too large for plan " +
         "literals; use the batch executeMixture join")
     val efullLit = typedlit(rows.map(r =>
       r.getString(0) -> r.getLong(1)).toMap)
@@ -395,7 +369,7 @@ object EventStreams {
   /** Online OOV-rate maintenance — the streaming half of
     * [[graft.ext.TextAnalysis.oovRate]]: the vocabulary collapses to
     * an xxhash64 plan-literal long set (the [[streamingContamination]]
-    * device, loud `maxVocab` guard) probed per token IN-SCAN, so the
+    * device, loud [[MaxVocab]] guard) probed per token IN-SCAN, so the
     * per-row (tokens, oov) counts are map-only and ONE Update-mode
     * per-group aggregation carries the monotone sums → MAX fold; the
     * rate derives through the SHARED
@@ -403,13 +377,12 @@ object EventStreams {
     * on 64-bit hash equality — the batch join is the collision-free
     * form. State ∝ |groups|. */
   def streamingOovCounts(docs: DataFrame, groupCol: String,
-      textCol: String, vocab: DataFrame,
-      maxVocab: Int = 4 << 20): DataFrame = {
+      textCol: String, vocab: DataFrame): DataFrame = {
     val spark = vocab.sparkSession
     val hs = vocab.select(xxhash64(col("term")).as("__h")).distinct()
-      .limit(maxVocab + 1).collect().map(_.getLong(0))
-    require(hs.length <= maxVocab,
-      s"vocabulary exceeds $maxVocab distinct terms — too large for a " +
+      .limit(MaxVocab + 1).collect().map(_.getLong(0))
+    require(hs.length <= MaxVocab,
+      s"vocabulary exceeds $MaxVocab distinct terms — too large for a " +
         "plan literal; use the batch oovRate join")
     val setLit = typedlit(hs)
     val toks = filter(graft.functions.TextFunctions.tokens(
@@ -482,7 +455,7 @@ object EventStreams {
     * plan-literal array and the per-item hit count is
     * `size(array_intersect(doc hashes, item hashes))` — per document
     * O(Σ|item|+|evals|·|doc|) array work, right for bounded benchmark
-    * suites (loud `maxEvalItems`/`maxEvalShingles` guards; a huge
+    * suites (loud [[MaxEvalItems]]/[[MaxEvalShingles]] guards; a huge
     * suite belongs in the batch join). Exactness rides on 64-bit hash
     * equality — the [[streamingContamination]] caveat. The per-eval
     * ROLLUP (max containment, worst doc, τ count) is the fold's batch
@@ -490,21 +463,20 @@ object EventStreams {
     * Null-text docs emit nothing (the batch contract). */
   def streamingEvalLeakage(docs: DataFrame, idCol: String,
       textCol: String, evalSet: DataFrame, evalIdCol: String,
-      evalTextCol: String, n: Int = 3, maxEvalItems: Int = 1 << 14,
-      maxEvalShingles: Int = 4 << 20): DataFrame = {
+      evalTextCol: String, n: Int = 3): DataFrame = {
     val spark = evalSet.sparkSession
     val items = evalSet
       .select(col(evalIdCol).cast("long").as("__eid"),
         transform(graft.functions.expressions.TextExpressions
           .wordShingles(spark, col(evalTextCol), n), s => xxhash64(s))
           .as("__hs"))
-      .limit(maxEvalItems + 1)
+      .limit(MaxEvalItems + 1)
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    require(items.length <= maxEvalItems,
-      s"eval suite exceeds $maxEvalItems items — too large for plan " +
+    require(items.length <= MaxEvalItems,
+      s"eval suite exceeds $MaxEvalItems items — too large for plan " +
         "literals; use the batch evalLeakage join")
-    require(items.map(_._2.length.toLong).sum <= maxEvalShingles,
-      s"eval suite exceeds $maxEvalShingles total shingles — too " +
+    require(items.map(_._2.length.toLong).sum <= MaxEvalShingles,
+      s"eval suite exceeds $MaxEvalShingles total shingles — too " +
         "large for plan literals; use the batch evalLeakage join")
     val probes = items.map { case (eid, hs) =>
       struct(lit(eid).as("eval_id"),
@@ -544,17 +516,17 @@ object EventStreams {
     * contribute exactly the batch formula's terms, and the argmax is
     * array_min over (−score, label) structs — same tie-break.
     *
-    * Scale contract: the model must be collectible (`maxModelRows`
+    * Scale contract: the model must be collectible ([[MaxModelRows]]
     * guard, loud). `element_at` on a map LITERAL is a per-token linear
     * probe — O(|vocab|·tokens) per doc — which is fine for the pinned
     * marker-word gates this twin exists for; a 10⁶-term fastText vocab
     * belongs in the batch broadcast-join
     * [[graft.ext.TextAnalysis.classifyLinear]], not in a plan literal. */
   def streamingClassifierGate(docs: DataFrame, idCol: String,
-      textCol: String, termWeights: DataFrame, priors: DataFrame,
-      maxModelRows: Int = 1 << 20): DataFrame = {
+      textCol: String, termWeights: DataFrame,
+      priors: DataFrame): DataFrame = {
     val (withT, scores) = linearScoreColumns(docs, textCol,
-      termWeights, priors, maxModelRows)
+      termWeights, priors)
     val entries = scores.map { case (lab, score) =>
       struct((lit(java.math.BigDecimal.ZERO).cast("decimal(27,9)") - score)
           .as("neg"),
@@ -575,10 +547,9 @@ object EventStreams {
     * what streams is the scoring, which is the corpus-sized half. */
   def streamingImportanceGate(docs: DataFrame, idCol: String,
       textCol: String, termWeights: DataFrame, priors: DataFrame,
-      targetLabel: String, rawLabel: String,
-      maxModelRows: Int = 1 << 20): DataFrame = {
+      targetLabel: String, rawLabel: String): DataFrame = {
     val (withT, scores) = linearScoreColumns(docs, textCol,
-      termWeights, priors, maxModelRows)
+      termWeights, priors)
     val sMap = scores.toMap
     require(sMap.contains(targetLabel) && sMap.contains(rawLabel),
       s"model priors must cover '$targetLabel' and '$rawLabel' " +
@@ -605,9 +576,9 @@ object EventStreams {
     * calibration table, never the corpus. */
   def streamingScoreCounts(docs: DataFrame, textCol: String,
       truthCol: String, termWeights: DataFrame, priors: DataFrame,
-      label: String, maxModelRows: Int = 1 << 20): DataFrame = {
+      label: String): DataFrame = {
     val (withT, scores) = linearScoreColumns(docs, textCol,
-      termWeights, priors, maxModelRows)
+      termWeights, priors)
     val sMap = scores.toMap
     require(sMap.contains(label),
       s"model priors must cover '$label' " +
@@ -672,19 +643,19 @@ object EventStreams {
     * these bounded magnitudes (|score| < |prior| + tokens·max|w|,
     * 18 integral digits of headroom). */
   private def linearScoreColumns(docs: DataFrame, textCol: String,
-      termWeights: DataFrame, priors: DataFrame, maxModelRows: Int)
+      termWeights: DataFrame, priors: DataFrame)
       : (DataFrame, Seq[(String, org.apache.spark.sql.Column)]) = {
     val pr = priors.select(col("label"),
         col("prior").cast("decimal(18,9)"),
         col("unseen").cast("decimal(18,9)"))
-      .limit(maxModelRows + 1).collect()
-    require(pr.length <= maxModelRows && pr.nonEmpty,
-      s"priors table must have 1..$maxModelRows rows (got ${pr.length})")
+      .limit(MaxModelRows + 1).collect()
+    require(pr.length <= MaxModelRows && pr.nonEmpty,
+      s"priors table must have 1..$MaxModelRows rows (got ${pr.length})")
     val w = termWeights.select(col("term"), col("label"),
         col("weight").cast("decimal(18,9)"))
-      .limit(maxModelRows + 1).collect()
-    require(w.length <= maxModelRows,
-      s"model exceeds $maxModelRows rows — use the batch " +
+      .limit(MaxModelRows + 1).collect()
+    require(w.length <= MaxModelRows,
+      s"model exceeds $MaxModelRows rows — use the batch " +
         "classifyLinear (broadcast-join form) for vocabularies this large")
     val byLabel = w.groupBy(_.getString(1)).view
       .mapValues(_.map(r => (r.getString(0), r.getDecimal(2))).toSeq)
@@ -790,7 +761,7 @@ object EventStreams {
     * [[streamingSq8Serve]] (which scans every code per micro-batch):
     * arriving query vectors SQ8-encode map-only against the saved
     * [[graft.ext.Similarity.sq8MinMax]] artifact, fan out to their
-    * `nProbe` nearest coarse cells against the saved centroid table
+    * nearest coarse cell against the saved centroid table
     * (both plan literals — [[graft.ext.Similarity.probeAssign]], the
     * exact query-side assignment of the batch trained-IVF path), and
     * stream-static EQUI-join on the cell id against the materialized
@@ -809,12 +780,11 @@ object EventStreams {
   def streamingIvfSq8Serve(queries: DataFrame, idCol: String,
       vecCol: String, codes: DataFrame, codeIdCol: String,
       cellCol: String, codeCol: String, minMax: DataFrame,
-      centroids: DataFrame, nProbe: Int = 1): DataFrame = {
+      centroids: DataFrame): DataFrame = {
     val enc = graft.ext.Similarity.sq8Encode(
       queries.select(col(idCol).as("q_id"), col(vecCol).as("__qv")),
       "__qv", minMax, out = "__qc")
-    val q = graft.ext.Similarity.probeAssign(enc, "__qv",
-        centroids, nProbe)
+    val q = graft.ext.Similarity.probeAssign(enc, "__qv", centroids)
       .select(col("q_id"), col("cid"), col("__qc"))
     val c = codes.select(col(codeIdCol).as("n_id"),
       col(cellCol).as("cid"), col(codeCol).as("__nc"))
@@ -835,13 +805,15 @@ object EventStreams {
     * k-minhash signature and band keys map-only (the SAME
     * minhashSignature/bandKeys columns as the batch operator, so the
     * candidate sets agree); the stream joins ITSELF on (band, bkey)
-    * with `a_id < b_id` and a ±`window` event-time range — Spark
+    * with `a_id < b_id` and a ±1 hour event-time range — Spark
     * buffers each side's rows in the state store and matches ACROSS
     * micro-batches, so a pair split over two batches still pairs up;
-    * the watermark bounds the state to `window` of event time (the
+    * the watermark bounds the state to 1 hour of event time (the
     * honest stream-stream cost: state ∝ docs per window × bands).
     * Verification is the batch operator's own exact jaccard over the
-    * two distinct-shingle arrays, carried through the join.
+    * two distinct-shingle arrays, carried through the join. Signatures
+    * are 12 minhashes of word 3-gram shingles in 4 bands; pairs at
+    * jaccard >= 0.5 survive.
     *
     * Two state shapes (verdict r16 what's-wrong #3):
     *
@@ -866,21 +838,17 @@ object EventStreams {
     * Contracts: (1) with a store, EXACTLY once per pair (the batch
     * contract); self-contained, at-least-once per pair — once per
     * colliding band, dedupe downstream. (2) pairs farther apart
-    * than `window` in event time do NOT pair here — they are the
+    * than 1 hour in event time do NOT pair here — they are the
     * snapshot compaction's job
     * ([[graft.ext.Dedup.minhashNearDupDelta]]). Append-legal. */
   def streamStreamMinhashPairs(docs: DataFrame, idCol: String,
-      textCol: String, tsCol: String, shingleN: Int = 3, k: Int = 12,
-      bands: Int = 4, threshold: Double = 0.5,
-      window: String = "1 hour",
+      textCol: String, tsCol: String,
       docShingles: Option[DataFrame] = None): DataFrame = {
-    require(k % bands == 0, "k must be divisible by bands")
-    val rows = k / bands
     val spark = docs.sparkSession
     import graft.functions.TextFunctions.{bandKeys, minhashSignature}
     def shArr(c: org.apache.spark.sql.Column) =
       graft.functions.expressions.TextExpressions.wordShingles(
-        spark, c, shingleN)
+        spark, c, 3)
     val lean = docShingles.isDefined
     val base = docs
       .select(col(idCol).as("__sid"),
@@ -889,16 +857,16 @@ object EventStreams {
       // signature projected BEFORE bandKeys slices it (the q187 4x
       // lesson)
       .select(col("__sid"), col("__ts"), col("__sharr"),
-        minhashSignature(col("__sharr"), k).as("__sig"))
+        minhashSignature(col("__sharr"), 12).as("__sig"))
       .select(col("__sid"), col("__ts"), col("__sharr"),
-        explode(bandKeys(col("__sig"), bands, rows)).as("__b"))
+        explode(bandKeys(col("__sig"), 4, 3)).as("__b"))
       .select(col("__sid"), col("__ts"), col("__sharr"),
         col("__b.band").as("band"), col("__b.bkey").as("bkey"))
     // the lean path drops the shingle payload BEFORE anything enters
     // the join state — that column-prune is the entire point
     val withBands =
       (if (lean) base.drop("__sharr") else base)
-        .withWatermark("__ts", window)
+        .withWatermark("__ts", "1 hour")
     val lCols = Seq(col("__sid").as("a_sid"),
       col("__ts").as("a_ts"), col("band"), col("bkey")) ++
       (if (lean) Nil else Seq(col("__sharr").as("a_sh")))
@@ -910,8 +878,8 @@ object EventStreams {
       withBands.select(rCols: _*),
       col("band") === col("band2") && col("bkey") === col("bkey2") &&
         col("a_sid") < col("b_sid") &&
-        expr(s"b_ts BETWEEN a_ts - INTERVAL $window" +
-          s" AND a_ts + INTERVAL $window"))
+        expr("b_ts BETWEEN a_ts - INTERVAL 1 hour" +
+          " AND a_ts + INTERVAL 1 hour"))
     docShingles match {
       case Some(store) =>
         val sh = store.columns match {
@@ -942,7 +910,7 @@ object EventStreams {
             size(array_intersect(col("a_sh"), col("b_sh"))))
           .withColumn("jaccard", col("__inter").cast("double") /
             (size(col("a_sh")) + size(col("b_sh")) - col("__inter")))
-          .filter(col("jaccard") >= threshold)
+          .filter(col("jaccard") >= 0.5)
           .select(col("a_sid").as("a_id"), col("b_sid").as("b_id"),
             col("jaccard"))
       case None =>
@@ -951,7 +919,7 @@ object EventStreams {
             size(array_intersect(col("a_sh"), col("b_sh"))))
           .withColumn("jaccard", col("__inter").cast("double") /
             (size(col("a_sh")) + size(col("b_sh")) - col("__inter")))
-          .filter(col("jaccard") >= threshold)
+          .filter(col("jaccard") >= 0.5)
           .select(col("a_sid").as("a_id"), col("b_sid").as("b_id"),
             col("jaccard"))
     }
@@ -1022,12 +990,12 @@ object EventStreams {
     * aggregation chain), so candidates — and after the caller's exact
     * verify, pairs — replay the batch [[graft.ext.Dedup.minhashNearDup]]
     * bit-for-bit (oracle q187). A pair colliding in several bands
-    * emits once per band: set-dedupe downstream. `maxBucket` is the
-    * heavy-hitter guard: a degenerate bucket (near-constant corpus)
+    * emits once per band: set-dedupe downstream. [[MaxBandBucket]] is
+    * the heavy-hitter guard: a degenerate bucket (near-constant corpus)
     * fails loudly instead of accreting quadratic emissions. */
   def streamingBandIndex(docs: DataFrame, idCol: String,
-      textCol: String, shingleN: Int = 3, k: Int = 12, bands: Int = 4,
-      maxBucket: Int = 4096): Dataset[(Long, Long)] = {
+      textCol: String, shingleN: Int = 3, k: Int = 12,
+      bands: Int = 4): Dataset[(Long, Long)] = {
     require(k % bands == 0, "k must be divisible by bands")
     val spark = docs.sparkSession
     import spark.implicits._
@@ -1060,11 +1028,11 @@ object EventStreams {
           // this is about reproducible transcripts, not correctness)
           val fresh = batch.map(_._2).toArray.distinct.sorted
             .filterNot(seen)
-          require(old.size + fresh.length <= maxBucket,
+          require(old.size + fresh.length <= MaxBandBucket,
             s"streamingBandIndex: band bucket $key would exceed " +
-              s"maxBucket=$maxBucket (${old.size} + ${fresh.length}) — " +
+              s"$MaxBandBucket ids (${old.size} + ${fresh.length}) — " +
               "a degenerate bucket makes candidate emissions quadratic; " +
-              "raise maxBucket deliberately or pre-dedup the feed")
+              "pre-dedup the feed")
           val out = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
           var i = 0
           while (i < fresh.length) {
@@ -1082,6 +1050,9 @@ object EventStreams {
           out.iterator
       }
   }
+
+  /** Ceiling on the ids one [[streamingBandIndex]] bucket holds. */
+  private val MaxBandBucket = 4096
 
   final case class FunnelUpdate(user_id: Long, step_reached: Int,
       step_ts: Seq[Long])
@@ -1103,8 +1074,8 @@ object EventStreams {
     * rewinds) — bounded lateness needs a watermark buffer, at the
     * price of lateness × rate state. Same-user step ties never advance
     * (strict `>`), matching both batch forms. */
-  def streamingFunnel(events: Dataset[Event], steps: Seq[String],
-      horizon: Option[Long] = None): Dataset[FunnelUpdate] = {
+  def streamingFunnel(events: Dataset[Event],
+      steps: Seq[String]): Dataset[FunnelUpdate] = {
     require(steps.nonEmpty, "funnel needs at least one step")
     require(steps.distinct == steps, "repeated step types are ambiguous")
     import events.sparkSession.implicits._
@@ -1133,8 +1104,7 @@ object EventStreams {
           while (i < sorted.length && reached < n) {
             val (si, ts) = sorted(i)
             if (si == reached &&
-                (reached == 0 || (ts > times(reached - 1) &&
-                  horizon.forall(ts <= times(0) + _)))) {
+                (reached == 0 || ts > times(reached - 1))) {
               times(reached) = ts
               reached += 1
             }
@@ -1219,17 +1189,16 @@ object EventStreams {
     * latest-click-per-purchase query. Timestamps surface as exact
     * epoch micros. */
   def streamingAttribution(events: Dataset[Event], fromType: String,
-      toType: String, maxGapSeconds: Long,
-      watermark: String = "1 hour"): DataFrame = {
+      toType: String, maxGapSeconds: Long): DataFrame = {
     val df = events.toDF()
     val clicks = df.filter(col("event_type") === fromType)
       .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
         col("event_id").as("click_id"))
-      .withWatermark("click_ts", watermark)
+      .withWatermark("click_ts", "1 hour")
     val buys = df.filter(col("event_type") === toType)
       .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
         col("event_id").as("purchase_id"))
-      .withWatermark("purchase_ts", watermark)
+      .withWatermark("purchase_ts", "1 hour")
     buys.join(clicks, expr(
         s"""p_user = c_user AND click_ts <= purchase_ts
            |AND click_ts >= purchase_ts - INTERVAL $maxGapSeconds SECONDS"""
@@ -1382,15 +1351,14 @@ object EventStreams {
     * the open map's minimum each round, so in-watermark out-of-order
     * arrivals extend it backward; after emission, data at or before
     * the frontier is LATE and drops (standard watermark semantics —
-    * size the delay to the source's lateness). State per type: two
-    * longs + the bounded `open` map. */
-  def streamingGapFill(events: Dataset[Event],
-      watermarkDelay: String = "0 seconds"): Dataset[FilledDay] = {
+    * the watermark delay is zero). State per type: two longs + the
+    * bounded `open` map. */
+  def streamingGapFill(events: Dataset[Event]): Dataset[FilledDay] = {
     import events.sparkSession.implicits._
     val dayUs = 86400000000L
     val dayMs = 86400000L
     events
-      .withWatermark("ts", watermarkDelay)
+      .withWatermark("ts", "0 seconds")
       .groupByKey(_.event_type)
       .flatMapGroupsWithState[LocfState, FilledDay](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {

@@ -78,7 +78,7 @@ object OpqProbe {
     v64.count()
     val t0 = System.nanoTime()
     val rot64 = Similarity.opqRotation(v64, "vec_id", "embedding",
-      m = m64, sampleSize = 4096)
+      m = m64)
     val trainSec = (System.nanoTime() - t0) / 1e9
     val r64 = Similarity.rotate(v64, "embedding", rot64, "rvec").cache()
     val cb64 = Similarity.pqTrain(v64, "vec_id", "embedding",

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Bench-move adjudicator: re-times named queries at n warm iterations
   * and prints min/median — the q54/q64 "did the plan regress or was it
@@ -16,14 +15,8 @@ object QTimer {
     val names = args.drop(2).toSeq
     // core count from the driver-contract env var (default 32) so the
     // 8-vs-32 scaling adjudications run through the same instrument
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     // optional per-stage decomposition (QTIMER_STAGES=1): stage id,
     // task count and wall per completed stage — the poor man's UI for
     // a headless box (the bench session runs with spark.ui disabled)

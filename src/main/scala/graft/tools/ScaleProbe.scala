@@ -126,9 +126,8 @@ object ScaleProbe {
       "collocations", "ingest_pipeline",
       "hard_negatives", "random_negatives",
       "hard_negatives_batched4",
-      "dup_spans_w1", "dup_spans_w4", "dup_spans_w8",
-      "remove_dup_spans_w1", "remove_dup_spans_w8",
-      "pq_train_encode_adc", "ivfpq_3probe", "ivfpq_residual_3probe",
+      "dup_spans", "remove_dup_spans",
+      "pq_train_encode_adc", "ivfpq_1probe", "ivfpq_residual_1probe",
       "pq_adc_loaded", "ivfpq_loaded", "ann_artifact_build",
       "bm25_3terms", "vsm_3terms",
       "cluster_sample_k256_q32",
@@ -480,17 +479,14 @@ object ScaleProbe {
         $"vec_id" < 10, k = 5, nBatches = 4).count())
       pos.unpersist()
     }
-    // duplicate spans: winnowing selection thins the gram shuffle ~w/2x
-    // (w=1 is exact); detection still guaranteed for spans >= 20+w-1
-    for (w <- Seq(1, 4, 8))
-      time(s"dup_spans_w$w")(Dedup.duplicateSpans(docs, "doc_id", "text",
-        gramLen = 20, winnowW = w).count())
+    // duplicate spans: the gram shuffle carries one row per char position
+    time("dup_spans")(Dedup.duplicateSpans(docs, "doc_id", "text",
+      gramLen = 20).count())
     // the rewrite adds one text join + a partition-reusing reassembly
     // groupBy on top of the span pipeline
-    for (w <- Seq(1, 8))
-      time(s"remove_dup_spans_w$w")(Dedup.removeDuplicateSpans(docs,
-        "doc_id", "text", gramLen = 20, winnowW = w)
-        .agg(sum("chars_removed")).head())
+    time("remove_dup_spans")(Dedup.removeDuplicateSpans(docs,
+      "doc_id", "text", gramLen = 20)
+      .agg(sum("chars_removed")).head())
     // PQ: train 16x32 codebooks, encode the corpus (map-only), ADC-score
     // 10 queries over codes — the compressed-scan ANN path
     time("pq_train_encode_adc")({
@@ -499,27 +495,27 @@ object ScaleProbe {
       Similarity.pqTopKAdc(emb, "vec_id", "embedding", cb,
         $"vec_id" < 10, 5).count()
     })
-    // IVFPQ: trained cells x trained codes, 3-probe queries — both
-    // corpus kernels map-only, candidates = 3/16 of the corpus
-    time("ivfpq_3probe")({
+    // IVFPQ: trained cells x trained codes, 1-probe queries — both
+    // corpus kernels map-only, candidates = 1/16 of the corpus
+    time("ivfpq_1probe")({
       val cents = Similarity.trainCentroids(emb, "vec_id", "embedding",
         k = 16, iters = 1)
       val cb = Similarity.pqTrain(emb, "vec_id", "embedding",
         m = 16, ksub = 32, iters = 1)
       Similarity.ivfPqTopK(emb, "vec_id", "embedding", cents, cb,
-        $"vec_id" < 10, k = 5, nProbe = 3).count()
+        $"vec_id" < 10, k = 5).count()
     })
     // residual variant: same plan shape (the residual subtraction is
     // one more map-only zip_with on each side; the LUT moves after the
     // probe explode) — the row pins that residual encoding costs no
     // extra shuffle
-    time("ivfpq_residual_3probe")({
+    time("ivfpq_residual_1probe")({
       val cents = Similarity.trainCentroids(emb, "vec_id", "embedding",
         k = 16, iters = 1)
       val cb = Similarity.pqTrainResidual(emb, "vec_id", "embedding",
         cents, m = 16, ksub = 32, iters = 1)
       Similarity.ivfPqTopKResidual(emb, "vec_id", "embedding", cents, cb,
-        $"vec_id" < 10, k = 5, nProbe = 3).count()
+        $"vec_id" < 10, k = 5).count()
     })
 
     // the q84/search honesty convention applied to ANN (VERDICT r7
@@ -554,7 +550,7 @@ object ScaleProbe {
         k = 5).count())
       time("ivfpq_loaded")(Similarity.ivfPqTopKOnCodes(codes,
         "vec_id", "cid", "pq_code", queries, "vec_id", "embedding",
-        centsL, cbL, k = 5, nProbe = 3).count())
+        centsL, cbL, k = 5).count())
     }
 
     // round-4b retrieval/curation: BM25 (scan-bound, zero corpus
@@ -891,8 +887,7 @@ object ScaleProbe {
     // cohort retention over the same user-replicated log (q108 shape):
     // the log collapses to distinct (user, bucket) pairs map-side, so
     // shuffle bytes scale with users x active-buckets, not raw events
-    if (Seq("retention_weekly", "rolling_active_7d",
-        "rolling_active_7d_approx").exists(wanted)) {
+    if (Seq("retention_weekly", "rolling_active_7d").exists(wanted)) {
       val evRaw = GraftSession.table(spark, sfDir, "events")
       val ev = replicate(evRaw
         .select(col("user_id"), GraftSession.tsMicros(evRaw).as("ts_us")),
@@ -904,15 +899,6 @@ object ScaleProbe {
       time("rolling_active_7d")(graft.operators.Retention.rollingActive(
           ev, "user_id", "ts_us", bucketWidth = 86400000000L, window = 7)
         .agg(sum("active_users")).head())
-      // the exact=false escape hatch: no pair distinct, no ×7 pair
-      // fan-out through the shuffle — only per-task HLL registers per
-      // bucket-end move, so the bytes row must be ~flat in copies
-      // where the exact row grows ∝ pairs
-      time("rolling_active_7d_approx")(
-        graft.operators.Retention.rollingActive(
-          ev, "user_id", "ts_us", bucketWidth = 86400000000L, window = 7,
-          exact = false)
-        .agg(sum("active_users")).head())
     }
 
     // data-quality constraint suite (q123 shape): every row-local
@@ -921,8 +907,7 @@ object ScaleProbe {
     // Expand, the FK is a left join against broadcast-sized distinct
     // dim keys. Shuffle bytes must stay ~flat in copies — nothing
     // row-sized ever moves.
-    if (Seq("constraint_suite", "constraint_suite_approx")
-        .exists(wanted)) {
+    if (wanted("constraint_suite")) {
       import graft.ext.Quality
       import graft.ext.Quality._
       val ord = replicate(GraftSession.table(spark, sfDir, "orders"),
@@ -936,12 +921,6 @@ object ScaleProbe {
         MatchesRegex("o_orderpriority", "^[1-3]-[A-Z]+$"),
         ForeignKey("o_custkey", cust, "c_custkey"))
       time("constraint_suite")(Quality.suite(ord, checks)
-        .collect().map(_.getLong(2)).sum)
-      // exact=false swaps the uniqueness countDistinct (whose partial
-      // distinct is the ONLY row-proportional shuffle above) for HLL
-      // registers — the bytes row must collapse to ~0
-      time("constraint_suite_approx")(Quality.suite(ord, checks,
-          exact = false)
         .collect().map(_.getLong(2)).sum)
     }
 
@@ -1026,14 +1005,6 @@ object ScaleProbe {
           qs, fs, Seq("chrom"), "s1", "e1", "s2", "e2", "event_id",
           width = 64L)
         .agg(sum("distance")).head())
-      // the left-join form (VERDICT r7 Next #4): maxDist-bounded so
-      // real NULL fills flow, payload re-attached on the narrow
-      // (chrom, s1, e1) natural key — this row measures that extra
-      // keyed join, the delta vs closest_join above
-      time("closest_join_keep_unmatched")(graft.ranges.Closest.closest(
-          qs, fs, Seq("chrom"), "s1", "e1", "s2", "e2", "event_id",
-          width = 64L, maxDist = Some(2L), keepUnmatched = true)
-        .agg(sum("distance"), count(lit(1))).head())
     }
 
     // pHash near-dup: per-row integer DCT hash (mapPartitions, map-only
@@ -1237,11 +1208,8 @@ object ScaleProbe {
     } // 1-key guard
 
     // as-of at ONE key: the plain union-tag window serializes the
-    // whole timeline onto one core (maxTask ~ wall); the bucketed
-    // two-pass form (backwardBucketed) must cut maxTask while the
-    // totals stay equal — the same few-key story as the interval rows
-    if (Seq("asof_1key", "asof_1key_bucketed",
-        "asof_1key_bucketedauto").exists(wanted)) {
+    // whole timeline onto one core (maxTask ~ wall)
+    if (wanted("asof_1key")) {
       val n = 2000000L * copies / 20
       val l1 = spark.range(n).select(lit(0L).as("k"),
         pmod(col("id") * 7919L, lit(1000000000L)).as("ts"),
@@ -1254,47 +1222,6 @@ object ScaleProbe {
       time("asof_1key")(graft.operators.AsofJoin
         .backward(l1, r1, Seq("k"), "ts", "ts")
         .agg(sum("rid"), count(lit(1))).head())
-      time("asof_1key_bucketed")(graft.operators.AsofJoin
-        .backwardBucketed(l1, r1, Seq("k"), "ts", "ts",
-          bucketWidth = 1000000L)
-        .agg(sum("rid"), count(lit(1))).head())
-      // width-free overload: deriveBucketWidth's extra aggregate scan
-      // + the walk at the derived width (reported so BENCH.md records
-      // where the heuristic landed)
-      time("asof_1key_bucketedauto")({
-        val w = graft.operators.AsofJoin.deriveBucketWidth(
-          l1, r1, "ts", "ts")
-        val s = graft.operators.AsofJoin
-          .backwardBucketed(l1, r1, Seq("k"), "ts", "ts", w)
-          .agg(sum("rid"), count(lit(1))).head()
-        s"$s derivedW=$w"
-      })
-    }
-
-    // High-diameter CC: min-propagation pays ~diameter rounds (each a
-    // join + agg + checkpoint = a full Spark job).
-    // 1500 disjoint chains of length 65 (diameter 64, ~97.5k edges):
-    // component structure is irrelevant to round count (rounds = max
-    // diameter over components), so many short-ish chains give the
-    // diameter signal without a 4096-round run.
-    if (wanted("cc_minprop_d64")) {
-      val chains = 1500L
-      val len = 65L
-      // integer div (Spark `/` on longs is DOUBLE division — it would
-      // shatter every chain into disjoint fractional edges)
-      val pathE = spark.range(chains * (len - 1)).select(
-        expr(s"(id div ${len - 1}) * 1000 + id % ${len - 1}").as("a"),
-        expr(s"(id div ${len - 1}) * 1000 + id % ${len - 1} + 1").as("b"))
-        .cache()
-      println(s"[probe] cc path edges=${pathE.count()} " +
-        s"(chains=$chains diameter=${len - 1})")
-      time("cc_minprop_d64")({
-        val (labels, rounds) = Dedup.connectedComponentsRounds(
-          pathE, "a", "b", maxIter = 200)
-        val comps = labels.select(countDistinct("comp")).head().getLong(0)
-        s"comps=$comps rounds=$rounds"
-      })
-      pathE.unpersist()
     }
 
     // k-core peeling-depth stress (the onion graph): rounds = DEPTH,
@@ -1304,15 +1231,14 @@ object ScaleProbe {
     // own 2-core) with a 64-vertex tail whose FREE end alone is
     // degree-1 — peel exactly one tail vertex per round: 64 rounds to
     // the fixpoint, every round's sub-k set 1500 vertices, the edge
-    // set shrinking monotonically to the 12k cycle edges. The loud
-    // maxIter path is exercised by a cap below the depth.
+    // set shrinking monotonically to the 12k cycle edges.
     if (wanted("kcore_onion_d64")) {
       val lolls = 1500L
       val tail = 64L
       val cyc = 8L
       // vertex ids: lollipop i occupies [i*1000, i*1000+cyc+tail);
       // 0..cyc-1 the cycle, cyc..cyc+tail-1 the tail hanging off
-      // vertex 0 (integer div, same trap as the CC probe above)
+      // vertex 0 (integer div: Spark `/` on longs is DOUBLE division)
       val cycE = spark.range(lolls * cyc).select(
         expr(s"(id div $cyc) * 1000 + id % $cyc").as("a"),
         expr(s"(id div $cyc) * 1000 + (id % $cyc + 1) % $cyc").as("b"))
@@ -1324,17 +1250,10 @@ object ScaleProbe {
       println(s"[probe] kcore onion edges=${lollE.count()} " +
         s"(lollipops=$lolls tail=$tail cycle=$cyc)")
       time("kcore_onion_d64")({
-        val (core, rounds) = Graph.kCoreRounds(lollE, "a", "b", k = 2,
-          maxIter = 200)
+        val (core, rounds) = Graph.kCoreRounds(lollE, "a", "b", k = 2)
         val n = core.count()
         s"core_vertices=$n rounds=$rounds"
       })
-      // the loud under-cap path: a cap below the peeling depth must
-      // throw, never return a partially-peeled (too large) core
-      val err = try {
-        Graph.kCore(lollE, "a", "b", k = 2, maxIter = 10).count(); "NO-THROW"
-      } catch { case e: IllegalStateException => "threw-as-documented" }
-      println(s"[probe] kcore_onion_d64 maxIter=10 -> $err")
       lollE.unpersist()
     }
 

@@ -97,87 +97,6 @@ class AsofSpec extends SparkSpecBase {
     }
   }
 
-  test("bucketed asof == plain asof at any width, both directions") {
-    // single key — the regime the bucketed form exists for — plus a
-    // key with NO right rows (entering match must stay null through
-    // every bucket) and cross-bucket gaps (empty buckets between
-    // matches, welded by the summary window's ignoreNulls carry)
-    val rnd = new scala.util.Random(11)
-    val l = ((0 until 500).map(i =>
-        ("k1", rnd.nextInt(100000).toLong, i.toLong)) ++
-      (500 until 520).map(i => ("k2", rnd.nextInt(1000).toLong, i.toLong)))
-      .toDF("k", "ts", "lid")
-    val rRows = (0 until 300).map(i =>
-        ("k1", rnd.nextInt(100000).toLong, i.toLong))
-      .groupBy(r => (r._1, r._2)).map(_._2.maxBy(_._3)).toSeq
-    val r = rRows.toDF("k", "ts", "rid")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("k", "ts", "lid", "rid")
-        .as[(String, Long, Long, Option[Long])].collect().toSet
-    val wantB = rows(AsofJoin.backward(l, r, Seq("k"), "ts", "ts"))
-    val wantF = rows(AsofJoin.forward(l, r, Seq("k"), "ts", "ts"))
-    for (width <- Seq(1L, 7L, 64L, 4096L, 1000000L)) {
-      assert(rows(AsofJoin.backwardBucketed(l, r, Seq("k"), "ts", "ts",
-        width)) == wantB, s"backward width=$width")
-      assert(rows(AsofJoin.forwardBucketed(l, r, Seq("k"), "ts", "ts",
-        width)) == wantF, s"forward width=$width")
-    }
-    // width-free overloads: the data-derived width must give the same
-    // rows as every explicit width (and the derivation itself must be
-    // sane: positive, no wider than the combined timeline span)
-    assert(rows(AsofJoin.backwardBucketed(l, r, Seq("k"), "ts", "ts"))
-      == wantB, "backward auto width")
-    assert(rows(AsofJoin.forwardBucketed(l, r, Seq("k"), "ts", "ts"))
-      == wantF, "forward auto width")
-    val dw = AsofJoin.deriveBucketWidth(l, r, "ts", "ts")
-    assert(dw >= 1L && dw <= 100000L, s"derived width $dw")
-    // empty inputs: derivation degrades to 1, never throws
-    assert(AsofJoin.deriveBucketWidth(
-      l.filter($"lid" < 0), r.filter($"rid" < 0), "ts", "ts") == 1L)
-    // mixed timestamp/date timelines unify through set-op coercion
-    // BEFORE unit conversion — a per-side conversion would mix
-    // day-numbers with micros and derive a garbage width
-    val lMix = Seq(("k1", java.sql.Timestamp.valueOf("2024-01-05 10:00:00"),
-      1L)).toDF("k", "ts", "lid")
-    val rMix = Seq(("k1", java.sql.Date.valueOf("2024-01-03"), 9L))
-      .toDF("k", "ts", "rid")
-    val wMixed = AsofJoin.deriveBucketWidth(lMix, rMix, "ts", "ts")
-    // span ≈ 2.4 days in MICROS over the 256-bucket floor
-    val spanMicros = 2L * 86400000000L + 10L * 3600000000L
-    assert(wMixed == math.max(1L, (spanMicros + 1) / 256), s"w=$wMixed")
-    // equal-ts right must still match in both directions across the
-    // bucketed path (the __src tie column survives the two-pass plan)
-    val lt = Seq(("k1", 64L, 0L)).toDF("k", "ts", "lid") // on a boundary
-    val rt = Seq(("k1", 64L, 9L)).toDF("k", "ts", "rid")
-    assert(rows(AsofJoin.backwardBucketed(lt, rt, Seq("k"), "ts", "ts",
-      64L)) == Set(("k1", 64L, 0L, Some(9L))))
-    assert(rows(AsofJoin.forwardBucketed(lt, rt, Seq("k"), "ts", "ts",
-      64L)) == Set(("k1", 64L, 0L, Some(9L))))
-    // fractional timeline refuses loudly (no exact bucketing)
-    val ld = Seq(("k1", 1.5, 0L)).toDF("k", "ts", "lid")
-    val rd = Seq(("k1", 1.0, 9L)).toDF("k", "ts", "rid")
-    val err = intercept[IllegalArgumentException](
-      AsofJoin.backwardBucketed(ld, rd, Seq("k"), "ts", "ts", 10L))
-    assert(err.getMessage.contains("integral"))
-  }
-
-  test("bucketed asof on a TimestampType timeline == plain") {
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val l = Seq(("u1", ts("2024-01-01 00:00:30"), "p1"),
-      ("u1", ts("2024-01-03 00:05:00"), "p2"))
-      .toDF("user", "ts", "purchase")
-    val r = Seq(("u1", ts("2024-01-01 00:00:00"), "c1"),
-      ("u1", ts("2024-01-02 00:00:00"), "c2"))
-      .toDF("user", "ts", "click")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("user", "purchase", "click")
-        .as[(String, String, Option[String])].collect().toSet
-    // hour-sized buckets in MICROS (the unix_micros walk unit)
-    assert(rows(AsofJoin.backwardBucketed(l, r, Seq("user"), "ts", "ts",
-        3600000000L)) ==
-      rows(AsofJoin.backward(l, r, Seq("user"), "ts", "ts")))
-  }
-
   test("asof plan has no join node — one shuffle + window") {
     val plan = AsofJoin.backward(left, right, Seq("user"), "ts", "ts")
       .queryExecution.executedPlan.toString

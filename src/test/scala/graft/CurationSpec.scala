@@ -30,39 +30,6 @@ class CurationSpec extends SparkSpecBase {
       Curation.groupQuota(rows, Seq("source"), Seq(col("doc_id")), 0))
   }
 
-  test("curationPipeline: every CurationConfig field is live (q197 " +
-      "pins the defaults; a silently-ignored knob must fail here)") {
-    import Curation.CurationConfig
-    val docs = GraftSession.table(spark, "/root/testdata/sf0.001",
-      "documents").select("doc_id", "source", "text")
-    val base = Curation.curationPipeline(docs)
-    val n = base.count()
-    assert(n > 0)
-    val kept = base.filter(col("quota_rank").isNotNull).count()
-    // quotaK: rank cut moves with the cap
-    val k1 = Curation.curationPipeline(docs,
-      CurationConfig(quotaK = 1L))
-    assert(k1.filter(col("quota_rank").isNotNull).count() < kept)
-    // minTokens: an impossible gate empties the pipeline
-    assert(Curation.curationPipeline(docs,
-      CurationConfig(minTokens = 1000000L)).count() === 0)
-    // splitSeed: a different seed re-deals at least one cluster
-    val s1 = base.select("doc_id", "split")
-    val s2 = Curation.curationPipeline(docs,
-      CurationConfig(splitSeed = "cp2")).select("doc_id", "split")
-    assert(s1.exceptAll(s2).count() > 0)
-    // splits: a single 100% bucket maps everything to it
-    assert(Curation.curationPipeline(docs,
-        CurationConfig(splits = Seq("all" -> 1.0)))
-      .filter(col("split") =!= "all").count() === 0)
-    // lineWidth / maxLineDocFreq feed the dedup stages: cleaned
-    // lengths must move when the reconstruction width doubles
-    val w8 = Curation.curationPipeline(docs,
-      CurationConfig(lineWidth = 8))
-    assert(w8.select(sum("n_chars_clean")).as[Long].head !==
-      base.select(sum("n_chars_clean")).as[Long].head)
-  }
-
   test("curationPipeline LM gate: the lmModel/lmMinMeanPE9 knob is " +
       "live — gate cuts low-scoring docs before every later stage") {
     import Curation.CurationConfig
@@ -168,8 +135,7 @@ class CurationSpec extends SparkSpecBase {
   }
 
   test("ccnetBuckets: per-language tertiles by trained-LM score, " +
-      "head = highest mean probability; deterministic ranks; the " +
-      "scorer knob is live") {
+      "head = highest mean probability; deterministic ranks") {
     import Curation._
     // model: "the cat sat"/"the cat ran" (the knScoreDocs fixture) —
     // pinned D=3/4: p(cat|the)=750000000, p(sat|cat)=p(ran|cat)
@@ -192,12 +158,6 @@ class CurationSpec extends SparkSpecBase {
     assert(got.toSeq == Seq((1L, "head"), (2L, "head"),
       (3L, "middle"), (4L, "middle"), (5L, "tail"), (6L, "tail"),
       (7L, "head")))
-    // scorer knob live: an impossible scorer ranking flips buckets
-    val got2 = Curation.ccnetBuckets(docs, "doc_id", "lang", "text",
-        model,
-        lmScorer = (2, NgramLm.Modified))
-      .orderBy("doc_id").collect().map(_.getString(3))
-    assert(got2.length == 7)
   }
 
   test("lengthGroupedBatches: layout is a pure function of (seed, id, " +
@@ -524,7 +484,7 @@ class CurationSpec extends SparkSpecBase {
     // the kept set and ranks ARE the (ascending hashU32, id) order —
     // replayed driver-side through the JVM twin
     def naive(ids: Seq[Long], cell: Long): Set[(Long, Long, Int)] =
-      ids.sortBy(i => (Curation.hashU32Jvm("s1", i.toString), i))
+      ids.sortBy(i => (HashTwins.hashU32Jvm("s1", i.toString), i))
         .take(10).zipWithIndex
         .map { case (i, r) => (i, cell, r + 1) }.toSet
     assert(got == naive(0L until 100L, 0L) ++ naive(100L until 105L, 1L))
@@ -562,11 +522,13 @@ class CurationSpec extends SparkSpecBase {
     // early stop: a single-char corpus has no pairs after 0 merges
     assert(TextAnalysis.bpeTrain(
       Seq((1L, "a a a")).toDF("doc_id", "text"), "text", 5).count() == 0)
-    // the bounded-collect contract fails loudly
+    // the bounded-collect contract fails loudly: one pre-token more
+    // than the 262144 ceiling
     val err = intercept[IllegalArgumentException](
-      TextAnalysis.bpeTrain(Seq((1L, "one two three")).toDF("d", "text"),
-        "text", 2, maxWords = 2))
-    assert(err.getMessage.contains("maxWords"))
+      TextAnalysis.bpeTrain(spark.range(262145L)
+        .select(concat(lit("w"), col("id").cast("string")).as("text")),
+        "text", 2))
+    assert(err.getMessage.contains("exceed 262144"))
   }
 
   test("bpeApply: rank-greedy encode matches hand expectation; lossless") {
@@ -631,7 +593,7 @@ class CurationSpec extends SparkSpecBase {
     val rows = (0L until 400L).map(i => (i, 1L + i % 7)) // weights 1..7
     val df = rows.toDF("id", "w")
     def brute(seed: String, k: Int): Seq[Long] = rows.map { case (i, w) =>
-      val u = (Curation.hashU32Jvm(seed, i.toString) + 0.5) / 4294967296.0
+      val u = (HashTwins.hashU32Jvm(seed, i.toString) + 0.5) / 4294967296.0
       (math.log(u) / w, i)
     }.sortBy { case (key, i) => (-key, i) }.take(k).map(_._2)
     val got = Curation.weightedSample(df, "id", col("w"), 25, "s1")
@@ -685,7 +647,7 @@ class CurationSpec extends SparkSpecBase {
     // shuffleKeyJvm twin of the operator's concat_ws draw)
     val want = (0L until 4L).flatMap { q =>
       (0L until 80L).filter(n => n != q && !posSet((q, n)))
-        .map(n => (Curation.shuffleKeyJvm("s1", s"$q#$n"), n))
+        .map(n => (HashTwins.shuffleKeyJvm("s1", s"$q#$n"), n))
         .sorted.take(5).zipWithIndex
         .map { case ((_, n), i) => (q, n, i + 1) }
     }
@@ -730,7 +692,7 @@ class CurationSpec extends SparkSpecBase {
   }
 
   test("withLineRepetition: brute force on real multi-line text, " +
-      "paragraph mode, empty/null docs") {
+      "empty/null docs") {
     val rows = Seq(
       (0L, "copy me\nunique one\ncopy me\ncopy me\nz"), // 3x dup line
       (1L, "a\nb\nc"),                                     // all unique
@@ -763,13 +725,6 @@ class CurationSpec extends SparkSpecBase {
     // x3 (2 excess of 7 chars) in doc 0 dominates its 2/5 line share
     val d0 = got.find(_._1 == 0L).get
     assert(d0._2 == 5L && d0._3 == 0.4 && d0._4 > d0._3)
-    // paragraph mode: \R{2,} keeps single newlines INSIDE a unit
-    val paras = Seq((0L, "p one\nstill p one\n\np two\n\np one\nstill p one"))
-      .toDF("doc_id", "text")
-    val p = TextAnalysis.withLineRepetition(paras, "doc_id", "text",
-        sep = "\\R{2,}")
-      .as[(Long, Long, Double, Double)].head()
-    assert(p._2 == 3L && p._3 == 1.0 / 3.0) // the two-line para repeats
   }
 
   test("skipgramPairs: brute-force window semantics, canonical order, " +
@@ -796,7 +751,7 @@ class CurationSpec extends SparkSpecBase {
   }
 
   test("preferencePairs: deterministic extremes, ties, null scores, " +
-      "degenerate groups, margin gate") {
+      "degenerate groups") {
     import graft.ext.Curation
     val rows = Seq(
       // g1: clear best/worst
@@ -822,11 +777,6 @@ class CurationSpec extends SparkSpecBase {
       ("g2", 5L, 4L, 0.5, 0.5, 0.0),
       ("g5", 10L, 11L, 0.8, 0.2, 0.6000000000000001),
       ("g6", 13L, 14L, 0.6, 0.4, 0.19999999999999996)))
-    // margin gate drops the all-tied pair
-    val gated = Curation.preferencePairs(rows, "grp", "id", "sc",
-        minMargin = 0.1)
-      .select("grp").as[String].collect().toSet
-    assert(gated == Set("g1", "g5", "g6"))
   }
 
   test("randomNegativesBatched: n-batch run == 1-batch run row-for-row") {
@@ -862,7 +812,7 @@ class CurationSpec extends SparkSpecBase {
     // matches the per-stratum brute force
     rows.groupBy(_._2).foreach { case (src, g) =>
       val want = g.map { case (i, _, w) =>
-        val u = (Curation.hashU32Jvm("st1", i.toString) + 0.5) / 4294967296.0
+        val u = (HashTwins.hashU32Jvm("st1", i.toString) + 0.5) / 4294967296.0
         (math.log(u) / w, i)
       }.sortBy { case (key, i) => (-key, i) }.take(4).map(_._2)
       assert(got.filter(_._1 == src).sortBy(_._3).map(_._2) == want, src)
@@ -983,7 +933,7 @@ class CurationSpec extends SparkSpecBase {
     assert(!got.exists { case (d, e) => d >= 4L && e >= 2L })
     val thresh = (15L * 4294967296L) / 30L
     val wantFrac = Seq(1L, 2L, 3L)
-      .filter(d => Curation.hashU32Jvm("s1", d.toString) < thresh)
+      .filter(d => HashTwins.hashU32Jvm("s1", d.toString) < thresh)
     assert(got.filter(_._2 == 1L).collect {
       case (d, _) if d <= 3L => d
     } == wantFrac)
@@ -1035,7 +985,7 @@ class CurationSpec extends SparkSpecBase {
       val toks = Option(text).getOrElse("")
         .split("\\s+").filter(_.nonEmpty).toSeq
       val st = toks.indices.map(i =>
-        Curation.hashU32Jvm("sc1:st", s"$id:$i") % denom == 0)
+        HashTwins.hashU32Jvm("sc1:st", s"$id:$i") % denom == 0)
       val masked = toks.indices.map(i =>
         (math.max(0, i - spanLen + 1) to i).exists(st))
       val runStarts = toks.indices
@@ -1105,10 +1055,10 @@ class CurationSpec extends SparkSpecBase {
     }
     // selection is the hash-order prefix: the JVM twin agrees
     val byLane = (1L to 200L).groupBy(i =>
-      Curation.hashU32Jvm("b1:sh", i.toString) % 4)
+      HashTwins.hashU32Jvm("b1:sh", i.toString) % 4)
     byLane.foreach { case (lane, ids) =>
       val quota = 251L + (if (lane < 1) 1L else 0L)
-      val want = ids.sortBy(i => (Curation.shuffleKeyJvm("b1", i.toString), i))
+      val want = ids.sortBy(i => (HashTwins.shuffleKeyJvm("b1", i.toString), i))
         .take((quota / 10L).toInt).toSet
       assert(got.filter(_._2 == lane).map(_._1).toSet == want, s"lane $lane")
     }
@@ -1145,8 +1095,7 @@ class CurationSpec extends SparkSpecBase {
       (3L, "b", Seq.fill(50)("ccccc").mkString(" ")),
       (4L, "b", Seq.fill(50)("1234").mkString(" "))
     ).toDF("doc_id", "lang", "text")
-    val got = Curation.mixturePipeline(docs,
-        Curation.MixtureConfig(nShards = 8))
+    val got = Curation.mixturePipeline(docs)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3)))
       .toSeq.sorted
     // doc 4 never appears (gated out)
@@ -1157,18 +1106,13 @@ class CurationSpec extends SparkSpecBase {
     // the shard key includes the epoch (epoch:doc): every emitted
     // instance matches the JVM twin of the md5 shard draw
     got.foreach { case (d, e, sh) =>
-      assert(sh == Curation.hashU32Jvm("mx1:shard", s"$e:$d") % 8,
+      assert(sh == HashTwins.hashU32Jvm("mx1:shard", s"$e:$d") % 8,
         s"instance ($d, $e)")
     }
-    val again = Curation.mixturePipeline(docs,
-        Curation.MixtureConfig(nShards = 8))
+    val again = Curation.mixturePipeline(docs)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3)))
       .toSeq.sorted
     assert(again == got)
-    // config is live: a tighter gate drops everything
-    val strict = Curation.mixturePipeline(docs,
-      Curation.MixtureConfig(minTokens = 1000L))
-    assert(strict.count() == 0)
   }
 
   test("evalLeakage: containment direction, worst-doc tie-break, " +

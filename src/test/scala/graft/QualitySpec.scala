@@ -71,16 +71,6 @@ class QualitySpec extends SparkSpecBase {
     assert(r.getLong(1) == 1L && r.getLong(2) == 0L) // population excludes NULL
   }
 
-  test("approx mode tracks exact uniqueness on duplicate-free data") {
-    val df = spark.range(1000).toDF("id")
-    val exact = Quality.suite(df, Seq(Unique(Seq("id")))).head().getLong(2)
-    val approx = Quality.suite(df, Seq(Unique(Seq("id"))), exact = false)
-      .head().getLong(2)
-    assert(exact == 0L)
-    // HLL error band: |approx violations| = |n - estimate| <= 5% of n
-    assert(math.abs(approx) <= 50L)
-  }
-
   test("duplicate check names fail loudly") {
     intercept[IllegalArgumentException] {
       Quality.suite(facts, Seq(NotNull("id"), NotNull("id")))
@@ -102,14 +92,6 @@ class QualitySpec extends SparkSpecBase {
       .collect()
     assert(r.length == 4)
     assert(r.forall(x => x.getLong(2) == 0L && x.getBoolean(3)))
-  }
-
-  test("approx uniqueness ignores NULL-component rows like exact") {
-    val df = Seq((Some(1L), Some("a")), (None, Some("a")),
-      (Some(1L), Option.empty[String])).toDF("k1", "k2")
-    val approx = Quality.suite(df, Seq(Unique(Seq("k1", "k2"))),
-      exact = false).head().getLong(2)
-    assert(approx == 0L) // 1 complete row, sketch sees exactly 1
   }
 
   test("all row-local checks compile into one aggregate over one scan") {

@@ -59,15 +59,6 @@ class ScaleLayoutSpec extends SparkSpecBase {
     // exact multiset equality: each big row meets exactly ONE replica
     assert(got.sorted.toSeq == want.sorted.toSeq)
     assert(got.length == 30000)
-    // left form keeps unmatched big rows exactly once
-    val leftGot = Skew.saltedJoin(
-      big.withColumn("k", concat(col("k"), lit("x"))), small,
-      Seq("k"), salts = 8, joinType = "left")
-    assert(leftGot.count() == 30000 &&
-      leftGot.filter(col("w").isNull).count() == 30000)
-    intercept[IllegalArgumentException] {
-      Skew.saltedJoin(big, small, Seq("k"), 8, joinType = "full")
-    }
   }
 
   test("bloomPrefilteredJoin == plain join; probe filters before the join") {

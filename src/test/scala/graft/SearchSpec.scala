@@ -283,9 +283,10 @@ class SearchSpec extends SparkSpecBase {
   test("rrfFuse: single system is a pure rank transform") {
     import spark.implicits._
     val a = Seq((7L, 1), (9L, 2)).toDF("doc_id", "rank")
-    val got = Search.rrfFuse(Seq("only" -> a), "doc_id", "rank", k0 = 0)
+    val got = Search.rrfFuse(Seq("only" -> a), "doc_id", "rank")
       .orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(2)))
-    assert(got.toSeq == Seq((7L, 1000000000L), (9L, 500000000L)))
+    // floor(10^9 / (60 + rank))
+    assert(got.toSeq == Seq((7L, 16393442L), (9L, 16129032L)))
   }
 }

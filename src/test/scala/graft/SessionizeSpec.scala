@@ -125,39 +125,7 @@ class SessionizeSpec extends SparkSpecBase {
     assert(exchanges <= 3, s"expected at most 3 exchanges, got:\n$plan")
   }
 
-  test("rolling active approx: HLL curve tracks exact on driver events") {
-    import graft.core.GraftSession
-    import graft.operators.Retention
-    import org.apache.spark.sql.functions.col
-    val raw = GraftSession.table(spark, "/root/testdata/sf0.001", "events")
-    val ev = raw.select(col("user_id"),
-      GraftSession.tsMicros(raw).as("ts_us"))
-    def run(exact: Boolean) = Retention.rollingActive(ev, "user_id",
-        "ts_us", bucketWidth = 86400000000L, window = 7, exact = exact)
-      .as[(Long, Long)].collect().toMap
-    val ex = run(exact = true)
-    val ap = run(exact = false)
-    // identical bucket set (approx changes counts, never the row set)
-    assert(ap.keySet == ex.keySet)
-    // every bucket-end within 4x the configured 2.3% rsd (driver events
-    // have tens-to-hundreds of actives per window — small-cardinality
-    // HLL is bias-corrected, so 4 sigma is a stable bound, not a wish)
-    for ((b, n) <- ex) {
-      val a = ap(b).toDouble
-      assert(math.abs(a - n) <= math.max(2.0, 4 * 0.023 * n),
-        s"bucket $b: approx $a vs exact $n drifts past 4x rsd")
-    }
-    // the sketch path must NOT pay the pair-collapsing distinct: one
-    // partial_approx agg straight over the scan, no extra exchange
-    val plan = Retention.rollingActive(ev, "user_id", "ts_us",
-        86400000000L, 7, exact = false)
-      .queryExecution.executedPlan.toString()
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(exchanges == 1,
-      s"approx path must shuffle only HLL registers (1 exchange):\n$plan")
-  }
-
-  test("funnel: first-touch strict-order semantics, horizon, non-entrants") {
+  test("funnel: first-touch strict-order semantics, non-entrants") {
     import graft.operators.Funnel
     val ev = Seq(
       // u1 full journey; the ts=5 purchase precedes the view -> ignored
@@ -172,21 +140,15 @@ class SessionizeSpec extends SparkSpecBase {
       // u4 never enters the funnel (no view) -> absent from output
       (4L, "click", 1L), (4L, "purchase", 2L)
     ).toDF("user_id", "event_type", "ts")
-    def run(h: Option[Long]) =
-      Funnel.funnel(ev, "user_id", "event_type", "ts",
-          Seq("view", "click", "purchase"), horizon = h)
-        .collect().map(r => r.getLong(0) ->
-          ((Option(r.get(1)), Option(r.get(2)), Option(r.get(3)),
-            r.getInt(4)))).toMap
-    val got = run(None)
+    val got = Funnel.funnel(ev, "user_id", "event_type", "ts",
+        Seq("view", "click", "purchase"))
+      .collect().map(r => r.getLong(0) ->
+        ((Option(r.get(1)), Option(r.get(2)), Option(r.get(3)),
+          r.getInt(4)))).toMap
     assert(got.keySet == Set(1L, 2L, 3L))
     assert(got(1L) == ((Some(10L), Some(20L), Some(30L), 3)))
     assert(got(2L) == ((Some(10L), None, None, 1)))
     assert(got(3L) == ((Some(10L), Some(15L), None, 2)))
-    // horizon 15 from t1: u1's click (20 <= 25) survives, the
-    // purchase (30 > 25) falls outside the journey window
-    val bounded = run(Some(15L))
-    assert(bounded(1L) == ((Some(10L), Some(20L), None, 2)))
   }
 
   test("funnelSinglePass == staged funnel (fixture + driver events)") {
@@ -208,13 +170,9 @@ class SessionizeSpec extends SparkSpecBase {
       (4L, "click", 1L), (4L, "purchase", 2L)
     ).toDF("user_id", "event_type", "ts")
     val steps = Seq("view", "click", "purchase")
-    for (h <- Seq(None, Some(15L))) {
-      val staged = rows(Funnel.funnel(ev, "user_id", "event_type", "ts",
-        steps, horizon = h))
-      val single = rows(Funnel.funnelSinglePass(ev, "user_id",
-        "event_type", "ts", steps, horizon = h))
-      assert(single == staged, s"horizon=$h single-pass diverges")
-    }
+    assert(rows(Funnel.funnelSinglePass(ev, "user_id", "event_type",
+      "ts", steps)) == rows(Funnel.funnel(ev, "user_id", "event_type",
+      "ts", steps)), "single-pass diverges")
     // and on the real driver log (sf0.001, micros timeline)
     val raw = GraftSession.table(spark, "/root/testdata/sf0.001", "events")
     val dev = raw.select(col("user_id"), col("event_type"),

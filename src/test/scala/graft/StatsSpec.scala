@@ -146,12 +146,6 @@ class StatsSpec extends SparkSpecBase {
     // would sort below "9" as a string — the bug this guards against)
     assert(p(0) == Row("num", 5L, 1L, 3L, "2", "10"))
     assert(p(1) == Row("s", 5L, 1L, 3L, "a", "c"))
-    // approx mode: same shape, distincts within HLL tolerance, and the
-    // plan loses the exact-distinct Expand (the 100 TB variant)
-    val ap = Stats.profile(df, Seq("num", "s"), exact = false)
-    assert(!ap.queryExecution.executedPlan.toString.contains("Expand"))
-    val apRows = ap.orderBy("col_name").collect()
-    assert(math.abs(apRows(0).getLong(3) - 3L) <= 1)
     assert(Stats.profile(df.repartition(7), Seq("num", "s"))
       .orderBy("col_name").collect().toSeq == p.toSeq)
   }

@@ -138,40 +138,6 @@ class StreamingSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
-  test("gap sessionization seqTtlGaps: empty counter state evicts " +
-      "after the TTL and session_seq restarts; default keeps it") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[EventStreams.Event]
-    // gap 10 min, TTL 2 further gaps → the counter row dies once the
-    // watermark passes last + 30 min of silence
-    val q = EventStreams.sessionizeByGap(mem.toDS(),
-        gapMs = 10 * 60 * 1000, seqTtlGaps = 2)
-      .writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .format("memory").queryName("ttl_sessions").start()
-    try {
-      def ev(id: Long, user: Long, minute: Long) = EventStreams.Event(
-        id, new java.sql.Timestamp(minute * 60000), user, "click", 1.0)
-      mem.addData(ev(1, 1, 60), ev(2, 1, 65))
-      q.processAllAvailable()
-      // watermark far past u1's close AND its 30-min TTL
-      mem.addData(ev(3, 2, 300)); q.processAllAvailable()
-      mem.addData(ev(4, 3, 500)); q.processAllAvailable()
-      // u1 returns LONG after the TTL: its counter was evicted, so the
-      // next session numbers from 0 again (the documented trade)
-      mem.addData(ev(5, 1, 700)); q.processAllAvailable()
-      mem.addData(ev(6, 4, 900)); q.processAllAvailable()
-      mem.addData(ev(7, 5, 1100)); q.processAllAvailable()
-      val u1 = spark.table("ttl_sessions").collect()
-        .filter(_.getLong(0) == 1L)
-        .map(r => (r.getLong(1), r.getLong(4))).sortBy(_._2)
-      assert(u1.toSeq == Seq(
-        (0L, 60 * 60000000L), (0L, 700 * 60000000L)),
-        s"expected seq restart after TTL eviction, got ${u1.toSeq}")
-    } finally q.stop()
-  }
-
   test("streamingClassifierGate: bit-identical to batch classifyLinear " +
       "(unseen tokens, null/empty text, tie-break), streams in Append") {
     import graft.ext.TextAnalysis
@@ -959,24 +925,18 @@ class StreamingSpec extends SparkSpecBase {
 
   test("streamingClassifierGate: a model past maxModelRows refuses " +
       "loudly, naming the batch classifyLinear") {
-    val labels = Seq("en", "es")
-    val vocab = (0 until 40).map(i => s"w$i")
-    val weights = (for {
-      (l, li) <- labels.zipWithIndex
-      (t, ti) <- vocab.zipWithIndex
-    } yield (t, l, s"0.${100 + (ti * 7 + li * 3) % 900}"))
-      .toDF("term", "label", "w")
-      .select(col("term"), col("label"),
-        col("w").cast("decimal(18,9)").as("weight"))
+    // one row past the 1 << 20 plan-literal cap
+    val weights = spark.range(1048577L)
+      .select(concat(lit("w"), col("id").cast("string")).as("term"),
+        lit("en").as("label"), lit("0.1").cast("decimal(18,9)").as("weight"))
     val priors = Seq(("en", "-0.2", "0.01"), ("es", "-0.3", "0.02"))
       .toDF("label", "p", "u")
       .select(col("label"), col("p").cast("decimal(18,9)").as("prior"),
         col("u").cast("decimal(18,9)").as("unseen"))
     val docsDf = Seq((0L, "w1 w2 zzz")).toDF("doc_id", "text")
-    // the 80-row model is past a deliberately low literal cap
     val ex = intercept[IllegalArgumentException] {
       EventStreams.streamingClassifierGate(docsDf, "doc_id", "text",
-        weights, priors, maxModelRows = 8)
+        weights, priors)
     }
     assert(ex.getMessage.contains("classifyLinear"))
   }
@@ -1004,21 +964,21 @@ class StreamingSpec extends SparkSpecBase {
         .as[(Long, Long)].collect().toSet // set-dedupe multi-band emits
       assert(got == Set((1L, 2L), (1L, 3L), (2L, 3L)))
     } finally q.stop()
-    // a degenerate bucket must fail loudly, not accrete quadratically
+    // a degenerate bucket must fail loudly, not accrete quadratically:
+    // one doc past the 4096-id bucket ceiling
     val mem2 = MemoryStream[(Long, String)]
     val q2 = EventStreams.streamingBandIndex(
-        mem2.toDF().toDF("doc_id", "text"), "doc_id", "text",
-        maxBucket = 2)
+        mem2.toDF().toDF("doc_id", "text"), "doc_id", "text")
       .toDF("a_id", "b_id").writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
       .format("memory").queryName("band_idx_guard").start()
     try {
-      mem2.addData((1L, t0), (2L, t0), (3L, t0))
+      mem2.addData((1L to 4097L).map(i => (i, t0)))
       val e = intercept[Exception](q2.processAllAvailable())
       def msgs(t: Throwable): String =
         Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
           .map(x => Option(x.getMessage).getOrElse("")).mkString(" | ")
-      assert(msgs(e).contains("maxBucket"), msgs(e).take(300))
+      assert(msgs(e).contains("would exceed 4096 ids"), msgs(e).take(300))
     } finally q2.stop()
   }
 
@@ -1033,9 +993,9 @@ class StreamingSpec extends SparkSpecBase {
       .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2), r.getLong(3)))
       .toMap
     ids.foreach { id =>
-      assert(sqlSide(id) == ((Curation.shuffleKeyJvm("tw", id.toString),
-        Curation.hashU32Jvm("tw", id.toString),
-        Curation.hashU32Jvm("tw", id.toString) % 8)), s"id=$id")
+      assert(sqlSide(id) == ((HashTwins.shuffleKeyJvm("tw", id.toString),
+        HashTwins.hashU32Jvm("tw", id.toString),
+        HashTwins.hashU32Jvm("tw", id.toString) % 8)), s"id=$id")
     }
   }
 
@@ -1096,18 +1056,6 @@ class StreamingSpec extends SparkSpecBase {
       .as[(String, Long, Long, Int)].collect().toSet
       .filterNot(_._1 == "flush")
     assert(oneShot == want)
-    // out-of-order WITHIN the watermark: day 98 arrives a batch after
-    // day 100 but is not late under a 5-day delay — the spine must
-    // start at 98 (pre-fix, lastEmitted pinned to 99 and dropped it)
-    val ooo = replayToSink("gapfill_sink2",
-      Seq(Seq(ev(1, 100, "a")), Seq(ev(2, 98, "a")),
-        Seq(ev(99, 120, "flush"))),
-      ds => EventStreams.streamingGapFill(ds, watermarkDelay = "5 days"),
-      org.apache.spark.sql.streaming.OutputMode.Append())
-      .as[(String, Long, Long, Int)].collect().toSet
-      .filterNot(_._1 == "flush")
-    assert(ooo == Set(("a", 98L, 1L, 0), ("a", 99L, 1L, 1),
-      ("a", 100L, 1L, 0)), s"ooo=$ooo")
   }
 
   test("streamingScoreCounts: Update re-emissions fold by MAX and sweep " +
@@ -1227,10 +1175,13 @@ class StreamingSpec extends SparkSpecBase {
       // zero-hit pairs never emit (doc 12 matches nothing)
       assert(!facts.exists(_._1 == 12L), facts)
     } finally q.stop()
+    // one item past the 1 << 14 plan-literal cap
+    val bigSuite = spark.range(16385L)
+      .select(col("id").as("eval_id"), lit("alpha beta gamma").as("text"))
     val e = intercept[IllegalArgumentException] {
       EventStreams.streamingEvalLeakage(
         mem.toDS().toDF("doc_id", "text"), "doc_id", "text",
-        evalSet, "eval_id", "text", n = 3, maxEvalItems = 2)
+        bigSuite, "eval_id", "text", n = 3)
     }
     assert(e.getMessage.contains("too large"))
   }
@@ -1264,10 +1215,13 @@ class StreamingSpec extends SparkSpecBase {
         .toSeq.sorted
       assert(online == batch, s"online $online vs batch $batch")
     } finally q.stop()
+    // one group past the 1 << 16 plan-literal cap
+    val bigAlloc = spark.range(65537L)
+      .select(col("id").cast("string").as("grp"), lit(1L).as("n_tokens"),
+        lit(1L).as("alloc_tokens"))
     val e = intercept[IllegalArgumentException] {
       EventStreams.streamingMixtureExecute(
-        mem.toDS().toDF("id", "grp"), "id", "grp", alloc, "s1",
-        maxGroups = 1)
+        mem.toDS().toDF("id", "grp"), "id", "grp", bigAlloc, "s1")
     }
     assert(e.getMessage.contains("too large"))
   }
