@@ -29,7 +29,7 @@ object GraftSession {
       .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores)
-      // transparent range-join rule + SQL function surface (GraftFunctions)
+      // the SQL function surface (GraftFunctions)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -1470,7 +1470,7 @@ object AnalyticQueries {
       val d = t(s, dir, "documents")
       val store = d.select(col("doc_id").cast("long").as("__id"),
           graft.functions.expressions.TextExpressions.wordShingles(
-            s, col("text"), 3).as("__sharr"))
+            col("text"), 3).as("__sharr"))
         .localCheckpoint(true) // the at-ingest doc-shingle sink
       val feed = d
         .select(col("doc_id").cast("long").as("_1"),
@@ -1949,7 +1949,7 @@ object AnalyticQueries {
         .toSeq // (doc_id, eval_id, containment_e9)
       val spine = evalT.select(col("doc_id").as("eval_id"),
           size(graft.functions.expressions.TextExpressions
-            .wordShingles(s, col("text"), 3)).cast("long")
+            .wordShingles(col("text"), 3)).cast("long")
             .as("n_shingles"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
       val byEval = facts.groupBy(_._2)

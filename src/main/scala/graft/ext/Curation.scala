@@ -364,9 +364,8 @@ object Curation {
     * count docs, not output rows, for denominator-style metrics). */
   def contamination(corpus: DataFrame, evalSet: DataFrame, idCol: String,
       textCol: String, n: Int = 3): DataFrame = {
-    val spark = corpus.sparkSession
     def sh(c: Column) = explode(graft.functions.expressions.TextExpressions
-      .wordShingles(spark, c, n)).as("__sh")
+      .wordShingles(c, n)).as("__sh")
     val evalSh = evalSet.select(sh(col(textCol))).distinct()
       .withColumn("__hit", lit(1L))
     corpus.select(col(idCol), sh(col(textCol)))
@@ -735,9 +734,8 @@ object Curation {
   def evalLeakage(corpus: DataFrame, evalSet: DataFrame, idCol: String,
       textCol: String, n: Int = 3,
       tauE9: Long = 500000000L): DataFrame = {
-    val spark = corpus.sparkSession
     def sh(c: Column) = explode(graft.functions.expressions.TextExpressions
-      .wordShingles(spark, c, n)).as("__sh")
+      .wordShingles(c, n)).as("__sh")
     val ev = evalSet.select(col(idCol).as("eval_id"), sh(col(textCol)))
     val evn = ev.groupBy("eval_id").agg(count(lit(1)).as("n_shingles"))
     val pairs = corpus.select(col(idCol).as("__doc"), sh(col(textCol)))

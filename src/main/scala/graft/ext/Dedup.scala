@@ -42,7 +42,7 @@ object Dedup {
       n: Int): DataFrame =
     df.select(col(idCol).as("__id"),
       explode(graft.functions.expressions.TextExpressions.wordShingles(
-        df.sparkSession, col(textCol), n)).as("__shingle"))
+        col(textCol), n)).as("__shingle"))
 
   /** (id, xxhash64(shingle)) — the join/agg representation: set
     * intersections over 8-byte keys instead of shingle strings (same
@@ -259,7 +259,7 @@ object Dedup {
     val tok = df.select(col(idCol).as("__id"),
       explode(array_distinct(
         graft.functions.expressions.TextExpressions.wordShingles(
-          df.sparkSession, col(textCol), shingleN))).as("__tok"))
+          col(textCol), shingleN))).as("__tok"))
     val tf = tok.groupBy("__tok").agg(count(lit(1)).as("__df"))
     // per-doc token array in (df asc, token asc) global order; struct
     // sort gives the total order, then project the tokens back out
@@ -442,7 +442,7 @@ object Dedup {
       .filter(length(col(textCol)) >= gramLen)
       .select(col(idCol).as("__id"),
         explode(graft.functions.expressions.TextExpressions.winnowedGrams(
-          df.sparkSession, col(textCol), gramLen, 1)).as("__g"))
+          col(textCol), gramLen, 1)).as("__g"))
       .select(col("__id"), col("__g.pos").as("__pos"), col("__g.gh").as("__gh"))
     val dup = g.groupBy("__gh")
       .agg(countDistinct(col("__id")).as("__nd"))
@@ -496,7 +496,6 @@ object Dedup {
     * units too (identical for BMP text, the oracle-parity regime). */
   def removeDuplicateSpans(df: DataFrame, idCol: String, textCol: String,
       gramLen: Int = 20): DataFrame = {
-    val spark = df.sparkSession
     import graft.functions.expressions.TextExpressions.{charUnitLength, charUnitSubstr}
     val W = org.apache.spark.sql.expressions.Window
       .partitionBy("__id").orderBy("st")
@@ -525,11 +524,11 @@ object Dedup {
     val cleaned = heads.unionByName(tails)
       .join(base, Seq("__id"))
       .withColumn("ke",
-        coalesce(col("ke"), charUnitLength(spark, col("__text"))))
+        coalesce(col("ke"), charUnitLength(col("__text"))))
       .filter(col("ke") >= col("ks"))
       .select(col("__id"),
         struct(col("ks"),
-          charUnitSubstr(spark, col("__text"), col("ks"), col("ke"))
+          charUnitSubstr(col("__text"), col("ks"), col("ke"))
             .as("seg")).as("__s"))
       .groupBy("__id")
       .agg(concat_ws("", transform(sort_array(collect_list(col("__s"))),
@@ -541,9 +540,9 @@ object Dedup {
       .select(col("__id").as(idCol),
         md5(when(col("__has").isNull, col("__text"))
           .otherwise(coalesce(col("__cleaned"), lit("")))).as("clean_hash"),
-        (charUnitLength(spark, col("__text")) -
-          when(col("__has").isNull, charUnitLength(spark, col("__text")))
-            .otherwise(coalesce(charUnitLength(spark, col("__cleaned")),
+        (charUnitLength(col("__text")) -
+          when(col("__has").isNull, charUnitLength(col("__text")))
+            .otherwise(coalesce(charUnitLength(col("__cleaned")),
               lit(0))))
           .cast("long").as("chars_removed"))
   }
@@ -639,11 +638,10 @@ object Dedup {
     * before the two documented scans (bloom build, confirm semi-scan). */
   def newRowsBloom(newDf: DataFrame, existing: DataFrame,
       key: org.apache.spark.sql.Column): DataFrame = {
-    val spark = newDf.sparkSession
     val nExisting = math.max(1L, existing.count())
     val (bits, k) = Sketches.buildBloomBits(
       existing.select(xxhash64(key).as("__k")), "__k", nExisting, 0.01)
-    val probe = Sketches.bloomMightContain(spark, xxhash64(key), bits, k)
+    val probe = Sketches.bloomMightContain(xxhash64(key), bits, k)
     val candKeys = newDf.filter(probe).select(key.as("__h")).distinct()
     val matched = existing
       .join(broadcast(candKeys), key === col("__h"), "leftsemi")
@@ -864,7 +862,7 @@ object Dedup {
     df.withColumn("__txt", coalesce(col(textCol), lit("")))
       .withColumn("__b",
         graft.functions.expressions.TextExpressions.cdcBoundaries(
-          df.sparkSession, col("__txt"), w, modulus))
+          col("__txt"), w, modulus))
       .withColumn("__b2",
         concat(array(lit(0)), col("__b"), array(length(col("__txt")))))
       .withColumn("__chunks", transform(
@@ -1000,7 +998,7 @@ object Dedup {
       else {
         val setLit = typedlit(hs)
         filter(units, l => !graft.functions.expressions.SketchExpressions
-          .inLongSet(df.sparkSession, xxhash64(l), setLit))
+          .inLongSet(xxhash64(l), setLit))
       }
     val nullGuard = col(textCol).isNull
     df.withColumn("n_lines_dropped",

@@ -110,7 +110,7 @@ object Search {
     val withTf = terms.zipWithIndex.foldLeft(
         df.withColumn("__normsq",
           graft.functions.expressions.TextExpressions.tfNormSq(
-            df.sparkSession, col(textCol)))) { case (d, (t, i)) =>
+            col(textCol)))) { case (d, (t, i)) =>
       d.withColumn(tfCol(i), size(filter(toks, x => x === lit(t))))
     }
     val statsAggs =

@@ -656,7 +656,6 @@ object Similarity {
   def pqTopKAdc(corpus: DataFrame, idCol: String, vecCol: String,
       codebooks: DataFrame, queryPred: org.apache.spark.sql.Column,
       k: Int): DataFrame = {
-    val spark = corpus.sparkSession
     val cbs = collectCodebooks(codebooks)
     // corpus side: index codes (NOT cids — the LUT is index-addressed)
     val enc = corpus.withColumn("__code",
@@ -716,7 +715,6 @@ object Similarity {
   def pqTopKAdcOnCodes(encoded: DataFrame, idCol: String, codeCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       codebooks: DataFrame, k: Int): DataFrame = {
-    val spark = encoded.sparkSession
     val cbs = collectCodebooks(codebooks)
     requireCanonicalCids(cbs)
     val q = queries
@@ -740,7 +738,6 @@ object Similarity {
       cellCol: String, codeCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       centroids: DataFrame, codebooks: DataFrame, k: Int): DataFrame = {
-    val spark = encoded.sparkSession
     val (cids, matrix) = collectCentroids(centroids)
     val cbs = collectCodebooks(codebooks)
     requireCanonicalCids(cbs)
@@ -769,7 +766,6 @@ object Similarity {
   def ivfPqTopK(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, codebooks: DataFrame,
       queryPred: org.apache.spark.sql.Column, k: Int): DataFrame = {
-    val spark = corpus.sparkSession
     val (cids, matrix) = collectCentroids(centroids)
     val cbs = collectCodebooks(codebooks)
     val enc = assignWith(corpus, vecCol, cids, matrix)
@@ -875,14 +871,13 @@ object Similarity {
     * paths drifting apart on tie/null semantics. */
   private def scoreAdcRanked(corpusSide: DataFrame, q: DataFrame,
       k: Int, joinOnCell: Boolean = true): DataFrame = {
-    val spark = corpusSide.sparkSession
     val joined =
       if (joinOnCell) corpusSide.join(broadcast(q), Seq("cid"))
       else corpusSide.crossJoin(broadcast(q))
     val scored = joined
       .filter(col("n_id") =!= col("q_id"))
       .withColumn("dist", graft.functions.expressions.VectorExpressions
-        .pqAdcDistance(spark, col("__code"), col("__lut")))
+        .pqAdcDistance(col("__code"), col("__lut")))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("dist").asc, col("n_id").asc)
     scored.filter(col("dist").isNotNull)
@@ -1095,7 +1090,7 @@ object Similarity {
   def rotate(df: DataFrame, vecCol: String, rotation: Seq[Seq[Double]],
       out: String): DataFrame =
     df.withColumn(out, graft.functions.expressions.VectorExpressions.matVec(
-      df.sparkSession, typedLit(rotation.map(_.toArray)),
+      typedLit(rotation.map(_.toArray)),
       col(vecCol).cast("array<double>")))
 
   /** Cyclic Jacobi eigendecomposition of a symmetric matrix —

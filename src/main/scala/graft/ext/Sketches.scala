@@ -240,10 +240,9 @@ object Sketches {
 
   /** Probe column for a [[buildBloomBits]] bitmap: false = definitely
     * absent, true = present-or-false-positive. */
-  def bloomMightContain(spark: org.apache.spark.sql.SparkSession,
-      key: Column, bits: Array[Long], k: Int): Column =
+  def bloomMightContain(key: Column, bits: Array[Long], k: Int): Column =
     graft.functions.expressions.SketchExpressions.bloomMightContain(
-      spark, key, typedLit(bits.toSeq), lit(k))
+      key, typedLit(bits.toSeq), lit(k))
 
   /** KMV distinct-count estimate per group: with U(k) the k-th smallest
     * of the distinct u32 hashes, estimate `(k-1) · 2^32 / U(k)`; exact

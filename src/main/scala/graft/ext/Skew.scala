@@ -141,8 +141,7 @@ object Skew {
       }: _*)
     val (bits, k) = Sketches.buildBloomBits(
       small.select(keyHash(small).as("__k")), "__k", n, 0.01)
-    val probe = Sketches.bloomMightContain(big.sparkSession,
-      keyHash(big), bits, k)
+    val probe = Sketches.bloomMightContain(keyHash(big), bits, k)
     big.filter(probe).join(small, keys)
   }
 }

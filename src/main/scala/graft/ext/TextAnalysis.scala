@@ -60,7 +60,7 @@ object TextAnalysis {
   def withFingerprint(df: DataFrame, textCol: String): DataFrame =
     df.withColumn("fingerprint",
       array_min(transform(graft.functions.expressions.TextExpressions
-        .wordShingles(df.sparkSession, col(textCol), 8), s => md5(s))))
+        .wordShingles(col(textCol), 8), s => md5(s))))
 
   /** Intra-document repetition score (the Gopher/C4-style duplicate
     * n-gram filter): fraction of word n-grams that are repeats of an
@@ -76,7 +76,7 @@ object TextAnalysis {
     // the expression's contract — revisit only if corpora get 100× longer
     val total = size(tokens(col(textCol))) - lit(n) + lit(1)
     val distinct = size(graft.functions.expressions.TextExpressions
-      .wordShingles(df.sparkSession, col(textCol), n))
+      .wordShingles(col(textCol), n))
     df.withColumn("n_grams", greatest(total, lit(0)).cast("long"))
       .withColumn("n_distinct_grams",
         when(total >= 1, distinct.cast("long")).otherwise(lit(0L)))
@@ -858,7 +858,7 @@ object TextAnalysis {
     * `clean_text`. */
   def unicodeClean(df: DataFrame, textCol: String): DataFrame = {
     val nfc = graft.functions.expressions.TextExpressions
-      .nfcNormalize(df.sparkSession, col(textCol))
+      .nfcNormalize(col(textCol))
     df.withColumn("clean_text",
       trim(regexp_replace(regexp_replace(nfc,
         "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", ""),
@@ -1023,7 +1023,7 @@ object TextAnalysis {
       .where(size(toks) >= n)
       .select(col(groupCol),
         explode(graft.functions.expressions.TextExpressions
-          .wordShingles(df.sparkSession, col(textCol), n)).as("__sh"))
+          .wordShingles(col(textCol), n)).as("__sh"))
       .groupBy(col(groupCol))
       .agg(countDistinct(col("__sh")).as("n_distinct"))
     diversityRatios(

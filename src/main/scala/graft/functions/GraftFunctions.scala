@@ -14,13 +14,13 @@ import graft.functions.expressions.{BloomMightContain, CdcBoundaries, CharUnitLe
   *    (thriftserver, pure-SQL apps, `GraftSession.local`) can call the
   *    codegen'd hot-path expressions from plain SQL with no library
   *    import;
-  *  - [[register]] installs the same builders as session temp functions
-  *    for sessions created without the extension (the route the Column
-  *    helpers in VectorExpressions/TextExpressions use, since Spark 4
-  *    removed public Expression→Column construction).
+  *  - [[register]] installs the same builders as session temp functions,
+  *    the one explicit route for a session built without the extension.
   *
-  * Both routes resolve to the same Catalyst expressions, so DataFrame and
-  * SQL callers get identical semantics and identical codegen.
+  * The Column helpers (TextExpressions, VectorExpressions,
+  * SketchExpressions) build the same Catalyst expressions directly, so
+  * DataFrame and SQL callers get identical semantics and identical
+  * codegen, and a helper call never touches the function registry.
   */
 object GraftFunctions {
 
@@ -138,8 +138,9 @@ object GraftFunctions {
   /** Temp-function registration for sessions built without the extension.
     * Each function registers independently (an all-or-nothing guard on
     * one name would leave the rest unregistered if the user dropped or
-    * shadowed it); createOrReplace makes repeat calls cheap no-ops and
-    * asserts the library's ownership of the graft_* names. */
+    * shadowed it). Every call replaces all 17 functions, so a user's own
+    * temp function under a graft_* name is replaced too, and Spark logs
+    * one WARN per replaced name: call it once per session. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     all.foreach { case (id, _, b) =>

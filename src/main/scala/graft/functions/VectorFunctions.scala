@@ -29,7 +29,6 @@ object VectorFunctions {
     * zero-norm semantics as [[cosine]], ~10× faster on pairwise scans). */
   def cosineFast(a: Column, b: Column): Column =
     graft.functions.expressions.VectorExpressions.cosine(
-      org.apache.spark.sql.SparkSession.active,
       a.cast("array<double>"), b.cast("array<double>"))
 
   /** Codegen'd argmin centroid index (0-based, first-wins ties) of `vec`
@@ -38,13 +37,11 @@ object VectorFunctions {
     * shuffles. */
   def nearestCentroid(vec: Column, matrix: Seq[Seq[Double]]): Column =
     graft.functions.expressions.VectorExpressions.nearestCentroid(
-      org.apache.spark.sql.SparkSession.active,
       vec.cast("array<double>"), typedLit(matrix))
 
   /** Codegen'd dot product over array<double>. */
   def dotFast(a: Column, b: Column): Column =
     graft.functions.expressions.VectorExpressions.dot(
-      org.apache.spark.sql.SparkSession.active,
       a.cast("array<double>"), b.cast("array<double>"))
 
   /** Hyperplane `p`'s components, computed once per plan: component

@@ -1,10 +1,10 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnShim.{column, expression}
 import org.apache.spark.sql.types.{BooleanType, DataType}
 
 /** Bloom-filter membership probe as a native codegen'd expression.
@@ -127,22 +127,17 @@ case class LongSetContains(left: Expression, right: Expression)
       newRight: Expression): Expression = copy(newLeft, newRight)
 }
 
+/** Column forms of the expressions above, built directly (see
+  * [[TextExpressions]]). */
 object SketchExpressions {
 
-  def ensureRegistered(spark: SparkSession): Unit =
-    graft.functions.GraftFunctions.register(spark)
-
   /** Column form: true iff `key` (a BIGINT) may be in the filter. */
-  def bloomMightContain(spark: SparkSession, key: Column, bits: Column,
-      k: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_bloom_might_contain", key, bits, k)
-  }
+  def bloomMightContain(key: Column, bits: Column, k: Column): Column =
+    column(BloomMightContain(expression(key), expression(bits),
+      expression(k)))
 
   /** Column form of [[LongSetContains]]: exact membership of `key`
     * (BIGINT) in the literal array<bigint> `set`. */
-  def inLongSet(spark: SparkSession, key: Column, set: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_in_long_set", key, set)
-  }
+  def inLongSet(key: Column, set: Column): Column =
+    column(LongSetContains(expression(key), expression(set)))
 }

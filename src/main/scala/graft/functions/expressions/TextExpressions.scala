@@ -1,10 +1,10 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnShim.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -403,53 +403,31 @@ object TextExprHelpers {
   }
 }
 
+/** Column forms of the expressions above. Each builds its expression
+  * directly, so a call needs no session and leaves the function
+  * registry alone; SQL callers reach the same expressions through
+  * [[graft.functions.GraftFunctions]]. */
 object TextExpressions {
 
-  /** Register as SQL temp functions (same route as VectorExpressions:
-    * Spark 4 removed public Expression→Column construction). Delegates to
-    * the shared GraftFunctions list. */
-  def ensureRegistered(spark: SparkSession): Unit =
-    graft.functions.GraftFunctions.register(spark)
+  def wordShingles(text: Column, n: Int): Column =
+    column(WordShingles(expression(text), n))
 
-  def wordShingles(spark: SparkSession, text: Column, n: Int): Column = {
-    ensureRegistered(spark)
-    call_function("graft_shingles", text, org.apache.spark.sql.functions.lit(n))
-  }
+  def nfcNormalize(text: Column): Column =
+    column(NfcNormalize(expression(text)))
 
-  def nfcNormalize(spark: SparkSession, text: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_nfc", text)
-  }
+  def winnowedGrams(text: Column, gramLen: Int, w: Int): Column =
+    column(WinnowedGrams(expression(text), gramLen, w))
 
-  def winnowedGrams(spark: SparkSession, text: Column, gramLen: Int,
-      w: Int): Column = {
-    ensureRegistered(spark)
-    call_function("graft_winnowed_grams", text,
-      org.apache.spark.sql.functions.lit(gramLen),
-      org.apache.spark.sql.functions.lit(w))
-  }
+  def cdcBoundaries(text: Column, w: Int, modulus: Int): Column =
+    column(CdcBoundaries(expression(text), w, modulus))
 
-  def cdcBoundaries(spark: SparkSession, text: Column, w: Int,
-      modulus: Int): Column = {
-    ensureRegistered(spark)
-    call_function("graft_cdc_boundaries", text,
-      org.apache.spark.sql.functions.lit(w),
-      org.apache.spark.sql.functions.lit(modulus))
-  }
+  def tfNormSq(text: Column): Column =
+    column(TfNormSq(expression(text)))
 
-  def tfNormSq(spark: SparkSession, text: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_tf_norm_sq", text)
-  }
+  def charUnitLength(text: Column): Column =
+    column(CharUnitLength(expression(text)))
 
-  def charUnitLength(spark: SparkSession, text: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_char_unit_length", text)
-  }
-
-  def charUnitSubstr(spark: SparkSession, text: Column, start: Column,
-      end: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_char_unit_substr", text, start, end)
-  }
+  def charUnitSubstr(text: Column, start: Column, end: Column): Column =
+    column(CharUnitSubstr(expression(text), expression(start),
+      expression(end)))
 }

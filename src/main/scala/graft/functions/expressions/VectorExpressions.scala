@@ -1,10 +1,10 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.ColumnShim.{column, expression}
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
 
 /** Native Catalyst expressions for the dense-vector hot loops (SURVEY §4.4
@@ -351,38 +351,22 @@ case class PqAdcDistance(left: Expression, right: Expression)
       newRight: Expression): Expression = copy(newLeft, newRight)
 }
 
+/** Column forms of the expressions above, built directly (see
+  * [[TextExpressions]]). */
 object VectorExpressions {
 
-  /** Register as SQL temp functions (Spark 4 removed public
-    * Expression→Column construction; the registry + call_function is the
-    * supported route). Delegates to the shared GraftFunctions list so
-    * DataFrame helpers and injected-extension sessions stay in sync. */
-  def ensureRegistered(spark: SparkSession): Unit =
-    graft.functions.GraftFunctions.register(spark)
+  def cosine(a: Column, b: Column): Column =
+    column(CosineSimilarity(expression(a), expression(b)))
 
-  def cosine(spark: SparkSession, a: Column, b: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_cosine", a, b)
-  }
+  def dot(a: Column, b: Column): Column =
+    column(DotProduct(expression(a), expression(b)))
 
-  def dot(spark: SparkSession, a: Column, b: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_dot", a, b)
-  }
+  def nearestCentroid(vec: Column, matrix: Column): Column =
+    column(NearestCentroid(expression(vec), expression(matrix)))
 
-  def nearestCentroid(spark: SparkSession, vec: Column,
-      matrix: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_nearest_centroid", vec, matrix)
-  }
+  def pqAdcDistance(code: Column, lut: Column): Column =
+    column(PqAdcDistance(expression(code), expression(lut)))
 
-  def pqAdcDistance(spark: SparkSession, code: Column, lut: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_pq_adc", code, lut)
-  }
-
-  def matVec(spark: SparkSession, matrix: Column, vec: Column): Column = {
-    ensureRegistered(spark)
-    call_function("graft_mat_vec", matrix, vec)
-  }
+  def matVec(matrix: Column, vec: Column): Column =
+    column(MatVec(expression(matrix), expression(vec)))
 }

@@ -237,11 +237,10 @@ object IntervalSets {
         col("jaccard") :+ col("n_intersections")): _*)
   }
 
-  /** Derive a `bucketWidth` for the bucketed operators from the data —
-    * the same stats-driven sizing [[graft.plans.BinnedRangeJoinRule]]
-    * applies to bin width, done directly (one aggregate scan over the
-    * two coordinate columns) because callers hand these operators plain
-    * DataFrames that rarely carry CBO column stats. The width targets
+  /** Derive a `bucketWidth` for the bucketed operators from the data,
+    * with one aggregate scan over the two coordinate columns (callers
+    * hand these operators plain DataFrames that rarely carry CBO column
+    * stats). The width targets
     * 32768 rows per (key, bucket) window in the worst
     * (single-key) case: buckets = max(256, rows / target) over the
     * combined coordinate domain, so

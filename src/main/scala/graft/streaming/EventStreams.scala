@@ -259,12 +259,11 @@ object EventStreams {
     * frames. */
   def streamNewRows(stream: DataFrame, snapshot: DataFrame,
       key: org.apache.spark.sql.Column): DataFrame = {
-    val spark = snapshot.sparkSession
     val n = math.max(1L, snapshot.count())
     val (bits, k) = graft.ext.Sketches.buildBloomBits(
       snapshot.select(xxhash64(key).as("__k")), "__k", n, 0.01)
     val probe = graft.ext.Sketches.bloomMightContain(
-      spark, xxhash64(key), bits, k)
+      xxhash64(key), bits, k)
     val snapKeys = snapshot.select(key.as("__h")).distinct()
     // a null probe (possible only if a caller-supplied key expression
     // reaches the null-intolerant probe un-hashed) must land in the
@@ -299,10 +298,9 @@ object EventStreams {
     * contract: they can't be contaminated). */
   def streamingContamination(docs: DataFrame, idCol: String,
       textCol: String, evalSet: DataFrame, n: Int = 3): DataFrame = {
-    val spark = evalSet.sparkSession
     val hs = evalSet
       .select(explode(graft.functions.expressions.TextExpressions
-        .wordShingles(spark, col("text"), n)).as("__s"))
+        .wordShingles(col("text"), n)).as("__s"))
       .select(xxhash64(col("__s")).as("__h")).distinct()
       .limit(MaxEvalShingles + 1).collect().map(_.getLong(0))
     require(hs.length <= MaxEvalShingles,
@@ -311,13 +309,13 @@ object EventStreams {
     val setLit = typedlit(hs)
     val withSh = docs.filter(col(textCol).isNotNull)
       .withColumn("__sh", graft.functions.expressions.TextExpressions
-        .wordShingles(spark, col(textCol), n))
+        .wordShingles(col(textCol), n))
       // both counts projected to attributes BEFORE the ratio references
       // them (the HOF multi-reference rule)
       .withColumn("__n", size(col("__sh")).cast("long"))
       .withColumn("__hit",
         size(filter(col("__sh"), s => graft.functions.expressions
-          .SketchExpressions.inLongSet(spark, xxhash64(s), setLit)))
+          .SketchExpressions.inLongSet(xxhash64(s), setLit)))
           .cast("long"))
     withSh.select(col(idCol), col("__n").as("n_shingles"),
       col("__hit").as("n_contaminated"),
@@ -378,7 +376,6 @@ object EventStreams {
     * form. State ∝ |groups|. */
   def streamingOovCounts(docs: DataFrame, groupCol: String,
       textCol: String, vocab: DataFrame): DataFrame = {
-    val spark = vocab.sparkSession
     val hs = vocab.select(xxhash64(col("term")).as("__h")).distinct()
       .limit(MaxVocab + 1).collect().map(_.getLong(0))
     require(hs.length <= MaxVocab,
@@ -391,7 +388,7 @@ object EventStreams {
       .withColumn("__nt", size(toks).cast("long"))
       .withColumn("__oov",
         size(filter(toks, t => !graft.functions.expressions
-          .SketchExpressions.inLongSet(spark, xxhash64(t), setLit)))
+          .SketchExpressions.inLongSet(xxhash64(t), setLit)))
           .cast("long"))
       .groupBy(col(groupCol))
       .agg(sum(col("__nt")).as("n_tokens"),
@@ -464,11 +461,10 @@ object EventStreams {
   def streamingEvalLeakage(docs: DataFrame, idCol: String,
       textCol: String, evalSet: DataFrame, evalIdCol: String,
       evalTextCol: String, n: Int = 3): DataFrame = {
-    val spark = evalSet.sparkSession
     val items = evalSet
       .select(col(evalIdCol).cast("long").as("__eid"),
         transform(graft.functions.expressions.TextExpressions
-          .wordShingles(spark, col(evalTextCol), n), s => xxhash64(s))
+          .wordShingles(col(evalTextCol), n), s => xxhash64(s))
           .as("__hs"))
       .limit(MaxEvalItems + 1)
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
@@ -487,7 +483,7 @@ object EventStreams {
     docs.filter(col(textCol).isNotNull)
       .withColumn("__dh",
         transform(graft.functions.expressions.TextExpressions
-          .wordShingles(spark, col(textCol), n), s => xxhash64(s)))
+          .wordShingles(col(textCol), n), s => xxhash64(s)))
       .select(col(idCol), explode(array(probes: _*)).as("__e"))
       .where(col("__e").getField("hits") > 0)
       .select(col(idCol),
@@ -844,11 +840,9 @@ object EventStreams {
   def streamStreamMinhashPairs(docs: DataFrame, idCol: String,
       textCol: String, tsCol: String,
       docShingles: Option[DataFrame] = None): DataFrame = {
-    val spark = docs.sparkSession
     import graft.functions.TextFunctions.{bandKeys, minhashSignature}
     def shArr(c: org.apache.spark.sql.Column) =
-      graft.functions.expressions.TextExpressions.wordShingles(
-        spark, c, 3)
+      graft.functions.expressions.TextExpressions.wordShingles(c, 3)
     val lean = docShingles.isDefined
     val base = docs
       .select(col(idCol).as("__sid"),
@@ -1008,7 +1002,7 @@ object EventStreams {
     val withBands = docs
       .select(col(idCol).cast("long").as("__sid"),
         graft.functions.expressions.TextExpressions.wordShingles(
-          spark, col(textCol), shingleN).as("__sharr"))
+          col(textCol), shingleN).as("__sharr"))
       .select(col("__sid"), minhashSignature(col("__sharr"), k).as("__sig"))
       .select(col("__sid"),
         explode(bandKeys(col("__sig"), bands, rows)).as("__b"))

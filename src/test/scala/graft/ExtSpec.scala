@@ -991,7 +991,7 @@ class ExtSpec extends SparkSpecBase {
     val probed = (0L until 2000L).map(i => i * 31 + 7)
       .++((0L until 18000L).map(i => -1000000L - i))
       .toDF("v")
-      .select($"v", Sketches.bloomMightContain(spark, xxhash64($"v"), bits, k)
+      .select($"v", Sketches.bloomMightContain(xxhash64($"v"), bits, k)
         .as("hit"))
       .as[(Long, Boolean)].collect()
     val (mem, non) = probed.partition(_._1 >= 0)

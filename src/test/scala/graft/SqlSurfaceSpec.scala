@@ -27,7 +27,6 @@ class SqlSurfaceSpec extends SparkSpecBase {
   }
 
   test("custom codegen expressions are callable from SQL") {
-    graft.functions.expressions.VectorExpressions.ensureRegistered(spark)
     val r = spark.sql(
       """SELECT graft_cosine(CAST(array(1.0, 2.0) AS ARRAY<DOUBLE>),
         |                    CAST(array(2.0, 4.0) AS ARRAY<DOUBLE>)) AS c,
@@ -39,7 +38,6 @@ class SqlSurfaceSpec extends SparkSpecBase {
   }
 
   test("round-4 codegen expressions are callable from SQL") {
-    graft.functions.expressions.VectorExpressions.ensureRegistered(spark)
     val r = spark.sql(
       """SELECT graft_l2sq(CAST(array(1.0, 2.0) AS ARRAY<DOUBLE>),
         |                  CAST(array(4.0, 6.0) AS ARRAY<DOUBLE>)) AS d2,
@@ -68,7 +66,6 @@ class SqlSurfaceSpec extends SparkSpecBase {
   }
 
   test("graft_pq_adc: subspace-count mismatch -> null in both paths") {
-    graft.functions.expressions.VectorExpressions.ensureRegistered(spark)
     // codegen path: a 1-subspace code against a 2-subspace LUT is as
     // corrupt as an out-of-range index — a partial sum would rank
     // artificially LOW, so the row must not rank at all
@@ -93,7 +90,6 @@ class SqlSurfaceSpec extends SparkSpecBase {
   }
 
   test("graft_mat_vec: rotates from SQL; null row / length mismatch -> null") {
-    graft.functions.expressions.VectorExpressions.ensureRegistered(spark)
     val r = spark.sql(
       """SELECT graft_mat_vec(CAST(array(array(0.0, 1.0), array(1.0, 0.0))
         |                          AS ARRAY<ARRAY<DOUBLE>>),
@@ -111,7 +107,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
     assert(r.isNullAt(2)) // length mismatch likewise
   }
 
-  test("GraftExtensions session: functions + transparent range rule, pure SQL") {
+  test("GraftExtensions session: every injected function resolves in pure SQL") {
     import org.apache.spark.sql.SparkSession
     val old = spark
     SparkSession.clearActiveSession()
@@ -136,26 +132,90 @@ class SqlSurfaceSpec extends SparkSpecBase {
       assert(r.getDouble(1) == 0.5)
       assert(r.getSeq[String](2) == Seq("a b", "b c"))
       assert(math.abs(r.getDouble(3) - 1.0) < 1e-12)
-      // the range rule fires on a plain SQL join with no session fiddling
-      val rnd = new scala.util.Random(42)
-      val rows = (0 until 300).map { i =>
-        val s = rnd.nextInt(5000).toLong; (i.toLong, s, s + rnd.nextInt(300))
-      }
-      import s2.implicits._
-      rows.toDF("ida", "sa", "ea").createOrReplaceTempView("ga")
-      rows.map { case (i, s, e) => (i + 1000, s, e) }
-        .toDF("idb", "sb", "eb").createOrReplaceTempView("gb")
-      val q = s2.sql(
-        "SELECT ida, idb FROM ga JOIN gb ON sa <= eb AND sb <= ea")
-      assert(q.queryExecution.optimizedPlan.toString
-        .contains(graft.plans.BinnedRangeJoinRule.BinName))
-      val naive = rows.flatMap { case (i, s, e) =>
-        rows.collect { case (j, s2_, e2) if s <= e2 && s2_ <= e =>
-          (i, j + 1000) }
-      }.sorted
-      assert(q.as[(Long, Long)].collect().toSeq.sorted == naive)
     } finally {
       // s2 shares the context — never stop() it; just restore the session
+      SparkSession.setDefaultSession(old)
+      SparkSession.setActiveSession(old)
+    }
+  }
+
+  test("Column helpers need no SQL functions and leave the registry alone") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.functions.{GraftFunctions, VectorFunctions}
+    import graft.functions.expressions.{SketchExpressions => SE, TextExpressions => TE, VectorExpressions => VE}
+    val old = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s2 = SparkSession.builder()
+      .master("local[4]")
+      .appName("graft-no-ext-test")
+      .config("spark.sql.shuffle.partitions", "4")
+      .getOrCreate()
+    try {
+      // the shared test context installs GraftExtensions in every session;
+      // dropping its functions from this session's own registry stands in
+      // for a session built without the extension
+      val reg = s2.sessionState.functionRegistry
+      def graftNames = reg.listFunction().map(_.funcName)
+        .filter(_.startsWith("graft_")).toSet
+      GraftFunctions.all.foreach { case (id, _, _) => reg.dropFunction(id) }
+      assert(graftNames.isEmpty)
+
+      val df = s2.sql(
+        """SELECT 'the quick brown fox jumps over the quick dog' AS text,
+          |       CAST(array(1.0, 2.0) AS ARRAY<DOUBLE>) AS a,
+          |       CAST(array(2.0, 4.0) AS ARRAY<DOUBLE>) AS b,
+          |       CAST(array(array(0.0, 1.0), array(1.0, 0.0))
+          |            AS ARRAY<ARRAY<DOUBLE>>) AS m,
+          |       CAST(array(1, 0) AS ARRAY<BIGINT>) AS code,
+          |       CAST(array(array(10.0, 20.0), array(30.0, 40.0))
+          |            AS ARRAY<ARRAY<DOUBLE>>) AS lut,
+          |       2L AS key, CAST(array(-1) AS ARRAY<BIGINT>) AS bits, 3 AS k,
+          |       CAST(array(1, 2) AS ARRAY<BIGINT>) AS lset""".stripMargin)
+      val t = col("text")
+      val helpers = Seq(
+        TE.wordShingles(t, 2), TE.nfcNormalize(t), TE.winnowedGrams(t, 3, 1),
+        TE.cdcBoundaries(t, 4, 3), TE.tfNormSq(t), TE.charUnitLength(t),
+        TE.charUnitSubstr(t, lit(5), lit(9)),
+        VE.cosine(col("a"), col("b")), VE.dot(col("a"), col("b")),
+        VE.nearestCentroid(col("a"), col("m")),
+        VE.pqAdcDistance(col("code"), col("lut")),
+        VE.matVec(col("m"), col("a")),
+        SE.bloomMightContain(col("key"), col("bits"), col("k")),
+        SE.inLongSet(col("key"), col("lset")))
+      val got = df.select(helpers: _*).head()
+      assert((0 until 14).forall(i => !got.isNullAt(i)), got)
+      assert(got.getAs[String](6) == "quick")
+      assert(math.abs(got.getDouble(7) - 1.0) < 1e-12)
+      assert(got.getSeq[Double](11) == Seq(2.0, 1.0))
+      assert(got.getBoolean(13))
+      assert(graftNames.isEmpty) // no helper registered anything
+
+      // a user's own function under a graft_* name survives a helper call
+      s2.udf.register("graft_cosine", (_: Seq[Double], _: Seq[Double]) => 42.0)
+      df.select(VectorFunctions.cosineFast(col("a"), col("b"))).head()
+      assert(s2.sql("SELECT graft_cosine(a, b) FROM VALUES " +
+        "(array(1.0D), array(2.0D)) AS v(a, b)").head().getDouble(0) == 42.0)
+      assert(graftNames == Set("graft_cosine"))
+
+      // the explicit route: register once, then the SQL names resolve to
+      // the same expressions the helpers build
+      reg.dropFunction(FunctionIdentifier("graft_cosine"))
+      GraftFunctions.register(s2)
+      assert(graftNames == GraftFunctions.all.map(_._1.funcName).toSet)
+      val viaSql = df.selectExpr(
+        "graft_shingles(text, 2)", "graft_nfc(text)",
+        "graft_winnowed_grams(text, 3, 1)", "graft_cdc_boundaries(text, 4, 3)",
+        "graft_tf_norm_sq(text)", "graft_char_unit_length(text)",
+        "graft_char_unit_substr(text, 5, 9)", "graft_cosine(a, b)",
+        "graft_dot(a, b)", "graft_nearest_centroid(a, m)",
+        "graft_pq_adc(code, lut)", "graft_mat_vec(m, a)",
+        "graft_bloom_might_contain(key, bits, k)",
+        "graft_in_long_set(key, lset)").head()
+      assert(viaSql == got)
+    } finally {
       SparkSession.setDefaultSession(old)
       SparkSession.setActiveSession(old)
     }

@@ -857,7 +857,7 @@ class StreamingSpec extends SparkSpecBase {
     val store = docs.toDF("doc_id", "text")
       .select(col("doc_id").as("__id"),
         graft.functions.expressions.TextExpressions.wordShingles(
-          spark, col("text"), 3).as("__sharr"))
+          col("text"), 3).as("__sharr"))
       .localCheckpoint(true)
     def ts(minutes: Int) = java.sql.Timestamp.valueOf(
       "2026-01-01 0%d:%02d:00".format(minutes / 60, minutes % 60))
@@ -899,7 +899,7 @@ class StreamingSpec extends SparkSpecBase {
     val store = Seq((1L, base)).toDF("doc_id", "text")
       .select(col("doc_id").as("__id"),
         graft.functions.expressions.TextExpressions.wordShingles(
-          spark, col("text"), 3).as("__sharr"))
+          col("text"), 3).as("__sharr"))
       .localCheckpoint(true)
     def ts(m: Int) = java.sql.Timestamp.valueOf(
       "2026-01-01 00:%02d:00".format(m))

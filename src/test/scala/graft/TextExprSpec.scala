@@ -24,7 +24,7 @@ class TextExprSpec extends SparkSpecBase {
   test("wordShingles == array_distinct(transform(slice)) composition") {
     for (n <- Seq(1, 2, 3, 8)) {
       val df = cases.toDF("text")
-      val got = df.select(TextExpressions.wordShingles(spark, col("text"), n))
+      val got = df.select(TextExpressions.wordShingles(col("text"), n))
         .as[Seq[String]].collect().toSeq
       val toks = TextFunctions.tokens(col("text"))
       val want = df.select(
@@ -39,7 +39,7 @@ class TextExprSpec extends SparkSpecBase {
 
   test("wordShingles stays inside whole-stage codegen") {
     val df = cases.toDF("text")
-      .select(explode(TextExpressions.wordShingles(spark, col("text"), 3)))
+      .select(explode(TextExpressions.wordShingles(col("text"), 3)))
     // "*(n)" prefixes mark operators inside a whole-stage-codegen span
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*(1) Generate explode(word_shingles"), plan)
@@ -48,7 +48,7 @@ class TextExprSpec extends SparkSpecBase {
 
   test("tfNormSq == aggregate(array_distinct) composition, in codegen") {
     val df = cases.toDF("text")
-    val got = df.select(TextExpressions.tfNormSq(spark, col("text")))
+    val got = df.select(TextExpressions.tfNormSq(col("text")))
       .as[Long].collect().toSeq
     val toks = TextFunctions.tokens(col("text"))
     val want = df.select(
@@ -64,14 +64,14 @@ class TextExprSpec extends SparkSpecBase {
     assert(m("") == 1L) // split("") keeps one empty token, like the SQL
     // null text null-propagates (unary null semantics)
     val n = Seq[Option[String]](None, Some("a a")).toDF("text")
-      .select(TextExpressions.tfNormSq(spark, col("text")))
+      .select(TextExpressions.tfNormSq(col("text")))
       .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
     assert(n.toSet == Set(None, Some(4L)))
     // stays inside whole-stage codegen (no CodegenFallback wrapper) —
     // repartition first: a bare local relation constant-folds the
     // projection into a LocalTableScan and shows no stage at all
     val q = df.repartition(2)
-      .select(TextExpressions.tfNormSq(spark, col("text")))
+      .select(TextExpressions.tfNormSq(col("text")))
     q.collect() // AQE prints codegen stages only in the FINAL plan
     val plan = q.queryExecution.executedPlan.toString
     assert(raw"\*\(\d+\) Project \[tf_norm_sq".r.findFirstIn(plan).isDefined,
@@ -82,8 +82,8 @@ class TextExprSpec extends SparkSpecBase {
     // BMP text: identical to the codepoint builtins
     val df = Seq("hello world").toDF("text")
     val bmp = df.select(
-        TextExpressions.charUnitSubstr(spark, col("text"), lit(3), lit(7)),
-        TextExpressions.charUnitLength(spark, col("text")),
+        TextExpressions.charUnitSubstr(col("text"), lit(3), lit(7)),
+        TextExpressions.charUnitLength(col("text")),
         substring(col("text"), 3, 5), length(col("text")))
       .collect().head
     assert(bmp.getString(0) == bmp.getString(2) && bmp.getString(0) == "llo w")
@@ -92,12 +92,12 @@ class TextExprSpec extends SparkSpecBase {
     // WinnowedGrams positions count, where length() sees one codepoint
     val g = Seq("a𝄞b").toDF("text")
     val sp = g.select(
-        TextExpressions.charUnitLength(spark, col("text")),
+        TextExpressions.charUnitLength(col("text")),
         length(col("text")),
-        TextExpressions.charUnitSubstr(spark, col("text"), lit(2), lit(3)),
+        TextExpressions.charUnitSubstr(col("text"), lit(2), lit(3)),
         // clamping: bounds past either end never throw
-        TextExpressions.charUnitSubstr(spark, col("text"), lit(-5), lit(99)),
-        TextExpressions.charUnitSubstr(spark, col("text"), lit(3), lit(2)))
+        TextExpressions.charUnitSubstr(col("text"), lit(-5), lit(99)),
+        TextExpressions.charUnitSubstr(col("text"), lit(3), lit(2)))
       .collect().head
     assert(sp.getInt(0) == 4 && sp.getInt(1) == 3)
     assert(sp.getString(2) == "𝄞")
@@ -115,7 +115,7 @@ class TextExprSpec extends SparkSpecBase {
       (5L, null.asInstanceOf[String])).toDF("id", "text")
     import graft.functions.expressions.TextExpressions
     val nfc = df.select(col("id"),
-        TextExpressions.nfcNormalize(spark, col("text")).as("n"))
+        TextExpressions.nfcNormalize(col("text")).as("n"))
       .orderBy("id").collect()
     assert(nfc(0).getString(1) == "café")
     assert(nfc(1).getString(1) == "café")

@@ -5,7 +5,8 @@ nothing use?
 A function stays if a root reaches it: the SparkEntry rows
 (graft/entry), the domain API (core, ingest, model, query, sources,
 tools/CreateProject), Bench, Verify, ReplayProf, the SQL functions
-(functions/GraftFunctions, plans), the Spark shims and everything under
+(functions/GraftFunctions and the extension that injects them,
+plans/GraftExtensions), the Spark shims and everything under
 perfbench/src. Specs and the other mains under tools/ are not roots.
 
 Every `def`/`val` is a symbol; its region runs from its line to the
@@ -46,7 +47,8 @@ ROOT = ARGS[0] if ARGS else "."
 MAIN = os.path.join(ROOT, "src/main/scala")
 ROOTS = re.compile(r"graft/(entry/|core/|ingest/|model/|query/|sources/|"
                    r"tools/CreateProject|tools/ReplayProf|Bench\.|Verify\.|"
-                   r"SparkEntry\.|functions/GraftFunctions|plans/)|org/apache")
+                   r"SparkEntry\.|functions/GraftFunctions|plans/GraftExtensions)|"
+                   r"org/apache")
 SCANNED = re.compile(r"graft/(ext|streaming|functions|operators|ranges)/")
 DEF = re.compile(r"^(\s*)(?:(?:private(?:\[\w+\])?|protected|override|final|"
                  r"implicit|lazy|@\w+)\s+)*(?:def|val|var)\s+([A-Za-z_]\w*)")
