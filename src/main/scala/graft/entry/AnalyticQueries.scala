@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.types.LongType
 import graft.core.GraftSession
 import graft.ext.NgramLm
 import graft.streaming.EventStreams
@@ -60,7 +61,41 @@ object AnalyticQueries {
       mode: OutputMode = OutputMode.Update(),
       flush: Option[T => T] = None,
       stateParts: Int = 4,
-      noDataBatches: Option[Boolean] = None): Array[Row] = {
+      noDataBatches: Option[Boolean] = None): Array[Row] =
+    replaySink(s, feed, order, op, mode, flush, stateParts,
+      noDataBatches)(_.collect())
+
+  /** [[replay]] for the monotone-count rows: in Update mode a key's
+    * counts only grow from batch to batch, so its final counts are the
+    * MAX of its sink rows. Folds the sink rows per distinct `keys`
+    * value, taking the MAX of every other column (each must be a
+    * LongType count). The fold runs on the driver; the result is a
+    * local frame with the sink's own column names and types, so an
+    * empty feed still returns a typed, zero-row frame. */
+  private[graft] def replayMax[T](s: SparkSession, feed: Dataset[T],
+      order: Seq[Column], keys: Seq[String], stateParts: Int = 4)(
+      op: Dataset[T] => Dataset[_]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val (schema, rows) = replaySink(s, feed, order, op, OutputMode.Update(),
+      None, stateParts, None)(sink => (sink.schema, sink.collect()))
+    require(keys.forall(schema.fieldNames.contains),
+      s"replayMax keys ${keys.mkString(", ")} not all in ${schema.simpleString}")
+    val (k, v) = schema.indices.partition(i => keys.contains(schema(i).name))
+    require(v.forall(i => schema(i).dataType == LongType),
+      s"replayMax folds LongType counts only: ${schema.simpleString}")
+    val folded = rows.groupBy(r => k.map(r.get)).values.map { rs =>
+      Row.fromSeq(schema.indices.map(i =>
+        if (k.contains(i)) rs.head.get(i) else rs.map(_.getLong(i)).max))
+    }
+    s.createDataFrame(folded.toSeq.asJava, schema)
+  }
+
+  /** The body of [[replay]]: `read` sees the sink table while the query
+    * still exists. */
+  private def replaySink[T, A](s: SparkSession, feed: Dataset[T],
+      order: Seq[Column], op: Dataset[T] => Dataset[_], mode: OutputMode,
+      flush: Option[T => T], stateParts: Int,
+      noDataBatches: Option[Boolean])(read: DataFrame => A): A = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val enc: org.apache.spark.sql.Encoder[T] = feed.encoder
     implicit val sqlCtx = s.sqlContext
@@ -128,7 +163,7 @@ object AnalyticQueries {
       for (f <- flush; l <- last) {
         mem.addData(f(l)); q.processAllAvailable()
       }
-      s.table(sink).collect()
+      read(s.table(sink))
     } finally {
       q.stop()
       s.catalog.dropTempView(sink)
@@ -159,44 +194,46 @@ object AnalyticQueries {
       new java.sql.Timestamp(last.ts.getTime + 11L * 86400000L), -1L,
       "__flush", 0.0)
 
-  /** The docs corpus as a replay feed: (doc_id, text) in three
-    * doc_id-ordered batches. */
-  private def replayDocs(s: SparkSession, docs: DataFrame,
-      op: DataFrame => DataFrame,
-      mode: OutputMode = OutputMode.Update()): Array[Row] = {
+  /** The docs corpus as a replay feed: (doc_id, text), which the
+    * harness feeds in three doc_id-ordered batches. */
+  private def docFeed(s: SparkSession,
+      docs: DataFrame): Dataset[(Long, String)] = {
     import s.implicits._
-    replay(s,
-      docs.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-        .as[(Long, String)],
-      Seq(col("doc_id")))(ds => op(ds.toDF("doc_id", "text")), mode)
+    docs.select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      .as[(Long, String)]
   }
+
+  /** [[replay]] of the docs corpus in Append mode. */
+  private def replayDocs(s: SparkSession, docs: DataFrame,
+      op: DataFrame => DataFrame): Array[Row] =
+    replay(s, docFeed(s, docs), Seq(col("doc_id")))(
+      ds => op(ds.toDF("doc_id", "text")), OutputMode.Append())
+
+  /** [[replayMax]] of the docs corpus. */
+  private def replayDocsMax(s: SparkSession, docs: DataFrame,
+      keys: Seq[String])(op: DataFrame => DataFrame): DataFrame =
+    replayMax(s, docFeed(s, docs), Seq(col("doc_id")), keys)(
+      ds => op(ds.toDF("doc_id", "text")))
 
   /** Streaming LM serve rows: the model trains once in batch on the en
     * slice (checkpointed — static sides re-evaluate per micro-batch),
     * the corpus replays through [[NgramLm.facts]] (n-gram explode,
     * stream-static model joins, ONE Update-mode per-doc aggregation;
-    * each doc's state is write-once), and the sink rows MAX-fold per
-    * doc and finish through [[NgramLm.finish]]'s zero-row spine. Each
-    * row faces its batch twin's own oracle SQL. */
+    * each doc's state is write-once, so its one sink row is its MAX
+    * fold), and the folded facts finish through [[NgramLm.finish]]'s
+    * zero-row spine. Each row faces its batch twin's own oracle SQL. */
   private def lmServe(s: SparkSession, dir: String, order: Int,
       smoother: NgramLm.Smoother, vocabK: Option[Int]): DataFrame = {
-    import s.implicits._
     val d = t(s, dir, "documents")
     val en = d.where(col("lang") === "en").select("doc_id", "text")
     val model = NgramLm.train(en, "text", order, smoother)
     val vocab = vocabK.map(k =>
       NgramLm.vocabTopK(en, "text", k).localCheckpoint(true))
-    val raw = replayDocs(s, d.select("doc_id", "text"),
+    val folded = replayDocsMax(s, d.select("doc_id", "text"),
+        Seq("doc_id"))(
       df => NgramLm.facts(df, "doc_id", "text", model, order, smoother,
         vocab))
-    val folded = raw
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .groupBy(_._1).view
-      .mapValues(vs => vs.maxBy(v => (v._2, v._3))).toSeq
-      .map(_._2)
-    NgramLm.finish(d.select("doc_id").distinct(),
-        folded.toDF("doc_id", NgramLm.countCol(order), "sum_p_e9"),
-        "doc_id", order)
+    NgramLm.finish(d.select("doc_id").distinct(), folded, "doc_id", order)
       .orderBy("doc_id")
   }
 
@@ -207,21 +244,9 @@ object AnalyticQueries {
     * `derive` builds the row from the folded (w1..wn, n) table through
     * the batch row's own derivation. */
   private def lmTrain(s: SparkSession, docs: DataFrame, order: Int)(
-      derive: DataFrame => DataFrame): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    val raw = replayDocs(s, docs,
-      df => NgramLm.ngrams(df, "text", order, None))
-    val folded = raw
-      .map(r => (0 until order).map(r.getString) -> r.getLong(order))
-      .groupBy(_._1).view.mapValues(_.map(_._2).max)
-      .toSeq.map { case (ws, n) => Row.fromSeq(ws :+ n) }
-    val schema = StructType(
-      NgramLm.words(order).map(StructField(_, StringType)) :+
-        StructField("n", LongType, nullable = false))
-    derive(s.createDataFrame(folded.asJava, schema))
-  }
+      derive: DataFrame => DataFrame): DataFrame =
+    derive(replayDocsMax(s, docs, NgramLm.words(order))(
+      df => NgramLm.ngrams(df, "text", order, None)))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // CUBE: all four grouping combinations in one pass (Spark expands to
@@ -682,23 +707,14 @@ object AnalyticQueries {
     // conditional sums. The pure-windowed-state member of the
     // streaming family: no per-key state at all.
     "q131_streaming_quality" -> ((s, dir) => {
-      import s.implicits._
       import graft.ext.Quality._
       val checks = Seq(InRange("value", 0.0, 250.0),
         InSet("event_type", Seq("view", "click", "purchase", "signup")),
         NotNull("value"))
-      val rows = replay(s, events(s, dir), byTime)(ds =>
+      replayMax(s, events(s, dir), byTime,
+          Seq("window_start", "window_end", "check_name"))(ds =>
         graft.streaming.EventStreams.streamingQuality(ds.toDF(), checks,
           window_ = "1 day"))
-      val folded = rows
-        .map(r => (r.getLong(0), r.getLong(1), r.getString(2)) ->
-          ((r.getLong(3), r.getLong(4))))
-        .groupBy(_._1).view
-        .mapValues(vs => (vs.map(_._2._1).max, vs.map(_._2._2).max))
-        .toSeq
-        .map { case ((ws, we, cn), (nr, nv)) => (ws, we, cn, nr, nv) }
-      folded.toDF("window_start", "window_end", "check_name", "n_rows",
-          "n_violations")
         .orderBy("window_start", "check_name")
     }),
 
@@ -941,22 +957,13 @@ object AnalyticQueries {
     // raw rows. Exercises streaming + mergeable state + read-time
     // selection in one row.
     "q152_streaming_percentiles" -> ((s, dir) => {
-      import s.implicits._
       // stateParts=2: per-row knee (round-13 sweep, BENCH.md) — the
       // windowed-histogram state is small and 2 state-store instances
       // beat the 9-row aggregate's knee of 4 here (3.67 vs 3.98 s)
-      val raw = replay(s, events(s, dir), byTime)(
-        ds => graft.streaming.EventStreams.streamingValueHistogram(ds)
-          .as[(Long, String, Long, Long)],
-        stateParts = 2)
-      val folded = raw
-        .map(r => ((r.getLong(0), r.getString(1), r.getLong(2)),
-          r.getLong(3)))
-        .groupBy(_._1).map { case ((ws, tp, unit), rs) =>
-          (ws, tp, unit, rs.map(_._2).max)
-        }.toSeq
-      graft.ext.Incremental.percentilesFromState(
-          folded.toDF("window_start", "event_type", "unit", "c"),
+      val folded = replayMax(s, events(s, dir), byTime,
+          Seq("window_start", "event_type", "unit"), stateParts = 2)(
+        graft.streaming.EventStreams.streamingValueHistogram)
+      graft.ext.Incremental.percentilesFromState(folded,
           Seq("window_start", "event_type"),
           Seq(("p50_cents", 1, 2), ("p90_cents", 9, 10),
             ("p99_cents", 99, 100)))
@@ -977,6 +984,9 @@ object AnalyticQueries {
         ds => graft.streaming.EventStreams.streamingCorrState(ds)
           .as[(Long, String, Long, Long, Long, Long, Long, Long)],
         stateParts = 2)
+      // not replayMax: a negative value makes sum_y and sum_xy shrink
+      // from one emission to the next, so a per-column MAX could mix
+      // rows; only n_rows always grows, so its largest row is the final
       val folded = raw
         .map(r => ((r.getLong(0), r.getString(1)),
           (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
@@ -1073,17 +1083,12 @@ object AnalyticQueries {
     // — compared against the batch SQL frequency the q169 rewrite
     // uses. Keys on the line string so DuckDB can replay (production
     // keys on xxhash64: 16-byte state rows, same counts).
-    "q175_streaming_boilerplate" -> ((s, dir) => {
-      import s.implicits._
-      val rows = replayDocs(s, TextQueries.rebuiltLines(s, dir, 4),
-        df => graft.streaming.EventStreams
-          .streamingLineFrequency(df, "text"))
-      rows.map(r => r.getString(0) -> r.getLong(1))
-        .groupBy(_._1).view.mapValues(_.map(_._2).max).toSeq
-        .filter(_._2 > 2L)
-        .toDF("line", "n_docs")
-        .orderBy("line")
-    }),
+    "q175_streaming_boilerplate" -> ((s, dir) =>
+      replayDocsMax(s, TextQueries.rebuiltLines(s, dir, 4), Seq("line"))(
+          df => graft.streaming.EventStreams
+            .streamingLineFrequency(df, "text"))
+        .where(col("n_docs") > 2L)
+        .orderBy("line")),
 
     // The TWELFTH streaming twin: online CDC chunk-frequency
     // maintenance (q175's device at CHUNK granularity — VERDICT r12
@@ -1093,18 +1098,14 @@ object AnalyticQueries {
     // maintains (chunk_h, n_docs); MAX-folded Update emissions with a
     // read-time >= 2 filter rebuild exactly the shared-chunk set the
     // q178 batch SQL computes.
-    "q182_streaming_cdc_freq" -> ((s, dir) => {
-      import s.implicits._
-      val rows = replayDocs(s,
-        t(s, dir, "documents").select(col("doc_id"), col("text")),
-        df => graft.streaming.EventStreams
-          .streamingChunkFrequency(df, "text", w = 8, modulus = 32))
-      rows.map(r => r.getString(0) -> r.getLong(1))
-        .groupBy(_._1).view.mapValues(_.map(_._2).max).toSeq
-        .filter(_._2 >= 2L)
-        .toDF("chunk_h", "n_docs")
-        .orderBy("chunk_h")
-    }),
+    "q182_streaming_cdc_freq" -> ((s, dir) =>
+      replayDocsMax(s,
+          t(s, dir, "documents").select(col("doc_id"), col("text")),
+          Seq("chunk_h"))(
+          df => graft.streaming.EventStreams
+            .streamingChunkFrequency(df, "text", w = 8, modulus = 32))
+        .where(col("n_docs") >= 2L)
+        .orderBy("chunk_h")),
 
     // The THIRTEENTH streaming twin: event-time gap sessionization —
     // sessionizeByGap (flatMapGroupsWithState + EventTimeTimeout, one
@@ -1145,8 +1146,7 @@ object AnalyticQueries {
       val raw = replayDocs(s, docs,
         df => graft.streaming.EventStreams.streamingBandIndex(
           df, "doc_id", "text", shingleN = 3, k = 12, bands = 4)
-          .toDF("a_id", "b_id"),
-        mode = org.apache.spark.sql.streaming.OutputMode.Append())
+          .toDF("a_id", "b_id"))
       val cand = raw.map(r => (r.getLong(0), r.getLong(1)))
         .distinct.toSeq.toDF("a_id", "b_id")
       graft.ext.Dedup.verifyJaccard(cand, docs, "doc_id", "text",
@@ -1228,8 +1228,7 @@ object AnalyticQueries {
       val raw = replayDocs(s, feed,
         df => graft.streaming.EventStreams.streamNewRows(
             df, snapshot, md5(col("text")))
-          .select("doc_id"),
-        mode = org.apache.spark.sql.streaming.OutputMode.Append())
+          .select("doc_id"))
       raw.map(_.getLong(0)).toSeq.toDF("doc_id").orderBy("doc_id")
     }),
 
@@ -1254,8 +1253,7 @@ object AnalyticQueries {
           .select(col("doc_id"), col("label"),
             (col("score").cast("decimal(18,9)") *
               lit(1000000000L).cast("decimal(10,0)"))
-              .cast("bigint").as("score_e9")),
-        mode = org.apache.spark.sql.streaming.OutputMode.Append())
+              .cast("bigint").as("score_e9")))
       raw.map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
         .toSeq.toDF("doc_id", "label", "score_e9")
         .orderBy("doc_id")
@@ -1279,8 +1277,7 @@ object AnalyticQueries {
           .select(col("doc_id"),
             (col("weight").cast("decimal(18,9)") *
               lit(1000000000L).cast("decimal(10,0)"))
-              .cast("bigint").as("weight_e9")),
-        mode = org.apache.spark.sql.streaming.OutputMode.Append())
+              .cast("bigint").as("weight_e9")))
       raw.map(r => (r.getLong(0), r.getLong(1)))
         .toSeq
         .sortWith((a, b) => a._2 > b._2 || (a._2 == b._2 && a._1 < b._1))
@@ -1302,16 +1299,16 @@ object AnalyticQueries {
     "q200_streaming_nb_counts" -> ((s, dir) => {
       import s.implicits._
       val sentinel = graft.streaming.EventStreams.DocSentinel
-      val raw = replayDocs(s,
-        t(s, dir, "documents").select("doc_id", "text"),
+      val folded = replayDocsMax(s,
+          t(s, dir, "documents").select("doc_id", "text"),
+          Seq("label", "term"))(
         df => graft.streaming.EventStreams.streamingTermCounts(
           df.withColumn("label",
             element_at(array(lit("en"), lit("es"), lit("fr")),
               ((col("doc_id") % 3) + 1).cast("int"))),
           "label", "text"))
-      val folded = raw
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-        .groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
+        .collect() // a local frame: no Spark job
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
       val docCounts = folded.collect {
         case ((l, t), n) if t == sentinel => l -> n
       }
@@ -1341,8 +1338,7 @@ object AnalyticQueries {
         d.filter(col("doc_id") >= 10).select("doc_id", "text"),
         df => graft.streaming.EventStreams.streamingContamination(
           df, "doc_id", "text",
-          d.filter(col("doc_id") < 10).select("text"), n = 3),
-        mode = org.apache.spark.sql.streaming.OutputMode.Append())
+          d.filter(col("doc_id") < 10).select("text"), n = 3))
       raw.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getDouble(3)))
         .toSeq
@@ -1427,16 +1423,13 @@ object AnalyticQueries {
         .select(col("doc_id").cast("long").as("_1"),
           col("lang").as("_2"), col("text").as("_3"))
         .as[(Long, String, String)]
-      val raw = replay(s, feed, Seq(col("_1")))(
-        ds => graft.ext.TextAnalysis.groupedBigramCounts(
-          ds.toDF("doc_id", "lang", "text"), "lang", "text"),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-        .groupBy(_._1).view.mapValues(_.map(_._2).max).toSeq
-      val perGroup = folded.groupBy(_._1._1).toSeq
+      val folded = replayMax(s, feed, Seq(col("_1")), Seq("lang", "gram"))(
+          ds => graft.ext.TextAnalysis.groupedBigramCounts(
+            ds.toDF("doc_id", "lang", "text"), "lang", "text"))
+        .collect() // a local frame: no Spark job
+      val perGroup = folded.groupBy(_.getString(0)).toSeq
         .map { case (g, vs) =>
-          (g, vs.map(_._2).sum, vs.length.toLong)
+          (g, vs.map(_.getLong(2)).sum, vs.length.toLong)
         }
       graft.ext.TextAnalysis.diversityRatios(
           perGroup.toDF("lang", "n_grams", "n_distinct"))
@@ -1515,8 +1508,7 @@ object AnalyticQueries {
       val raw = replayDocs(s, planted.select("doc_id", "text"),
         df => graft.ext.TextAnalysis.unicodeClean(df, "text")
           .select(col("doc_id"), length(col("text")).as("n_before"),
-            length(col("clean_text")).as("n_after"), col("clean_text")),
-        mode = org.apache.spark.sql.streaming.OutputMode.Append())
+            length(col("clean_text")).as("n_after"), col("clean_text")))
       raw.map(r => (r.getLong(0), r.getInt(1), r.getInt(2),
           r.getString(3)))
         .toSeq
@@ -1665,8 +1657,7 @@ object AnalyticQueries {
       val raw = replayDocs(s,
         TextQueries.rebuiltLines(s, dir, 4),
         df => graft.ext.Curation.lineQualityFilter(
-          df, "doc_id", "text", minAlphaE9 = 860000000L),
-        mode = org.apache.spark.sql.streaming.OutputMode.Append())
+          df, "doc_id", "text", minAlphaE9 = 860000000L))
       raw.map(r => (r.getLong(0), r.getString(1)))
         .toSeq
         .toDF("doc_id", "text")
@@ -1693,17 +1684,11 @@ object AnalyticQueries {
       val feed = d.select(col("doc_id").cast("long").as("_1"),
           col("source").as("_2"), col("text").as("_3"))
         .as[(Long, String, String)]
-      val raw = replay(s, feed, Seq(col("_1")))(
-        ds => graft.streaming.EventStreams.streamingOovCounts(
-          ds.toDF("doc_id", "source", "text"), "source", "text", vocab),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-        .groupBy(_._1).view
-        .mapValues(vs => (vs.map(_._2._1).max, vs.map(_._2._2).max))
-        .toSeq.map { case (src, (nt, no)) => (src, nt, no) }
       graft.ext.TextAnalysis.oovRates(
-          folded.toDF("source", "n_tokens", "n_oov"))
+          replayMax(s, feed, Seq(col("_1")), Seq("source"))(
+            ds => graft.streaming.EventStreams.streamingOovCounts(
+              ds.toDF("doc_id", "source", "text"), "source", "text",
+              vocab)))
         .orderBy("source")
     }),
 
@@ -1728,20 +1713,10 @@ object AnalyticQueries {
         .select(col("doc_id").cast("long").as("_1"),
           col("source").as("_2"), col("text").as("_3"))
         .as[(Long, String, String)]
-      val raw = replay(s, feed, Seq(col("_1")))(
-        ds => graft.ext.TextAnalysis.piiCounts(
-          ds.toDF("doc_id", "source", "text"), "source", "text"),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => r.getString(0) ->
-          (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-        .groupBy(_._1).view
-        .mapValues(vs => (vs.map(_._2._1).max, vs.map(_._2._2).max,
-          vs.map(_._2._3).max, vs.map(_._2._4).max))
-        .toSeq.map { case (src, (d, e, u, n)) => (src, d, e, u, n) }
       graft.ext.TextAnalysis.piiRates(
-          folded.toDF("source", "n_docs", "n_email", "n_url",
-            "n_longnum"))
+          replayMax(s, feed, Seq(col("_1")), Seq("source"))(
+            ds => graft.ext.TextAnalysis.piiCounts(
+              ds.toDF("doc_id", "source", "text"), "source", "text")))
         .orderBy("source")
     }),
 
@@ -1757,17 +1732,10 @@ object AnalyticQueries {
           col("lang").as("_2"),
           (length(col("source")) > 4).as("_3"))
         .as[(Long, String, Boolean)]
-      val raw = replay(s, feed, Seq(col("_1")))(
-        ds => graft.streaming.EventStreams.streamingDriftCounts(
-          ds.toDF("doc_id", "lang", "is_cur"), "lang", "is_cur"),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-        .groupBy(_._1).view
-        .mapValues(vs => (vs.map(_._2._1).max, vs.map(_._2._2).max))
-        .toSeq.map { case (b, (nr, nc)) => (b, nr, nc) }
       graft.ext.Stats.chiSquareFromCounts(
-          folded.toDF("bucket", "n_ref", "n_cur"))
+          replayMax(s, feed, Seq(col("_1")), Seq("bucket"))(
+            ds => graft.ext.Stats.driftCounts(
+              ds.toDF("doc_id", "lang", "is_cur"), "lang", "is_cur")))
         .orderBy("bucket")
     }),
 
@@ -1784,19 +1752,13 @@ object AnalyticQueries {
         .select(col("doc_id").cast("long").as("_1"),
           col("lang").as("_2"), col("text").as("_3"))
         .as[(Long, String, String)]
-      val raw = replay(s, feed, Seq(col("_1")))(
-        ds => graft.streaming.EventStreams.streamingConfusionCounts(
-          graft.ext.TextAnalysis.withLangId(
-            ds.toDF("doc_id", "lang", "text"), "text",
-            TextQueries.langMarkers),
-          "lang", "lang_guess"),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-        .groupBy(_._1).view.mapValues(_.map(_._2).max)
-        .toSeq.map { case ((tr, pr), n) => (tr, pr, n) }
       graft.ext.Stats.classificationReportFromMatrix(
-          folded.toDF("truth", "pred", "n"))
+          replayMax(s, feed, Seq(col("_1")), Seq("truth", "pred"))(
+            ds => graft.ext.Stats.confusionCounts(
+              graft.ext.TextAnalysis.withLangId(
+                ds.toDF("doc_id", "lang", "text"), "text",
+                TextQueries.langMarkers),
+              "lang", "lang_guess")))
         .orderBy("cls")
     }),
 
@@ -1812,20 +1774,10 @@ object AnalyticQueries {
         .select(col("doc_id").cast("long").as("_1"),
           col("lang").as("_2"), col("text").as("_3"))
         .as[(Long, String, String)]
-      val raw = replay(s, feed, Seq(col("_1")))(
-        ds => graft.streaming.EventStreams.streamingFertilityCounts(
-          ds.toDF("doc_id", "lang", "text"), "lang", "text"),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => r.getString(0) ->
-          (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-        .groupBy(_._1).view
-        .mapValues(vs => (vs.map(_._2._1).max, vs.map(_._2._2).max,
-          vs.map(_._2._3).max, vs.map(_._2._4).max))
-        .toSeq.map { case (l, (d, t0, b, c)) => (l, d, t0, b, c) }
       graft.ext.TextAnalysis.fertilityRatios(
-          folded.toDF("lang", "n_docs", "n_tokens", "n_bpe_tokens",
-            "n_chars"))
+          replayMax(s, feed, Seq(col("_1")), Seq("lang"))(
+            ds => graft.ext.TextAnalysis.fertilityCounts(
+              ds.toDF("doc_id", "lang", "text"), "lang", "text")))
         .orderBy("lang")
     }),
 
@@ -1839,8 +1791,7 @@ object AnalyticQueries {
       val raw = replayDocs(s,
         t(s, dir, "documents").select("doc_id", "text"),
         df => graft.ext.Curation.fimTransform(
-          df, "doc_id", "text", seed = "fim1", rate = 0.75),
-        mode = org.apache.spark.sql.streaming.OutputMode.Append())
+          df, "doc_id", "text", seed = "fim1", rate = 0.75))
       raw.map(r => (r.getLong(0), r.getString(1), r.getString(2),
           r.getString(3), r.getString(4)))
         .toSeq
@@ -1859,8 +1810,7 @@ object AnalyticQueries {
         t(s, dir, "documents").select("doc_id", "text"),
         df => graft.ext.Curation.spanCorrupt(
           df, "doc_id", "text", seed = "sc1", startDenom = 8,
-          spanLen = 2),
-        mode = org.apache.spark.sql.streaming.OutputMode.Append())
+          spanLen = 2))
       raw.map(r => (r.getLong(0), r.getString(1), r.getString(2),
           r.getLong(3)))
         .toSeq
@@ -1883,17 +1833,12 @@ object AnalyticQueries {
         .select(col("doc_id").cast("long").as("_1"),
           col("lang").as("_2"), col("text").as("_3"))
         .as[(Long, String, String)]
-      val raw = replay(s, feed, Seq(col("_1")))(
-        ds => graft.streaming.EventStreams.streamingFertilityCounts(
-            ds.toDF("doc_id", "lang", "text"), "lang", "text")
-          .select(col("lang"), col("n_tokens")),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw.map(r => r.getString(0) -> r.getLong(1))
-        .groupBy(_._1).view.mapValues(_.map(_._2).max).toSeq
-        .map { case (g, n) => (g, n) }
       graft.ext.Curation.temperatureMixture(
-          folded.toDF("lang", "n_tokens"), "lang", "n_tokens",
-          alpha = 0.5)
+          replayMax(s, feed, Seq(col("_1")), Seq("lang"))(
+            ds => graft.ext.TextAnalysis.fertilityCounts(
+                ds.toDF("doc_id", "lang", "text"), "lang", "text")
+              .select(col("lang"), col("n_tokens"))),
+          "lang", "n_tokens", alpha = 0.5)
         .orderBy("lang")
     }),
 
@@ -1943,8 +1888,7 @@ object AnalyticQueries {
         df => graft.streaming.EventStreams.streamingEvalLeakage(
           df, "doc_id", "text",
           evalT.select(col("doc_id").as("eval_id"), col("text")),
-          "eval_id", "text", n = 3),
-        mode = org.apache.spark.sql.streaming.OutputMode.Append())
+          "eval_id", "text", n = 3))
       val facts = raw.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .toSeq // (doc_id, eval_id, containment_e9)
       val spine = evalT.select(col("doc_id").as("eval_id"),
@@ -1985,17 +1929,11 @@ object AnalyticQueries {
         .select(col("doc_id").cast("long").as("_1"), col("text").as("_2"),
           coalesce(col("lang") === "en", lit(false)).as("_3"))
         .as[(Long, String, Boolean)]
-      val raw = replay(s, feed, Seq(col("_1")))(
-        ds => graft.streaming.EventStreams.streamingScoreCounts(
-          ds.toDF("doc_id", "text", "is_en"), "text", "is_en",
-          m, p, label = "en"),
-        mode = org.apache.spark.sql.streaming.OutputMode.Update())
-      val folded = raw
-        .map(r => (r.getLong(0), r.getBoolean(1)) -> r.getLong(2))
-        .groupBy(_._1).view.mapValues(_.map(_._2).max).toSeq
-        .map { case ((t9, pos), n) => (t9, pos, n) }
       graft.ext.Stats.thresholdSweepCounts(
-          folded.toDF("threshold_e9", "is_pos", "n"),
+          replayMax(s, feed, Seq(col("_1")), Seq("threshold_e9", "is_pos"))(
+            ds => graft.streaming.EventStreams.streamingScoreCounts(
+              ds.toDF("doc_id", "text", "is_en"), "text", "is_en",
+              m, p, label = "en")),
           "threshold_e9", "is_pos", "n")
         .orderBy(col("threshold_e9").desc)
     }),
@@ -2011,8 +1949,7 @@ object AnalyticQueries {
       val raw = replayDocs(s,
         t(s, dir, "documents").select("doc_id", "text"),
         df => graft.streaming.EventStreams.streamingRepetitionGate(
-          df, "doc_id", "text"),
-        mode = org.apache.spark.sql.streaming.OutputMode.Append())
+          df, "doc_id", "text"))
       raw.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getDouble(3), r.getDouble(4)))
         .toSeq

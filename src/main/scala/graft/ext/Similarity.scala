@@ -1071,7 +1071,6 @@ object Similarity {
     // trace ≤ 1), which is exactly the imbalance this deal exists to
     // prevent.
     val order = eigVals.indices.sortBy(i => (-eigVals(i), i))
-    val subDims = d / m
     val logProd = new Array[Double](m)
     val counts = new Array[Int](m)
     val alloc = Array.fill(m)(scala.collection.mutable.ArrayBuffer.empty[Int])

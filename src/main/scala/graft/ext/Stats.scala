@@ -269,19 +269,25 @@ object Stats {
     * floor-e9 precision/recall/F1, plus the macro-F1 (same constant on
     * every row). The class spine is truths ∪ predictions, so a class
     * the model never predicts (or never occurs) still reports its
-    * zeros. The corpus collapses in ONE (truth, pred) aggregation; the
-    * report derives from that ≤|classes|² matrix — the exact shape the
-    * streaming twin folds to, shared via
-    * [[classificationReportFromMatrix]]. */
+    * zeros. The corpus collapses in ONE (truth, pred) aggregation
+    * ([[confusionCounts]]); the report derives from that ≤|classes|²
+    * matrix through [[classificationReportFromMatrix]]. */
   def classificationReport(df: DataFrame, truthCol: String,
       predCol: String): DataFrame =
-    classificationReportFromMatrix(
-      df.groupBy(col(truthCol).as("truth"), col(predCol).as("pred"))
-        .agg(count(lit(1)).as("n")))
+    classificationReportFromMatrix(confusionCounts(df, truthCol, predCol))
+
+  /** The counts half of [[classificationReport]]: ONE (truth, pred,
+    * n) count aggregation. Its counts only grow, so it also runs as an
+    * Update-mode streaming aggregation whose sink rows MAX-fold to the
+    * same matrix (the q235 streaming row). */
+  def confusionCounts(df: DataFrame, truthCol: String,
+      predCol: String): DataFrame =
+    df.groupBy(col(truthCol).as("truth"), col(predCol).as("pred"))
+      .agg(count(lit(1)).as("n"))
 
   /** The derivation half of [[classificationReport]] over a
     * pre-aggregated (truth, pred, n) confusion matrix — the streaming
-    * twin's folded counts derive through these SAME expressions. */
+    * row's folded counts derive through these SAME expressions. */
   def classificationReportFromMatrix(m: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val classes = m.select(col("truth").as("cls"))
@@ -345,16 +351,24 @@ object Stats {
     * after runs on ≤|buckets| rows. */
   def chiSquareDrift(df: DataFrame, bucketCol: String,
       currentCol: String): DataFrame =
-    chiSquareFromCounts(
-      df.groupBy(col(bucketCol).as("bucket"))
-        .agg(
-          sum(when(coalesce(col(currentCol), lit(false)), 0L)
-            .otherwise(1L)).as("n_ref"),
-          sum(when(coalesce(col(currentCol), lit(false)), 1L)
-            .otherwise(0L)).as("n_cur")))
+    chiSquareFromCounts(driftCounts(df, bucketCol, currentCol))
+
+  /** The counts half of [[chiSquareDrift]]: ONE per-bucket aggregation
+    * carrying both sides' counts (bucket, n_ref, n_cur). Its counts
+    * only grow, so it also runs as an Update-mode streaming aggregation
+    * whose sink rows MAX-fold to the same table (the q237 streaming
+    * row). */
+  def driftCounts(df: DataFrame, bucketCol: String,
+      currentCol: String): DataFrame =
+    df.groupBy(col(bucketCol).as("bucket"))
+      .agg(
+        sum(when(coalesce(col(currentCol), lit(false)), 0L)
+          .otherwise(1L)).as("n_ref"),
+        sum(when(coalesce(col(currentCol), lit(false)), 1L)
+          .otherwise(0L)).as("n_cur"))
 
   /** The derivation half of [[chiSquareDrift]] over pre-aggregated
-    * (bucket, n_ref, n_cur) counts — the shape the streaming twin's
+    * (bucket, n_ref, n_cur) counts — the shape the streaming row's
     * folded Update-mode counts arrive in; both paths share these
     * expressions. */
   def chiSquareFromCounts(per: DataFrame): DataFrame = {

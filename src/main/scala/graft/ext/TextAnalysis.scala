@@ -981,16 +981,24 @@ object TextAnalysis {
     * n_chars, fertility, chars_per_bpe. */
   def tokenizerFertility(df: DataFrame, groupCol: String,
       textCol: String): DataFrame =
-    fertilityRatios(
-      withTokenCounts(df, textCol)
-        .groupBy(col(groupCol))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("n_tokens"),
-          sum(col("n_bpe_tokens")).as("n_bpe_tokens"),
-          sum(length(col(textCol)).cast("long")).as("n_chars")))
+    fertilityRatios(fertilityCounts(df, groupCol, textCol))
+
+  /** The counts half of [[tokenizerFertility]]: ONE per-group
+    * aggregation of the exact n_docs / n_tokens / n_bpe_tokens /
+    * n_chars sums. Every sum only grows, so it also runs as an
+    * Update-mode streaming aggregation whose sink rows MAX-fold to the
+    * same table (the q232 and q254 streaming rows). */
+  def fertilityCounts(df: DataFrame, groupCol: String,
+      textCol: String): DataFrame =
+    withTokenCounts(df, textCol)
+      .groupBy(col(groupCol))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("n_tokens")).as("n_tokens"),
+        sum(col("n_bpe_tokens")).as("n_bpe_tokens"),
+        sum(length(col(textCol)).cast("long")).as("n_chars"))
 
   /** The ratio half of [[tokenizerFertility]], factored out so the
-    * streaming twin's folded sums derive through the SAME expressions
+    * streaming row's folded sums derive through the SAME expressions
     * (the shared-derivation convention): input any frame carrying
     * n_tokens / n_bpe_tokens / n_chars sums. */
   def fertilityRatios(sums: DataFrame): DataFrame =

@@ -47,7 +47,9 @@ object EventStreams {
     * artifact's own bound), the exact analogue of the persisted
     * (line_hash, n_docs) table; production keys on xxhash64(line)
     * (16-byte state rows) — the oracle row keys on the line itself so
-    * DuckDB can replay it. */
+    * DuckDB can replay it. The batch form cannot stream: its
+    * `countDistinct` is a distinct aggregation, which a streaming
+    * query rejects. */
   def streamingLineFrequency(docs: DataFrame, textCol: String): DataFrame =
     docs.select(explode(array_distinct(
         graft.functions.TextFunctions.lineUnits(col(textCol))))
@@ -373,7 +375,10 @@ object EventStreams {
     * rate derives through the SHARED
     * [[graft.ext.TextAnalysis.oovRates]] expressions. Exactness rides
     * on 64-bit hash equality — the batch join is the collision-free
-    * form. State ∝ |groups|. */
+    * form. State ∝ |groups|. The batch form does not run on the
+    * stream because its vocabulary join, as a stream-static join,
+    * would re-plan and re-run the vocabulary side in every
+    * micro-batch, while the literal set is built once. */
   def streamingOovCounts(docs: DataFrame, groupCol: String,
       textCol: String, vocab: DataFrame): DataFrame = {
     val hs = vocab.select(xxhash64(col("term")).as("__h")).distinct()
@@ -395,55 +400,6 @@ object EventStreams {
         sum(col("__oov")).as("n_oov"))
   }
 
-  /** Online distribution-drift count maintenance — the streaming half
-    * of [[graft.ext.Stats.chiSquareDrift]]: ONE Update-mode per-bucket
-    * aggregation keeps both sides' counts fresh as rows arrive (both
-    * sums ride the single aggregation). Counts are MONOTONE → MAX
-    * fold; the χ² derives from the folded counts through the SHARED
-    * [[graft.ext.Stats.chiSquareFromCounts]] expressions. State ∝
-    * |buckets|. */
-  def streamingDriftCounts(rows: DataFrame, bucketCol: String,
-      currentCol: String): DataFrame =
-    rows.groupBy(col(bucketCol).as("bucket"))
-      .agg(
-        sum(when(coalesce(col(currentCol), lit(false)), 0L)
-          .otherwise(1L)).as("n_ref"),
-        sum(when(coalesce(col(currentCol), lit(false)), 1L)
-          .otherwise(0L)).as("n_cur"))
-
-  /** Online confusion-matrix maintenance — the streaming half of
-    * [[graft.ext.Stats.classificationReport]]: predictions are a
-    * stateless per-row projection upstream (lang-ID, a pinned
-    * classifier, any pure scoring column), and ONE Update-mode
-    * (truth, pred) count aggregation keeps the confusion matrix fresh
-    * as labeled examples arrive. Counts are MONOTONE → MAX fold; the
-    * per-class report derives from the folded matrix through the
-    * SHARED [[graft.ext.Stats.classificationReportFromMatrix]]
-    * expressions, so the twins cannot drift. State ∝ |classes|². */
-  def streamingConfusionCounts(docs: DataFrame, truthCol: String,
-      predCol: String): DataFrame =
-    docs.groupBy(col(truthCol).as("truth"), col(predCol).as("pred"))
-      .agg(count(lit(1)).as("n"))
-
-  /** Online tokenizer-fertility maintenance — the streaming half of
-    * [[graft.ext.TextAnalysis.tokenizerFertility]]: ONE Update-mode
-    * per-group aggregation keeps the exact count/token/subword/char
-    * sums fresh as documents arrive (all four ride in the single
-    * aggregation — a second agg in one streaming query is illegal).
-    * Every sum is MONOTONE non-decreasing, so the exactly-once fold is
-    * MAX per (group, column); the ratios derive from the folded sums
-    * through the SHARED [[graft.ext.TextAnalysis.fertilityRatios]]
-    * expressions, so the twins cannot drift. State ∝ |groups| — the
-    * report itself, never the corpus. */
-  def streamingFertilityCounts(docs: DataFrame, groupCol: String,
-      textCol: String): DataFrame =
-    graft.ext.TextAnalysis.withTokenCounts(docs, textCol)
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_tokens")).as("n_tokens"),
-        sum(col("n_bpe_tokens")).as("n_bpe_tokens"),
-        sum(length(col(textCol)).cast("long")).as("n_chars"))
-
   /** Online eval-side leakage facts — the streaming half of
     * [[graft.ext.Curation.evalLeakage]]: per arriving corpus document,
     * one (idCol, eval_id, containment_e9) fact for every eval item it
@@ -457,7 +413,9 @@ object EventStreams {
     * equality — the [[streamingContamination]] caveat. The per-eval
     * ROLLUP (max containment, worst doc, τ count) is the fold's batch
     * decision downstream: what streams is the corpus-sized half.
-    * Null-text docs emit nothing (the batch contract). */
+    * Null-text docs emit nothing (the batch contract). The batch form
+    * cannot stream: it chains a per-(eval, doc) hit aggregation into a
+    * per-eval rollup, and a streaming query allows one aggregation. */
   def streamingEvalLeakage(docs: DataFrame, idCol: String,
       textCol: String, evalSet: DataFrame, evalIdCol: String,
       evalTextCol: String, n: Int = 3): DataFrame = {
@@ -569,7 +527,10 @@ object EventStreams {
     * [[graft.ext.Stats.thresholdSweepCounts]] — the batch sweep uses,
     * so the twins cannot drift. NULL truth counts as negative (the
     * batch contract). State ∝ distinct scores × 2 — the collapsed
-    * calibration table, never the corpus. */
+    * calibration table, never the corpus. The batch form cannot
+    * stream: its scores come from the per-doc aggregation of
+    * scoreLinear, so the sweep's count would be a second
+    * aggregation, and a streaming query allows one. */
   def streamingScoreCounts(docs: DataFrame, textCol: String,
       truthCol: String, termWeights: DataFrame, priors: DataFrame,
       label: String): DataFrame = {
@@ -612,7 +573,10 @@ object EventStreams {
     * over the folded table — the same rollups the batch
     * trainNaiveBayesCounts computes from ITS termCounts aggregate.
     * State ∝ vocab × labels (+ |labels| sentinel rows) — the bounded
-    * model artifact, never the corpus. */
+    * model artifact, never the corpus. The batch form cannot stream:
+    * it derives label totals and doc counts in further aggregations
+    * joined to its term counts, and a streaming query allows one
+    * aggregation. */
   def streamingTermCounts(docs: DataFrame, labelCol: String,
       textCol: String): DataFrame =
     docs.select(col(labelCol).as("label"),
@@ -933,7 +897,9 @@ object EventStreams {
     * doc EVICTS a shorter one, so the per-row MAX fold of the counting
     * twins would be wrong; versioned whole-ranking emission is the
     * retraction-free device). Input rows: (group, id, metric); output
-    * (group, ver, id, metric, quota_rank). */
+    * (group, ver, id, metric, quota_rank). The batch form cannot
+    * stream: its rank is a row_number window, which a streaming query
+    * rejects. */
   def streamingGroupQuota(rows: Dataset[(String, Long, Long)], k: Int)
       : DataFrame = {
     require(k >= 1, "quota k must be >= 1")
@@ -1067,7 +1033,9 @@ object EventStreams {
     * cannot retroactively lower a step time (the machine never
     * rewinds) — bounded lateness needs a watermark buffer, at the
     * price of lateness × rate state. Same-user step ties never advance
-    * (strict `>`), matching both batch forms. */
+    * (strict `>`), matching both batch forms. The batch form cannot
+    * stream: it walks a user's whole history in one flatMapGroups
+    * call, and on a stream that history arrives over many batches. */
   def streamingFunnel(events: Dataset[Event],
       steps: Seq[String]): Dataset[FunnelUpdate] = {
     require(steps.nonEmpty, "funnel needs at least one step")
@@ -1134,7 +1102,9 @@ object EventStreams {
     * Order contract (the [[streamingFunnel]] convention): in-batch
     * events pair in (ts, event_id) order seeded by the carried state,
     * so time-ordered batches reproduce the batch matrix exactly
-    * (spec-asserted); cross-batch late events pair in arrival order. */
+    * (spec-asserted); cross-batch late events pair in arrival order.
+    * The batch form cannot stream: it pairs events with a `lead`
+    * window, which a streaming query rejects. */
   def streamingTransitions(events: Dataset[Event])
       : Dataset[TransitionDelta] = {
     import events.sparkSession.implicits._
@@ -1225,7 +1195,9 @@ object EventStreams {
     * events apply in (exact-micros, event_id) order seeded by the
     * carried state, so time-ordered batches reproduce the batch
     * history exactly; cross-batch late events apply in arrival order
-    * (the price every online compactor pays). */
+    * (the price every online compactor pays). The batch form cannot
+    * stream: it detects changes and stitches versions with `lag` and
+    * `lead` windows, which a streaming query rejects. */
   def streamingScd2(events: Dataset[Event]): Dataset[Scd2Delta] = {
     import events.sparkSession.implicits._
     events
@@ -1283,7 +1255,9 @@ object EventStreams {
     * cohort-size denominator. Time-ordered batches therefore
     * reproduce the batch matrix exactly (spec-asserted); late data
     * degrades to arrival-order cohorts minus pre-cohort activity,
-    * the price every online counter pays. */
+    * the price every online counter pays. The batch form cannot
+    * stream: it pins the cohort with a per-user `min` window, which a
+    * streaming query rejects. */
   def streamingRetention(events: Dataset[Event], bucketWidthMs: Long)
       : Dataset[RetentionDelta] = {
     require(bucketWidthMs > 0, s"bucketWidthMs must be positive")
@@ -1346,7 +1320,9 @@ object EventStreams {
     * arrivals extend it backward; after emission, data at or before
     * the frontier is LATE and drops (standard watermark semantics —
     * the watermark delay is zero). State per type: two longs + the
-    * bounded `open` map. */
+    * bounded `open` map. The batch form cannot stream: it carries the
+    * last count forward with a window over a joined day spine, and a
+    * streaming query rejects that window. */
   def streamingGapFill(events: Dataset[Event]): Dataset[FilledDay] = {
     import events.sparkSession.implicits._
     val dayUs = 86400000000L
@@ -1443,7 +1419,9 @@ object EventStreams {
     * stream IS the maintained graph: downstream analytics (q165 runs
     * [[graft.ext.Graph.kCore]]) consume it without ever re-scanning
     * the event log — at 100 TB/day of events the graph deltas are the
-    * only thing that moves. */
+    * only thing that moves. The batch GROUP BY … HAVING cannot stream
+    * as a birth feed: in Update mode it re-emits an edge at every later
+    * count change, so a birth would not be emitted exactly once. */
   def streamingEdgeBirths(events: Dataset[Event], minCount: Long)
       : Dataset[EdgeBirth] = {
     require(minCount >= 1, "minCount must be >= 1")

@@ -179,8 +179,6 @@ class CurationSpec extends SparkSpecBase {
     assert(sizes.count(_ != 8L) <= 4)
     val grouped = got.agg(sum("pad_waste")).as[Long].head
     // naive baseline: same shards, batch by id order instead of length
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("shard").orderBy("id")
     val naive = docs
       .withColumn("shard", Curation.shard("lb1", col("id"), 4))
       .withColumn("bi", expr("(row_number() over " +

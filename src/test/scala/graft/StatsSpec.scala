@@ -100,8 +100,7 @@ class StatsSpec extends SparkSpecBase {
     // 3 heavy values on a long uniform tail
     val rows = Seq.fill(2000)(7L) ++ Seq.fill(1500)(13L) ++
       Seq.fill(900)(99L) ++ (1 to 5600).map(i => (i % 1400).toLong + 1000)
-    val df = rows.toDF("v")
-    val n = rows.length // 10000
+    val df = rows.toDF("v") // 10000 rows
     def run(d: org.apache.spark.sql.DataFrame) =
       Sketches.heavyHitters(d, "v", phi = 0.05, k = 64)
         .orderBy("v").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq

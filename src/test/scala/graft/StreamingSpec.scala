@@ -1240,7 +1240,7 @@ class StreamingSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[(Long, String, String)]
-    val q = EventStreams.streamingFertilityCounts(
+    val q = TextAnalysis.fertilityCounts(
         mem.toDS().toDF("doc_id", "lang", "text"), "lang", "text")
       .writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
@@ -1278,7 +1278,7 @@ class StreamingSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[(String, String)]
-    val q = EventStreams.streamingConfusionCounts(
+    val q = Stats.confusionCounts(
         mem.toDS().toDF("truth", "pred"), "truth", "pred")
       .writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
@@ -1308,7 +1308,7 @@ class StreamingSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[(String, Boolean)]
-    val q = EventStreams.streamingDriftCounts(
+    val q = Stats.driftCounts(
         mem.toDS().toDF("b", "cur"), "b", "cur")
       .writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
@@ -1448,7 +1448,7 @@ class StreamingSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[(Long, String, String)]
-    val q = EventStreams.streamingFertilityCounts(
+    val q = TextAnalysis.fertilityCounts(
         mem.toDS().toDF("id", "grp", "text"), "grp", "text")
       .select(col("grp"), col("n_tokens"))
       .writeStream
@@ -1578,6 +1578,34 @@ class StreamingSpec extends SparkSpecBase {
           r.getString(3), r.getString(4))).toSeq.sorted
       assert(online == batch, s"online $online vs batch $batch")
     } finally q.stop()
+  }
+
+  test("replayMax: a key folds to its final counts; an empty feed keeps " +
+      "the sink's names and types; a non-Long value column is rejected") {
+    import graft.entry.AnalyticQueries.{replay, replayMax}
+    type Feed = org.apache.spark.sql.Dataset[(Long, String)]
+    val counts = (ds: Feed) => ds.toDF("id", "k").groupBy("k")
+      .agg(count(lit(1)).as("n"), sum(col("id")).as("s"))
+    // key a arrives in every one of the three id-ordered batches
+    val feed = Seq((1L, "a"), (2L, "b"), (3L, "a"), (4L, "b"), (5L, "b"),
+      (6L, "a")).toDS()
+    val raw = replay(spark, feed, Seq(col("_1")))(counts)
+    assert(raw.count(_.getString(0) == "a") >= 2,
+      "key a must be updated in two batches for the fold to matter")
+    val got = replayMax(spark, feed, Seq(col("_1")), Seq("k"))(counts)
+    assert(got.orderBy("k").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq ==
+      Seq(("a", 3L, 10L), ("b", 3L, 11L)))
+    val empty = replayMax(spark, Seq.empty[(Long, String)].toDS(),
+      Seq(col("_1")), Seq("k"))(counts)
+    assert(empty.collect().isEmpty)
+    assert(empty.schema == got.schema)
+    assert(empty.schema.map(f => f.name -> f.dataType) ==
+      Seq("k" -> StringType, "n" -> LongType, "s" -> LongType))
+    val err = intercept[IllegalArgumentException](
+      replayMax(spark, feed, Seq(col("_1")), Seq("k"))(
+        ds => ds.toDF("id", "k").groupBy("k").agg(avg(col("id")).as("m"))))
+    assert(err.getMessage.contains("LongType"))
   }
 
   test("replay harness leaves the session conf as it found it, also on failure") {
