@@ -102,9 +102,15 @@ object Bench {
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
     val spark = graft.core.GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    // a failing row keeps value -1 in the record; its cause goes to
+    // stderr, once per row, so stdout keeps its shape
+    val reported = scala.collection.mutable.Set.empty[String]
+    def failed(name: String, e: Throwable): Unit =
+      if (reported.add(name))
+        System.err.println(s"[bench] $name failed: $e")
     // untimed warmup: JVM/codegen/parquet-footer warmup on the same data
     try SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count()
-    catch { case _: Throwable => }
+    catch { case e: Throwable => failed("q01_pricing_summary", e) }
     // optional comma-separated name filter for focused re-measurement;
     // substring match, same semantics as SPARK_GRAFT_VERIFY_ONLY
     // (e.g. SPARK_GRAFT_BENCH_ONLY=q54,q73_dedup_clusters)
@@ -117,7 +123,7 @@ object Bench {
       (1 to n).flatMap { _ =>
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-        catch { case _: Throwable => None }
+        catch { case e: Throwable => failed(name, e); None }
       }
     }
     val results = names.map { name =>

@@ -83,7 +83,7 @@ object GraftSession {
     * TIMESTAMP(NANOS) (read as long nanos under nanosAsLong) in rounds
     * 1-5 and as timestamp[us] (read as TIMESTAMP_NTZ) from round 6 — so
     * the physical type is a moving target. Every event-analytics query
-    * (q52/q53/q107/q108/q109, ScaleProbe) derives its timeline from this
+    * (q52/q53/q107/q108/q109) derives its timeline from this
     * helper: a future regeneration flips a branch here instead of
     * breaking five queries at analysis time. The DuckDB oracle side
     * (`epoch_us(ts)`) is physical-type-independent already.

@@ -869,8 +869,8 @@ object AnalyticQueries {
     // salted form (ext/Skew.saltedJoin) spreads each type over 32
     // reducers; identical rows to the plain join (the oracle IS the
     // plain join). At test scale Spark broadcasts the exploded dim —
-    // also shuffle-free; the salt's reducer-spreading is probed in the
-    // forced-shuffle regime (ScaleProbe salted_join).
+    // also shuffle-free; in the forced-shuffle regime the salt cut the
+    // longest task 1.5× for +15% bytes at 60× (BENCH.md).
     "q136_salted_enrich" -> ((s, dir) => {
       val ev = t(s, dir, "events")
       val dim = ev.groupBy("event_type")
@@ -1485,7 +1485,7 @@ object AnalyticQueries {
       val raw = replay(s, feed, Seq(col("_1")))(
         ds => graft.streaming.EventStreams.streamStreamMinhashPairs(
           ds.toDF("doc_id", "ts", "text"), "doc_id", "text", "ts",
-          docShingles = Some(store)),
+          docShingles = store),
         mode = org.apache.spark.sql.streaming.OutputMode.Append(),
         stateParts = 2, noDataBatches = Some(false))
       raw.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -1757,7 +1757,7 @@ object AnalyticQueries {
             ds => graft.ext.Stats.confusionCounts(
               graft.ext.TextAnalysis.withLangId(
                 ds.toDF("doc_id", "lang", "text"), "text",
-                TextQueries.langMarkers),
+                TextQueries.markers),
               "lang", "lang_guess")))
         .orderBy("cls")
     }),

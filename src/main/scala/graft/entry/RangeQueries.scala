@@ -111,8 +111,8 @@ object RangeQueries {
     // the data (deriveBucketWidth) — the few-key 100-TB escape hatch
     // oracle-certified end to end, not just spec-≡. The driver tables'
     // 5-key regime is the documented LOSS regime for these forms
-    // (BENCH.md round 6); the queries certify VALUES, the ScaleProbe
-    // 1-key rows certify the scale claim.
+    // (BENCH.md round 6); the queries certify VALUES, BENCH.md's 1-key
+    // measurements the scale claim.
     "q99_interval_merge_bucketed" -> ((s, dir) => {
       graft.ranges.IntervalSets.mergeOverlappingBucketed(
           orderIntervals(s, dir), Seq("chrom"), "s1", "e1")

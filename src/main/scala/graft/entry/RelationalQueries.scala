@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.{FilterSpec, GraftSession}
+import EntryExprs.dsum
 
 /** Relational operator coverage (SURVEY §2.1–§2.7) expressed over the
   * driver test tables, each paired with a DuckDB oracle.
@@ -25,10 +26,6 @@ object RelationalQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     GraftSession.table(s, dir, name)
-
-  /** Exact decimal sum of a double expression, emitted as double. */
-  private def dsum(c: org.apache.spark.sql.Column, scale: Int = 2) =
-    EntryExprs.dsum(c, scale)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A1: the reference's flagship shape — grouped aggregate over the fact

@@ -46,10 +46,6 @@ object TextQueries {
     "es" -> Seq("data", "row", "table", "scan"),
     "fr" -> Seq("join", "merge", "sort", "agg"))
 
-  /** The q32 marker table under its cross-file name (q235's twin
-    * applies the same projection in-stream). */
-  private[entry] def langMarkers: Seq[(String, Seq[String])] = markers
-
   /** The DuckDB half of [[rebuiltLines]] — ONE definition of the
     * reconstruction CTE shared by every oracle that replays it
     * (q168–q171, q175), so the Spark device and its SQL mirror can
@@ -125,14 +121,6 @@ object TextQueries {
         lit("0").cast("decimal(18,9)").as("unseen"))
     (m, p)
   }
-
-  /** The q197 stage composition — now the PUBLIC user API
-    * [[graft.ext.Curation.curationPipeline]]; q197 pins its constants
-    * and the config DEFAULT, so the flagship row gates exactly what a
-    * default-config user runs. Kept as a thin alias so
-    * ScaleProbe's call sites read unchanged. */
-  private[graft] def curationPipeline(d: DataFrame): DataFrame =
-    graft.ext.Curation.curationPipeline(d)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // CCNet-style corpus-level boilerplate-line removal: lines occurring
@@ -858,7 +846,7 @@ object TextQueries {
     // gated corpus — 36 parquet scans; this shape plans 4 (+1 in the
     // boilerplate pass-1 collect job).
     "q197_curation_pipeline" -> ((s, dir) =>
-      curationPipeline(docs(s, dir)).orderBy("doc_id")),
+      graft.ext.Curation.curationPipeline(docs(s, dir)).orderBy("doc_id")),
 
     // q197's composition with the CCNet-style LM-scored gate LIVE
     // (verdict r16 item #4): the en-trained KN bigram model (q250's

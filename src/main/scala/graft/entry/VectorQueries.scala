@@ -470,7 +470,7 @@ object VectorQueries {
     // off disk and the delta off the incremental near-dup path, so
     // neither belongs in the operator's cost. Here both are
     // materialized once per (session, sf dir) and every run times the
-    // fold alone — ~0.6 MB shuffled per ScaleProbe cc_delta, vs the
+    // fold alone — ~0.6 MB shuffled at 20× sf0.1 (BENCH.md), vs the
     // inline full-CC rebuild q139 deliberately keeps (q139 certifies
     // the two implementations against one ground truth; this row
     // certifies — and benches — the maintenance path a user actually

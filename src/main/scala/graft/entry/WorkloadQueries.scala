@@ -1,8 +1,9 @@
 package graft.entry
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.GraftSession
+import EntryExprs.revenue
 
 /** Multi-join analytical workload shapes (TPC-H Q3/Q5 style) — the
   * star-join paths a warehouse engine must plan well: selective dim
@@ -21,8 +22,6 @@ object WorkloadQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     GraftSession.table(s, dir, name)
-
-  private def revenue: Column = EntryExprs.revenue
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // TPC-H Q3 shape: selective dim filter (1/5 of customers) broadcast

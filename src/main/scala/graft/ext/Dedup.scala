@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CheckpointShim
 import graft.functions.TextFunctions._
 
 /** Corpus deduplication at 100 TB scale (BASELINE.json north star).
@@ -141,14 +142,15 @@ object Dedup {
     * corpus are EAGERLY materialized (CheckpointShim jobs run at call
     * time) — both are delta-sized, and each is consumed by three
     * differently-keyed verification joins, so leaving them lazy
-    * re-executes the band join + semi-join subplan 3-4× (ScaleProbe
-    * 20×: 10.1 s → sub-second fixed cost after materializing). Like
+    * re-executes the band join + semi-join subplan 3-4× (a ~10 s fixed
+    * cost at 20× replicated sf0.1 before materializing; BENCH.md,
+    * "Artifact-loaded minhash delta MEASURED"). Like
     * [[connectedComponents]], the result is backed by localCheckpointed
     * RDDs that cannot be recomputed after executor loss — re-run from
     * source on failure. The checkpoint blocks are delta-sized and live
     * until their RDDs are garbage-collected (`Dataset.unpersist` is a
-    * no-op on localCheckpoint'd frames — see [[materialize]]); repeated
-    * calls in one session accumulate blocks until GC, which is the
+    * no-op on localCheckpoint'd frames — see `CheckpointShim.materialize`);
+    * repeated calls in one session accumulate blocks until GC, which is the
     * accepted trade for a result that stays consumable after return. */
   def minhashNearDupDelta(newDf: DataFrame, snapshot: DataFrame,
       snapshotBands: DataFrame, idCol: String, textCol: String,
@@ -157,7 +159,7 @@ object Dedup {
     val nb = minhashBands(newDf, idCol, textCol, shingleN, k, bands)
     val allB = snapshotBands.unionByName(nb)
     // every candidate has its NEW side on x — old×old never pairs
-    val (cand, _) = materialize(nb.as("x").join(allB.as("y"),
+    val (cand, _) = CheckpointShim.materialize(nb.as("x").join(allB.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col("x.__id") =!= col("y.__id"))
       .select(least(col("x.__id"), col("y.__id")).as("a_id"),
@@ -171,7 +173,7 @@ object Dedup {
     // the pruned corpus is candidate-sized; materializing it means the
     // three shingle-stream evaluations in verifyJaccard re-explode a
     // tiny table instead of re-running the corpus semi-join three times
-    val (pruned, _) = materialize(
+    val (pruned, _) = CheckpointShim.materialize(
       corpus.join(touched, Seq(idCol), "leftsemi"))
     verifyJaccard(cand, pruned, idCol, textCol, shingleN, threshold)
   }
@@ -215,8 +217,9 @@ object Dedup {
     * recall loss) and the scalable form of [[ngramJaccard]] (whose
     * candidate space is EVERY shared-shingle pair — the frequent
     * buckets that prefix filtering never joins on; the q183 oracle row
-    * faces q36's ground truth, and ScaleProbe prices the candidate
-    * reduction).
+    * faces q36's ground truth; on a boilerplate corpus BENCH.md
+    * records a 14.5× lower longest task than the naive join at 10k
+    * docs).
     *
     * Shuffle shape: candidate pairs ∝ Σ over PREFIX elements
     * |bucket|²; the verify joins candidate ids back to the per-doc
@@ -506,7 +509,7 @@ object Dedup {
     // alone at 20×. Extents are tiny (few rows/doc), so materialize
     // once (minhashNearDupDelta precedent; same localCheckpoint
     // durability trade, documented there).
-    val (sp, _) = materialize(
+    val (sp, _) = CheckpointShim.materialize(
       duplicateSpans(df, idCol, textCol, gramLen)
         .select(col(idCol).as("__id"), col("span_start").as("st"),
           col("span_end").as("en")))
@@ -653,6 +656,10 @@ object Dedup {
     newDf.join(broadcast(matched), key === col("__h"), "leftanti")
   }
 
+  /** Propagation rounds after which [[connectedComponents]] gives up
+    * and throws (rounds ≈ graph diameter). */
+  private val MaxCcRounds = 25
+
   /** Connected components over an undirected edge list — the step that
     * turns near-dup PAIRS (minhash/simhash/embedding) into dedup
     * CLUSTERS: `comp` is the minimum id reachable from each vertex, so
@@ -669,34 +676,8 @@ object Dedup {
     *
     * Output: (id, comp), one row per vertex that appears in any edge.
     */
-  /** Materialize `df` with its lineage cut, returning the rebuilt frame
-    * plus the checkpointed RDD handle. The handle matters:
-    * `Dataset.unpersist` on a localCheckpoint'd frame is a NO-OP (it
-    * only uncaches CacheManager entries, and the checkpoint blocks were
-    * persisted directly on the RDD), so iterative algorithms must hold
-    * the RDD to actually release the previous round's blocks.
-    *
-    * Delegates to [[org.apache.spark.sql.graftshim.CheckpointShim]] so
-    * rows stay in Tungsten format end to end — the earlier
-    * `df.rdd`/`createDataFrame` formulation deserialized and re-encoded
-    * every row every round, a 2x serialization tax on each CC iteration. */
-  private def materialize(df: DataFrame)
-      : (DataFrame,
-         org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) =
-    org.apache.spark.sql.graftshim.CheckpointShim.materialize(df)
-
   def connectedComponents(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame =
-    connectedComponentsRounds(edges, srcCol, dstCol)._1
-
-  /** Propagation rounds after which [[connectedComponents]] gives up
-    * and throws (rounds ≈ graph diameter). */
-  private val MaxCcRounds = 25
-
-  /** [[connectedComponents]] also returning the PROPAGATION ROUND
-    * count — the scale-diagnostic axis (rounds ≈ graph diameter). */
-  private[graft] def connectedComponentsRounds(edges: DataFrame,
-      srcCol: String, dstCol: String): (DataFrame, Int) = {
+      dstCol: String): DataFrame = {
     // symmetrize in ONE scan: union(edges, edges.flipped) would evaluate
     // the (possibly expensive — a whole near-dup join in q73) edge plan
     // twice, once per union branch
@@ -709,8 +690,8 @@ object Dedup {
       .filter(col("id") =!= col("__n"))
       .distinct()
       .persist()
-    var (labels, labelsRdd) = materialize(sym.select(col("id")).distinct()
-      .withColumn("comp", col("id")))
+    var (labels, labelsRdd) = CheckpointShim.materialize(
+      sym.select(col("id")).distinct().withColumn("comp", col("id")))
     var iter = 0
     var converged = false
     while (!converged && iter < MaxCcRounds) {
@@ -730,8 +711,7 @@ object Dedup {
           coalesce((col("__nmin") < col("comp")).cast("int"), lit(0))
             .as("__chg"))
       val (next, nextRdd, changed) =
-        org.apache.spark.sql.graftshim.CheckpointShim
-          .materializeSummingInt(cand, "__chg")
+        CheckpointShim.materializeSummingInt(cand, "__chg")
       converged = changed == 0L
       labelsRdd.unpersist() // next is materialized; drop the old blocks
       labels = next.select("id", "comp")
@@ -746,7 +726,7 @@ object Dedup {
       throw new IllegalStateException(
         s"connectedComponents did not converge in $MaxCcRounds rounds " +
           "(graph diameter exceeds the round limit)")
-    (labels, iter)
+    labels
   }
 
   /** Incremental connected components: fold a NEW edge batch into an
@@ -827,7 +807,8 @@ object Dedup {
     // a daily-maintenance API must not leak one persisted frame per
     // call (the returned labeling is lineage-cut, same contract as
     // connectedComponents' output)
-    val (result, _) = materialize(updatedPrev.unionByName(newLabeled))
+    val (result, _) =
+      CheckpointShim.materialize(updatedPrev.unionByName(newLabeled))
     touched.unpersist()
     validEdges.unpersist()
     result

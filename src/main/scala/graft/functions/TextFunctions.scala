@@ -25,7 +25,7 @@ object TextFunctions {
 
   /** Deterministic w-token chunk "lines" rebuilt from a token array
     * and joined with \n — the oracle reconstruction device shared by
-    * the line-dedup query rows (q168–q171) and their ScaleProbe rows:
+    * the line-dedup query rows (q168–q171) and BENCH.md's scale runs:
     * the word-soup test corpus has no physical lines, so this stands
     * in, and the DuckDB side replays the identical arithmetic. Empty
     * token arrays pin to "". */

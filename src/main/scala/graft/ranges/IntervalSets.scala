@@ -315,7 +315,7 @@ object IntervalSets {
     * exceed one task — the island rows take two extra hash shuffles
     * ((key, bucket, island) group and the final (key, gid) group) that
     * the single-window form never pays; use it when keys are few and
-    * interval counts are billions (ScaleProbe, BENCH.md round 6: at
+    * interval counts are billions (BENCH.md round 6: at
     * 10M single-key intervals the simple form's longest task is 87% of
     * its wall-clock — one core no matter the cluster — vs maxTask 5×
     * smaller and falling for the bucketed form). */

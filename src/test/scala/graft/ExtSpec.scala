@@ -13,6 +13,44 @@ class ExtSpec extends SparkSpecBase {
     aggregate(zip_with(a.cast("array<double>"), b.cast("array<double>"),
       (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
 
+  /** Deterministic anisotropic corpus for the OPQ and residual-PQ
+    * cases: a steep variance spectrum (pow(decay, i)) pushed through a
+    * FIXED dense mixing matrix so the variance spreads across every PQ
+    * subspace boundary — the case plain PQ splits badly and a rotation
+    * provably helps. sin-hash "gaussians", so every run is exact, not
+    * statistical. */
+  private def anisotropicVecs(n: Int, d: Int,
+      decay: Double): Seq[(Long, Array[Double])] = {
+    val mix = Array.tabulate(d, d)((i, j) => math.sin(i * d + j + 1) / 2.0)
+    val scales = Array.tabulate(d)(i => math.pow(decay, i))
+    (0 until n).map { r =>
+      val z = Array.tabulate(d)(i => math.sin(r * 37 + i * 11 + 0.5) +
+        math.sin(r * 101 + i * 29))
+      (r.toLong, Array.tabulate(d)(i =>
+        (0 until d).map(j => mix(i)(j) * scales(j) * z(j)).sum))
+    }
+  }
+
+  /** Mean squared reconstruction error of a trained codebook over the
+    * corpus — the OPQ paper's objective. */
+  private def distortion(df: org.apache.spark.sql.DataFrame, vcol: String,
+      cb: org.apache.spark.sql.DataFrame, d: Int, m: Int): Double = {
+    val cbm = cb.collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2)))
+      .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(_._3).toArray).toMap
+    val sub = d / m
+    Similarity.pqEncode(df, "vec_id", vcol, cb)
+      .select(col(vcol).cast("array<double>"), col("pq_code"))
+      .collect()
+      .map { r =>
+        val x = r.getSeq[Double](0); val code = r.getSeq[Long](1)
+        (0 until m).map { s =>
+          val cw = cbm(s)(code(s).toInt)
+          (0 until sub).map(i => { val t = x(s * sub + i) - cw(i); t * t }).sum
+        }.sum
+      }.sum / df.count()
+  }
+
   private lazy val docs = Seq(
     (0L, "the quick brown fox jumps over the lazy dog again and again"),
     (1L, "the quick brown fox jumps over the lazy dog again and again"), // exact dup of 0
@@ -708,17 +746,12 @@ class ExtSpec extends SparkSpecBase {
     // paper's own objective — quantization DISTORTION — because at this
     // code budget recall@5 is a noisy proxy (gain +0.080 at HEAD,
     // asserted only directionally below).
-    // corpus + distortion metric are SHARED with tools/OpqProbe (one
-    // definition — BENCH.md's probe numbers can't drift from these)
     val d = 32; val m = 4; val ksub = 16
-    val vecs = graft.tools.OpqProbe.anisotropicVecs(600, d, decay = 0.4)
+    val vecs = anisotropicVecs(600, d, decay = 0.4)
       .toDF("vec_id", "embedding").cache()
-    def distortion(df: org.apache.spark.sql.DataFrame, vcol: String,
-        cb: org.apache.spark.sql.DataFrame): Double =
-      graft.tools.OpqProbe.distortion(df, vcol, cb, d, m)
     val cb = Similarity.pqTrain(vecs, "vec_id", "embedding",
       m = m, ksub = ksub, iters = 2)
-    val dPq = distortion(vecs, "embedding", cb)
+    val dPq = distortion(vecs, "embedding", cb, d, m)
     val rot = Similarity.opqRotation(vecs, "vec_id", "embedding", m = m)
     // orthogonality: R R^T == I (rows orthonormal) — rotations preserve
     // distances, so the ADC metric is unchanged by construction
@@ -730,7 +763,7 @@ class ExtSpec extends SparkSpecBase {
     val rotated = Similarity.rotate(vecs, "embedding", rot, "rvec").cache()
     val cbR = Similarity.pqTrain(rotated, "vec_id", "rvec",
       m = m, ksub = ksub, iters = 2)
-    val dOpq = distortion(rotated, "rvec", cbR)
+    val dOpq = distortion(rotated, "rvec", cbR, d, m)
     info(f"quantization distortion: pq=$dPq%.5f opq=$dOpq%.5f " +
       f"(ratio ${dOpq / dPq}%.3f)")
     assert(dOpq < 0.3 * dPq,
@@ -762,7 +795,7 @@ class ExtSpec extends SparkSpecBase {
     // codes should spend their budget on what's left. Deterministic
     // fixture + trainers, so the numbers are exact, not statistical.
     val d = 32
-    val vecs = graft.tools.OpqProbe.anisotropicVecs(600, d, decay = 0.4)
+    val vecs = anisotropicVecs(600, d, decay = 0.4)
       .toDF("vec_id", "embedding").cache()
     val isQuery = $"vec_id" < 50
     def topSets(df: org.apache.spark.sql.DataFrame) =
@@ -799,7 +832,7 @@ class ExtSpec extends SparkSpecBase {
     // reloaded centroid/codebook tables must reproduce the in-memory
     // assignment and codes exactly (q84 already proves this for the
     // minhash band table)
-    val vecs = graft.tools.OpqProbe.anisotropicVecs(200, 16, decay = 0.6)
+    val vecs = anisotropicVecs(200, 16, decay = 0.6)
       .toDF("vec_id", "embedding").cache()
     val cents = Similarity.trainCentroids(vecs, "vec_id", "embedding",
       k = 4, iters = 2)
@@ -828,18 +861,18 @@ class ExtSpec extends SparkSpecBase {
     // all top variance). The count-first deal must keep the rotation
     // helpful, not harmful, in this regime.
     val d = 32; val m = 4
-    val unit = graft.tools.OpqProbe.anisotropicVecs(600, d, decay = 0.4)
+    val unit = anisotropicVecs(600, d, decay = 0.4)
       .map { case (id, v) =>
         val n = math.sqrt(v.map(x => x * x).sum); (id, v.map(_ / n))
       }.toDF("vec_id", "embedding").cache()
     val cb = Similarity.pqTrain(unit, "vec_id", "embedding",
       m = m, ksub = 16, iters = 2)
-    val dPq = graft.tools.OpqProbe.distortion(unit, "embedding", cb, d, m)
+    val dPq = distortion(unit, "embedding", cb, d, m)
     val rot = Similarity.opqRotation(unit, "vec_id", "embedding", m = m)
     val rotated = Similarity.rotate(unit, "embedding", rot, "rvec").cache()
     val cbR = Similarity.pqTrain(rotated, "vec_id", "rvec",
       m = m, ksub = 16, iters = 2)
-    val dOpq = graft.tools.OpqProbe.distortion(rotated, "rvec", cbR, d, m)
+    val dOpq = distortion(rotated, "rvec", cbR, d, m)
     info(f"unit-norm distortion: pq=$dPq%.6f opq=$dOpq%.6f (ratio ${dOpq / dPq}%.3f)")
     assert(dOpq < 0.3 * dPq, // 0.171 at HEAD — same ~6x cut as unnormalized
       f"rotation must keep helping on normalized vectors: $dPq%.6f -> $dOpq%.6f")

@@ -791,49 +791,6 @@ class StreamingSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
-  test("streamStreamMinhashPairs: self-join pairs across micro-batches " +
-      "== batch minhashNearDup after band dedup") {
-    import graft.ext.Dedup
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sc = spark.sqlContext
-    val base = "the quick brown fox jumps over the lazy dog again and again"
-    val docs = Seq(
-      (1L, base),
-      (2L, base + " tail"),                        // near-dup of 1
-      (3L, "completely different words in this one entirely"),
-      (4L, base + " tail"),                        // exact dup of 2
-      (5L, "another unrelated document about nothing at all"))
-    val batch = Dedup.minhashNearDup(docs.toDF("doc_id", "text"),
-        "doc_id", "text", shingleN = 3, k = 12, bands = 4,
-        threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-    assert(batch.nonEmpty) // planted dups are live
-    // event times SPREAD inside the 1-hour window (ADVICE r16: one
-    // shared literal never exercised the ±window predicate)
-    def ts(minutes: Int) = java.sql.Timestamp.valueOf(
-      s"2026-01-01 00:${"%02d".format(minutes)}:00")
-    val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val q = EventStreams.streamStreamMinhashPairs(
-        mem.toDS().toDF("doc_id", "ts", "text"), "doc_id", "text", "ts")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("ss_pairs").start()
-    try {
-      // the (1,2) and (2,4) pairs SPAN batches — the state store must
-      // match across them, not just within one micro-batch
-      mem.addData((1L, ts(0), docs(0)._2), (3L, ts(5), docs(2)._2))
-      q.processAllAvailable()
-      mem.addData((2L, ts(10), docs(1)._2), (5L, ts(15), docs(4)._2))
-      q.processAllAvailable()
-      mem.addData((4L, ts(20), docs(3)._2))
-      q.processAllAvailable()
-      val got = spark.table("ss_pairs").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toSet // band-collision dedup: the self-contained contract
-      assert(got == batch, s"stream $got vs batch $batch")
-    } finally q.stop()
-  }
-
   test("streamStreamMinhashPairs lean store path: signature-only " +
       "state, EXACTLY-once per pair, out-of-window pair never emits") {
     import graft.ext.Dedup
@@ -864,7 +821,7 @@ class StreamingSpec extends SparkSpecBase {
     val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
     val q = EventStreams.streamStreamMinhashPairs(
         mem.toDS().toDF("doc_id", "ts", "text"), "doc_id", "text",
-        "ts", docShingles = Some(store))
+        "ts", docShingles = store)
       .writeStream.outputMode("append").format("memory")
       .queryName("ss_pairs_lean").start()
     try {
@@ -906,7 +863,7 @@ class StreamingSpec extends SparkSpecBase {
     val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
     val q = EventStreams.streamStreamMinhashPairs(
         mem.toDS().toDF("doc_id", "ts", "text"), "doc_id", "text",
-        "ts", docShingles = Some(store))
+        "ts", docShingles = store)
       .writeStream.outputMode("append").format("memory")
       .queryName("ss_pairs_stale").start()
     val ex = intercept[org.apache.spark.sql.streaming

@@ -26,10 +26,17 @@ import sys
 EXTS = (".scala", ".java")
 
 
-def strip(text):
+def strip(text, pos=None):
     """Return text with comments removed and each string character
-    replaced by `x`; newlines are kept, so lines still line up."""
+    replaced by `x`; newlines are kept, so lines still line up. A list
+    passed as `pos` receives, for each returned character, the index in
+    `text` it stands for."""
     out = []
+
+    def emit(piece):
+        out.append(piece)
+        if pos is not None:
+            pos.extend([i] * len(piece))
     # stack of modes: ("code", braceDepth) or ("str", triple, interp)
     stack = [["code", 0]]
     i, n = 0, len(text)
@@ -50,20 +57,20 @@ def strip(text):
                         depth, i = depth - 1, i + 2
                     else:
                         if text[i] == "\n":
-                            out.append("\n")
+                            emit("\n")
                         i += 1
                 continue
             if c == '"':
                 interp = i > 0 and (text[i - 1].isalnum() or text[i - 1] == "_")
                 triple = text.startswith('"""', i)
                 stack.append(["str", triple, interp])
-                out.append('""')
+                emit('""')
                 i += 3 if triple else 1
                 continue
             if c == "'":
                 m = re.match(r"'(\\u[0-9a-fA-F]{4}|\\.|[^\\'\n])'", text[i:i + 8])
                 if m:
-                    out.append("' '")
+                    emit("' '")
                     i += m.end()
                     continue
             if c == "{":
@@ -74,7 +81,7 @@ def strip(text):
                     i += 1
                     continue
                 top[1] -= 1
-            out.append(c)
+            emit(c)
             i += 1
         else:
             _, triple, interp = top
@@ -85,7 +92,7 @@ def strip(text):
                 i += 3
                 continue
             if not triple and c == "\\":
-                out.append("x")
+                emit("x")
                 i += 2
                 continue
             if not triple and c == '"':
@@ -100,7 +107,7 @@ def strip(text):
                 i += 2
                 continue
             # string content is code: keep a neutral mark in its place
-            out.append("\n" if c == "\n" else "x")
+            emit("\n" if c == "\n" else "x")
             i += 1
     return "".join(out)
 
