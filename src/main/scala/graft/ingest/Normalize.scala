@@ -3,6 +3,7 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CheckpointShim
 import graft.core.TableCatalog
 
 /** Dim-merge + bridge-build normalization (SURVEY §2.8 E3/E7) — the heart
@@ -19,7 +20,20 @@ import graft.core.TableCatalog
   *    dim, but only |new natural keys| rows shuffle (projected key
   *    columns, not the staged measurements);
   *  - re-ingesting a sample is idempotent on the dim by construction and
-  *    dedup'd on the bridge (composite-pk semantics, `readme.md:47-49`).
+  *    dedup'd on the bridge (composite-pk semantics, `readme.md:47-49`);
+  *  - one ingest call reads its inputs once: [[normalizeJunctions]] and
+  *    [[normalizeVariants]] materialize the staged batch a single time
+  *    (one `localCheckpoint` execution, so each VCF is read, parsed,
+  *    CSQ-exploded and planned once, not once per table) and write their
+  *    2 or 3 tables from that copy concurrently, one thread per table;
+  *    the copy is released before the call returns, also when it fails.
+  *
+  * Lineage trade-off: `localCheckpoint` truncates lineage, so the copy
+  * lives only in executor blocks. On a cluster, an executor lost during
+  * the writes fails the ingest instead of recomputing the lost blocks
+  * from the source files. Re-running an append is safe: every append is
+  * an anti-join against what is stored, so the tables a failed call did
+  * write are not duplicated by the next one.
   */
 object Normalize {
 
@@ -80,10 +94,11 @@ object Normalize {
   def normalizeJunctions(catalog: TableCatalog, staged: DataFrame,
       filtered: Boolean): (DataFrame, DataFrame) = {
     val key = Seq("chrom", "start", "end", "strand")
-    val dim = mergeDim(catalog, staged, catalog.junctionTable(filtered),
-      key, "id", partitionCols = Seq("chrom"))
-    val bridge = buildBridge(catalog, staged, catalog.junctionBridge(filtered),
-      key, "junction", "samplename", Seq("uniq_map", "multi_map"))
+    val Seq(dim, bridge) = writeOnce(staged)(
+      mergeDim(catalog, _, catalog.junctionTable(filtered), key, "id",
+        partitionCols = Seq("chrom")),
+      buildBridge(catalog, _, catalog.junctionBridge(filtered), key,
+        "junction", "samplename", Seq("uniq_map", "multi_map")))
     (dim, bridge)
   }
 
@@ -93,35 +108,79 @@ object Normalize {
       impactCols: Seq[String], formatCols: Seq[String],
       rna: Boolean, filtered: Boolean): (DataFrame, DataFrame, DataFrame) = {
     val key = Seq("chrom", "pos", "ref", "alt")
-    val dimTable = catalog.variantTable("variants", rna, filtered)
-    val svTable = catalog.variantTable("sample_variants", rna, filtered)
-    val viTable = catalog.variantTable("variant_impacts", rna, filtered)
+    val Seq(dim, bridge, impacts) = writeOnce(staged)(
+      // rsID (VCF col 3) rides along on the dim, min-reduced per key
+      mergeDim(catalog, _, catalog.variantTable("variants", rna, filtered),
+        key, "variant_id", partitionCols = Seq("chrom"), carryCols = Seq("id")),
+      s => buildBridge(catalog, s.dropDuplicates(Seq("samplename") ++ key),
+        catalog.variantTable("sample_variants", rna, filtered), key,
+        "variant_id", "samplename", Seq("qual", "filter") ++ formatCols),
+      mergeImpacts(catalog, _,
+        catalog.variantTable("variant_impacts", rna, filtered), key,
+        impactCols))
+    (dim, bridge, impacts)
+  }
 
-    // rsID (VCF col 3) rides along on the dim, min-reduced per key
-    val dim = mergeDim(catalog, staged, dimTable, key, "variant_id",
-      partitionCols = Seq("chrom"), carryCols = Seq("id"))
-
-    val bridge = buildBridge(catalog,
-      staged.dropDuplicates(Seq("samplename") ++ key),
-      svTable, key, "variant_id", "samplename",
-      Seq("qual", "filter") ++ formatCols)
-
-    // impacts are a per-VARIANT property: keep one representative sample's
-    // impact rows per variant (the reference's first-file-introduces-the-
-    // variant behavior, order-independent here via min(samplename)). A
-    // window min, not an aggregate joined back: one scan of the staged
-    // VCFs and one shuffle.
-    val impacts = surrogateId(staged, key, "variant_id")
+  /** Impacts are a per-VARIANT property: keep one representative sample's
+    * impact rows per variant (the reference's first-file-introduces-the-
+    * variant behavior, order-independent here via min(samplename)), and
+    * append only variants `table` does not hold yet. A window min, not an
+    * aggregate joined back: one pass over the staged rows, one shuffle. */
+  private def mergeImpacts(catalog: TableCatalog, staged: DataFrame,
+      table: String, keyCols: Seq[String],
+      impactCols: Seq[String]): DataFrame = {
+    val impacts = surrogateId(staged, keyCols, "variant_id")
       .withColumn("__rep", min(col("samplename"))
         .over(Window.partitionBy("variant_id")))
       .filter(col("samplename") === col("__rep"))
       .select(("variant_id" +: impactCols).map(col): _*)
-    if (!catalog.exists(viTable))
-      catalog.write(impacts, viTable, Nil, SaveMode.Overwrite)
+    if (!catalog.exists(table))
+      catalog.write(impacts, table, Nil, SaveMode.Overwrite)
     else {
-      val known = catalog.read(viTable).select("variant_id").distinct()
-      catalog.append(impacts.join(known, Seq("variant_id"), "left_anti"), viTable)
+      val known = catalog.read(table).select("variant_id").distinct()
+      catalog.append(impacts.join(known, Seq("variant_id"), "left_anti"), table)
     }
-    (dim, bridge, catalog.read(viTable))
+    catalog.read(table)
+  }
+
+  /** Materialize `staged` once and run every write over that one copy,
+    * each from its own thread, so the tables' jobs run side by side.
+    * Threads inherit the caller's Spark local properties (job group,
+    * job tags, scheduler pool). All are joined before this returns; the
+    * first failure is rethrown with the later ones suppressed on it, and
+    * the copy's blocks are released either way. */
+  private def writeOnce(staged: DataFrame)(
+      writes: (DataFrame => DataFrame)*): Seq[DataFrame] = {
+    val (once, rdd) = CheckpointShim.materialize(staged)
+    try {
+      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+      val results = new Array[DataFrame](writes.size)
+      val threads = writes.zipWithIndex.map { case (write, i) =>
+        val t = new Thread(() =>
+          try results(i) = write(once)
+          catch { case e: Throwable => failures.add(e) },
+          s"normalize-write-$i")
+        t.start()
+        t
+      }
+      joinAll(threads)
+      Option(failures.poll()).foreach { first =>
+        failures.forEach(first.addSuppressed(_))
+        throw first
+      }
+      results.toSeq
+    } finally rdd.unpersist(blocking = true)
+  }
+
+  /** Join every thread, even when the caller is interrupted meanwhile: a
+    * write left running would outlive the materialization it reads. The
+    * interrupt is restored afterwards. */
+  private def joinAll(threads: Seq[Thread]): Unit = {
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
   }
 }

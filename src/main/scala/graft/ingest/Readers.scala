@@ -74,17 +74,16 @@ object Readers {
       StructField("motif", IntegerType), StructField("annotated", IntegerType),
       StructField("uniq_map", LongType), StructField("multi_map", LongType),
       StructField("max_ohang", IntegerType)))
+    val strand = when(col("strand_code") === 0, ".")
+      .when(col("strand_code") === 1, "+")
+      .when(col("strand_code") === 2, "-")
+      .otherwise(raise_error(concat(lit("unknown strand code "),
+        col("strand_code").cast("string"))))
     spark.read.option("sep", "\t").option("header", "false")
       .schema(schema).csv(path)
-      .withColumn("strand",
-        when(col("strand_code") === 0, ".")
-          .when(col("strand_code") === 1, "+")
-          .when(col("strand_code") === 2, "-")
-          .otherwise(raise_error(concat(lit("unknown strand code "),
-            col("strand_code").cast("string")))))
-      .drop("strand_code", "motif", "annotated", "max_ohang")
+      .select(col("chrom"), col("start"), col("end"), col("uniq_map"),
+        col("multi_map"), strand.as("strand"), lit(sample).as("samplename"))
       .filter(col("uniq_map") >= minReads && col("strand") =!= ".")
-      .withColumn("samplename", lit(sample))
   }
 
   /** All samples' SJ.out.tab files in one plan (manifest: sample → path).

@@ -101,47 +101,45 @@ object VcfReader {
       formatKeys: Seq[String], hdr: VcfHeader): DataFrame = {
 
     // record-level parse via the DSv2 source (graft.sources.VcfDataSource):
-    // mandatory fields pre-parsed, INFO/FORMAT/sample payloads raw
+    // mandatory fields pre-parsed, INFO/FORMAT/sample payloads raw; the
+    // CSQ explode (one output row per transcript impact) rides along
+    val mandatory = Seq("chrom", "pos", "id", "ref", "alt", "qual", "filter")
+    val csqStr = regexp_extract(col("info"), "(?:^|;)CSQ=([^;]*)", 1)
     val base = spark.read.format("vcf").load(path)
-      .select(col("chrom"), col("pos"), col("id"), col("ref"), col("alt"),
-        col("qual"), col("filter"),
-        col("info").as("__info"),
+      .select(mandatory.map(col) ++ Seq(
         split(col("format"), ":").as("__fmtkeys"),
-        split(col("sample0"), ":").as("__smp0"))
+        split(col("sample0"), ":").as("__smp0"),
+        explode_outer(when(csqStr =!= "", split(csqStr, ","))).as("__csq")): _*)
 
     // FORMAT fields of sample 0, positional per record.
-    val withFormat = formatKeys.foldLeft(base) { (df, k) =>
+    val format = formatKeys.flatMap { k =>
       val pos = array_position(col("__fmtkeys"), k)
       val v = when(pos > 0, element_at(col("__smp0"), pos.cast("int")))
       if (k.equalsIgnoreCase("GT"))
-        df.withColumn("gt_raw", v)
-          .withColumn("gt",
-            when(v.isNotNull,
-              transform(split(v, "[/|]"),
-                g => nullif(g, lit(".")).cast("int"))))
-      else df.withColumn(k.toLowerCase, v)
+        Seq("gt_raw" -> v, "gt" -> when(v.isNotNull,
+          transform(split(v, "[/|]"), g => nullif(g, lit(".")).cast("int"))))
+      else Seq(k.toLowerCase -> v)
     }
-
-    // CSQ explode: one output row per transcript impact.
-    val csqStr = regexp_extract(col("__info"), "(?:^|;)CSQ=([^;]*)", 1)
-    val exploded = withFormat
-      .withColumn("__csq",
-        explode_outer(when(csqStr =!= "", split(csqStr, ","))))
-      .withColumn("__csqf", split(col("__csq"), "\\|", -1))
 
     // positional decode against THIS file's header order; configured
     // fields absent from the file become NULL columns (union policy).
-    val decoded = impactFields.foldLeft(exploded) { case (df, (name, typ)) =>
+    val csqf = split(col("__csq"), "\\|", -1)
+    val impacts = impactFields.map { case (name, typ) =>
       val idx = hdr.csqFields.indexOf(name.toLowerCase)
       val raw =
-        if (idx < 0) lit(null).cast("string")
-        else element_at(col("__csqf"), idx + 1)
-      df.withColumn(name.toLowerCase, coerce(raw, typ))
+        if (idx < 0) lit(null).cast("string") else element_at(csqf, idx + 1)
+      name.toLowerCase -> coerce(raw, typ)
     }
 
-    decoded
-      .drop("__info", "__fmtkeys", "__smp0", "__csq", "__csqf")
-      .withColumn("samplename", lit(sample))
+    // one projection; a later name replaces an earlier one in place, as a
+    // withColumn chain would
+    val out = (format ++ impacts).foldLeft(mandatory.map(c => c -> col(c))) {
+      case (acc, (name, c)) => acc.indexWhere(_._1.equalsIgnoreCase(name)) match {
+        case -1 => acc :+ (name -> c)
+        case i  => acc.updated(i, name -> c)
+      }
+    } :+ ("samplename" -> lit(sample))
+    base.select(out.map { case (name, c) => c.as(name) }: _*)
   }
 
   /** All samples in one plan, with per-file CSQ order handled per file and

@@ -8,7 +8,7 @@ package org.apache.spark.sql.graftshim
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic.{Dataset => CDataset}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.{DataFrame, Row}
 
 object CheckpointShim {
@@ -26,18 +26,36 @@ object CheckpointShim {
     * blocks for the life of the job.
     *
     * This mirrors `Dataset.checkpoint(eager = true, reliable = false)`
-    * exactly — execute the physical plan, copy (UnsafeRow buffers are
-    * reused per partition), persist, wrap in `LogicalRDD.fromDataset` so
-    * partitioning/ordering survive for downstream planning — but returns
-    * the RDD handle so the caller can `unpersist` superseded rounds.
+    * exactly — one SQL execution named `localCheckpoint` (so query
+    * listeners and the SQL UI see it) that executes the physical plan,
+    * copies (UnsafeRow buffers are reused per partition) and persists,
+    * then a `LogicalRDD.fromDataset` wrap so partitioning/ordering
+    * survive for downstream planning — but returns the RDD handle so the
+    * caller can `unpersist` superseded rounds. A materializing action
+    * that fails unpersists the RDD before rethrowing: no handle reaches
+    * the caller then, so nothing else could release its blocks.
     */
   def materialize(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
+    val (out, rdd, _) = checkpointed(df)(_.count())
+    (out, rdd)
+  }
+
+  /** Run `action` as the materializing job of `df`'s locally checkpointed
+    * rows, inside one SQL execution; returns the checkpointed frame, its
+    * RDD and the action's result. */
+  private def checkpointed[T](df: DataFrame)(action: RDD[InternalRow] => T)
+      : (DataFrame, RDD[InternalRow], T) = {
     val ds = df.asInstanceOf[CDataset[Row]]
-    val rdd = ds.queryExecution.executedPlan.execute().map(_.copy())
-    rdd.localCheckpoint()
-    rdd.count()
-    val plan = LogicalRDD.fromDataset(rdd, ds, isStreaming = false)
-    (CDataset.ofRows(ds.sparkSession, plan), rdd)
+    val qe = ds.queryExecution
+    val (rdd, out) = SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+      val rdd = qe.executedPlan.execute().map(_.copy())
+      rdd.localCheckpoint()
+      try (rdd, action(rdd)) catch {
+        case e: Throwable => rdd.unpersist(blocking = false); throw e
+      }
+    }
+    (CDataset.ofRows(ds.sparkSession,
+      LogicalRDD.fromDataset(rdd, ds, isStreaming = false)), rdd, out)
   }
 
   /** [[materialize]], but the single materializing action also folds
@@ -49,13 +67,10 @@ object CheckpointShim {
   def materializeWithLongStats(df: DataFrame, minMaxCol: String,
       sumCol: String)
       : (DataFrame, RDD[InternalRow], Option[(Long, Long)], Long) = {
-    val ds = df.asInstanceOf[CDataset[Row]]
-    val mmIdx = ds.schema.fieldIndex(minMaxCol)
-    val sIdx = ds.schema.fieldIndex(sumCol)
-    val rdd = ds.queryExecution.executedPlan.execute().map(_.copy())
-    rdd.localCheckpoint()
+    val mmIdx = df.schema.fieldIndex(minMaxCol)
+    val sIdx = df.schema.fieldIndex(sumCol)
     // (min, max, sum, seenAny) folded in the one materializing pass
-    val (lo, hi, sum, seen) = rdd.aggregate(
+    val (out, rdd, (lo, hi, sum, seen)) = checkpointed(df)(_.aggregate(
       (Long.MaxValue, Long.MinValue, 0L, false))(
       (acc, r) => {
         val s2 = acc._3 + (if (r.isNullAt(sIdx)) 0L else r.getLong(sIdx))
@@ -66,10 +81,8 @@ object CheckpointShim {
         }
       },
       (a, b) => (math.min(a._1, b._1), math.max(a._2, b._2),
-        a._3 + b._3, a._4 || b._4))
-    val plan = LogicalRDD.fromDataset(rdd, ds, isStreaming = false)
-    (CDataset.ofRows(ds.sparkSession, plan), rdd,
-      if (seen) Some((lo, hi)) else None, sum)
+        a._3 + b._3, a._4 || b._4)))
+    (out, rdd, if (seen) Some((lo, hi)) else None, sum)
   }
 
   /** [[materialize]], but the single materializing action also sums an
@@ -78,14 +91,10 @@ object CheckpointShim {
     * per round. NULLs count as 0. */
   def materializeSummingInt(df: DataFrame, sumCol: String)
       : (DataFrame, RDD[InternalRow], Long) = {
-    val ds = df.asInstanceOf[CDataset[Row]]
-    val idx = ds.schema.fieldIndex(sumCol)
-    val rdd = ds.queryExecution.executedPlan.execute().map(_.copy())
-    rdd.localCheckpoint()
-    val sum = rdd.aggregate(0L)(
+    val idx = df.schema.fieldIndex(sumCol)
+    val (out, rdd, sum) = checkpointed(df)(_.aggregate(0L)(
       (acc, r) => acc + (if (r.isNullAt(idx)) 0L else r.getInt(idx).toLong),
-      _ + _)
-    val plan = LogicalRDD.fromDataset(rdd, ds, isStreaming = false)
-    (CDataset.ofRows(ds.sparkSession, plan), rdd, sum)
+      _ + _))
+    (out, rdd, sum)
   }
 }
